@@ -10,7 +10,8 @@ import graft.pipeline.{EtlPipeline, MappingManager}
 /** CLI entry point mirroring the reference's `run_etl.py:14-40`:
   * `runMain graft.RunEtl sources.yaml [config.yaml [mappings.yaml]]`.
   * Loads the YAML configs, runs Extract→Stage→Geoprocess→Publish, prints
-  * the per-source ledger and the phase/status summary (A1), exits 1 if
+  * the per-source ledger with each phase call's duration, the per-phase
+  * time summed over sources and the phase/status summary (A1), exits 1 if
   * any source errored (continue-on-failure still processes the rest).
   */
 object RunEtl {
@@ -46,7 +47,11 @@ object RunEtl {
     val secs   = (System.nanoTime() - t0) / 1e9
 
     ledger.foreach { r =>
-      println(f"[ledger] ${r.phase}%-10s ${r.status}%-5s ${r.source}%-30s ${r.table}%-40s rows=${r.rows}%-8d ${r.error}")
+      println(f"[ledger] ${r.phase}%-10s ${r.status}%-5s ${r.source}%-30s ${r.table}%-40s rows=${r.rows}%-8d ms=${r.durationMs}%-7d ${r.error}")
+    }
+    // sources run concurrently, so a phase's summed time can exceed the wall
+    ledger.filter(_.phase != "health").groupBy(_.phase).toSeq.sortBy(_._1).foreach { case (phase, rows) =>
+      println(s"[summary] $phase time: ${rows.map(_.durationMs).sum} ms summed over sources")
     }
     pipe.summary.toSeq.sorted.foreach { case ((phase, status), n) =>
       println(s"[summary] $phase/$status: $n")

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{CompletableFuture, Executors}
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,12 +16,24 @@ import graft.sources.{GeoJsonSource, GpkgSource, PagedRestSource, ShpSource}
   * Extract → Stage → Geoprocess → Publish, with the reference's
   * continue-on-failure ledger semantics (R3) and run summary (A1/A3).
   *
-  * Execution model: the per-source LOOP is driver-side plan construction
-  * (as in the reference, pipeline.py:203-294) — each source's DATA work
-  * is a Spark job. Sources are independent, so at cluster scale the loop
-  * can submit jobs concurrently (Spark's scheduler replaces the broken
-  * ThreadPoolExecutor fan-out, SURVEY §2.8); sequential here keeps the
-  * declared-order naming semantics (§7.4) deterministic.
+  * Execution model: [[run]] runs each source's stage → geoprocess →
+  * publish chain as one task on a thread pool of at most
+  * min(#sources, defaultParallelism) threads (the reference's fan-out
+  * over sources, SURVEY §2.8), so one source's jobs overlap another's
+  * planning, catalog and commit work. The pool is created per run, so
+  * its threads inherit the caller's SparkContext local properties (job
+  * group, description). The outcome does not depend on completion order:
+  *  - staging names are reserved in declared order before the fan-out,
+  *    so they equal a one-at-a-time run's (§7.4);
+  *  - the ledger comes back as health rows, then stage, geoprocess and
+  *    publish rows, each phase in declared source order;
+  *  - sources that publish to the same table, or land into the same
+  *    directory, run one after another in declared order, so
+  *    last-writer truncate-and-load and append results are unchanged;
+  *  - each read runs under its own degradation ladder;
+  *  - with continueOnFailure = false, a failed chain stops (and so do
+  *    the later sources on its lane); the earliest-declared source's
+  *    failure is rethrown once all chains have settled.
   */
 class EtlPipeline( // extensible: override readSource to plug custom readers (S8)
     spark: SparkSession,
@@ -27,38 +41,36 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     mappings: MappingManager = new MappingManager(Seq.empty),
     stagingDb: String = "staging") {
 
-  import EtlPipeline.LedgerRow
+  import EtlPipeline.{Chain, LedgerRow}
 
   private val ledger    = mutable.ArrayBuffer[LedgerRow]()
   private val usedNames = mutable.Set[String]()
+  // the chain `run` is executing on this thread, if any
+  private val chain     = new ThreadLocal[Chain]
 
-  /** R3 graceful-degradation ladder shared across sources: recoverable
-    * read failures escalate (fewer concurrent downloads, longer
-    * timeouts); any healthy stage resets it.
-    */
-  val ladder = new graft.util.Retry.DegradationLadder()
-
-  def results: Seq[LedgerRow] = ledger.toSeq
-
-  def resultsDf: DataFrame = {
-    import spark.implicits._
-    ledger.toSeq.toDF()
-  }
+  def results: Seq[LedgerRow] = ledger.synchronized(ledger.toSeq)
 
   /** Summary counts per (phase, status) — run_summary.py:10-47. */
   def summary: Map[(String, String), Long] =
-    ledger.groupBy(r => (r.phase, r.status)).map { case (k, v) => k -> v.size.toLong }
+    results.groupBy(r => (r.phase, r.status)).map { case (k, v) => k -> v.size.toLong }
 
   def firstErrors(n: Int = 10): Seq[String] =
-    ledger.filter(_.status == "error").take(n).toSeq
+    results.filter(_.status == "error").take(n)
       .map(r => s"${r.source}/${r.phase}: ${r.error}")
 
   // -------------------------------------------------------------------------
 
-  private def record(s: Source, phase: String, status: String,
+  private def record(s: Source, phase: String, status: String, t0: Long,
       table: String = "", rows: Long = 0, error: String = "",
-      level: Long = 0L): Unit =
-    ledger += LedgerRow(s.name, s.authority, phase, status, table, rows, error, level)
+      level: Long = 0L): Unit = {
+    val row = LedgerRow(s.name, s.authority, phase, status, table, rows, error, level,
+      (System.nanoTime() - t0) / 1000000L)
+    val c = chain.get
+    if (c != null) c.rows += row else ledger.synchronized(ledger += row)
+  }
+
+  private def reserveName(s: Source): String = usedNames.synchronized(
+    Names.ensureUniqueName(Names.generateFcName(s.authority, s.name), usedNames))
 
   /** Extract+read one source into a normalized DataFrame (dispatch on
     * type, HANDLER_MAP semantics — S8). URLs are file://, plain paths,
@@ -214,10 +226,14 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     * columns, write to the staging database (K1-K4).
     */
   def stageSource(source: Source): Option[String] = {
-    if (!source.enabled) { record(source, "stage", "skip"); return None } // T1
+    val t0 = System.nanoTime()
+    if (!source.enabled) { record(source, "stage", "skip", t0); return None } // T1
+    // reserved before the read: the name depends only on the declared
+    // enabled sources, never on which reads succeed
+    val fcName = Option(chain.get).flatMap(_.fcName).getOrElse(reserveName(source))
     var cached: DataFrame = null
     try {
-      // the ladder retries the READ under degraded configs (its
+      // a per-call ladder retries the READ under degraded configs (its
       // concurrency/timeout knobs govern driver-side landing I/O); a
       // deterministic failure exhausts the 3 levels and falls through to
       // the continue-on-failure ledger below (recovery.py SKIP floor).
@@ -226,14 +242,14 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       // the ladder — where it can escalate — not later in the table
       // write; the staged write below then reads the cached data instead
       // of re-decoding the source.
-      val (df0, lvl) = ladder.run() { _ =>
+      val (df0, lvl) = new graft.util.Retry.DegradationLadder().run() { _ =>
         val d = readSource(source)
         d.cache()
         try { d.count(); d }
         catch { case e: Throwable => d.unpersist(); throw e }
       }
       cached = df0
-      if (lvl > 0) record(source, "stage", "degraded", level = lvl.toLong)
+      if (lvl > 0) record(source, "stage", "degraded", t0, level = lvl.toLong)
       // include-list semi-filter on the landed file stem (T5) — the stems
       // are a handful of config strings: isin == broadcast by construction.
       val df = source.includeStems match {
@@ -243,8 +259,6 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
             regexp_extract(col("_file"), "([^/]+)\\.[A-Za-z0-9]+$", 1), "^main\\.", ""))
           df0.filter(stemCol.isin(stems.map(_.toLowerCase): _*))
       }
-      val fcName = Names.ensureUniqueName(
-        Names.generateFcName(source.authority, source.name), usedNames)
       val staged = df
         .withColumn("source_id", lit(source.name))
         .withColumn("authority", lit(source.authority))
@@ -261,11 +275,11 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       Cleanup.ensureWritable(spark, stagingDb, fcName)
       staged.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$fcName`")
       val n = spark.table(s"`$stagingDb`.`$fcName`").count() // T7 verification
-      record(source, "stage", "done", fcName, n)
+      record(source, "stage", "done", t0, fcName, n)
       Some(fcName)
     } catch {
       case e: Exception =>
-        record(source, "stage", "error", error = String.valueOf(e.getMessage))
+        record(source, "stage", "error", t0, error = String.valueOf(e.getMessage))
         if (!cfg.continueOnFailure) throw e
         None
     } finally {
@@ -278,9 +292,11 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     * (pipeline.py:424-429, the 0.001s phase in the shipped run log).
     */
   def geoprocess(source: Source, fcName: String): Unit = {
+    val t0 = System.nanoTime()
     if (!cfg.geoprocessingEnabled || (cfg.aoi.isEmpty && cfg.aoiWkt.isEmpty)) {
-      record(source, "geoprocess", "skip", fcName); return
+      record(source, "geoprocess", "skip", t0, fcName); return
     }
+    val tmp = s"${fcName}__gp_tmp"
     try {
       val staged = spark.table(s"`$stagingDb`.`$fcName`")
       // exact polygon boundary when configured (the reference's actual
@@ -295,33 +311,34 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       }
       // in-place replace (Delete + CopyFeatures, geoprocess.py:79-81):
       // stage to temp then overwrite — Spark can't overwrite a table
-      // from a plan that reads the same table.
-      val tmp = s"${fcName}__gp_tmp"
-      clipped.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`")
+      // from a plan that reads the same table. The staged column order
+      // is kept, so re-staging into this table passes the schema pin.
+      clipped.select(staged.columns.toSeq.map(col): _*)
+        .write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`")
       spark.table(s"`$stagingDb`.`$tmp`").write.mode("overwrite")
         .saveAsTable(s"`$stagingDb`.`$fcName`")
-      spark.sql(s"DROP TABLE `$stagingDb`.`$tmp`")
       val n = spark.table(s"`$stagingDb`.`$fcName`").count()
-      record(source, "geoprocess", "done", fcName, n)
+      record(source, "geoprocess", "done", t0, fcName, n)
     } catch {
       case e: Exception =>
-        record(source, "geoprocess", "error", fcName, error = String.valueOf(e.getMessage))
+        record(source, "geoprocess", "error", t0, fcName, error = String.valueOf(e.getMessage))
         if (!cfg.continueOnFailure) throw e
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$stagingDb`.`$tmp`")
   }
 
   /** Publish one staged table through the mapping overlay (K5-K7). */
   def publishTable(source: Source, fcName: String): Unit = {
+    val t0 = System.nanoTime()
     try {
       val mapping: OutputMapping = mappings.resolve(source, fcName)
-      if (!mapping.enabled) { record(source, "publish", "skip", fcName); return }
+      if (!mapping.enabled) { record(source, "publish", "skip", t0, fcName); return }
       val n = Publish.publish(
         spark, spark.table(s"`$stagingDb`.`$fcName`"),
         mapping.sdeDataset, mapping.sdeFc, cfg.sdeLoadStrategy)
-      record(source, "publish", "done", s"${mapping.sdeDataset}.${mapping.sdeFc}", n)
+      record(source, "publish", "done", t0, s"${mapping.sdeDataset}.${mapping.sdeFc}", n)
     } catch {
       case e: Exception =>
-        record(source, "publish", "error", fcName, error = String.valueOf(e.getMessage))
+        record(source, "publish", "error", t0, fcName, error = String.valueOf(e.getMessage))
         if (!cfg.continueOnFailure) throw e
     }
   }
@@ -340,9 +357,11 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
 
   private def preflight(): Unit = {
     val st = healthMonitor().status()
-    st.checks.toSeq.sortBy(_._1).foreach { case (name, c) =>
-      ledger += LedgerRow("_preflight", "SYS", "health", c.status, name, 0,
-        if (c.status == "healthy") "" else c.message)
+    ledger.synchronized {
+      st.checks.toSeq.sortBy(_._1).foreach { case (name, c) =>
+        ledger += LedgerRow("_preflight", "SYS", "health", c.status, name, 0,
+          if (c.status == "healthy") "" else c.message)
+      }
     }
     // unhealthy aborts unless the run is declared continue-on-failure —
     // the same ladder every staging error rides (R3)
@@ -352,23 +371,74 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
           .filter(_.status == "unhealthy").map(_.message).mkString("; "))
   }
 
-  /** The full run (SURVEY §3.1 steps 3-8). Declared source order. */
+  /** The full run (SURVEY §3.1 steps 3-8): one chain per source on a
+    * per-run pool; see the class doc for the ordering guarantees.
+    */
   def run(sources: Seq[Source]): Seq[LedgerRow] = {
     if (cfg.healthChecksEnabled) preflight()
-    val staged = sources.flatMap(s => stageSource(s).map(s -> _))
-    staged.foreach { case (s, fc) => geoprocess(s, fc) }
-    staged.foreach { case (s, fc) => publishTable(s, fc) }
+    val chains = sources.map(s => new Chain(Option.when(s.enabled)(reserveName(s))))
+    if (chains.exists(_.fcName.isDefined))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$stagingDb`")
+    val failures = new Array[Throwable](sources.size)
+    def runChain(i: Int): Boolean = {
+      val s = sources(i)
+      chain.set(chains(i))
+      try stageSource(s).foreach { fc => geoprocess(s, fc); publishTable(s, fc) }
+      catch { case e: Throwable => failures(i) = e }
+      finally chain.remove()
+      failures(i) == null
+    }
+    val lanes = EtlPipeline.lanes(sources.indices.map(i => resourcesOf(sources(i), chains(i).fcName)))
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(lanes.size, spark.sparkContext.defaultParallelism)))
+    try lanes.map(l => CompletableFuture.runAsync(() => l.forall(runChain), pool)).foreach(_.join())
+    finally pool.shutdown()
+    ledger.synchronized {
+      for (phase <- Seq("stage", "geoprocess", "publish"); c <- chains)
+        ledger ++= c.rows.filter(_.phase == phase)
+    }
+    failures.find(_ != null).foreach(e => throw e)
     results
   }
+
+  /** What a source's chain writes that another source's chain may write
+    * too: its landing directory (Left) and its publish table (Right).
+    */
+  private def resourcesOf(s: Source, fcName: Option[String]): Set[Either[String, (String, String)]] =
+    fcName.fold(Set.empty[Either[String, (String, String)]]) { fc =>
+      val m = mappings.resolve(s, fc)
+      Set(Left(Names.sanitizeForFilename(s.name))) ++
+        Option.when(m.enabled)(Right(Publish.target(m.sdeDataset, m.sdeFc)))
+    }
 }
 
 object EtlPipeline {
   /** One ledger row per (source, phase) — the Summary surface (A1):
-    * phase ∈ {stage, geoprocess, publish}, status ∈ {done, skip, error}.
+    * phase ∈ {stage, geoprocess, publish}, status ∈ {done, skip, error};
+    * `durationMs` is the wall time of the phase call that wrote it.
     * Top-level (not nested in the class) so the case-class type test
     * needs no outer-instance check.
     */
   final case class LedgerRow(
       source: String, authority: String, phase: String, status: String,
-      table: String, rows: Long, error: String, level: Long = 0L)
+      table: String, rows: Long, error: String, level: Long = 0L,
+      durationMs: Long = 0L)
+
+  /** One source's chain inside [[EtlPipeline.run]]: its reserved staging
+    * name and the ledger rows it has recorded so far.
+    */
+  private final class Chain(val fcName: Option[String]) {
+    val rows = mutable.ArrayBuffer[LedgerRow]()
+  }
+
+  /** Groups source indices into lanes: sources that share a resource are
+    * in one lane, in declared order; lanes are ordered by first source.
+    */
+  private[pipeline] def lanes[K](resources: Seq[Set[K]]): Seq[Seq[Int]] =
+    resources.indices.foldLeft(Vector.empty[(Set[K], Vector[Int])]) { (acc, i) =>
+      val (shared, rest) = acc.partition(_._1.exists(resources(i)))
+      rest :+ shared.foldLeft((resources(i), Vector(i))) {
+        case ((r, l), (r2, l2)) => (r ++ r2, l ++ l2)
+      }
+    }.map(_._2.sorted).sortBy(_.head)
 }

@@ -21,6 +21,10 @@ object Publish {
   def datasetDb(sdeDataset: String): String =
     Names.sanitizeForArcgisName(sdeDataset.replace('.', '_')).toLowerCase
 
+  /** The (database, table) an SDE dataset and feature class publish to. */
+  def target(sdeDataset: String, sdeFc: String): (String, String) =
+    (datasetDb(sdeDataset), Names.sanitizeSdeName(sdeFc).toLowerCase)
+
   def ensureDatabase(spark: SparkSession, db: String): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
 
@@ -34,8 +38,7 @@ object Publish {
       sdeDataset: String,
       sdeFc: String,
       strategy: String = "truncate_and_load"): Long = {
-    val db    = datasetDb(sdeDataset)
-    val table = Names.sanitizeSdeName(sdeFc).toLowerCase
+    val (db, table) = target(sdeDataset, sdeFc)
     val fqn   = s"`$db`.`$table`"
     ensureDatabase(spark, db)
     Cleanup.ensureWritable(spark, db, table) // orphan-location guard (R8)

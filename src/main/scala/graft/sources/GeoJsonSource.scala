@@ -72,12 +72,4 @@ object GeoJsonSource {
       .drop("geometry_json", "crs")
     GeoFunctions.withBboxColumns(withGeom)
   }
-
-  /** Promote selected properties to typed top-level columns (the
-    * normalize step of SURVEY §1.4: open map → pinned columns).
-    */
-  def promoteProperties(df: DataFrame, fields: Map[String, DataType]): DataFrame =
-    fields.foldLeft(df) { case (acc, (name, dt)) =>
-      acc.withColumn(name, col("properties").getItem(name).cast(dt))
-    }
 }

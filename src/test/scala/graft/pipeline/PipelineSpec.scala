@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,9 +112,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists("`underlag_test`.`test_sample_data`") ||
       spark.catalog.databaseExists("underlag_test"))
 
-    // run twice: truncate-and-load is idempotent (same counts, no dup rows)
-    val pipe2 = new EtlPipeline(spark, cfg, stagingDb = "staging_t2")
+    // run again into the same staging database: re-staging over the
+    // geoprocessed tables passes the schema pin, and truncate-and-load is
+    // idempotent (same counts, no dup rows)
+    val pipe2 = new EtlPipeline(spark, cfg, stagingDb = "staging_t1")
     pipe2.run(sources)
+    assert(!pipe2.results.exists(_.status == "error"), pipe2.firstErrors())
     val c1 = pipe.results.filter(r => r.phase == "publish" && r.status == "done").map(_.rows)
     val c2 = pipe2.results.filter(r => r.phase == "publish" && r.status == "done").map(_.rows)
     assert(c1 == c2)
@@ -399,6 +404,105 @@ class PipelineSpec extends AnyFunSuite {
     assert(ledger.exists(r => r.source == "Broken" && r.status == "error"))
     assert(ledger.exists(r => r.source == "Sample Points" && r.phase == "stage" && r.status == "done"))
     assert(pipe.firstErrors().nonEmpty)
+  }
+
+  // Seven sources: an fc-name collision pair, a disabled source, a read
+  // failure and two sources the overlay publishes to one table.
+  private val concurrencyMix = Seq(
+    sources.head,                                          // test_sample_points
+    Source(name = "TEST Sample Points", authority = "TEST", sourceType = "file",
+      url = s"$res/rest_stub/layer-1/page-0.json"),        // collides → _1
+    sources(2),                                            // disabled
+    Source(name = "Broken", authority = "BAD", sourceType = "file",
+      url = "/nonexistent/file.geojson"),
+    sources(1),                                            // tst2_rest_layers
+    Source(name = "Mixed Shapes", authority = "MIX", sourceType = "file",
+      url = s"$res/mixed.geojson"),                        // → shared, clips to 0 rows
+    Source(name = "Points Copy", authority = "DUP", sourceType = "file",
+      url = s"$res/sample.geojson"))                       // → shared, last writer
+  private val sharedTarget = new MappingManager(Seq("mix_mixed_shapes", "dup_points_copy")
+    .map(fc => OutputMapping(stagingFc = fc, sdeFc = "shared_fc", sdeDataset = "Underlag_CONC")))
+  private val clipCfg = GlobalConfig(aoi = Some((17.9, 59.2, 18.2, 59.5)), targetSrid = 3006)
+
+  test("run: concurrent chains give the one-at-a-time ledger, names and published tables") {
+    // the reference: each phase called one source at a time, in order
+    val seq = new EtlPipeline(spark, clipCfg, sharedTarget, "staging_seq")
+    val staged = concurrencyMix.flatMap(s => seq.stageSource(s).map(s -> _))
+    staged.foreach { case (s, fc) => seq.geoprocess(s, fc) }
+    staged.foreach { case (s, fc) => seq.publishTable(s, fc) }
+    def published(ledger: Seq[EtlPipeline.LedgerRow]): Map[String, Seq[String]] =
+      ledger.filter(r => r.phase == "publish" && r.status == "done").map(_.table).distinct
+        .map { t =>
+          val (db, table) = Publish.target(t.take(t.lastIndexOf('.')), t.drop(t.lastIndexOf('.') + 1))
+          t -> spark.table(s"`$db`.`$table`").collect().map(_.toString).toSeq.sorted
+        }.toMap
+    val seqTables = published(seq.results)
+
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    val started, finished = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val conc = new EtlPipeline(spark, clipCfg, sharedTarget, "staging_conc") {
+      override def readSource(s: Source) = {
+        seen.add((Thread.currentThread().getName, spark.sparkContext.getLocalProperty("graft.test")))
+        super.readSource(s)
+      }
+      override def stageSource(s: Source) = {
+        started.put(s.name, System.nanoTime())
+        super.stageSource(s)
+      }
+      override def publishTable(s: Source, fc: String): Unit = {
+        super.publishTable(s, fc)
+        finished.put(s.name, System.nanoTime())
+      }
+    }
+    spark.sparkContext.setLocalProperty("graft.test", "caller")
+    val ledger = try conc.run(concurrencyMix)
+      finally spark.sparkContext.setLocalProperty("graft.test", null)
+
+    def strip(rows: Seq[EtlPipeline.LedgerRow]) = rows.map(_.copy(durationMs = 0L))
+    assert(strip(ledger) == strip(seq.results))
+    assert(ledger.filter(r => r.phase == "stage" && r.status == "done").map(_.table) ==
+      Seq("test_sample_points", "test_sample_points_1", "tst2_rest_layers",
+        "mix_mixed_shapes", "dup_points_copy"))
+    assert(ledger.map(_.phase).distinct == Seq("stage", "geoprocess", "publish"))
+    assert(ledger.exists(r => r.source == "Broken" && r.status == "error"))
+    assert(ledger.filter(_.status == "done").forall(_.durationMs > 0))
+    // the later-declared source is the last writer of the shared table
+    assert(ledger.count(r => r.table == "Underlag_CONC.shared_fc" && r.status == "done") == 2)
+    assert(published(ledger) == seqTables)
+    assert(finished.get("Mixed Shapes") <= started.get("Points Copy"),
+      "sources publishing to one table must not overlap")
+    val shared = seqTables("Underlag_CONC.shared_fc")
+    assert(shared.nonEmpty && shared.forall(_.contains("Points Copy")), shared)
+    // chains ran on pool threads that inherited the caller's properties
+    assert(seen.asScala.map(_._2) == Set("caller"))
+    assert(!seen.asScala.map(_._1).contains(Thread.currentThread().getName))
+  }
+
+  test("run with continueOnFailure = false rethrows the first declared failure after all chains settle") {
+    val srcs = Seq(
+      sources.head,
+      Source(name = "Broken First", authority = "BAD", sourceType = "file",
+        url = "/nonexistent/first.geojson"),
+      Source(name = "Points Copy", authority = "DUP", sourceType = "file",
+        url = s"$res/sample.geojson"),
+      Source(name = "Broken Second", authority = "BAD", sourceType = "file",
+        url = "/nonexistent/second.geojson"))
+    val pipe = new EtlPipeline(spark, clipCfg.copy(continueOnFailure = false),
+      stagingDb = "staging_failfast")
+    val e = intercept[Exception](pipe.run(srcs))
+    assert(e.getMessage.contains("first.geojson"), e.getMessage)
+    val done = pipe.results.filter(_.status == "done").map(r => (r.source, r.phase))
+    for (s <- Seq("Sample Points", "Points Copy"); phase <- Seq("stage", "geoprocess", "publish"))
+      assert(done.contains((s, phase)), s"$s/$phase did not settle")
+    assert(pipe.results.count(_.status == "error") == 2)
+    val tables = spark.catalog.listTables("staging_failfast").collect().map(_.name)
+    assert(tables.nonEmpty && !tables.exists(_.contains("__gp_tmp")), tables.mkString(","))
+  }
+
+  test("run lanes: sources sharing a resource run on one lane, in declared order") {
+    assert(EtlPipeline.lanes(Seq(Set("a"), Set.empty[String], Set("b"), Set("a", "c"), Set("c", "b"), Set("d"))) ==
+      Seq(Seq(0, 2, 3, 4), Seq(1), Seq(5)))
+    assert(EtlPipeline.lanes(Seq.empty[Set[String]]) == Seq.empty)
   }
 
   test("mapping overlay: exact, partial, default; sde name split") {
