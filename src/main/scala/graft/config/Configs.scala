@@ -106,8 +106,4 @@ object Configs {
         asMap(asMap(root.getOrElse("monitoring", null))
           .getOrElse("health_checks", null)), "enabled", dflt = false))
   }
-
-  /** Env-var overrides (config.py:421-453): ETL_<UPPER_KEY>=value. */
-  def envOverride(key: String, env: Map[String, String] = sys.env): Option[String] =
-    env.get("ETL_" + key.toUpperCase.replace('.', '_'))
 }

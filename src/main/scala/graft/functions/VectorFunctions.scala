@@ -44,11 +44,6 @@ object VectorFunctions {
   def cosineFused(a: Column, b: Column): Column =
     graft.plans.CosineSimExpr(a, b)
 
-  /** Squared euclidean distance. */
-  def distSq(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), _ + _)
-
   /** Random-hyperplane SimHash-style LSH bucket id: sign bits of the dot
     * product against `planes` (deterministic seeded planes generated by
     * the caller), packed into a long. Vectors in the same bucket are

@@ -511,13 +511,7 @@ object Dedup {
   // for gen 0, `<prefix>_dels_g<nano>` for a promoted generation — the
   // name derives from the bands table's own generation suffix, so a
   // reader's (bands, sigs, dels) triple resolves ATOMICALLY from the
-  // one currentIndexTables call: a compaction promote can never pair
-  // old band rows with a post-purge tombstone view (served-deleted
-  // docs) or delete tombstone files out from under a planned scan.
-  // Appended by [[deleteFromMinhashBandIndex]]; a compaction's new
-  // generation starts with NO dels table (the purge is the rewrite),
-  // and the superseded generation's dels table retires age-gated with
-  // its pair.
+  // one currentIndexTables call (see [[IndexLifecycle]] "Generations").
   private[graft] def delsTableFor(bandsTable: String): String = {
     val prefix = prefixOf(bandsTable)
     prefix + "_dels" + bandsTable.stripPrefix(s"${prefix}_bands")
@@ -538,12 +532,10 @@ object Dedup {
       spark: SparkSession, curBands: String): Option[DataFrame] = {
     val genDels  = delsTableFor(curBands)
     val baseDels = prefixOf(curBands) + "_dels"
-    def unconsumed(t: String): Boolean =
-      !spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .exists(r => r.getString(0) == "graft.consumed")
     val sources = (Seq(genDels).filter(spark.catalog.tableExists) ++
       (if (baseDels != genDels && spark.catalog.tableExists(baseDels) &&
-           unconsumed(baseDels)) Seq(baseDels) else Seq.empty))
+           !propsOf(spark, baseDels).contains(Consumed)) Seq(baseDels)
+       else Seq.empty))
     if (sources.isEmpty) None
     else Some(sources.map(spark.table).reduce(_ union _))
   }
@@ -554,60 +546,67 @@ object Dedup {
   private[graft] def prefixOf(table: String): String =
     table.replaceAll("_(bands|sigs)(_g\\d+)?$", "")
 
+  // the band lineage's ledger keys (all in the ACTIVE bands table's
+  // TBLPROPERTIES; copied forward by every compaction)
+  private val Folds    = "graft.folds"
+  private val Intent   = "graft.folds.intent"
+  private val PurgeWin = "graft.folds.purgewin"
+  private val Dels     = "graft.dels"
+  private val NFiles   = "graft.compact.nfiles"
+  private val Consumed = "graft.consumed"
+  // set by a compaction's CTAS, unset by its promote: a generation
+  // carrying it is not yet readable ([[currentIndexTables]])
+  private val Pending  = "graft.pending"
+
+  private def propsOf(spark: SparkSession, table: String): Map[String, String] =
+    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  private def tagsOf(props: Map[String, String], key: String): Set[String] =
+    props.get(key).map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+
+  private def setProps(spark: SparkSession, table: String,
+      kv: (String, String)*): Unit =
+    if (kv.nonEmpty)
+      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" + kv.map { case (k, v) =>
+        s"'$k'='${v.replace("'", "''")}'" }.mkString(",") + ")")
+
+  private def ledger(tags: Set[String]): String = tags.toSeq.sorted.mkString(",")
+
   /** Resolve a lineage's CURRENT physical tables — the generation
     * manifest of the table-backed index family (the band-index analog
     * of [[Similarity.activeCellsDir]]). Generation 0 is the unsuffixed
     * pair [[ensureMinhashBandIndex]] writes; each
-    * [[compactMinhashBandIndex]] promotes a fresh `_g<nano>` pair and
-    * the PROMOTE EVENT is the catalog creation of the new bands table
-    * (the last of the pair to land, with its ledger props attached in
-    * the same CTAS) — one atomic catalog op, so there is no window
-    * where the lineage is headless, and the superseded generation
-    * stays readable for scans already in flight (retired one
-    * compaction later). Callers may hold any generation's names across
-    * maintenance; every read path re-resolves through this.
+    * [[compactMinhashBandIndex]] writes a fresh `_g<nano>` pair marked
+    * pending, and the PROMOTE EVENT is the one catalog op that unsets
+    * the mark on the new bands table (see [[IndexLifecycle]]). Callers
+    * may hold any generation's names across maintenance; every read
+    * path re-resolves through this.
     */
   def currentIndexTables(
       spark: SparkSession, tablePrefix: String): (String, String) = {
     val cat  = spark.sessionState.catalog
     val base = s"${tablePrefix}_bands"
-    val sfxs = generationSuffixes(spark, tablePrefix)
-    sfxs
+    def promoted(sfx: String): Boolean =
+      sfx.isEmpty || (
+        try !cat.getTableMetadata(org.apache.spark.sql.catalyst
+          .TableIdentifier(base + sfx, Some("default"))).properties.contains(Pending)
+        catch { case _: org.apache.spark.sql.AnalysisException => false })
+    familySuffixes(spark, tablePrefix, "bands")
       .find(sfx => cat.tableExists(
         org.apache.spark.sql.catalyst.TableIdentifier(
-          s"${tablePrefix}_sigs$sfx", Some("default"))))
+          s"${tablePrefix}_sigs$sfx", Some("default"))) && promoted(sfx))
       .map(sfx => (s"$base$sfx", s"${tablePrefix}_sigs$sfx"))
       .getOrElse((base, s"${tablePrefix}_sigs"))
   }
 
-  // every standing generation suffix of a lineage, newest first ("" =
-  // the unsuffixed gen-0 pair, always last). Ordering is NUMERIC on
-  // the stamp, never lexical: suffixes are written by different
-  // processes (the whole point of the writer lease) whose stamps can
-  // differ in digit width — string order would resolve reads to a
-  // SUPERSEDED generation after a cross-process promote, and folds
-  // appended there would be lost when the pair retires.
-  private def generationSuffixes(
-      spark: SparkSession, tablePrefix: String): Seq[String] =
-    familySuffixes(spark, tablePrefix, "bands")
+  private def bandStamp(sfx: String): Option[Long] =
+    IndexLifecycle.parseStamp(sfx, "", "_g")
 
-  // the numeric stamp of a generation suffix: 0 for gen-0 (""),
-  // -1 (oldest) for unparseable foreign garbage — retirement must
-  // still be able to drop it, resolution must never prefer it
-  private def genSuffixNum(sfx: String): Long =
-    if (sfx.isEmpty) 0L
-    else {
-      val d = sfx.stripPrefix("_g")
-      if (d.nonEmpty && d.length <= 19 && d.forall(_.isDigit))
-        try d.toLong catch { case _: NumberFormatException => -1L }
-      else -1L
-    }
-
-  // the same enumeration for one family — resolution only trusts bands
-  // (the promote's single catalog event), but retirement must also see
-  // ORPHAN sigs generations (a crash between the sigs CTAS and the
-  // bands CTAS leaves a sigs table with no bands twin, invisible to the
-  // bands-only listing and otherwise leaked forever)
+  // every standing generation suffix of one table family, newest first
+  // ("" = the unsuffixed gen-0 pair, always last). Resolution only
+  // trusts bands, but retirement must also see ORPHAN sigs/dels
+  // generations (a crash between the two CTAS).
   private def familySuffixes(
       spark: SparkSession, tablePrefix: String,
       family: String): Seq[String] = {
@@ -621,72 +620,136 @@ object Dedup {
             n.stripPrefix(s"${base}_g").forall(_.isDigit) =>
           n.stripPrefix(base)
       }
-    gens.filter(_.nonEmpty).sortBy(s => -genSuffixNum(s)) ++
+    gens.filter(_.nonEmpty).sortBy(s => -bandStamp(s).getOrElse(-1L)) ++
       gens.filter(_.isEmpty)
   }
 
-  // drop every generation pair of a lineage EXCEPT `keep` — the
-  // retirement half of the promote contract. Age-gated when
-  // `ageGateHours` > 0: a superseded pair (or an orphan left by a
-  // crashed cross-process CTAS) is only dropped once its catalog
-  // createTime is older than the gate, so a scan still reading it —
-  // or a LIVE rewrite mid-promote in another process (lockFor is
-  // JVM-local) — keeps its tables; the IVF side's generation GC makes
-  // the same promise via file mtimes. A rebuild passes 0: explicit
-  // full reset, nothing to preserve.
-  private def dropGenerationsExcept(
-      spark: SparkSession, tablePrefix: String, keep: Set[String],
-      ageGateHours: Long = 0L): Unit = {
-    val cat    = spark.sessionState.catalog
-    val cutoff = System.currentTimeMillis() - ageGateHours * 3600 * 1000L
-    def oldEnough(table: String): Boolean =
-      ageGateHours <= 0L || {
-        try cat.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(
-              table, Some("default"))).createTime <= cutoff
-        catch { case _: org.apache.spark.sql.AnalysisException => true }
+  /** The catalog-table storage of one band lineage: generations are
+    * `<prefix>_{bands,sigs,dels}<suffix>` triples identified by their
+    * bands table name, ledgers and the nfiles stamp live in the bands
+    * TBLPROPERTIES.
+    */
+  private final class BandStore(spark: SparkSession, prefix: String,
+      buckets: Int) extends IndexLifecycle.Store {
+    type Snapshot = Option[Checkpoints.Staged]
+    private val Families = Seq("bands", "sigs", "dels")
+    private def sfxOf(bands: String) = bands.stripPrefix(s"${prefix}_bands")
+    private def sigsOf(bands: String) = s"${prefix}_sigs${sfxOf(bands)}"
+
+    def lockKey: String = prefix
+    def leasePath: org.apache.hadoop.fs.Path =
+      WriterLease.lockPathFor(spark, "default", prefix)
+    def recover(): Unit = ()
+    def active(): String = currentIndexTables(spark, prefix)._1
+
+    def generations(): Seq[IndexLifecycle.Generation] = {
+      val cat = spark.sessionState.catalog
+      def created(t: String): Option[Long] =
+        try Some(cat.getTableMetadata(org.apache.spark.sql.catalyst
+          .TableIdentifier(t, Some("default"))).createTime)
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      Families.flatMap(familySuffixes(spark, prefix, _)).distinct.map { sfx =>
+        new IndexLifecycle.Generation(s"${prefix}_bands$sfx", bandStamp(sfx),
+          Families.flatMap(f => created(s"${prefix}_$f$sfx")).maxOption.getOrElse(0L))
       }
-    val sfxs = (familySuffixes(spark, tablePrefix, "bands") ++
-      familySuffixes(spark, tablePrefix, "sigs") ++
-      familySuffixes(spark, tablePrefix, "dels")).distinct
-    // COUNT bound on top of the age gate (the IVF side's recoverCells
-    // contract): a hot compaction loop must not accumulate generation
-    // pairs without limit for gcStaleHours. Among retirable suffixes
-    // (newest first — familySuffixes order), the newest
-    // `spark.graft.index.maxStaleGenerations` stay age-gated; the
-    // excess drops REGARDLESS of age. keep-set members (the active
-    // pair and its immediate predecessor, or a live rewrite's newer
-    // suffix) are never counted. Readers accept the same contract
-    // shift as the path-backed family: an in-flight scan survives
-    // min(gcStaleHours, K subsequent promotes).
-    val keepStale =
-      if (ageGateHours <= 0L) 0
-      else Similarity.confInt(
-        spark, "spark.graft.index.maxStaleGenerations", 4)
-    // explicit newest-first order, NUMERIC on the stamp ("" = gen 0 =
-    // stamp 0, oldest; see [[genSuffixNum]] for why string order is
-    // wrong) — the concatenated family listing is not globally ordered
-    // when orphan sigs/dels suffixes exist
-    val retirable =
-      sfxs.filterNot(keep).sortBy(s => -genSuffixNum(s))
-    // the keep set's non-active members (the just-superseded pair a
-    // promote always protects) consume superseded-budget slots, so the
-    // invariant is global: ≤ keepStale superseded generations standing
-    // after any maintenance op, i.e. ≤ keepStale+1 in total
-    val keepSlots = math.max(0, keepStale - math.max(0, keep.size - 1))
-    val forced: Set[String] =
-      if (keepStale <= 0 && ageGateHours > 0L) Set.empty
-      else retirable.drop(keepSlots).toSet
-    retirable.foreach { sfx =>
-      Seq(s"${tablePrefix}_bands$sfx", s"${tablePrefix}_sigs$sfx",
-          s"${tablePrefix}_dels$sfx")
-        .foreach { t =>
-          if (cat.tableExists(org.apache.spark.sql.catalyst
-              .TableIdentifier(t, Some("default"))) &&
-              (forced.contains(sfx) || oldEnough(t)))
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-        }
     }
+
+    def drop(gen: String): Unit =
+      Families.foreach(f => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f${sfxOf(gen)}"))
+
+    def hasTombstones(gen: String): Boolean = standingDels(spark, gen).isDefined
+
+    // refreshed first: a fold appended by ANOTHER process is invisible
+    // in this session's cached file index
+    def fileCounts(gen: String): Seq[Long] = Seq(gen, sigsOf(gen)).map { t =>
+      spark.catalog.refreshTable(t)
+      spark.table(t).inputFiles.length.toLong
+    }
+    def stampedCounts(gen: String): Option[Seq[Long]] =
+      propsOf(spark, gen).get(NFiles).flatMap(IndexLifecycle.parseCounts)
+    def writeStamp(gen: String, counts: Seq[Long]): Unit =
+      setProps(spark, gen, NFiles -> counts.mkString(","))
+
+    // MATERIALIZED once and reused by both CTAS passes: as a lazy plan
+    // it would be evaluated twice, and a cross-process delete landing
+    // between the evaluations would make bands and sigs DISAGREE on
+    // purged docs. Also the baseline of the late forward.
+    def snapshot(gen: String): Snapshot = standingDels(spark, gen).map(d =>
+      Checkpoints.stageOwned(d.select("doc_id").distinct(),
+        Checkpoints.configured(spark)))
+    def release(s: Snapshot): Unit = s.foreach(_.release())
+
+    // both tables drop the snapshot's docs; the new generation starts
+    // with NO dels table (the purge is the rewrite). buckets=0 derives
+    // the count from the standing table's bucket spec, so a caller-free
+    // compaction never re-buckets a lineage (a later fold's append
+    // would fail on the mismatch). Sigs first; the bands table is
+    // created pending, so neither is readable before the promote, and
+    // both then take the copied `graft.*` properties (ledgers, the
+    // Bucketing validity key).
+    def rewrite(gen: String, s: Snapshot): String = {
+      val bk = if (buckets > 0) buckets else bucketCountOf(spark, gen).getOrElse(8)
+      val props = propsOf(spark, gen)
+      // the purge-window ledger (names only, O(crashed tags)): a purge
+      // while a crashed fold's intent stands makes that tag's replay
+      // undecidable when nothing of the batch survived — record those
+      // tags so the replay refuses (see foldIntoMinhashBandIndex)
+      val purgewin =
+        if (s.isEmpty) tagsOf(props, PurgeWin)
+        else tagsOf(props, PurgeWin) ++ (tagsOf(props, Intent) -- tagsOf(props, Folds))
+      val newSfx = s"_g${IndexLifecycle.newStamp()}"
+      Seq((sigsOf(gen), s"${prefix}_sigs$newSfx", "doc_id", Map.empty[String, String]),
+          (gen, s"${prefix}_bands$newSfx", "bk",
+            if (purgewin.nonEmpty) Map(PurgeWin -> ledger(purgewin)) else Map.empty[String, String]))
+        .foreach { case (src, destTable, key, extra) =>
+          val live = s.fold(spark.table(src))(dels =>
+            spark.table(src).join(broadcast(dels.df), Seq("doc_id"), "left_anti"))
+          val staged = Checkpoints.stageOwned(live.repartition(bk, col(key)),
+            Checkpoints.configured(spark))
+          try {
+            val view = s"${destTable}_ctas_src"
+            staged.df.createOrReplaceTempView(view)
+            val pending = if (key == "bk") s" TBLPROPERTIES('$Pending'='true')" else ""
+            spark.sql(s"CREATE TABLE $destTable USING parquet " +
+              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $bk BUCKETS$pending " +
+              s"AS SELECT * FROM $view")
+            spark.catalog.dropTempView(view)
+          } finally staged.release()
+          setProps(spark, destTable,
+            (propsOf(spark, src).filter(_._1.startsWith("graft.")) ++ extra).toSeq: _*)
+        }
+      s"${prefix}_bands$newSfx"
+    }
+
+    def promote(gen: String): Unit =
+      spark.sql(s"ALTER TABLE $gen UNSET TBLPROPERTIES IF EXISTS ('$Pending')")
+
+    def forwardLate(old: String, gen: String, s: Snapshot): Unit =
+      standingDels(spark, old).foreach { cur =>
+        val late = s.fold(cur.select("doc_id"))(snap =>
+          cur.select("doc_id").join(broadcast(snap.df), Seq("doc_id"), "left_anti"))
+        if (!late.isEmpty) {
+          val newDels = delsTableFor(gen)
+          if (!spark.catalog.tableExists(newDels))
+            graft.pipeline.Cleanup.ensureWritable(spark, "default", newDels)
+          late.write.mode("append").format("parquet").saveAsTable(newDels)
+          val lateTags = tagsOf(propsOf(spark, old), Dels)
+          val newTags  = tagsOf(propsOf(spark, gen), Dels)
+          if ((lateTags -- newTags).nonEmpty)
+            setProps(spark, gen, Dels -> ledger(lateTags ++ newTags))
+          log.warn(s"compactMinhashBandIndex($prefix): forwarded late " +
+            "tombstone rows from the superseded generation — a " +
+            "cross-process delete raced this rewrite outside the " +
+            "writer lease")
+        }
+      }
+
+    // the base `<prefix>_dels` rows were consumed by this rewrite (as
+    // gen 0's own dels or a pre-upgrade leftover): MARK the table
+    // consumed so new readers skip it; it retires with its generation
+    def consumed(old: String, s: Snapshot): Unit =
+      if (s.isDefined && spark.catalog.tableExists(s"${prefix}_dels"))
+        setProps(spark, s"${prefix}_dels", Consumed -> "true")
   }
 
   /** The bucket count a lineage was actually built with, read from the
@@ -729,12 +792,8 @@ object Dedup {
       else if (table.startsWith(s"${prefix}_sigs")) curSigs
       else curBands
     val t = spark.table(resolved)
-    standingDels(spark, curBands) match {
-      case Some(dels) =>
-        t.join(broadcast(dels.select("doc_id").distinct()),
-          Seq("doc_id"), "left_anti")
-      case None => t
-    }
+    standingDels(spark, curBands).fold(t)(dels =>
+      t.join(broadcast(dels.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
   }
 
   /** The skew-capped LIVE view of a persisted band index (tombstoned
@@ -768,95 +827,55 @@ object Dedup {
       rows: Int = 4,
       buckets: Int = 8,
       seed: Long = 7L): (String, String) = {
+    val spark      = docs.sparkSession
     val bandsTable = s"${tablePrefix}_bands"
     val sigsTable  = s"${tablePrefix}_sigs"
-    // validity is checked against the lineage's CURRENT generation
-    // (compaction copies the graft.src key forward, so a compacted
-    // lineage still reads as current and repeated ensure calls stay
-    // zero-cost); a rebuild retires EVERY generation and starts gen 0
-    val (curBands, curSigs) =
-      currentIndexTables(docs.sparkSession, tablePrefix)
     // fold the DATA FINGERPRINT into the validity key (the
     // Similarity.inputFingerprint contract): a corpus regenerated at
     // the same path with the same schema — the wiped-and-rebuilt /tmp
     // fixture case — must invalidate the persisted index instead of
     // silently deduping new text against old band/sig tables
     val fpTag = s"$srcTag|fp=${Similarity.inputFingerprint(docs)}"
-    // probe validity with the UNSTAGED plan first (schema + catalog
-    // props only): a repeated ensure call must cost ZERO corpus work.
-    // The eager signature staging used to run unconditionally, which
-    // re-spread and re-minhashed the whole corpus on every call — one
-    // full corpus re-hash per query invocation at scale (found as the
-    // batch-independent ~1-row-per-corpus-doc shuffle constant in the
-    // p01/p02 ShuffleProbe runs). Staging (localCheckpoint/checkpoint)
-    // preserves the plan's schema, so the staged frames below produce
-    // the same layout keys the probe checked.
+    // validity is probed with the UNSTAGED plan (schema + catalog props
+    // only) against the lineage's CURRENT generation (compaction copies
+    // the graft.src key forward): a repeated ensure call costs ZERO
+    // corpus work. Staging preserves the plan's schema, so the staged
+    // frames below produce the same layout keys the probe checked.
     val rawSigs = minhashSignaturesPortable(docs, shingleN, bands * rows, seed)
-    val current =
-      Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), curBands,
+    def current(tables: (String, String)): Boolean =
+      Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), tables._1,
         buckets, Seq("bk"), fpTag) &&
-      Bucketing.isCurrent(rawSigs, curSigs, buckets, Seq("doc_id"), fpTag)
-    if (!current) {
+      Bucketing.isCurrent(rawSigs, tables._2, buckets, Seq("doc_id"), fpTag)
+    val cur = currentIndexTables(spark, tablePrefix)
+    if (current(cur)) cur
+    else {
       // the rebuild is a WRITE: it retires every generation and
-      // restarts the lineage at gen 0, so it takes the cross-process
-      // writer lease like every other maintenance entry point — but the
-      // lease's re-entrancy is per-JVM (held-map depth), NOT per-thread,
-      // so the lease alone would admit two sibling THREADS that both
-      // probed a stale index (the second just increments the depth)
-      // straight into racing DROP TABLE / dropGenerationsExcept /
-      // ensureBucketed. Serialize JVM-locally on the lineage lock FIRST
-      // — the precondition every other band-index entry point
-      // (fold/delete/compact) already honors — and re-probe validity
-      // under it, so the loser of the thread race reuses the winner's
+      // restarts the lineage at gen 0. Validity is re-probed under the
+      // JVM lock, so the loser of a thread race reuses the winner's
       // rebuild instead of redoing (and clobbering) it.
-      foldLocks.computeIfAbsent(tablePrefix, _ => new Object).synchronized {
-        val (cb, cs) = currentIndexTables(docs.sparkSession, tablePrefix)
-        val nowCurrent =
-          Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), cb,
-            buckets, Seq("bk"), fpTag) &&
-          Bucketing.isCurrent(rawSigs, cs, buckets, Seq("doc_id"), fpTag)
-        if (nowCurrent) (cb, cs)
-        else WriterLease.withLease(docs.sparkSession,
-            WriterLease.lockPathFor(docs.sparkSession, "default",
-              tablePrefix)) {
-          // a rebuild starts a NEW lineage: stale tombstones from the
-          // old one must not suppress freshly indexed docs — drop the
-          // catalog entry AND any orphaned warehouse dir a previous
-          // JVM left
-          docs.sparkSession.sql(
-            s"DROP TABLE IF EXISTS ${delsTableFor(bandsTable)}")
-          graft.pipeline.Cleanup.ensureWritable(
-            docs.sparkSession, "default", delsTableFor(bandsTable))
-          // every generation of the stale lineage goes — gen 0 restarts it
-          dropGenerationsExcept(docs.sparkSession, tablePrefix, Set.empty)
-          // staged so the expensive minhash kernel runs ONCE for both writes
-          val sigs = Checkpoints.stage(rawSigs,
-            Checkpoints.configured(docs.sparkSession))
-          Bucketing.ensureBucketed(bandKeys(sigs, bands, rows),
-            bandsTable, buckets, Seq("bk"), fpTag)
-          Bucketing.ensureBucketed(sigs, sigsTable, buckets, Seq("doc_id"), fpTag)
-          (bandsTable, sigsTable)
-        }
+      IndexLifecycle.guarded(spark, tablePrefix, None,
+          WriterLease.lockPathFor(spark, "default", tablePrefix),
+          skip = current(currentIndexTables(spark, tablePrefix))) {
+        // truncate-and-load: every generation of the stale lineage goes
+        // — stale tombstones must not suppress freshly indexed docs
+        IndexLifecycle.retire(spark, new BandStore(spark, tablePrefix, buckets),
+          None, Set.empty, Some(IndexLifecycle.Policy.of(spark).copy(gcStaleHours = 0L)))
+        // ... including any orphaned warehouse dir a previous JVM left
+        graft.pipeline.Cleanup.ensureWritable(
+          spark, "default", delsTableFor(bandsTable))
+        // staged so the expensive minhash kernel runs ONCE for both writes
+        val sigs = Checkpoints.stage(rawSigs, Checkpoints.configured(spark))
+        Bucketing.ensureBucketed(bandKeys(sigs, bands, rows),
+          bandsTable, buckets, Seq("bk"), fpTag)
+        Bucketing.ensureBucketed(sigs, sigsTable, buckets, Seq("doc_id"), fpTag)
       }
-    } else (curBands, curSigs)
+      currentIndexTables(spark, tablePrefix)
+    }
   }
-
-  // fold ledgers already validated THIS application (appId|table|tag):
-  // a repeated fold call in an ingestion loop must cost zero catalog
-  // roundtrips (the Bucketing.validated pattern)
-  private val foldMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val foldLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  // test seam (ConcurrentMaintenanceSpec): invoked by
-  // compactMinhashBandIndex between its dels snapshot and the CTAS
-  // promote pair — lets a spec drive a racing delete into exactly the
-  // window the late-dels merge-forward closes
-  private[graft] var compactRaceHook: Option[() => Unit] = None
 
   /** Fold an ADMITTED batch into a persisted MinHash band index — the
     * q95 incremental-index contract applied to near-dup ingestion
-    * (reference analog: the append semantics of `etl/pipeline.py:717-725`).
+    * (the append leg of [[IndexLifecycle]]).
     * After [[incrementalNearDupPairs]] admits the batch's
     * non-duplicates, their band/sig rows land as NEW BUCKET FILES
     * appended to the two bucketed tables — O(|batch|) work; the corpus
@@ -894,21 +913,14 @@ object Dedup {
       seed: Long = 7L): Unit = {
     require(!batchTag.contains(","),
       s"batchTag must not contain ',' (the fold-ledger separator): '$batchTag'")
-    val spark      = admitted.sparkSession
-    val memoKey    = s"${spark.sparkContext.applicationId}|$tablePrefix|fold|$batchTag"
-    if (foldMemo.contains(memoKey)) return
-    // locks key on the PREFIX (stable across generation promotes), and
-    // the physical pair resolves UNDER the lock so a fold never appends
-    // to a generation a concurrent compaction is retiring
-    foldLocks.computeIfAbsent(tablePrefix, _ => new Object).synchronized {
-      if (foldMemo.contains(memoKey)) return
-      WriterLease.withLease(spark,
-          WriterLease.lockPathFor(spark, "default", tablePrefix)) {
+    val spark = admitted.sparkSession
+    // the physical pair resolves UNDER the guard, so a fold never
+    // appends to a generation a concurrent compaction is retiring
+    IndexLifecycle.guarded(spark, tablePrefix, Some(s"$tablePrefix|fold|$batchTag"),
+        WriterLease.lockPathFor(spark, "default", tablePrefix)) {
       val (bandsTable, sigsTable) = currentIndexTables(spark, tablePrefix)
-      val props = spark.sql(s"SHOW TBLPROPERTIES $bandsTable").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val folded = props.get("graft.folds")
-        .map(_.split(",").toSet).getOrElse(Set.empty)
+      val props  = propsOf(spark, bandsTable)
+      val folded = tagsOf(props, Folds)
       if (!folded.contains(batchTag)) {
         // a standing intent for THIS tag means a previous attempt
         // crashed between its appends and the ledger write — probe each
@@ -916,32 +928,15 @@ object Dedup {
         // The intent is a SET (one crashed tag must survive other tags
         // folding in between), trimmed to tags still absent from the
         // ledger so it can't grow past the crash population
-        val intents = props.get("graft.folds.intent")
-          .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-        val suspect = intents.contains(batchTag)
-        // tags whose crash window CONTAINED a tombstone purge
-        // (recorded by compactMinhashBandIndex) — for these, "no batch
-        // doc present" no longer means "append never landed"
-        val purgewin = props.get("graft.folds.purgewin")
-          .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-        // the re-insert guard (see [[deleteFromMinhashBandIndex]]): a
-        // batch that intersects standing tombstones must fail loudly —
-        // its old rows are still physical, so the tombstone would kill
-        // both versions. One tiny broadcast probe, paid only when a
-        // tombstone table exists at all.
-        standingDels(spark, bandsTable).foreach { dels =>
-          val hit = dels
-            .join(broadcast(admitted.select("doc_id").distinct()), "doc_id")
-            .limit(1).collect()
-          require(hit.isEmpty,
-            s"fold batch re-inserts tombstoned doc_id ${hit.headOption.map(_.getLong(0)).getOrElse(-1L)}: " +
-              "compact the index first (compaction purges tombstones), " +
-              "then re-fold the doc as new")
-        }
-        val pending = ((intents -- folded) + batchTag).toSeq.sorted
-          .mkString(",").replace("'", "''")
-        spark.sql(s"ALTER TABLE $bandsTable SET TBLPROPERTIES(" +
-          s"'graft.folds.intent'='$pending')")
+        val intents  = tagsOf(props, Intent)
+        val suspect  = intents.contains(batchTag)
+        // tags whose crash window CONTAINED a tombstone purge — for
+        // these, "no batch doc present" no longer means "append never
+        // landed"
+        val purgewin = tagsOf(props, PurgeWin)
+        IndexLifecycle.requireNotTombstoned(
+          standingDels(spark, bandsTable), admitted, "doc_id")
+        setProps(spark, bandsTable, Intent -> ledger((intents -- folded) + batchTag))
         // owned stage, released once both appends land: an ingestion
         // loop folding batches for the session's lifetime must not
         // accumulate one staged block per batch
@@ -967,7 +962,7 @@ object Dedup {
           // sibling still holds (the batch-ids broadcast keeps the
           // probe tiny; paid only on crash-replay). A batch deleted IN
           // FULL and compacted away leaves no survivors at all — that
-          // replay is refused above via the purge-window ledger (the
+          // replay is refused below via the purge-window ledger (the
           // standing-tombstone guard covers the uncompacted case
           // loudly), so no silent re-append can resurrect a completed
           // takedown.
@@ -980,15 +975,15 @@ object Dedup {
               Seq("doc_id"), "left_semi")
           val bandsLanded = landed(bandsTable)
           val sigsLanded  = landed(sigsTable)
-          // the UNDECIDABLE region, now fenced (it used to be merely
-          // documented): when a purge ran inside this tag's crash
-          // window and NEITHER side holds any batch doc, a batch
-          // deleted in full and physically purged is indistinguishable
-          // from one whose appends never landed — silently re-appending
-          // would resurrect a completed takedown, silently skipping
-          // would drop a never-indexed batch. Refuse loudly and demand
-          // an explicit operator decision under a fresh tag (the tag
-          // stays poisoned in the intent + purge ledgers).
+          // the UNDECIDABLE region, fenced: when a purge ran inside this
+          // tag's crash window and NEITHER side holds any batch doc, a
+          // batch deleted in full and physically purged is
+          // indistinguishable from one whose appends never landed —
+          // silently re-appending would resurrect a completed takedown,
+          // silently skipping would drop a never-indexed batch. Refuse
+          // loudly and demand an explicit operator decision under a
+          // fresh tag (the tag stays poisoned in the intent + purge
+          // ledgers).
           if (suspect && purgewin.contains(batchTag) &&
               !bandsLanded && !sigsLanded)
             throw new IllegalStateException(
@@ -1014,52 +1009,32 @@ object Dedup {
               .saveAsTable(sigsTable)
           }
         } finally staged.release()
-        val ledger = (folded + batchTag).toSeq.sorted.mkString(",")
-          .replace("'", "''")
-        val remaining = (intents -- folded - batchTag).toSeq.sorted
-          .mkString(",").replace("'", "''")
         // a tag resolved decidably (something landed → survivors
         // repair) leaves the purge-window ledger
-        val remainingPurge = (purgewin - batchTag).toSeq.sorted
-          .mkString(",").replace("'", "''")
-        spark.sql(s"ALTER TABLE $bandsTable SET TBLPROPERTIES(" +
-          s"'graft.folds'='$ledger','graft.folds.intent'='$remaining'," +
-          s"'graft.folds.purgewin'='$remainingPurge')")
-        // files-per-bucket AUTO-COMPACTION policy (the IVF
-        // maybeAutoCompactCells contract for the table-backed index):
-        // every fold appends one file set per bucket, so when the bands
-        // table averages ≥ `spark.graft.index.autoCompactFilesPerBucket`
-        // files per bucket (default 32; ≤0 disables), the crash-safe
-        // compactor runs under the lock this fold already holds. The
-        // check is one catalog file listing — driver metadata, bounded
-        // BECAUSE the policy keeps the count low. Tombstone purge rides
-        // along, so a delete-heavy tier is cleaned on the same cadence.
-        // defensive parse (Similarity.confInt): a typo'd conf value
-        // must not abort the fold after its appends already landed
-        val threshold = Similarity.confInt(
-          spark, "spark.graft.index.autoCompactFilesPerBucket", 32)
-        if (threshold > 0 &&
-            spark.table(bandsTable).inputFiles.length >= threshold * buckets)
+        setProps(spark, bandsTable,
+          Folds    -> ledger(folded + batchTag),
+          Intent   -> ledger(intents -- folded - batchTag),
+          PurgeWin -> ledger(purgewin - batchTag))
+        // every fold appends one file set per bucket: compact under the
+        // guard this fold already holds once the bands table averages
+        // `autoCompactFilesPerUnit` files per bucket
+        if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(
+            spark.table(bandsTable).inputFiles.length, buckets))
           compactMinhashBandIndex(spark, tablePrefix, buckets)
       }
-      }
-      foldMemo.add(memoKey)
-      ()
     }
   }
 
   /** Tombstone DELETION from a maintained [[ensureMinhashBandIndex]]
     * lineage — [[graft.operators.Similarity.deleteFromIvfIndex]]'s
-    * contract for the band index (reference analog: the replace
-    * semantics of `etl/pipeline.py:698-716`): `delIds` (a `doc_id`
-    * column) appends to the lineage's `<prefix>_dels` table —
-    * O(|delete|) work, the band/sig tables untouched — and every
-    * reader ([[liveIndexTable]]) excludes the docs immediately, so the
-    * next batch can re-admit text that only the deleted docs
-    * duplicated. Physical purge rides [[compactMinhashBandIndex]],
-    * which drops the dead rows from both tables and the dels table in
-    * the same pass: delete∘compact ≡ rebuild-from-remainder (q125
-    * gates this against the oracle).
+    * contract for the band index (the replace leg of
+    * [[IndexLifecycle]]): `delIds` (a `doc_id` column) appends to the
+    * active generation's dels table — O(|delete|) work, the band/sig
+    * tables untouched — and every reader ([[liveIndexTable]]) excludes
+    * the docs immediately, so the next batch can re-admit text that
+    * only the deleted docs duplicated. Physical purge rides
+    * [[compactMinhashBandIndex]]: delete∘compact ≡
+    * rebuild-from-remainder (q125 gates this against the oracle).
     *
     * Idempotent per `delTag` (ledger in the bands table's
     * `graft.dels` TBLPROPERTIES, the fold-ledger pattern) — and
@@ -1076,353 +1051,54 @@ object Dedup {
       delTag: String): Unit = {
     require(!delTag.contains(","),
       s"delTag must not contain ',' (the ledger separator): '$delTag'")
-    val spark   = delIds.sparkSession
-    val memoKey = s"${spark.sparkContext.applicationId}|${tablePrefix}_dels|$delTag"
-    if (foldMemo.contains(memoKey)) return
-    foldLocks.computeIfAbsent(tablePrefix, _ => new Object).synchronized {
-      if (foldMemo.contains(memoKey)) return
-      WriterLease.withLease(spark,
-          WriterLease.lockPathFor(spark, "default", tablePrefix)) {
-      val (bandsTable0, _) = currentIndexTables(spark, tablePrefix)
-      val props = spark.sql(s"SHOW TBLPROPERTIES $bandsTable0").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val dels = props.get("graft.dels")
-        .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-      if (!dels.contains(delTag)) {
-        // append into the ACTIVE generation's dels table, then
-        // re-resolve: a cross-process compaction (the prefix lock is
-        // JVM-local) that promoted between the resolve and the append
-        // would leave the tombstone in a superseded generation no new
-        // reader applies — re-append to the generation that won
-        // (duplicate rows in the loser are harmless anti-join no-ops;
-        // it retires age-gated with its pair). The graft.dels LEDGER
-        // rides the same loop so the winning bands table records the
-        // tag.
-        var bandsTable = bandsTable0
-        var settled    = false
-        var rounds     = 0
-        while (!settled && rounds < 6) {
-          val delsTable = delsTableFor(bandsTable)
+    val spark = delIds.sparkSession
+    IndexLifecycle.guarded(spark, tablePrefix, Some(s"${tablePrefix}_dels|$delTag"),
+        WriterLease.lockPathFor(spark, "default", tablePrefix)) {
+      val resolve = () => currentIndexTables(spark, tablePrefix)._1
+      if (!tagsOf(propsOf(spark, resolve()), Dels).contains(delTag)) {
+        // the graft.dels LEDGER rides the settle loop so the winning
+        // bands table records the tag
+        val bandsTable = IndexLifecycle.settle(
+            s"delete '$delTag' on lineage '$tablePrefix'", resolve) { bt =>
+          val delsTable = delsTableFor(bt)
           // first delete of a generation CREATES its dels table — clear
-          // any orphaned same-name warehouse dir first (the recurring
-          // LOCATION_ALREADY_EXISTS class: a fresh JVM's empty catalog
-          // over a dir left by a previous process)
+          // any orphaned same-name warehouse dir first
           if (!spark.catalog.tableExists(delsTable))
             graft.pipeline.Cleanup.ensureWritable(spark, "default", delsTable)
           delIds.select(col("doc_id").cast("long").as("doc_id"))
             .write.mode("append").format("parquet").saveAsTable(delsTable)
-          val cur = spark.sql(s"SHOW TBLPROPERTIES $bandsTable").collect()
-            .map(r => r.getString(0) -> r.getString(1)).toMap
-            .get("graft.dels")
-            .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-          val ledger = (cur + delTag).toSeq.sorted.mkString(",")
-            .replace("'", "''")
-          spark.sql(s"ALTER TABLE $bandsTable SET TBLPROPERTIES(" +
-            s"'graft.dels'='$ledger')")
-          val (now, _) = currentIndexTables(spark, tablePrefix)
-          settled = now == bandsTable
-          bandsTable = now
-          rounds += 1
+          setProps(spark, bt, Dels -> ledger(tagsOf(propsOf(spark, bt), Dels) + delTag))
         }
-        // the memo/ledger entry is the delete's durability witness —
-        // recording an UNSETTLED tag would make its replay a no-op
-        // while the tombstone sits in a retiring generation (served-
-        // undeleted, permanently). Six promotes inside one delete
-        // means a writer is compacting outside the writer lease:
-        // refuse loudly, keep the tag replayable.
-        require(settled,
-          s"delete '$delTag' on lineage '$tablePrefix' could not " +
-            "settle: the active generation changed through 6 " +
-            "consecutive append attempts (a concurrent writer is " +
-            "compacting outside the writer lease). The tag is " +
-            "replayable — retry once the lineage is quiescent.")
-        // TOMBSTONE-DEBT bound (the [[graft.operators.Similarity
-        // .deleteFromIvfIndex]] contract for the table-backed index):
-        // every live read broadcast-anti-joins the dels table, so its
-        // row count must stay broadcast-sized — the delete path counts
-        // it (one job over the small dels files) and compacts under
-        // the lock it already holds once standing tombstones cross
-        // `spark.graft.index.autoCompactTombstoneRows` (default 1M;
-        // ≤0 disables).
-        // distinct ids, not rows (the IVF debt check's contract):
-        // replayed deletes append duplicate tombstone rows, and the
-        // broadcast build side every read pays is deduped anyway.
-        // compactMinhashBandIndex derives the bucket count from the
-        // standing table's bucket spec (buckets=0 sentinel), so a
-        // lineage built with a non-default count is NOT silently
-        // re-bucketed — a later fold's append would fail on the
-        // bucket-spec mismatch otherwise.
-        val debtCap = Similarity.confInt(
-          spark, "spark.graft.index.autoCompactTombstoneRows", 1 << 20)
-        if (debtCap > 0 &&
-            standingDels(spark, bandsTable).exists(
-              _.select("doc_id").distinct().count() >= debtCap.toLong))
+        // distinct ids, not rows: replayed deletes append duplicates
+        if (IndexLifecycle.Policy.of(spark).tombstoneDebtDue(
+            standingDels(spark, bandsTable)
+              .fold(0L)(_.select("doc_id").distinct().count())))
           compactMinhashBandIndex(spark, tablePrefix)
       }
-      }
-      foldMemo.add(memoKey)
-      ()
     }
   }
 
-  /** Small-file compaction for a fold-heavy [[ensureMinhashBandIndex]]
-    * — [[graft.operators.Similarity.compactIvfCells]]'s contract for
-    * the OTHER maintained index family: every
+  /** Small-file compaction and tombstone purge for a maintained
+    * [[ensureMinhashBandIndex]] lineage — the [[IndexLifecycle.compact]]
+    * skeleton over the catalog-table store: every
     * [[foldIntoMinhashBandIndex]] appends one bucket-file set per
-    * batch, so a long-lived ingestion tier accumulates O(batches)
-    * files per bucket; this rewrites both tables to ~one file per
-    * bucket (aligning the shuffle partitioner with the bucket hash so
-    * each writer task holds one whole bucket) and preserves every
-    * `graft.*` table property — the Bucketing validity key AND the
-    * fold ledger survive, so repeated ensure calls stay zero-cost and
-    * a replayed batch tag still no-ops. Rows are unchanged (DedupSpec
-    * pins row equality and pair-output parity).
-    *
-    * Promote contract (the path-layout compactor's manifest flip,
-    * expressed in catalog terms): the rewrite lands as a NEW
-    * generation pair (`<prefix>_{bands,sigs}_g<nano>`), each created
-    * by ONE CTAS that attaches the copied `graft.*` ledger props in
-    * the same catalog op — the bands creation, last of the pair, IS
-    * the promote [[currentIndexTables]] resolves. No drop window:
-    * a crash at any point leaves either the old generation active
-    * (new one retired as an orphan by the next maintenance entry) or
-    * the new one fully promoted, ledger attached. The superseded
-    * generation is retained one compaction cycle for scans already in
-    * flight, then retired.
+    * batch, and this rewrites both tables to ~one file per bucket
+    * (aligning the shuffle partitioner with the bucket hash so each
+    * writer task holds one whole bucket) as a NEW generation pair
+    * carrying every `graft.*` table property — the Bucketing validity
+    * key AND the fold/delete ledgers survive, so repeated ensure calls
+    * stay zero-cost and a replayed tag still no-ops. Rows are unchanged
+    * apart from the purged tombstones (DedupSpec pins row equality and
+    * pair-output parity). `buckets` = 0 keeps the lineage's own bucket
+    * count; `force` rewrites even when the skip rule holds.
     */
   def compactMinhashBandIndex(
       spark: SparkSession,
       tablePrefix: String,
       buckets: Int = 0,
-      force: Boolean = false): Unit = {
-    foldLocks.computeIfAbsent(tablePrefix, _ => new Object).synchronized {
-      if (!spark.catalog.tableExists(
-          currentIndexTables(spark, tablePrefix)._1)) return
-      WriterLease.withLease(spark,
-          WriterLease.lockPathFor(spark, "default", tablePrefix)) {
-      // re-resolve UNDER the lease: the pre-lease peek above is only
-      // the cheap no-op short-circuit
-      val (curBands, curSigs) = currentIndexTables(spark, tablePrefix)
-      // NO-OP SHORT-CIRCUIT (scale contract: a scheduled compaction
-      // with nothing to do must never rewrite the index). Skip the
-      // CTAS rewrite when there are no standing tombstones AND no
-      // files were appended since the last rewrite — the promote
-      // records its own post-CTAS file counts in `graft.compact.nfiles`
-      // at flip time, so a fold (file append) or delete (dels row)
-      // re-arms the next compaction, while a gen-0 lineage (no marker)
-      // always rewrites. The age-gated generation GC a scheduled
-      // compaction owes still runs. `force` is the drill escape for
-      // specs exercising the promote machinery itself.
-      if (!force && standingDels(spark, curBands).isEmpty) {
-        val props0 = spark.sql(s"SHOW TBLPROPERTIES $curBands").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        val unchanged = props0.get("graft.compact.nfiles").exists { v =>
-          v.split(",").map(_.toLong) match {
-            case Array(nb, ns) =>
-              // refresh first: a fold appended by ANOTHER process (the
-              // cross-process case the writer lease exists for) is
-              // invisible in this session's cached file index, and a
-              // stale count here would skip a compaction with real work
-              spark.catalog.refreshTable(curBands)
-              spark.catalog.refreshTable(curSigs)
-              spark.table(curBands).inputFiles.length <= nb &&
-                spark.table(curSigs).inputFiles.length <= ns
-            case _ => false
-          }
-        }
-        if (unchanged) {
-          log.info(s"compactMinhashBandIndex($tablePrefix): nothing to " +
-            "purge and no appends since the last rewrite — skipping")
-          // keep {active, most recently superseded}, mirroring the
-          // real-promote path's Set(newSfx, curSfx): with
-          // gcStaleHours=0 a skip right after a promote must not drop
-          // the superseded generation an in-flight scan may still read
-          val curSfx = curBands.stripPrefix(s"${tablePrefix}_bands")
-          val prevSfx = familySuffixes(spark, tablePrefix, "bands")
-            .dropWhile(_ != curSfx).drop(1).headOption
-          dropGenerationsExcept(spark, tablePrefix,
-            Set(curSfx) ++ prevSfx,
-            ageGateHours = Similarity.confLong(
-              spark, "spark.graft.index.gcStaleHours", 24L))
-          return
-        }
-      }
-      // buckets=0 (the default) derives the count from the standing
-      // table's own bucket spec — the rewrite must preserve the layout
-      // contract every fold append relies on (append fails loudly on a
-      // bucket-spec mismatch), so a caller-free compaction (the
-      // tombstone-debt auto-purge path) can never re-bucket a lineage
-      // built with a non-default count
-      val bk =
-        if (buckets > 0) buckets
-        else bucketCountOf(spark, curBands).getOrElse(8)
-      // tombstone PURGE rides the rewrite ([[deleteFromMinhashBandIndex]]):
-      // both tables drop the tombstoned docs, and the NEW generation
-      // starts with NO dels table at all — the superseded generation
-      // keeps its own dels table, so a scan still reading that
-      // generation keeps applying exactly its deletes until the
-      // age-gated retirement drops the whole triple (no per-file purge,
-      // no window where a reader pairs old band rows with a post-purge
-      // tombstone view — the race the maintenance fuzz caught on the
-      // path-backed family). A cross-process delete landing
-      // mid-rewrite re-appends itself to the winning generation
-      // (deleteFromMinhashBandIndex's re-resolve loop). The
-      // `graft.dels` LEDGER lives in the bands TBLPROPERTIES (copied
-      // into the new generation's CTAS below), so a replayed delete
-      // tag still no-ops after its tombstones are purged. Legacy
-      // pre-generation-scoped `<prefix>_dels` rows (only standing on a
-      // layout last written by the old binary) are consumed here and
-      // the table dropped post-promote — a one-time migration window.
-      // the snapshot is MATERIALIZED once (owned stage) and reused by
-      // both CTAS passes: as a lazy plan it would be evaluated twice,
-      // and a cross-process delete appending between the two
-      // evaluations would yield a generation whose bands and sigs
-      // DISAGREE on purged docs. The staged block also serves as the
-      // baseline for the post-promote late-dels forward below.
-      val delsStaged = standingDels(spark, curBands).map(d =>
-        Checkpoints.stageOwned(d.select("doc_id").distinct(),
-          Checkpoints.configured(spark)))
-      try {
-      val delsSnapshot = delsStaged.map(_.df)
-      // test seam (ConcurrentMaintenanceSpec): runs between the dels
-      // snapshot and the CTAS promote pair, simulating a delete landed
-      // by a lease-broken or pre-lease writer inside exactly the window
-      // the late-dels merge-forward below closes — the lease's per-JVM
-      // re-entrancy lets the seam drive the real
-      // deleteFromMinhashBandIndex path on this thread
-      compactRaceHook.foreach(h => h())
-      val legacyDels   = s"${tablePrefix}_dels"
-      val hadDels      = delsSnapshot.isDefined
-      // the purge-window ledger (names only, O(crashed tags)): a purge
-      // that runs while a crashed fold's intent is STANDING makes that
-      // tag's eventual replay undecidable when nothing of the batch
-      // survived — record those tags so the replay refuses the silent
-      // re-append (see foldIntoMinhashBandIndex)
-      val bandProps = spark.sql(s"SHOW TBLPROPERTIES $curBands").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      def tagSet(k: String): Set[String] = bandProps.get(k)
-        .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-      val purgewin =
-        if (!hadDels) tagSet("graft.folds.purgewin")
-        else tagSet("graft.folds.purgewin") ++
-          (tagSet("graft.folds.intent") -- tagSet("graft.folds"))
-      // epoch-nanos, not boot-relative nanoTime: stamps must order
-      // correctly across processes and stamp widths (Similarity.genStamp)
-      val newSfx = s"_g${Similarity.genStamp()}"
-      val curSfx = curBands.stripPrefix(s"${tablePrefix}_bands")
-      // sigs first, bands LAST: resolution requires the sigs twin, so
-      // the bands CTAS is the single catalog event that promotes the
-      // generation — ledger props attached in the same op
-      Seq((curSigs, s"${tablePrefix}_sigs$newSfx", "doc_id"),
-          (curBands, s"${tablePrefix}_bands$newSfx", "bk"))
-        .foreach { case (src, destTable, key) =>
-          val copied = spark.sql(s"SHOW TBLPROPERTIES $src").collect()
-            .map(r => r.getString(0) -> r.getString(1))
-            .filter(_._1.startsWith("graft.")).toMap
-          val props =
-            if (src == curBands && purgewin.nonEmpty)
-              copied + ("graft.folds.purgewin" ->
-                purgewin.toSeq.sorted.mkString(","))
-            else copied
-          val live = delsSnapshot match {
-            case Some(dels) =>
-              // already distinct and physically staged — both CTAS
-              // passes anti-join the same materialized id set
-              spark.table(src).join(
-                broadcast(dels), Seq("doc_id"), "left_anti")
-            case None => spark.table(src)
-          }
-          val staged = Checkpoints.stageOwned(
-            live.repartition(bk, col(key)),
-            Checkpoints.configured(spark))
-          try {
-            val view = s"${destTable}_ctas_src"
-            staged.df.createOrReplaceTempView(view)
-            val propsSql =
-              if (props.isEmpty) ""
-              else props.toSeq.sorted.map { case (k, v) =>
-                s"'${k.replace("'", "''")}'='${v.replace("'", "''")}'"
-              }.mkString(" TBLPROPERTIES(", ",", ")")
-            spark.sql(
-              s"CREATE TABLE $destTable USING parquet " +
-                s"CLUSTERED BY ($key) SORTED BY ($key) INTO $bk BUCKETS" +
-                s"$propsSql AS SELECT * FROM $view")
-            spark.catalog.dropTempView(view)
-          } finally staged.release()
-        }
-      // record the fresh generation's file counts: the no-op
-      // short-circuit above compares against these, so only a fold's
-      // append (or a delete's dels row) re-arms the next rewrite
-      val newBands = s"${tablePrefix}_bands$newSfx"
-      val newSigs  = s"${tablePrefix}_sigs$newSfx"
-      spark.sql(s"ALTER TABLE $newBands SET TBLPROPERTIES(" +
-        s"'graft.compact.nfiles'='${spark.table(newBands).inputFiles.length}," +
-        s"${spark.table(newSigs).inputFiles.length}')")
-      // LATE-DELS merge-forward (defense in depth below the writer
-      // lease, the band-index analog of compactIvfCells' late-tombstone
-      // copy): a delete landed by a writer whose lease was stale-broken
-      // — or by a pre-lease binary — between the snapshot and the
-      // bands-CTAS promote settles in the SUPERSEDED generation's dels
-      // table with its ledger tag recorded there, so it would replay
-      // as a no-op while the new generation serves the doc undeleted.
-      // Forward rows standing on the old generation that the snapshot
-      // did not consume into the new generation's dels table, and merge
-      // the late ledger tags. One tiny probe per compaction; duplicate
-      // rows are anti-join no-ops.
-      standingDels(spark, curBands).foreach { cur =>
-        val late = delsSnapshot match {
-          case Some(snap) =>
-            cur.select("doc_id").join(broadcast(snap), Seq("doc_id"),
-              "left_anti")
-          case None => cur.select("doc_id")
-        }
-        if (!late.isEmpty) {
-          val newDels = delsTableFor(newBands)
-          if (!spark.catalog.tableExists(newDels))
-            graft.pipeline.Cleanup.ensureWritable(spark, "default", newDels)
-          late.write.mode("append").format("parquet").saveAsTable(newDels)
-          val lateTags = spark.sql(s"SHOW TBLPROPERTIES $curBands")
-            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-            .getOrElse("graft.dels", "")
-            .split(",").filter(_.nonEmpty).toSet
-          val newTags = spark.sql(s"SHOW TBLPROPERTIES $newBands")
-            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-            .getOrElse("graft.dels", "")
-            .split(",").filter(_.nonEmpty).toSet
-          if ((lateTags -- newTags).nonEmpty) {
-            val merged = (lateTags ++ newTags).toSeq.sorted.mkString(",")
-              .replace("'", "''")
-            spark.sql(s"ALTER TABLE $newBands SET TBLPROPERTIES(" +
-              s"'graft.dels'='$merged')")
-          }
-          log.warn(s"compactMinhashBandIndex($tablePrefix): forwarded " +
-            "late tombstone rows from the superseded generation — a " +
-            "cross-process delete raced this rewrite outside the " +
-            "writer lease")
-        }
-      }
-      // retire everything but the new generation and the one it just
-      // superseded — AGE-GATED (same stale window as the IVF side's
-      // generation GC): without the gate, two promotes inside one
-      // in-flight scan would DROP the tables (and managed files) that
-      // scan's listing points at, breaking the keep-reading guarantee
-      // the promote contract makes for a single promote
-      dropGenerationsExcept(spark, tablePrefix, Set(newSfx, curSfx),
-        ageGateHours = Similarity.confLong(
-          spark, "spark.graft.index.gcStaleHours", 24L))
-      // the base `<prefix>_dels` table's rows were consumed by this
-      // rewrite (either as gen 0's own dels or as a pre-upgrade legacy
-      // leftover): MARK it consumed so new readers skip it — the table
-      // itself is retained for scans still reading the superseded
-      // generation and retires age-gated with the rest of the family
-      if (hadDels && spark.catalog.tableExists(legacyDels))
-        spark.sql(
-          s"ALTER TABLE $legacyDels SET TBLPROPERTIES('graft.consumed'='true')")
-      ()
-      } finally delsStaged.foreach(_.release())
-      }
-    }
-  }
+      force: Boolean = false): Unit =
+    IndexLifecycle.compact(spark, new BandStore(spark, tablePrefix, buckets), force,
+      skip = !spark.catalog.tableExists(currentIndexTables(spark, tablePrefix)._1))
 
   /** Incremental near-dup INGESTION: dedup a NEW batch of documents
     * against the persisted band index of the standing corpus — the
@@ -1590,38 +1266,6 @@ object Dedup {
     aggregate(
       zip_with(votes, powers, (v, p) => when(v > 0, p).otherwise(lit(0L))),
       lit(0L), _ + _)
-  }
-
-  /** SimHash near-dup candidate pairs: docs whose simhash agrees on one
-    * of 4 16-bit bands (≤ hamming-distance-ish prefilter), verified by
-    * popcount of the XOR. maxHamming bounds the reported distance.
-    */
-  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 8,
-      maxBucketSize: Int = 100): DataFrame = {
-    val withSig = docs.select(col("doc_id"), simhash64(col("text")).as("sig"))
-    val banded0 = withSig.select(
-      col("doc_id"), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_val")
-    val wBucket = Window.partitionBy("band", "band_val")
-    val banded = banded0
-      .withColumn("_bn", count(lit(1)).over(wBucket))
-      .filter(col("_bn") <= maxBucketSize)
-      .drop("_bn")
-    val l = banded.as("l")
-    val r = banded.as("r")
-    l.join(r,
-        col("l.band") === col("r.band") &&
-          col("l.band_val") === col("r.band_val") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
   }
 
   /** Benchmark decontamination report: for every training document, how

@@ -334,24 +334,7 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       exclude: Option[Long] = None): DataFrame = {
-    // HALF-AWAY-FROM-ZERO, matching VectorFunctions.quantize (Spark SQL
-    // round) and the oracle's DuckDB round: math.round is floor(x+0.5),
-    // which disagrees on negative halves (-62.5 → -62 vs -63) — a
-    // corpus with an exactly-representable negative half (e.g.
-    // -0.0625f) would silently rank differently on this path
-    val qq = queryVec.map { f =>
-      val d = f.toDouble * 1000
-      if (d >= 0) math.round(d) else -math.round(-d)
-    }
-    val qn = qq.map(x => x * x).sum
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm").collect()
-    val probeIds = cents.map { r =>
-      val cv  = r.getAs[collection.Seq[Long]]("cvec")
-      val dot = cv.iterator.zip(qq.iterator).map { case (a, b) => a * b }.sum
-      val cos = dot.toDouble / math.sqrt(r.getAs[Long]("cnrm").toDouble * qn.toDouble)
-      (cos, r.getAs[Long]("cent_id"))
-    }.sortBy { case (cos, id) => (-cos, -id) }.take(nProbe).map(_._2)
+    val (qq, qn, probeIds) = probeCells(spark, path, queryVec, nProbe)
     val qCol = array(qq.map(lit): _*)
     val cells = liveCells(spark, path)
       .filter(col("cent_id").isin(probeIds.toIndexedSeq: _*))
@@ -362,6 +345,30 @@ object Similarity {
       .orderBy(col("cos").desc, col("vec_id"))
       .select("vec_id", "dot")
       .limit(k)
+  }
+
+  /** The driver-side half of a single-vector probe of either layout:
+    * the query quantized HALF-AWAY-FROM-ZERO, matching
+    * VectorFunctions.quantize (Spark SQL round) and the oracle's DuckDB
+    * round (math.round is floor(x+0.5), which disagrees on negative
+    * halves: -62.5 → -62 vs -63), its squared norm, and the `nProbe`
+    * cells whose centroids rank highest by cosine (ties → larger id).
+    */
+  private def probeCells(spark: SparkSession, path: String,
+      queryVec: Seq[Float], nProbe: Int): (Seq[Long], Long, Array[Long]) = {
+    val qq = queryVec.map { f =>
+      val d = f.toDouble * 1000
+      if (d >= 0) math.round(d) else -math.round(-d)
+    }
+    val qn = qq.map(x => x * x).sum
+    val probeIds = spark.read.parquet(s"$path/centroids")
+      .select("cent_id", "cvec", "cnrm").collect().map { r =>
+        val cv  = r.getAs[collection.Seq[Long]]("cvec")
+        val dot = cv.iterator.zip(qq.iterator).map { case (a, b) => a * b }.sum
+        val cos = dot.toDouble / math.sqrt(r.getAs[Long]("cnrm").toDouble * qn.toDouble)
+        (cos, r.getAs[Long]("cent_id"))
+      }.sortBy { case (cos, id) => (-cos, -id) }.take(nProbe).map(_._2)
+    (qq, qn, probeIds)
   }
 
   /** Batched probe of a [[buildIvfIndex]] layout — the serving-
@@ -554,28 +561,16 @@ object Similarity {
     }
   }
 
-  // stats/layouts already validated THIS application (appId|path →
-  // value): repeated ensure calls must cost zero file reads / Spark
-  // jobs (the Bucketing.validated contract — layouts graft itself
-  // wrote cannot drift mid-run, landed dirs are immutable).
+  // corpus stats already read THIS application (appId|key → count):
+  // repeated calls must cost zero file reads / Spark jobs (the
+  // Bucketing.validated contract — landed dirs are immutable)
   private val statsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfFoldMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // test seam (ConcurrentMaintenanceSpec): invoked by compactIvfCells
-  // between its tombstone snapshot and its manifest flip with the
-  // superseded generation's dir — lets a spec drive a racing delete
-  // into exactly the window the late-tombstone merge-forward closes
-  private[graft] var compactRaceHook: Option[String => Unit] = None
-  // per-layout build locks (the ResponseCache anti-stampede pattern):
-  // concurrent ensure calls on the same layout build it once; the
-  // winner's double-check inside the lock makes the loser a no-op
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(path: String): Object =
-    buildLocks.computeIfAbsent(path, _ => new Object)
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
 
   /** Cheap DATA fingerprint of the frame's input files — (path, length,
     * mtime) per file, md5'd driver-side from FS metadata the scan's
@@ -612,12 +607,9 @@ object Similarity {
     */
   private def layoutPath(
       spark: SparkSession, kind: String, key: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(16)
     val p = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"),
-      s"_graft_layouts/${kind}_$digest")
+      s"_graft_layouts/${kind}_${md5Hex(key).take(16)}")
     val uri = p.toUri
     if (uri.getScheme == null || uri.getScheme == "file") uri.getPath
     else p.toString
@@ -646,7 +638,7 @@ object Similarity {
       val fs   = path.getFileSystem(spark.sessionState.newHadoopConf())
       // per-path lock: concurrent first calls count once, and the
       // corrupt-sidecar rewrite below never races a reader
-      val n = lockFor(dir).synchronized {
+      val n = IndexLifecycle.lockFor(dir).synchronized {
         // tolerant read — a truncated/corrupt/foreign file at the
         // well-known path means RECOUNT AND REPAIR, never a parse crash
         val parsed: Option[Long] =
@@ -695,65 +687,59 @@ object Similarity {
     */
   def ensureIvfIndex(
       embeddings: DataFrame,
-      srcTag: String): (String, Int) = {
+      srcTag: String): (String, Int) =
+    ensureLayout(embeddings, srcTag, "ivf", "")((tmp, c) =>
+      buildIvfIndex(embeddings, tmp, nCentroids = c))
+
+  // the layout key of both ensure paths: srcTag + kind + cell count +
+  // build params + data fingerprint + schema (one FS-metadata sweep
+  // serves both the stats key and the layout key)
+  private def ensureLayout(embeddings: DataFrame, srcTag: String,
+      kind: String, params: String)(
+      build: (String, Int) => Unit): (String, Int) = {
     val spark = embeddings.sparkSession
-    // one FS-metadata sweep serves both the stats key and the layout key
     val fp    = inputFingerprint(embeddings)
-    val n     = ensureCorpusStats(embeddings, srcTag, Some(fp))
-    val c     = nCentroidsForCorpus(n)
-    val key   = s"$srcTag|ivf|c=$c|fp=$fp" +
-      s"|${embeddings.schema.catalogString}"
-    val path = layoutPath(spark, "ivf", key)
-    val memo = s"${spark.sparkContext.applicationId}|$key"
-    if (ivfMemo.get(memo) != path) {
-      // per-path lock + marker double-check + atomic promote: two
-      // concurrent ensures build once, and a probe never scans a
-      // half-written layout (the build lands in a temp sibling and
-      // becomes visible with one directory rename)
-      lockFor(path).synchronized {
-        val dest   = new org.apache.hadoop.fs.Path(path)
-        // marker = _SUCCESS of the ACTIVE generation (a compacted
-        // layout keeps its completeness witness across promotes)
-        def marker = new org.apache.hadoop.fs.Path(
-          activeCellsDir(spark, path), "_SUCCESS")
-        val fs     = dest.getFileSystem(spark.sessionState.newHadoopConf())
-        // a COMPLETE layout resolves lease-free: ensure on the serving
-        // path is logically a read, and making it wait on the writer
-        // lease would let a long-running compaction in another process
-        // stall probes behind a lock they don't need (the generation
-        // manifest already gives readers a consistent view through any
-        // promote). Only an actual build takes the lease.
-        val complete =
-          try fs.exists(marker)
-          catch { case _: IllegalArgumentException => false } // torn: writer path decides
-        if (!complete) WriterLease.withLease(
-            spark, WriterLease.lockPathFor(path)) {
-        recoverCells(spark, path)
-        if (!fs.exists(marker)) {
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$path.tmp${System.nanoTime()}")
-          buildIvfIndex(embeddings, tmp.toString, nCentroids = c)
-          // cross-PROCESS race (the JVM lock only covers this process):
-          // if another process promoted a complete layout while we
-          // built, ours is the redundant copy — discard it rather than
-          // deleting a layout a concurrent probe may be scanning. The
-          // layout key already carries a data fingerprint, so both
-          // builds are byte-equivalent; losing the race is benign.
-          if (fs.exists(marker)) fs.delete(tmp, true)
-          else {
-            fs.delete(dest, true)
-            if (!fs.rename(tmp, dest)) {
-              if (fs.exists(marker)) fs.delete(tmp, true) // lost at the wire
-              else throw new java.io.IOException(
-                s"could not promote IVF layout $tmp -> $dest")
-            }
+    val c     = nCentroidsForCorpus(ensureCorpusStats(embeddings, srcTag, Some(fp)))
+    val key   = s"$srcTag|$kind|c=$c$params|fp=$fp|${embeddings.schema.catalogString}"
+    val path  = layoutPath(spark, kind, key)
+    promoteBuilt(spark, path, Some(key), path, s"$kind layout")(build(_, c))
+    (path, c)
+  }
+
+  /** The one build path of a maintained layout (the truncate-and-load
+    * leg of [[IndexLifecycle]]): build into a temp sibling and promote
+    * it with one directory rename, unless a COMPLETE layout (the
+    * active generation's `_SUCCESS`) already stands — then the call is
+    * a read and resolves lease-free. Losing a cross-process race to an
+    * identical complete layout is benign: the key carries a data
+    * fingerprint, so the redundant copy is discarded rather than
+    * deleting a layout a concurrent probe may be scanning. `source` is
+    * the layout whose crash leftovers are recovered first.
+    */
+  private def promoteBuilt(spark: SparkSession, path: String,
+      memoKey: Option[String], source: String, what: String)(
+      build: String => Unit): Unit = {
+    val dest = new org.apache.hadoop.fs.Path(path)
+    val fs   = dest.getFileSystem(spark.sessionState.newHadoopConf())
+    def complete: Boolean = fs.exists(new org.apache.hadoop.fs.Path(
+      activeCellsDir(spark, path), "_SUCCESS"))
+    IndexLifecycle.guarded(spark, path, memoKey, WriterLease.lockPathFor(path),
+        skip = try complete catch { case _: IllegalArgumentException => false }) {
+      recoverCells(spark, source)
+      if (!complete) {
+        val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp${System.nanoTime()}")
+        build(tmp.toString)
+        if (complete) fs.delete(tmp, true)
+        else {
+          fs.delete(dest, true)
+          if (!fs.rename(tmp, dest)) {
+            if (complete) fs.delete(tmp, true) // lost at the wire
+            else throw new java.io.IOException(
+              s"could not promote $what $tmp -> $dest")
           }
         }
-        }
       }
-      ivfMemo.put(memo, path)
     }
-    (path, c)
   }
 
   /** Incremental VECTOR ingestion into a standing [[ensureIvfIndex]]
@@ -801,129 +787,87 @@ object Similarity {
   def foldIntoIvfIndex(
       newVecs: DataFrame,
       path: String,
-      batchTag: String): Unit = {
-    val spark   = newVecs.sparkSession
-    val memoKey = s"${spark.sparkContext.applicationId}|$path|fold|$batchTag"
-    if (ivfFoldMemo.contains(memoKey)) return
-    lockFor(path).synchronized {
-      if (ivfFoldMemo.contains(memoKey)) return
-      WriterLease.withLease(spark, WriterLease.lockPathFor(path)) {
+      batchTag: String): Unit =
+    foldCells(newVecs, path, batchTag)(foldAssignment(newVecs, path))
+
+  /** The one fold body of both cells layouts: `encoded` is the batch's
+    * (vec_id, cent_id, payload…) cell rows. The marker lands AFTER the
+    * append (the MinHash fold-ledger order): a crash in between replays
+    * the batch — callers needing exactly-once must rebuild, as with any
+    * append sink.
+    */
+  private def foldCells(newVecs: DataFrame, path: String, batchTag: String)(
+      encoded: => DataFrame): Unit = {
+    val spark = newVecs.sparkSession
+    IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"),
+        WriterLease.lockPathFor(path)) {
       recoverCells(spark, path)
-      val tagHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(batchTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      val marker =
-        new org.apache.hadoop.fs.Path(path, s"folds/$tagHash")
-      val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        requireNotTombstoned(spark, path, newVecs.select("vec_id"))
-        foldAssignment(newVecs, path)
-          .write.mode("append").partitionBy("cent_id")
+      // the policy check runs under the already-held guard (re-entrant)
+      onceForTag(spark, path, "folds", batchTag) {
+        IndexLifecycle.requireNotTombstoned(
+          tombstonesOf(spark, path, activeCellsDir(spark, path)), newVecs, "vec_id")
+        encoded.write.mode("append").partitionBy("cent_id")
           .parquet(activeCellsDir(spark, path))
-        // marker AFTER the append lands (same ordering as the MinHash
-        // fold ledger): a crash in between replays the batch — callers
-        // needing exactly-once must rebuild, as with any append sink
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, true)
-        try out.write(batchTag.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // policy check under the already-held layout lock (reentrant)
-        maybeAutoCompactCells(spark, path)
-      }
-      }
-      ivfFoldMemo.add(memoKey)
-      ()
+      }.foreach(_ => maybeAutoCompactCells(spark, path))
+    }
+  }
+
+  /** The fold/delete ledger of a cells layout: one marker file per tag
+    * under `path/<kind>/` (md5 of the tag — fs-safe), read through the
+    * Hadoop FileSystem API so a replay is a no-op in this and any later
+    * process. Runs `write` and then records the tag unless it is
+    * already recorded; returns what `write` returned, if it ran.
+    */
+  private def onceForTag[T](spark: SparkSession, path: String, kind: String,
+      tag: String)(write: => T): Option[T] = {
+    val marker = new org.apache.hadoop.fs.Path(path, s"$kind/${md5Hex(tag)}")
+    val fs     = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(marker)) None
+    else {
+      val done = write
+      fs.mkdirs(marker.getParent)
+      val out = fs.create(marker, true)
+      try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      Some(done)
     }
   }
 
   // ---- auto-compaction: the policy that keeps a fold tier healthy ----
 
-  /** The files-per-cell AUTO-COMPACTION policy, evaluated after every
-    * fold (the r14/r15 ask: the advisor and the crash-safe compactor
-    * existed, but nothing ran them — a long-lived fold tier degraded
-    * until an operator remembered a function call). When the cells
-    * layout averages ≥ `spark.graft.index.autoCompactFilesPerCell`
-    * data files per cell (default 32 — each fold appends up to one
-    * file set per touched cell, so the default compacts roughly every
-    * 32 batches; ≤0 disables), [[compactIvfCells]] runs under the
-    * layout lock already held by the fold. Cost of the check: ONE
-    * recursive listing of cells/ — driver metadata, and bounded
-    * BECAUSE the policy keeps the file count low; the compaction
-    * itself is the one inherent shuffle of the index, amortized across
-    * the threshold's worth of batches. Tombstone purge rides along,
-    * so a delete-heavy tier is physically cleaned on the same cadence.
-    *
-    * Concurrent probes are SAFE across the promote: compaction writes
-    * a new generation and flips the `cells.MANIFEST` pointer in one
-    * atomic rename, so a probe constructed during the rewrite resolves
-    * the old generation and a scan already in flight keeps its (still
-    * physical) old-generation file listing until the age-gated GC —
-    * no maintenance window needed (ConcurrentMaintenanceSpec drives a
-    * slow probe through an auto-compacting fold to pin this).
+  /** The files-per-unit AUTO-COMPACTION policy ([[IndexLifecycle]]
+    * "Thresholds"), evaluated after every fold: each fold appends up to
+    * one file set per touched cell, so at the default 32 the layout
+    * compacts roughly every 32 batches. Cost of the check: ONE
+    * recursive listing of the active generation — driver metadata,
+    * bounded BECAUSE the policy keeps the file count low. Concurrent
+    * probes are SAFE across the promote (ConcurrentMaintenanceSpec
+    * drives a slow probe through an auto-compacting fold to pin this).
     */
   private def maybeAutoCompactCells(
       spark: SparkSession, path: String): Unit = {
-    // defensive parse: a malformed conf value must not abort an
-    // ingestion fold mid-batch — fall back to the default, loudly
-    val threshold = confInt(
-      spark, "spark.graft.index.autoCompactFilesPerCell", 32)
-    if (threshold > 0) {
-      val cellsDir =
-        new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
-      val fs = cellsDir.getFileSystem(spark.sessionState.newHadoopConf())
-      var files = 0L
-      val cells = scala.collection.mutable.HashSet.empty[String]
-      try {
-        val it = fs.listFiles(cellsDir, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          val parent = f.getPath.getParent.getName
-          // skip metadata files AND anything under a metadata dir —
-          // the generation-scoped `_tombstones/` rows are not cell
-          // files and must not inflate the files-per-cell policy
-          if (!n.startsWith("_") && !n.startsWith(".") &&
-              !parent.startsWith("_") && !parent.startsWith(".")) {
-            files += 1
-            cells += parent
-          }
+    val cellsDir = new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
+    val fs = cellsDir.getFileSystem(spark.sessionState.newHadoopConf())
+    var files = 0L
+    val cells = scala.collection.mutable.HashSet.empty[String]
+    try {
+      val it = fs.listFiles(cellsDir, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val parent = f.getPath.getParent.getName
+        // skip metadata files AND anything under a metadata dir — the
+        // generation-scoped `_tombstones/` rows are not cell files
+        if (isDataFile(f.getPath.getName) && isDataFile(parent)) {
+          files += 1
+          cells += parent
         }
-      } catch { case _: java.io.IOException => return }
-      if (cells.nonEmpty && files >= threshold.toLong * cells.size)
-        compactIvfCells(spark, path)
-    }
+      }
+    } catch { case _: java.io.IOException => return }
+    if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(files, cells.size))
+      compactIvfCells(spark, path)
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  // conf ints parsed defensively for the maintenance policies: a typo'd
-  // value degrades to the default with a loud warning instead of
-  // throwing NumberFormatException inside a fold that already appended
-  private[operators] def confInt(
-      spark: SparkSession, key: String, default: Int): Int =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(v) => v.trim.toIntOption.getOrElse {
-        log.warn(s"ignoring malformed $key='$v' (not an int); " +
-          s"using default $default")
-        default
-      }
-    }
-
-  // Long variant for hour/size-scale knobs, so a deployment that
-  // effectively disabled a policy with a beyond-Int value keeps it
-  // disabled rather than silently degrading to the default
-  private[operators] def confLong(
-      spark: SparkSession, key: String, default: Long): Long =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(v) => v.trim.toLongOption.getOrElse {
-        log.warn(s"ignoring malformed $key='$v' (not a long); " +
-          s"using default $default")
-        default
-      }
-    }
 
   // the one definition of "tombstone/cell DATA file" shared by every
   // reader and the compaction purge — two drifting copies of this
@@ -938,13 +882,11 @@ object Similarity {
   // readers resolve. A layout that has never been compacted has no
   // manifest and resolves to the original `cells/` — so a fresh build
   // costs no extra I/O and old layouts read unchanged. Compaction
-  // writes the rewrite to a NEW generation dir and promotes it with
-  // ONE atomic pointer flip (create-then-rename-overwrite, POSIX/HDFS
-  // atomic), so there is no window where the layout is headless and a
-  // scan already in flight keeps reading the old generation's files
-  // until the age-gated GC collects them (reference analog: the
-  // delete+recreate visibility hole of the replace strategy,
-  // etl/pipeline.py:698-716 — which the reference leaves open).
+  // promotes a NEW generation dir with ONE atomic pointer flip
+  // (create-then-rename-overwrite, POSIX/HDFS atomic) — the promote of
+  // [[IndexLifecycle]] (reference analog: the delete+recreate
+  // visibility hole of the replace strategy, etl/pipeline.py:698-716,
+  // which the reference leaves open).
 
   private val CellsManifest = "cells.MANIFEST"
 
@@ -956,45 +898,8 @@ object Similarity {
   private[graft] val manifestWaitRetries =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Cross-process-comparable generation stamp: nanoseconds since the
-    * EPOCH (wall-clock millis plus a sub-millis nano component for
-    * same-millis uniqueness). `System.nanoTime` alone is wrong for
-    * generation names: it is boot-relative, so stamps from two driver
-    * JVMs — the exact cross-process case the writer lease exists for —
-    * are mutually incomparable, and even one process's stamps change
-    * digit width as uptime crosses 10^k ns (~2.8 h, ~1.2 d, ~11.6 d),
-    * breaking any string-ordered comparison. Epoch-nanos are 19 digits
-    * until 2262 and numerically above any realistic boot-relative
-    * stamp, so legacy layouts keep their age order under the NUMERIC
-    * comparisons ([[cellsGenNum]], `Dedup.genSuffixNum`) that replaced
-    * string order.
-    */
-  private val lastGenStamp = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def genStamp(): Long = {
-    val raw = System.currentTimeMillis() * 1000000L +
-      java.lang.Math.floorMod(System.nanoTime(), 1000000L)
-    // monotonic within the process: two stamps inside one millisecond
-    // could otherwise invert (the sub-millis nano component wraps)
-    lastGenStamp.updateAndGet(prev => math.max(raw, prev + 1))
-  }
-
-  /** Numeric generation number of a cells-sibling name: Some(0) for
-    * the gen-0 `cells`, the parsed stamp for `cells.g<digits>`, None
-    * for everything else (legacy `cells.old*`/`cells.compact*` and tmp
-    * siblings never join the generation ORDER — they stay purely
-    * age-gated). Ordering must be numeric, never lexical: standing
-    * names may carry different stamp widths (pre-fix boot-relative
-    * stamps, other hosts' stamps).
-    */
-  private[graft] def cellsGenNum(name: String): Option[Long] =
-    if (name == "cells") Some(0L)
-    else {
-      val d = name.stripPrefix("cells.g")
-      if ((d ne name) && d.nonEmpty && d.length <= 19 &&
-          d.forall(_.isDigit))
-        try Some(d.toLong) catch { case _: NumberFormatException => None }
-      else None
-    }
+  private def cellsStamp(name: String): Option[Long] =
+    IndexLifecycle.parseStamp(name, "cells", "cells.g")
 
   // manifest I/O goes through the RAW filesystem: on a local
   // ChecksumFileSystem the hidden .crc sidecar is a SECOND file, so a
@@ -1161,12 +1066,8 @@ object Similarity {
           attempt += 1; Thread.sleep(125L)
       }
     }
-    val tomb = tombstoneDataFiles(spark, path, gen)
-    if (tomb.nonEmpty)
-      cells.join(
-        broadcast(spark.read.parquet(tomb: _*).select("vec_id").distinct()),
-        Seq("vec_id"), "left_anti")
-    else cells
+    tombstonesOf(spark, path, gen).fold(cells)(t =>
+      cells.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti"))
   }
 
   // Standing tombstone files of ONE generation: `<gen>/_tombstones/`
@@ -1190,6 +1091,12 @@ object Similarity {
     }
     ls(new org.apache.hadoop.fs.Path(genDir, "_tombstones")) ++
       ls(new org.apache.hadoop.fs.Path(path, "tombstones"))
+  }
+
+  private def tombstonesOf(
+      spark: SparkSession, path: String, genDir: String): Option[DataFrame] = {
+    val tomb = tombstoneDataFiles(spark, path, genDir)
+    if (tomb.isEmpty) None else Some(spark.read.parquet(tomb: _*))
   }
 
   // every standing tombstone file of the layout's ACTIVE generation —
@@ -1229,104 +1136,24 @@ object Similarity {
       delIds: DataFrame,
       path: String,
       delTag: String): Unit = {
-    val spark   = delIds.sparkSession
-    val memoKey = s"${spark.sparkContext.applicationId}|$path|del|$delTag"
-    if (ivfFoldMemo.contains(memoKey)) return
-    lockFor(path).synchronized {
-      if (ivfFoldMemo.contains(memoKey)) return
-      WriterLease.withLease(spark, WriterLease.lockPathFor(path)) {
+    val spark = delIds.sparkSession
+    IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"),
+        WriterLease.lockPathFor(path)) {
       recoverCells(spark, path)
-      val tagHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(delTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      val marker = new org.apache.hadoop.fs.Path(path, s"dels/$tagHash")
-      val fs     = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        // append into the ACTIVE generation's tombstone dir, then
-        // re-resolve: a cross-process compaction (lockFor is JVM-local)
-        // that promoted between the resolve and the append would leave
-        // the tombstone in a superseded generation no new reader
-        // applies — re-append to the generation that won (duplicate
-        // tombstone rows in the loser are harmless anti-join no-ops,
-        // and the loser dir ages out whole). Bounded: promotes are
-        // rare; 3 attempts outlast any realistic pile-up.
-        val ids = delIds.select(col("vec_id").cast("long").as("vec_id"))
-        var gen     = activeCellsDir(spark, path)
-        var settled = false
-        var rounds  = 0
-        while (!settled && rounds < 6) {
-          ids.write.mode("append").parquet(s"$gen/_tombstones")
-          val now = activeCellsDir(spark, path)
-          settled = now == gen
-          gen = now
-          rounds += 1
-        }
-        // the marker is the delete's durability witness — writing it
-        // for an UNSETTLED append would make the tag replay as a no-op
-        // while the tombstone sits in a retired generation (the doc
-        // would be served undeleted, permanently). Six promotes inside
-        // one delete means something outside the writer lease is
-        // rewriting the layout in a hot loop: refuse loudly, keep the
-        // tag replayable.
-        require(settled,
-          s"delete '$delTag' on $path could not settle: the active " +
-            "generation changed through 6 consecutive append attempts " +
-            "(a concurrent writer is compacting outside the writer " +
-            "lease). The tag is replayable — retry once the layout is " +
-            "quiescent.")
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, true)
-        try out.write(delTag.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // TOMBSTONE-DEBT bound, enforced not assumed: every read pays
-        // a BROADCAST anti-join against the standing tombstones, so
-        // their count must stay broadcast-sized. The docs used to
-        // assume "deletes are takedown/refresh trickle"; a mass
-        // takedown would quietly grow the build side until executors
-        // OOM at 100 TB. Now the delete path itself counts the
-        // standing set (one job over the small tombstone files, paid
-        // only on deletes) and compacts under the already-held lock
-        // once it crosses `spark.graft.index.autoCompactTombstoneRows`
-        // (default 1M ids ≈ 8 MB of longs broadcast — comfortable;
-        // ≤0 disables, restoring the trickle assumption).
-        val debtCap = confInt(
-          spark, "spark.graft.index.autoCompactTombstoneRows", 1 << 20)
-        if (debtCap > 0) {
-          val tomb = tombstoneDataFiles(spark, path, gen)
-          // distinct ids, not rows: replayed/overlapping deletes append
-          // duplicate tombstone rows (harmless by design), and the
-          // broadcast build side every read actually pays is deduped —
-          // counting rows would trigger premature full-index rewrites
-          if (tomb.nonEmpty &&
-              spark.read.parquet(tomb: _*)
-                .select("vec_id").distinct().count() >= debtCap.toLong)
-            compactIvfCells(spark, path)
-        }
+      val ids = delIds.select(col("vec_id").cast("long").as("vec_id"))
+      onceForTag(spark, path, "dels", delTag) {
+        IndexLifecycle.settle(s"delete '$delTag' on $path",
+          () => activeCellsDir(spark, path))(g =>
+          ids.write.mode("append").parquet(s"$g/_tombstones"))
+      }.foreach { gen =>
+        // distinct ids, not rows: replayed/overlapping deletes append
+        // duplicate tombstone rows, and the broadcast build side every
+        // read pays is deduped
+        if (IndexLifecycle.Policy.of(spark).tombstoneDebtDue(
+            tombstonesOf(spark, path, gen)
+              .fold(0L)(_.select("vec_id").distinct().count())))
+          compactIvfCells(spark, path)
       }
-      }
-      ivfFoldMemo.add(memoKey)
-      ()
-    }
-  }
-
-  // the fold-path guard behind the re-insert contract (see
-  // [[deleteFromIvfIndex]]): a batch that intersects standing
-  // tombstones must fail LOUDLY before the append — the old rows are
-  // still physical, so admitting the new ones would make the tombstone
-  // kill both. One tiny broadcast-join probe, paid only when a
-  // tombstone set exists at all.
-  private def requireNotTombstoned(
-      spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val tomb = standingTombstoneFiles(spark, path)
-    if (tomb.nonEmpty) {
-      val hit = spark.read.parquet(tomb: _*)
-        .join(broadcast(ids.select("vec_id").distinct()), "vec_id")
-        .limit(1).collect()
-      require(hit.isEmpty,
-        s"fold batch re-inserts tombstoned vec_id ${hit.headOption.map(_.getLong(0)).getOrElse(-1L)}: " +
-          "compact the layout first (compaction purges tombstones), " +
-          "then re-fold the id as new")
     }
   }
 
@@ -1348,16 +1175,14 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"))
       .orderBy("cent_id")
 
-  /** Small-file compaction for a fold-heavy [[buildIvfIndex]] layout:
-    * every [[foldIntoIvfIndex]] appends one file set per batch, so a
-    * long-lived ingestion tier accumulates O(batches) files per cell —
-    * this rewrites the cells to ~one file per cell (ONE shuffle of the
-    * index, the inherent compaction cost; at 100 TB run it per-cell or
-    * accept the rebuild, which compacts for free) into a NEW
-    * generation dir and promotes it with one atomic `cells.MANIFEST`
-    * pointer flip ([[activeCellsDir]]) — concurrent probes keep
-    * working through the promote, reading whichever generation they
-    * resolved. Rows, centroids and the fold ledger are
+  /** Small-file compaction and tombstone purge for a maintained cells
+    * layout — the [[IndexLifecycle.compact]] skeleton over the manifest
+    * store: every [[foldIntoIvfIndex]] appends one file set per batch,
+    * and this rewrites the cells to ~one file per cell (ONE shuffle of
+    * the index, the inherent compaction cost; at 100 TB run it per-cell
+    * or accept the rebuild, which compacts for free) into a NEW
+    * generation dir promoted by one atomic `cells.MANIFEST` pointer
+    * flip ([[activeCellsDir]]). Rows, centroids and the fold ledger are
     * untouched — a replayed old batch tag still no-ops after
     * compaction, and probes see identical data (SimilaritySpec pins
     * row equality and probe parity). Schema-agnostic over the cells
@@ -1367,101 +1192,96 @@ object Similarity {
     */
   def compactIvfCells(spark: SparkSession, path: String,
       force: Boolean = false): Unit =
-    lockFor(path).synchronized {
-      WriterLease.withLease(spark, WriterLease.lockPathFor(path)) {
-      recoverCells(spark, path)
-      val cellsDir =
-        new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
-      val fs  = cellsDir.getFileSystem(spark.sessionState.newHadoopConf())
-      val gen = new org.apache.hadoop.fs.Path(
-        path, s"cells.g${genStamp()}")
-      // tombstone PURGE rides the compaction rewrite: the active
-      // generation's standing tombstones (plus any legacy-location
-      // leftovers) are dropped from the rewrite, and the NEW generation
-      // starts with no tombstone dir at all — the old generation keeps
-      // its `_tombstones/` INSIDE its own dir, so a scan still reading
-      // that generation keeps applying exactly its deletes until the
-      // age-gated GC collects the dir whole (no per-file purge, no
-      // window where a reader pairs old cells with a post-purge
-      // tombstone view). A delete appended by another process
-      // mid-rewrite re-appends itself to the winning generation
-      // (deleteFromIvfIndex's re-resolve loop), so nothing is lost.
-      val tombData = tombstoneDataFiles(spark, path, cellsDir.toString)
-      // legacy `<path>/tombstones/` files (pre-generation-scoped
-      // layouts only): consumed by this rewrite and deleted after the
-      // promote, as the old binary did — a one-time migration window
-      val legacyTombDir = new org.apache.hadoop.fs.Path(path, "tombstones")
-      val legacyTombFiles: Seq[org.apache.hadoop.fs.Path] =
-        if (fs.exists(legacyTombDir))
-          fs.listStatus(legacyTombDir).toSeq.map(_.getPath)
-        else Seq.empty
-      // NO-OP SHORT-CIRCUIT (the compactMinhashBandIndex contract,
-      // path-backed side): a scheduled compaction with nothing to do
-      // must never rewrite the index. Skip when there are no standing
-      // tombstones anywhere AND no cell files were appended since the
-      // last rewrite — the promote stamps its post-write data-file
-      // count in `_graft_nfiles` inside the new generation dir, so a
-      // fold (file append) or delete (tombstone) re-arms the next
-      // compaction, while a never-compacted gen-0 `cells/` (no stamp)
-      // always rewrites. recoverCells above already ran the age-gated
-      // GC a scheduled compaction owes. `force` is the drill escape.
-      if (!force && tombData.isEmpty && legacyTombFiles.isEmpty &&
-          readNFilesStamp(fs, cellsDir)
-            .exists(_ >= countCellDataFiles(fs, cellsDir))) {
-        log.info(s"compactIvfCells($path): nothing to purge and no " +
-          "appends since the last rewrite — skipping")
-        return
-      }
-      val raw = spark.read.parquet(cellsDir.toString)
+    IndexLifecycle.compact(spark, new CellsStore(spark, path), force)
+
+  /** The manifest-directory storage of one cells layout: generations
+    * are `cells` / `cells.g<stamp>` dirs identified by their path (as
+    * [[activeCellsDir]] renders it), tombstones live in
+    * `<gen>/_tombstones/`, the nfiles stamp in `<gen>/_graft_nfiles`,
+    * the ledgers in marker dirs beside them.
+    */
+  private final class CellsStore(spark: SparkSession, path: String)
+      extends IndexLifecycle.Store {
+    // (active generation's tombstone files incl. legacy-location ones,
+    //  every entry of the legacy `<path>/tombstones/` dir)
+    type Snapshot = (Seq[String], Seq[org.apache.hadoop.fs.Path])
+    private val root = new org.apache.hadoop.fs.Path(path)
+    private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    private val legacyTombDir = new org.apache.hadoop.fs.Path(path, "tombstones")
+
+    def lockKey: String = path
+    def leasePath: org.apache.hadoop.fs.Path = WriterLease.lockPathFor(path)
+    def recover(): Unit = recoverCells(spark, path)
+    def active(): String = activeCellsDir(spark, path)
+
+    // every cells* sibling but the manifest pointer: generations,
+    // crashed rewrites, manifest temp files, legacy cells.old* /
+    // cells.compact* leftovers (the last three carry no stamp). Last
+    // touch = the NEWEST FILE inside (a large rewrite keeps writing
+    // part files; the dir's own mtime only reflects top-level entries).
+    def generations(): Seq[IndexLifecycle.Generation] =
+      (try fs.listStatus(root).toSeq catch { case _: java.io.IOException => Seq.empty })
+        .filter(st => st.getPath.getName.startsWith("cells") &&
+          st.getPath.getName != CellsManifest)
+        .map { st =>
+          val n = st.getPath.getName
+          new IndexLifecycle.Generation(new org.apache.hadoop.fs.Path(path, n).toString,
+            cellsStamp(n), newestMtime(st.getPath, st.getModificationTime))
+        }
+
+    private def newestMtime(p: org.apache.hadoop.fs.Path, own: Long): Long = {
+      var m = own
+      try {
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) m = math.max(m, it.next().getModificationTime)
+      } catch { case _: java.io.IOException => }
+      m
+    }
+
+    def drop(gen: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(gen), true)
+
+    def hasTombstones(gen: String): Boolean = {
+      val (tomb, legacy) = snapshot(gen)
+      tomb.nonEmpty || legacy.nonEmpty
+    }
+    def fileCounts(gen: String): Seq[Long] =
+      Seq(countCellDataFiles(fs, new org.apache.hadoop.fs.Path(gen)))
+    def stampedCounts(gen: String): Option[Seq[Long]] =
+      readNFilesStamp(fs, new org.apache.hadoop.fs.Path(gen))
+    def writeStamp(gen: String, counts: Seq[Long]): Unit =
+      writeNFilesStamp(fs, new org.apache.hadoop.fs.Path(gen), counts.mkString(","))
+
+    def snapshot(gen: String): Snapshot =
+      (tombstoneDataFiles(spark, path, gen),
+        if (fs.exists(legacyTombDir)) fs.listStatus(legacyTombDir).toSeq.map(_.getPath)
+        else Seq.empty)
+    def release(s: Snapshot): Unit = ()
+
+    // ONE shuffle of the index, the inherent compaction cost; the ≤C-row
+    // centroid table is the partition count, so each output task holds
+    // ~one whole cell and writes ~one file for it
+    def rewrite(gen: String, s: Snapshot): String = {
+      val out = new org.apache.hadoop.fs.Path(path, s"cells.g${IndexLifecycle.newStamp()}")
+      val raw = spark.read.parquet(gen)
       val cells =
-        if (tombData.isEmpty) raw
+        if (s._1.isEmpty) raw
         else raw.join(
-          broadcast(spark.read.parquet(tombData: _*)
-            .select("vec_id").distinct()),
+          broadcast(spark.read.parquet(s._1: _*).select("vec_id").distinct()),
           Seq("vec_id"), "left_anti")
-      // ≤C-row metadata table — the target partition count, so each
-      // output task holds ~one whole cell and writes ~one file for it
       val c = spark.read.parquet(s"$path/centroids").count().toInt
-      cells
-        .repartition(math.max(c, 1), col("cent_id"))
-        .write.partitionBy("cent_id").parquet(gen.toString)
-      // stamp the rewrite's own data-file count: the no-op
-      // short-circuit above compares the active generation's current
-      // count against this, so only an append re-arms the rewrite
-      writeNFilesStamp(fs, gen, countCellDataFiles(fs, gen))
-      // test seam (ConcurrentMaintenanceSpec): runs between this
-      // rewrite's tombstone snapshot and the manifest flip, simulating
-      // a delete landed by a lease-broken or pre-lease writer exactly
-      // inside the window the merge-forward below exists for — the
-      // lease's per-JVM re-entrancy lets the seam drive the real
-      // deleteFromIvfIndex path on this thread
-      compactRaceHook.foreach(h => h(cellsDir.toString))
-      // ONE atomic pointer flip: the rewrite landed complete in a new
-      // generation dir, and the manifest rename promotes it without a
-      // headless window. A crash before the flip leaves the old
-      // generation active and the new one an age-gated GC candidate; a
-      // crash after it leaves the OLD generation the candidate — no
-      // state needs repair, and a scan already in flight keeps reading
-      // the old generation's files until [[recoverCells]]' GC collects
-      // them (`spark.graft.index.gcStaleHours`, default 24 h).
-      flipCellsManifest(spark, path, gen.getName)
-      // LATE-TOMBSTONE merge-forward (defense in depth below the
-      // writer lease, which already serializes cross-process deletes
-      // against this rewrite): a delete landed by a writer whose lease
-      // was stale-broken — or by a pre-lease binary — between this
-      // rewrite's tombstone snapshot and the flip settles in the
-      // SUPERSEDED generation (its re-resolve saw the old manifest)
-      // and writes its non-generation-scoped dels marker, so it would
-      // replay as a no-op while the new generation serves the doc
-      // undeleted. Re-list the old generation's tombstones after the
-      // flip and COPY (never move — old-generation scans keep their
-      // own view) every file the snapshot did not consume into the new
-      // generation. Any file visible here landed before the flip; a
-      // delete whose append completes after the flip re-resolves to
-      // the new generation itself (deleteFromIvfIndex's settle loop).
-      // Duplicated rows are anti-join no-ops.
-      val late = tombstoneDataFiles(spark, path, cellsDir.toString)
-        .filterNot(tombData.toSet)
+      cells.repartition(math.max(c, 1), col("cent_id"))
+        .write.partitionBy("cent_id").parquet(out.toString)
+      out.toString
+    }
+
+    def promote(gen: String): Unit =
+      flipCellsManifest(spark, path, new org.apache.hadoop.fs.Path(gen).getName)
+
+    // COPY (never move — old-generation scans keep their own view)
+    // every tombstone file the snapshot did not consume; any file
+    // visible here landed before the flip
+    def forwardLate(old: String, gen: String, s: Snapshot): Unit = {
+      val late = tombstoneDataFiles(spark, path, old).filterNot(s._1.toSet)
       if (late.nonEmpty) {
         val dstDir = new org.apache.hadoop.fs.Path(gen, "_tombstones")
         fs.mkdirs(dstDir)
@@ -1476,31 +1296,24 @@ object Similarity {
           "cross-process delete raced this rewrite outside the writer " +
           "lease")
       }
-      // purge only the LEGACY-location files (snapshot only — see
-      // above); the active generation's own tombstones stay with its
-      // dir and die in the age-gated GC
-      legacyTombFiles.foreach(fs.delete(_, false))
-      // non-recursive: fails closed if a cross-process delete committed
-      // a tombstone between the listing and here
-      if (legacyTombFiles.nonEmpty && fs.exists(legacyTombDir) &&
+    }
+
+    // purge only the LEGACY-location files of the snapshot (a one-time
+    // migration); the superseded generation's own tombstones stay with
+    // its dir. Non-recursive rmdir: fails closed if a cross-process
+    // delete committed a tombstone since the listing.
+    def consumed(old: String, s: Snapshot): Unit = {
+      s._2.foreach(fs.delete(_, false))
+      if (s._2.nonEmpty && fs.exists(legacyTombDir) &&
           fs.listStatus(legacyTombDir).isEmpty)
         fs.delete(legacyTombDir, false)
-      // post-promote GC: the generation COUNT bound
-      // (`spark.graft.index.maxStaleGenerations`, enforced in
-      // [[recoverCells]]) must hold immediately after the promote, not
-      // only when the next maintenance op happens to run — a hot
-      // compaction loop would otherwise stand one extra generation per
-      // promote until its next entry point
-      recoverCells(spark, path)
-      ()
-      }
     }
+  }
 
   /** Data files of a cells generation dir (recursive), EXCLUDING the
     * `_tombstones/` side dir and `_`/`.`-prefixed bookkeeping files —
-    * the quantity the compaction no-op short-circuit compares against
-    * its [[writeNFilesStamp]] stamp. One recursive listing; never a
-    * Spark job.
+    * the quantity the compaction no-op skip compares against the
+    * nfiles stamp. One recursive listing; never a Spark job.
     */
   private def countCellDataFiles(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -1511,7 +1324,7 @@ object Similarity {
       val f    = it.next()
       val name = f.getPath.getName
       val inSide = f.getPath.toString.contains("/_tombstones/")
-      if (!inSide && !name.startsWith("_") && !name.startsWith(".")) n += 1
+      if (!inSide && isDataFile(name)) n += 1
     }
     n
   }
@@ -1519,27 +1332,24 @@ object Similarity {
   private def nFilesStampPath(gen: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(gen, "_graft_nfiles")
 
-  /** The post-rewrite data-file count [[compactIvfCells]] stamped into
-    * its generation dir; None for a generation without one (gen-0
-    * layouts, pre-stamp binaries) — those always rewrite.
+  /** The post-rewrite data-file count a compaction stamped into its
+    * generation dir; None for a generation without one (gen-0 layouts,
+    * pre-stamp binaries) or a garbled one — those always rewrite.
     */
   private def readNFilesStamp(
       fs: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path): Option[Long] =
+      gen: org.apache.hadoop.fs.Path): Option[Seq[Long]] =
     try {
       if (!fs.exists(nFilesStampPath(gen))) None
       else {
         val in = fs.open(nFilesStampPath(gen))
-        try Some(new String(
+        try IndexLifecycle.parseCounts(new String(
           org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
+          java.nio.charset.StandardCharsets.UTF_8))
         finally in.close()
       }
     } catch {
-      // a truncated/garbled stamp (crash mid-write on a pre-rename
-      // binary) degrades to always-rewrite — safe; anything else (a
-      // real FS fault) must surface, not silently force rewrites
-      case _: NumberFormatException => None
+      // a real FS fault must surface in the log, not silently force rewrites
       case e: java.io.IOException =>
         log.warn(s"readNFilesStamp(${nFilesStampPath(gen)}): ${e.getMessage}")
         None
@@ -1548,13 +1358,13 @@ object Similarity {
   private def writeNFilesStamp(
       fs: org.apache.hadoop.fs.FileSystem,
       gen: org.apache.hadoop.fs.Path,
-      n: Long): Unit = {
+      stamp: String): Unit = {
     // temp-name + rename: fs.create(overwrite) is not atomic, and a
     // crash mid-write must leave either no stamp (always-rewrite) or a
     // complete one — never a truncated file
     val tmp = new org.apache.hadoop.fs.Path(gen, s"._graft_nfiles.tmp${System.nanoTime()}")
     val out = fs.create(tmp, true)
-    try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     fs.delete(nFilesStampPath(gen), false)
     if (!fs.rename(tmp, nFilesStampPath(gen))) {
@@ -1564,105 +1374,42 @@ object Similarity {
     }
   }
 
-  /** Housekeeping under the layout lock, run by every maintenance
-    * entry point. With the manifest promote ([[compactIvfCells]])
-    * there is no crash state to REPAIR — a crash on either side of the
-    * atomic pointer flip leaves a complete active generation — so this
-    * is (a) garbage collection of superseded generation dirs, crashed
-    * rewrite leftovers and legacy `cells.old*`/`cells.compact*`
-    * siblings, all age-gated so an in-flight scan (or a live
-    * cross-process rewrite) keeps its files, and (b) the one legacy
-    * heal kept for layouts written by the pre-manifest binary: a
-    * headless layout (no manifest, no `cells/`) restores its newest
-    * `cells.old*` sibling instead of letting ensure* rebuild and
-    * silently discard the fold ledger.
+  /** Housekeeping under the layout guard, run by every maintenance
+    * entry point. With the manifest promote there is no crash state to
+    * REPAIR, so this is (a) retention ([[IndexLifecycle.retire]] over
+    * every cells* sibling: superseded generations, crashed rewrites,
+    * legacy `cells.old*`/`cells.compact*` debris), (b) removal of an
+    * aged, EMPTY legacy `tombstones/` dir, and (c) the one legacy heal
+    * kept for layouts written by the pre-manifest binary: a headless
+    * layout (no manifest, no `cells/`) restores its newest `cells.old*`
+    * sibling instead of letting ensure* rebuild and silently discard
+    * the fold ledger.
     */
   private[operators] def recoverCells(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val active = new org.apache.hadoop.fs.Path(
+    val active =
       try activeCellsDir(spark, path)
-      catch { case _: java.io.IOException => return })
+      catch { case _: java.io.IOException => return }
+    val activeP = new org.apache.hadoop.fs.Path(active)
     val exists =
-      try fs.exists(active) catch { case _: java.io.IOException => return }
-    val candidates =
-      try fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      catch { case _: java.io.IOException => Seq.empty }
-    // GC candidates: every cells* sibling that is not the active
-    // generation and not the manifest pointer itself — superseded
-    // generations, crashed rewrites, manifest temp files, legacy
-    // cells.old*/cells.compact* leftovers
-    val stale = candidates.filter { s =>
-      val n = s.getPath.getName
-      n.startsWith("cells") && n != CellsManifest &&
-        fs.makeQualified(s.getPath) != fs.makeQualified(active)
-    }
+      try fs.exists(activeP) catch { case _: java.io.IOException => return }
+    val store = new CellsStore(spark, path)
     if (!exists)
-      stale.map(_.getPath).filter(_.getName.startsWith("cells.old"))
+      store.generations().map(g => new org.apache.hadoop.fs.Path(g.id))
+        .filter(_.getName.startsWith("cells.old"))
         .sortBy(_.getName).lastOption
-        .foreach(old => fs.rename(old, active))
+        .foreach(old => fs.rename(old, activeP))
     else {
-      // age-gated: a superseded generation may still be under an
-      // in-flight scan, and a fresh cells.g*/cells.compact* dir may be
-      // a LIVE rewrite in another process (lockFor is JVM-local) —
-      // liveness keyed on the NEWEST FILE inside the dir (a very large
-      // rewrite keeps writing part files, refreshing its lease for as
-      // long as it makes progress; the dir's own mtime only reflects
-      // top-level entry creation), window configurable for deployments
-      // whose scans or rewrites legitimately run longer.
-      val staleHours = confLong(
-        spark, "spark.graft.index.gcStaleHours", 24L)
+      val cutoff = System.currentTimeMillis() -
+        IndexLifecycle.Policy.of(spark).gcStaleHours * 3600 * 1000
       val tombDir = new org.apache.hadoop.fs.Path(path, "tombstones")
       try {
-        if (fs.exists(tombDir)) {
-          val st = fs.getFileStatus(tombDir)
-          if (fs.listStatus(tombDir).isEmpty &&
-              st.getModificationTime <
-                System.currentTimeMillis() - staleHours * 3600 * 1000)
-            fs.delete(tombDir, false)
-        }
+        if (fs.exists(tombDir) && fs.listStatus(tombDir).isEmpty &&
+            fs.getFileStatus(tombDir).getModificationTime < cutoff)
+          fs.delete(tombDir, false)
       } catch { case _: java.io.IOException => }
-      val cutoff = System.currentTimeMillis() - staleHours * 3600 * 1000
-      def newestMtime(p: org.apache.hadoop.fs.Path, own: Long): Long = {
-        var m = own
-        try {
-          val it = fs.listFiles(p, true)
-          while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-        } catch { case _: java.io.IOException => }
-        m
-      }
-      // COUNT bound on top of the age gate (the age gate alone lets a
-      // hot compaction loop accumulate generation dirs without limit
-      // for gcStaleHours): among SUPERSEDED generations — NUMERIC
-      // stamps strictly below the active's ([[cellsGenNum]]; string
-      // order breaks across stamp widths and across hosts); anything
-      // numbered above may be a live cross-process rewrite that has
-      // not flipped yet and stays age-gated only, as do legacy
-      // `cells.old*`/`cells.compact*` siblings (no generation number —
-      // crashed-rewrite debris, not standing generations, so they
-      // never consume count-bound budget) — keep the newest
-      // `spark.graft.index.maxStaleGenerations` (default 4, ≤0
-      // disables) and delete the excess REGARDLESS of age. Contract
-      // shift a reader accepts by design: an in-flight scan survives
-      // min(gcStaleHours, K subsequent promotes); liveCells' absence
-      // retry re-resolves a scan that outlives either bound.
-      val keepStale = confInt(
-        spark, "spark.graft.index.maxStaleGenerations", 4)
-      val forced: Set[org.apache.hadoop.fs.Path] =
-        if (keepStale <= 0) Set.empty
-        else {
-          val activeGen =
-            cellsGenNum(active.getName).getOrElse(Long.MaxValue)
-          stale.map(_.getPath)
-            .flatMap(p =>
-              cellsGenNum(p.getName).filter(_ < activeGen).map((_, p)))
-            .sortBy(-_._1).drop(keepStale).map(_._2).toSet
-        }
-      stale.foreach { s =>
-        if (forced.contains(s.getPath) ||
-            newestMtime(s.getPath, s.getModificationTime) < cutoff)
-          fs.delete(s.getPath, true)
-      }
+      IndexLifecycle.retire(spark, store, Some(active), Set.empty)
     }
   }
 
@@ -1721,42 +1468,20 @@ object Similarity {
     */
   def rebuildIvfIndex(
       spark: SparkSession, path: String, dest: String): String = {
-    lockFor(dest).synchronized {
-      WriterLease.withLease(spark, WriterLease.lockPathFor(dest)) {
-      recoverCells(spark, path)
-      val destP  = new org.apache.hadoop.fs.Path(dest)
-      def marker = new org.apache.hadoop.fs.Path(
-        activeCellsDir(spark, dest), "_SUCCESS")
-      val fs     = destP.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        // rebuild from the LIVE rows: tombstoned ids drop out here, so
-        // rebuild-from-index ≡ build-from-remainder and the new layout
-        // starts with an empty tombstone set
-        val b = liveCells(spark, path)
-          .select(col("vec_id"), col("q"), col("nrm"))
-        val c = nCentroidsForCorpus(b.count())
-        val seeds = b.filter(col("vec_id") < c)
-          .select(col("vec_id").as("cent_id"),
-            col("q").as("cvec"), col("nrm").as("cnrm"))
-        val tmp =
-          new org.apache.hadoop.fs.Path(s"$dest.tmp${System.nanoTime()}")
-        seeds.write.mode("overwrite").parquet(s"$tmp/centroids")
-        assignToCentroids(b, spark.read.parquet(s"$tmp/centroids"))
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(s"$tmp/cells")
-        // same cross-process promote rule as ensureIvfIndex: losing a
-        // race to an identical complete layout is benign
-        if (fs.exists(marker)) fs.delete(tmp, true)
-        else {
-          fs.delete(destP, true)
-          if (!fs.rename(tmp, destP)) {
-            if (fs.exists(marker)) fs.delete(tmp, true)
-            else throw new java.io.IOException(
-              s"could not promote rebuilt IVF layout $tmp -> $destP")
-          }
-        }
-      }
-      }
+    promoteBuilt(spark, dest, None, path, "rebuilt IVF layout") { tmp =>
+      // rebuild from the LIVE rows: tombstoned ids drop out here, so
+      // rebuild-from-index ≡ build-from-remainder and the new layout
+      // starts with an empty tombstone set
+      val b = liveCells(spark, path)
+        .select(col("vec_id"), col("q"), col("nrm"))
+      val c = nCentroidsForCorpus(b.count())
+      val seeds = b.filter(col("vec_id") < c)
+        .select(col("vec_id").as("cent_id"),
+          col("q").as("cvec"), col("nrm").as("cnrm"))
+      seeds.write.mode("overwrite").parquet(s"$tmp/centroids")
+      assignToCentroids(b, spark.read.parquet(s"$tmp/centroids"))
+        .write.mode("overwrite").partitionBy("cent_id")
+        .parquet(s"$tmp/cells")
     }
     dest
   }
@@ -2007,52 +1732,10 @@ object Similarity {
     */
   def ensureIvfPqIndex(
       embeddings: DataFrame, srcTag: String,
-      m: Int = 4, ks: Int = 256, subDim: Int = 16): (String, Int) = {
-    val spark = embeddings.sparkSession
-    val fp    = inputFingerprint(embeddings)
-    val n     = ensureCorpusStats(embeddings, srcTag, Some(fp))
-    val c     = nCentroidsForCorpus(n)
-    val key   = s"$srcTag|ivfpq|c=$c|m=$m|ks=$ks|sd=$subDim" +
-      s"|fp=$fp|${embeddings.schema.catalogString}"
-    val path = layoutPath(spark, "ivfpq", key)
-    val memo = s"${spark.sparkContext.applicationId}|$key"
-    if (ivfMemo.get(memo) != path) {
-      lockFor(path).synchronized {
-        val dest   = new org.apache.hadoop.fs.Path(path)
-        // marker = _SUCCESS of the ACTIVE generation (a compacted
-        // layout keeps its completeness witness across promotes)
-        def marker = new org.apache.hadoop.fs.Path(
-          activeCellsDir(spark, path), "_SUCCESS")
-        val fs     = dest.getFileSystem(spark.sessionState.newHadoopConf())
-        // complete layouts resolve LEASE-FREE (the ensureIvfIndex
-        // serving-path contract): only an actual build writes
-        val complete =
-          try fs.exists(marker)
-          catch { case _: IllegalArgumentException => false }
-        if (!complete) WriterLease.withLease(
-            spark, WriterLease.lockPathFor(path)) {
-        recoverCells(spark, path)
-        if (!fs.exists(marker)) {
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$path.tmp${System.nanoTime()}")
-          buildIvfPqIndex(embeddings, tmp.toString, nCentroids = c,
-            m = m, ks = ks, subDim = subDim)
-          if (fs.exists(marker)) fs.delete(tmp, true)
-          else {
-            fs.delete(dest, true)
-            if (!fs.rename(tmp, dest)) {
-              if (fs.exists(marker)) fs.delete(tmp, true)
-              else throw new java.io.IOException(
-                s"could not promote IVF-PQ layout $tmp -> $dest")
-            }
-          }
-        }
-        }
-      }
-      ivfMemo.put(memo, path)
-    }
-    (path, c)
-  }
+      m: Int = 4, ks: Int = 256, subDim: Int = 16): (String, Int) =
+    ensureLayout(embeddings, srcTag, "ivfpq", s"|m=$m|ks=$ks|sd=$subDim")((tmp, c) =>
+      buildIvfPqIndex(embeddings, tmp, nCentroids = c,
+        m = m, ks = ks, subDim = subDim))
 
   /** Probe an IVF-PQ layout: [[ivfProbe]]'s driver-side centroid
     * ranking prunes the cells scan to nProbe partitions, then ADC runs
@@ -2073,20 +1756,7 @@ object Similarity {
       nProbe: Int = 4,
       exclude: Option[Long] = None,
       m: Int = 4, subDim: Int = 16): DataFrame = {
-    // same half-away-from-zero quantization as ivfProbe
-    val qq = queryVec.map { f =>
-      val d = f.toDouble * 1000
-      if (d >= 0) math.round(d) else -math.round(-d)
-    }
-    val qn = qq.map(x => x * x).sum
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm").collect()
-    val probeIds = cents.map { r =>
-      val cv  = r.getAs[collection.Seq[Long]]("cvec")
-      val dot = cv.iterator.zip(qq.iterator).map { case (a, b) => a * b }.sum
-      val cos = dot.toDouble / math.sqrt(r.getAs[Long]("cnrm").toDouble * qn.toDouble)
-      (cos, r.getAs[Long]("cent_id"))
-    }.sortBy { case (cos, id) => (-cos, -id) }.take(nProbe).map(_._2)
+    val (qq, _, probeIds) = probeCells(spark, path, queryVec, nProbe)
     // the ADC lookup table: exact integer ‖q_sub − codeword‖² per
     // (sub, code), from the m·ks-row codebook file — driver metadata
     val lut = Array.fill(m)(collection.mutable.Map.empty[Long, Long])
@@ -2155,38 +1825,8 @@ object Similarity {
       newVecs: DataFrame,
       path: String,
       batchTag: String,
-      m: Int = 4, ks: Int = 256, subDim: Int = 16): Unit = {
-    val spark   = newVecs.sparkSession
-    val memoKey =
-      s"${spark.sparkContext.applicationId}|$path|pqfold|$batchTag"
-    if (ivfFoldMemo.contains(memoKey)) return
-    lockFor(path).synchronized {
-      if (ivfFoldMemo.contains(memoKey)) return
-      WriterLease.withLease(spark, WriterLease.lockPathFor(path)) {
-      recoverCells(spark, path)
-      val tagHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(batchTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      val marker = new org.apache.hadoop.fs.Path(path, s"folds/$tagHash")
-      val fs     = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        requireNotTombstoned(spark, path, newVecs.select("vec_id"))
-        pqFoldEncoding(newVecs, path, m, subDim)
-          .write.mode("append").partitionBy("cent_id")
-          .parquet(activeCellsDir(spark, path))
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, true)
-        try out.write(batchTag.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // policy check under the already-held layout lock (reentrant)
-        maybeAutoCompactCells(spark, path)
-      }
-      }
-      ivfFoldMemo.add(memoKey)
-      ()
-    }
-  }
+      m: Int = 4, ks: Int = 256, subDim: Int = 16): Unit =
+    foldCells(newVecs, path, batchTag)(pqFoldEncoding(newVecs, path, m, subDim))
 
   /** Batched probe of an [[ensureIvfPqIndex]] layout — [[
     * ivfProbeBatchDf]]'s serving-throughput shape for the COMPRESSED

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Cross-PROCESS writer mutual exclusion for a maintained index
   * lineage — the half of the single-writer contract the JVM-local
-  * locks (`Dedup.foldLocks`, `Similarity.lockFor`) cannot give. Every
+  * locks of [[IndexLifecycle.guarded]] cannot give. Every
   * maintenance entry point (fold, delete, compact, rebuild) of both
   * index families acquires the lineage's lease before touching its
   * ledger or layout, so two driver JVMs folding the same lineage
@@ -212,9 +212,9 @@ object WriterLease {
   def withLease[T](spark: SparkSession, lock: Path)(body: => T): T = {
     val key = lock.toString
     val fs  = lock.getFileSystem(spark.sessionState.newHadoopConf())
-    val staleMs = Similarity.confLong(
+    val staleMs = IndexLifecycle.confLong(
       spark, "spark.graft.index.writerLeaseStaleMinutes", 120L) * 60000L
-    val waitMs = Similarity.confLong(
+    val waitMs = IndexLifecycle.confLong(
       spark, "spark.graft.index.writerLeaseWaitSeconds", 30L) * 1000L
     val acquired = synchronized {
       held.get(key) match {

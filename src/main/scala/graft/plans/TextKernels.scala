@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Shared per-row text-kernel primitives for the fused expressions
   * ([[QualityScoreExpr]], [[LangIdExpr]], [[RepetitionStatsExpr]],
-  * [[NgramStatsExpr]]): ONE definition of the tokenizer semantics
-  * (`split(trim(lower(text)), "\\s+")`) and of Java regex `\b`'s word
+  * [[NgramStatsExpr]]): ONE definition of the tokenizer's whitespace
+  * class (the `\\s+` of `split(trim(lower(text)), "\\s+")`) and of Java regex `\b`'s word
   * model, so every kernel replicates the composed `functions._` forms
   * identically — the differential specs hold each kernel to its
   * composed reference, and these helpers are where that fidelity
@@ -22,13 +20,6 @@ private[plans] object TextKernels {
     */
   def isBoundWordChar(cp: Int): Boolean =
     cp == '_' || Character.isLetterOrDigit(cp)
-
-  /** `split(trim(lower(s)), "\\s+")` with Spark's limit −1 semantics
-    * (leading/trailing non-space whitespace runs yield empty elements
-    * that count). Shared by the repetition kernels.
-    */
-  def lowerTrimSplit(s: UTF8String): Array[String] =
-    s.toLowerCase.trim.toString.split("\\s+", -1)
 
   /** Count `\b(word|...)\b`-style hits of each word set over an
     * ALREADY-LOWERED string in one scan. A "hit" is a maximal word run

@@ -151,12 +151,11 @@ private[graft] object FileStreamDrain {
     // number: the r20 cores/4 default (8 at 32 cores) vs 4 measured
     // q72 −24 % / q64 −11 % / q105 −10 % on matched calibration
     // (OPTIMIZATION_r21.md; 2 partitions re-lost it on the 100k-row
-    // batch-0 scan). Still scale-adaptive for bigger sessions and
-    // env-overridable; the driver's 8-core bench point is unchanged
-    // (max(4, 8/8) = max(4, 8/4) = 4).
+    // batch-0 scan). Still scale-adaptive for bigger sessions; the
+    // driver's 8-core bench point is unchanged (max(4, 8/8) =
+    // max(4, 8/4) = 4).
     drainSession.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS",
-        math.max(4, spark.sparkContext.defaultParallelism / 8).toString))
+      math.max(4, spark.sparkContext.defaultParallelism / 8).toString)
     // emission-on-arrival pipelines skip the final no-data micro-batch
     // (state eviction only — one more full state-store commit round
     // that can emit nothing); see the finalNoDataBatch param doc
@@ -166,7 +165,6 @@ private[graft] object FileStreamDrain {
     // state-store provider knob (RocksDB for state that outgrows heap):
     // the clone doesn't inherit runtime conf, so propagate explicitly
     StateStores.propagate(spark, drainSession)
-    StateStores.tuneRocksDb(drainSession)
     val q = phase("start") {
       pipeline(drainSession.readStream.schema(schema)
           .option("maxFilesPerTrigger", math.max(b0Files.length, 1).toString)

@@ -98,11 +98,9 @@ private[graft] object IncrementalSink {
     // per-partition commit tax to shave — the per-batch cost is the
     // fold's real aggregation work, which wants the parallelism. The
     // cores/8 A/B (r21) confirmed the split: q87's aggregation fold
-    // lost 20 % while the probe-style drains moved ≤7 %. Env override
-    // shared with the stateful drains.
+    // lost 20 % while the probe-style drains moved ≤7 %.
     drainSession.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS",
-        math.max(4, spark.sparkContext.defaultParallelism / 4).toString))
+      math.max(4, spark.sparkContext.defaultParallelism / 4).toString)
     // no stateful operator here (the sink is driver-managed), but the
     // provider knob propagates for uniformity with FileStreamDrain
     StateStores.propagate(spark, drainSession)

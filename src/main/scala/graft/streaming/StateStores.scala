@@ -35,24 +35,6 @@ private[graft] object StateStores {
         case other     => other
       })
 
-  /** RocksDB commit-path A/B hooks for the drain sessions (no-op
-    * unless the resolved provider is RocksDB and the env is set).
-    * Defaults deliberately untouched: changelog checkpointing — the
-    * documented low-latency commit mode — measured SLOWER here on the
-    * stream-stream join drain (q105 3.1 s → 4.4-5.3 s every
-    * iteration, OPTIMIZATION_r21.md), so Spark's defaults stand and
-    * the knobs stay env-only for re-measurement.
-    */
-  def tuneRocksDb(spark: SparkSession): Unit =
-    if (resolveProvider(spark).contains(RocksDb)) {
-      sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").foreach(v =>
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v))
-      sys.env.get("SPARK_GRAFT_ROCKSDB_TRACKROWS").foreach(v =>
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", v))
-    }
-
   /** Propagate the resolved provider onto a drain-clone session —
     * plus `spark.graft.checkpointDir`: `newSession()` does not inherit
     * runtime conf, and operators staged INSIDE a foreachBatch sink

@@ -40,7 +40,7 @@ object CompactionBench {
     // with the AUTO-COMPACTION POLICY DISARMED: this leg measures the
     // accumulated small-file shape, so the default threshold must not
     // quietly compact it mid-measurement at larger nBatches
-    spark.conf.set("spark.graft.index.autoCompactFilesPerCell", "0")
+    spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "0")
     (0 until nBatches).foreach { i =>
       Similarity.foldIntoIvfIndex(
         emb.filter(col("vec_id") % 10 === 0 &&
@@ -69,13 +69,13 @@ object CompactionBench {
 
     // the POLICY leg (r15 ask: the delta via the policy, not a manual
     // call): a second fresh layout ingests the same batches with
-    // `spark.graft.index.autoCompactFilesPerCell` armed — the folds
+    // `spark.graft.index.autoCompactFilesPerUnit` armed — the folds
     // compact THEMSELVES whenever the layout crosses the threshold, so
     // steady-state file count and probe wall stay near the compacted
     // point with zero operator involvement
     val policyThreshold =
       sys.env.getOrElse("SPARK_GRAFT_AUTOCOMPACT_FPC", "4")
-    spark.conf.set("spark.graft.index.autoCompactFilesPerCell",
+    spark.conf.set("spark.graft.index.autoCompactFilesPerUnit",
       policyThreshold)
     val (path2, _) = Similarity.ensureIvfIndex(corpus,
       srcTag = s"$sfDir#compactpolicy${System.nanoTime()}")
@@ -87,7 +87,7 @@ object CompactionBench {
         path2, batchTag = s"cp$i")
     }
     val policyFoldSec = (System.nanoTime() - tp0) / 1e9
-    spark.conf.unset("spark.graft.index.autoCompactFilesPerCell")
+    spark.conf.unset("spark.graft.index.autoCompactFilesPerUnit")
     def cellFiles2: Int = graft.util.LocalFs.parquetFileCount(Similarity.activeCellsDir(spark, path2))
     def probeMedian2(): Double = {
       Similarity.ivfProbe(spark, path2, qv, 10, 4, Some(1L)).count() // warm

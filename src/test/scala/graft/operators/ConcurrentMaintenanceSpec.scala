@@ -121,7 +121,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     }
     // every fold crosses the armed threshold, so each one compacts and
     // PROMOTES while the probers run — the contract under test
-    spark.conf.set("spark.graft.index.autoCompactFilesPerCell", "1")
+    spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "1")
     try {
       (0 to 3).foreach { i =>
         Similarity.foldIntoIvfIndex(
@@ -129,7 +129,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
           path, batchTag = s"h$i")
       }
     } finally {
-      spark.conf.unset("spark.graft.index.autoCompactFilesPerCell")
+      spark.conf.unset("spark.graft.index.autoCompactFilesPerUnit")
       stop.set(true)
     }
     probers.foreach(_.join(60000))
@@ -412,7 +412,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       .as[Long].head()
     val delTag = s"race-del-${System.nanoTime()}"
     val fired  = new java.util.concurrent.atomic.AtomicInteger(0)
-    Similarity.compactRaceHook = Some { supersededGen =>
+    IndexLifecycle.compactRaceHook = Some { supersededGen =>
       fired.incrementAndGet()
       Similarity.deleteFromIvfIndex(
         Seq(victim).toDF("vec_id"), path, delTag)
@@ -423,7 +423,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       ()
     }
     try Similarity.compactIvfCells(spark, path)
-    finally Similarity.compactRaceHook = None
+    finally IndexLifecycle.compactRaceHook = None
     assert(fired.get() == 1, "the race seam must have fired exactly once")
     val live = Similarity.liveCells(spark, path)
       .select("vec_id").as[Long].collect().toSet
@@ -463,14 +463,14 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       delTag = "race-pre")
     val lateTag = s"race-late-${System.nanoTime()}"
     val fired   = new java.util.concurrent.atomic.AtomicInteger(0)
-    Dedup.compactRaceHook = Some { () =>
+    IndexLifecycle.compactRaceHook = Some { _ =>
       fired.incrementAndGet()
       Dedup.deleteFromMinhashBandIndex(Seq(2L).toDF("doc_id"), prefix,
         delTag = lateTag)
       ()
     }
     try Dedup.compactMinhashBandIndex(spark, prefix)
-    finally Dedup.compactRaceHook = None
+    finally IndexLifecycle.compactRaceHook = None
     assert(fired.get() == 1, "the race seam must have fired exactly once")
     val (bt, st) = Dedup.currentIndexTables(spark, prefix)
     assert(bt != bt0, "compaction must have promoted a new generation")

@@ -433,7 +433,7 @@ class DedupSpec extends SparkSpec {
     def files = spark.table(cur).inputFiles.length
     def bandsOf = spark.table(cur).select("doc_id", "bk")
       .as[(Long, String)].collect().toSet
-    spark.conf.set("spark.graft.index.autoCompactFilesPerBucket", "0")
+    spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "0")
     try {
       Dedup.foldIntoMinhashBandIndex(
         docs.filter($"doc_id" % 20 === 0), "graft_autocband", "a1")
@@ -443,7 +443,7 @@ class DedupSpec extends SparkSpec {
         .select($"doc_id", explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))
         .as[(Long, String)].collect().toSet
       // armed low, the next fold compacts itself under its own lock
-      spark.conf.set("spark.graft.index.autoCompactFilesPerBucket", "1")
+      spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "1")
       Dedup.foldIntoMinhashBandIndex(
         docs.filter($"doc_id" % 20 === 10), "graft_autocband", "a2")
       assert(files < accumulated,
@@ -455,7 +455,7 @@ class DedupSpec extends SparkSpec {
       Dedup.foldIntoMinhashBandIndex(
         docs.filter($"doc_id" % 20 === 0), "graft_autocband", "a1")
       assert(spark.table(cur).count() == n)
-    } finally spark.conf.unset("spark.graft.index.autoCompactFilesPerBucket")
+    } finally spark.conf.unset("spark.graft.index.autoCompactFilesPerUnit")
   }
 
   test("deleteFromMinhashBandIndex: live views, compact purge ≡ rebuild-from-remainder, re-insert contract") {

@@ -20,6 +20,80 @@ import graft.functions.VectorFunctions
 class MaintenanceFuzzSpec extends SparkSpec {
   import spark.implicits._
 
+  // ---------- per-step invariant helpers (listings + one id collect) ----------
+
+  // the retention bound every maintenance op must leave behind
+  private def maxStale: Int =
+    spark.conf.getOption("spark.graft.index.maxStaleGenerations")
+      .flatMap(_.trim.toIntOption).getOrElse(4)
+
+  private def stepFailure(seed: Int, step: Int, what: String, ops: => String): String =
+    s"seed=$seed step=$step: $what; ops=$ops"
+
+  // band index: live view ≡ model, ≤ maxStale superseded generations,
+  // and every tombstone a reader applies lives in the ACTIVE
+  // generation's own dels table
+  private def checkBandStep(seed: Int, step: Int, prefix: String,
+      want: Set[Long], ops: => String): Unit = {
+    // sigs hold one row per doc: no distinct, so no shuffle
+    val (cb, cs) = Dedup.currentIndexTables(spark, prefix)
+    val live = Dedup.liveIndexTable(spark, cs, cb).select("doc_id")
+      .as[Long].collect().toSet
+    assert(live == want, stepFailure(seed, step,
+      s"live sigs ${live.size} ids vs model ${want.size} " +
+        s"(extra ${(live -- want).toSeq.sorted.take(5)}, " +
+        s"missing ${(want -- live).toSeq.sorted.take(5)})", ops))
+    val gens = Seq("bands", "sigs", "dels").flatMap { fam =>
+      val base = s"${prefix}_$fam"
+      spark.sessionState.catalog.listTables("default", s"$base*").map(_.table)
+        .collect {
+          case n if n == base => ""
+          case n if n.startsWith(s"${base}_g") => n.stripPrefix(base)
+        }
+    }.toSet
+    val active = cb.stripPrefix(s"${prefix}_bands")
+    if (maxStale > 0)
+      assert((gens - active).size <= maxStale, stepFailure(seed, step,
+        s"${(gens - active).size} superseded generations stand " +
+          s"(bound $maxStale): ${(gens - active).toSeq.sorted}", ops))
+    val ownDels = Dedup.delsTableFor(cb)
+    Dedup.standingDels(spark, cb).foreach { d =>
+      val foreign = d.inputFiles.filterNot(f =>
+        new org.apache.hadoop.fs.Path(f).getParent.getName == ownDels)
+      assert(foreign.isEmpty, stepFailure(seed, step,
+        s"tombstones outside the active generation $cb: ${foreign.take(3).toSeq}", ops))
+    }
+  }
+
+  // IVF / IVF-PQ layout: the same three invariants over the manifest
+  // directory — live cells ≡ model, ≤ maxStale superseded generation
+  // dirs, tombstone files only under `<active>/_tombstones/`
+  private def checkIvfStep(seed: Int, step: Int, path: String,
+      want: Set[Long]): Unit = {
+    val live = Similarity.liveCells(spark, path).select("vec_id")
+      .as[Long].collect().toSet
+    assert(live == want, stepFailure(seed, step,
+      s"live cells ${live.size} ids vs model ${want.size} " +
+        s"(extra ${(live -- want).toSeq.sorted.take(5)}, " +
+        s"missing ${(want -- live).toSeq.sorted.take(5)})", ""))
+    val active = new org.apache.hadoop.fs.Path(
+      Similarity.activeCellsDir(spark, path)).getName
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val gens = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+      .map(_.getPath.getName).filter(_.matches("cells(\\.g\\d+)?"))
+    if (maxStale > 0)
+      assert(gens.count(_ != active) <= maxStale, stepFailure(seed, step,
+        s"${gens.count(_ != active)} superseded generations stand " +
+          s"(bound $maxStale): ${gens.sorted}", ""))
+    val foreign = Similarity.standingTombstoneFiles(spark, path).filterNot { f =>
+      val dir = new org.apache.hadoop.fs.Path(f).getParent
+      dir.getName == "_tombstones" && dir.getParent.getName == active
+    }
+    assert(foreign.isEmpty, stepFailure(seed, step,
+      s"tombstones outside the active generation $active: ${foreign.take(3)}", ""))
+  }
+
   // ---------- band index (table-backed, intent-ledger repair) ----------
 
   private def bandFuzz(seed: Int): Unit = {
@@ -32,6 +106,10 @@ class MaintenanceFuzzSpec extends SparkSpec {
     def batch(i: Int) = docs.filter($"doc_id" % 6 === i)
     val batchIds: Map[Int, Set[Long]] =
       (1 to 5).map(i => i -> batch(i).select("doc_id").as[Long].collect().toSet).toMap
+    // docs without a single shingle have no band rows at all
+    val indexable: Set[Long] = docs
+      .filter(graft.functions.TextFunctions.hasShingles($"text", 3))
+      .select("doc_id").as[Long].collect().toSet
 
     val (bt0, st0) = Dedup.ensureMinhashBandIndex(base, prefix, srcTag = s"fuzz-$run")
     // compaction promotes generation pairs — every physical access
@@ -60,7 +138,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       }
     }
 
-    (1 to 12).foreach { _ =>
+    (1 to 12).foreach { step =>
       rnd.nextInt(4) match {
         case 0 if nextBatch <= 5 => // clean fold
           ops += s"fold(b$nextBatch)"
@@ -121,11 +199,15 @@ class MaintenanceFuzzSpec extends SparkSpec {
           ops += "compact"
           Dedup.compactMinhashBandIndex(spark, prefix)
       }
+      checkBandStep(seed, step, prefix, (folded -- deleted) & indexable,
+        ops.mkString(" → "))
     }
 
     // final compact makes physical ≡ live, then the invariant:
     // maintained ≡ rebuild-from-remainder, row-for-row on both tables
     Dedup.compactMinhashBandIndex(spark, prefix)
+    checkBandStep(seed, 13, prefix, (folded -- deleted) & indexable,
+      ops.mkString(" → "))
     val want = folded -- deleted
     val remainder = docs.filter($"doc_id".isin(want.toSeq: _*))
     val (rbt, rst) = Dedup.ensureMinhashBandIndex(
@@ -206,7 +288,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     prober.setDaemon(true)
     prober.start()
 
-    (1 to 10).foreach { _ =>
+    (1 to 10).foreach { step =>
       rnd.nextInt(5) match {
         case 0 if nextBatch <= 5 => // fold a new batch
           Similarity.foldIntoIvfIndex(batch(nextBatch), path,
@@ -254,6 +336,9 @@ class MaintenanceFuzzSpec extends SparkSpec {
           assert(got.length == 5)
           assert(!got.exists(deleted), s"seed=$seed: probe served a deleted id")
       }
+      // at an op boundary the layout is never headless (case 3 heals
+      // inside its gate), so the check runs beside the prober
+      checkIvfStep(seed, step, path, folded -- deleted)
     }
 
     stopProbes.set(true)
@@ -266,6 +351,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // the STANDING centroids (folds never move centroids), and after a
     // final compact the physical cells match too, tombstones cleared
     Similarity.compactIvfCells(spark, path)
+    checkIvfStep(seed, 11, path, folded -- deleted)
     val want = folded -- deleted
     val cents = spark.read.parquet(s"$path/centroids")
       .select("cent_id", "cvec", "cnrm")
@@ -313,7 +399,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     var nextBatch = 1
     var delSeq    = 0
 
-    (1 to 10).foreach { _ =>
+    (1 to 10).foreach { step =>
       rnd.nextInt(4) match {
         case 0 if nextBatch <= 5 =>
           Similarity.foldIntoIvfPqIndex(batch(nextBatch), path,
@@ -342,9 +428,11 @@ class MaintenanceFuzzSpec extends SparkSpec {
           assert(got.length == 5)
           assert(!got.exists(deleted), s"seed=$seed: ADC probe served a deleted id")
       }
+      checkIvfStep(seed, step, path, expected.keySet -- deleted)
     }
 
     Similarity.compactIvfCells(spark, path)
+    checkIvfStep(seed, 11, path, expected.keySet -- deleted)
     val want = expected.view.filterKeys(k => !deleted(k)).toMap
     val physical = snapshot()
     assert(physical == want,

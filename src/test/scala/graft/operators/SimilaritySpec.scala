@@ -695,14 +695,14 @@ class SimilaritySpec extends SparkSpec {
     // with the policy armed LOW, a fold that crosses the threshold
     // compacts ITSELF — no operator call; with it disabled (0), folds
     // accumulate files monotonically
-    spark.conf.set("spark.graft.index.autoCompactFilesPerCell", "0")
+    spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "0")
     try {
       Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 40 === 0), path, "a1")
       Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 40 === 10), path, "a2")
       Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 40 === 20), path, "a3")
       val accumulated = cellFiles
       val (rowsBefore, probeBefore) = (rows, probe)
-      spark.conf.set("spark.graft.index.autoCompactFilesPerCell", "2")
+      spark.conf.set("spark.graft.index.autoCompactFilesPerUnit", "2")
       Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 40 === 30), path, "a4")
       assert(cellFiles < accumulated,
         s"policy must have auto-compacted (was $accumulated files, " +
@@ -717,7 +717,7 @@ class SimilaritySpec extends SparkSpec {
       val f = cellFiles
       Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 40 === 0), path, "a1")
       assert(cellFiles == f)
-    } finally spark.conf.unset("spark.graft.index.autoCompactFilesPerCell")
+    } finally spark.conf.unset("spark.graft.index.autoCompactFilesPerUnit")
   }
 
   test("deleteFromIvfIndex: live views, compact purge, re-insert contract") {
@@ -1497,10 +1497,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("malformed auto-compaction conf degrades to the default, loudly not fatally") {
-    val key = "spark.graft.index.autoCompactFilesPerCell"
+    val key = "spark.graft.index.autoCompactFilesPerUnit"
     spark.conf.set(key, "thirty-two")
     try {
-      assert(Similarity.confInt(spark, key, 32) == 32)
+      assert(IndexLifecycle.Policy.of(spark).autoCompactFilesPerUnit == 32)
       // and a fold under the malformed conf completes instead of
       // aborting after its append already landed
       val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
