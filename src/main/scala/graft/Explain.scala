@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan inspection: `runMain graft.Explain [--out=PLANS.md] [sfDir]
@@ -86,16 +85,8 @@ object Explain {
     val rest = args.filterNot(_.startsWith("--out="))
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (rest.length > 1) rest.tail.toSeq else headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+    // pinned at 4 cores: PLANS.md records local[4] plans
+    val spark = Sessions.local(cores = 4, logLevel = "ERROR")
     val all = SparkEntry.queries ++ SparkEntry.probeQueries
     val plans = names.map { n =>
       n -> normalize(all(n)(spark, sfDir)

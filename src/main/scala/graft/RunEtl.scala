@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.Configs
 import graft.pipeline.{EtlPipeline, MappingManager}
 
@@ -29,17 +27,7 @@ object RunEtl {
       new MappingManager(m, s)
     } else new MappingManager(Seq.empty)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = Sessions.local("graft-etl", master = sys.env.get("SPARK_MASTER"))
 
     val t0     = System.nanoTime()
     val pipe   = new EtlPipeline(spark, cfg, mappings)

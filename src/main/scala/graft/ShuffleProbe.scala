@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-traffic audit: `runMain graft.ShuffleProbe q23_minhash_pairs
   * [sfDir]` runs one `SparkEntry` query under a task-metrics listener
@@ -27,17 +26,7 @@ object ShuffleProbe {
     require(args.nonEmpty, "usage: ShuffleProbe <queryName> [sfDir]")
     val name  = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = Sessions.local()
     SparkEntry.prepareLayouts(spark, sfDir)
     // probeQueries: scale-demo shapes measured by tooling only (e.g.
     // the uncapped incremental-ingestion variants), not driver-gated

@@ -2320,9 +2320,8 @@ object SparkEntry {
   // conf no matter when or how concurrently the caller acts on them —
   // the former runtime mutation of the shared session's conf made
   // correctness rest on an undocumented build-then-execute-sequentially
-  // contract. Runtime confs are not inherited by newSession(), so the
-  // two graft runtime knobs (state-store provider, checkpoint dir) are
-  // copied across at creation; builder-time options inherit normally.
+  // contract. The caller's runtime graft settings are copied at
+  // creation (Sessions.child); later changes to them do not reach it.
   // WEAK keys: a driver cycling through many short-lived sessions must
   // not have every stopped parent (and its child's SessionState) pinned
   // by this static map for the JVM lifetime — entries evict with the
@@ -2332,13 +2331,8 @@ object SparkEntry {
   private def bucketPruningSession(s: SparkSession): SparkSession =
     pruningSessions.synchronized {
       Option(pruningSessions.get(s)).getOrElse {
-        val ns = s.newSession()
-        ns.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        Seq(graft.streaming.StateStores.ProviderKey,
-            graft.util.Checkpoints.ConfKey).foreach { key =>
-          s.conf.getOption(key).foreach(ns.conf.set(key, _))
-        }
-        graft.plans.GraftExtensions.install(ns)
+        val ns = Sessions.child(s,
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
         pruningSessions.put(s, ns)
         ns
       }

@@ -30,7 +30,7 @@ import graft.sources.{GeoJsonSource, GpkgSource, PagedRestSource, ShpSource}
   *  - sources that publish to the same table, or land into the same
   *    directory, run one after another in declared order, so
   *    last-writer truncate-and-load and append results are unchanged;
-  *  - each read runs under its own degradation ladder;
+  *  - each read is re-run on its own (up to 3 degradation levels);
   *  - with continueOnFailure = false, a failed chain stops (and so do
   *    the later sources on its lane); the earliest-declared source's
   *    failure is rethrown once all chains have settled.
@@ -233,16 +233,16 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     val fcName = Option(chain.get).flatMap(_.fcName).getOrElse(reserveName(source))
     var cached: DataFrame = null
     try {
-      // a per-call ladder retries the READ under degraded configs (its
-      // concurrency/timeout knobs govern driver-side landing I/O); a
-      // deterministic failure exhausts the 3 levels and falls through to
-      // the continue-on-failure ledger below (recovery.py SKIP floor).
+      // the READ is re-run on a failure (degradation levels 1-3); a
+      // deterministic failure exhausts the 3 levels and falls
+      // through to the continue-on-failure ledger below (recovery.py
+      // SKIP floor).
       // Spark defers scan work until an action, so the read is FORCED
       // here (cache + count): a real decode/read failure surfaces INSIDE
-      // the ladder — where it can escalate — not later in the table
+      // the re-run — where it can escalate — not later in the table
       // write; the staged write below then reads the cached data instead
       // of re-decoding the source.
-      val (df0, lvl) = new graft.util.Retry.DegradationLadder().run() { _ =>
+      val (df0, lvl) = graft.util.Retry.degrading {
         val d = readSource(source)
         d.cache()
         try { d.count(); d }
@@ -364,7 +364,7 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       }
     }
     // unhealthy aborts unless the run is declared continue-on-failure —
-    // the same ladder every staging error rides (R3)
+    // the same continue-on-failure rule every staging error rides (R3)
     if (st.status == "unhealthy" && !cfg.continueOnFailure)
       throw new IllegalStateException(
         "preflight health checks unhealthy: " + st.checks.values

@@ -174,8 +174,9 @@ case class AsOfJoinExec(
 }
 
 /** DataFrame-level entry: resolves names against the analyzed inputs
-  * and hands Catalyst the logical node (strategy must be installed —
-  * [[GraftExtensions]]).
+  * and hands Catalyst the logical node (the strategy must be installed:
+  * [[GraftExtensions.install]], which every [[graft.Sessions]] session
+  * runs).
   */
 object AsOfJoin {
   def apply(

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -65,18 +66,12 @@ object GeomFilterRule extends Rule[LogicalPlan] {
     }
 }
 
-/** Registration: either `spark.sql.extensions=graft.plans.GraftExtensions`
-  * at session build, or `GraftExtensions.install(spark)` on a live
-  * session (experimental-methods hook for the optimizer rule + function
-  * registry for SQL).
+/** Registration, the one path: `install(spark)` on a live session,
+  * called by [[graft.Sessions]] for every root and child session. It is
+  * idempotent and adds the optimizer rule to the experimental-methods
+  * batch, the as-of join strategy to the planner and `bbox_intersects`
+  * to the function registry for SQL.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => GeomFilterRule)
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
-}
-
 object GraftExtensions {
   def install(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(GeomFilterRule))
@@ -85,16 +80,19 @@ object GraftExtensions {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bbox_intersects",
-      exprs => exprs match {
-        case Seq(x0, y0, x1, y1, Literal(a: Double, _), Literal(b: Double, _),
-            Literal(c: Double, _), Literal(d: Double, _)) =>
-          BboxIntersectsExpr(x0, y0, x1, y1, a, b, c, d)
-        case _ =>
-          throw new IllegalArgumentException(
-            "bbox_intersects(xmin, ymin, xmax, ymax, qxmin, qymin, qxmax, qymax literals)")
-      },
-      "built-in")
+    // registered once: a replace logs a warning on every re-install
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("bbox_intersects")))
+      registry.createOrReplaceTempFunction(
+        "bbox_intersects",
+        exprs => exprs match {
+          case Seq(x0, y0, x1, y1, Literal(a: Double, _), Literal(b: Double, _),
+              Literal(c: Double, _), Literal(d: Double, _)) =>
+            BboxIntersectsExpr(x0, y0, x1, y1, a, b, c, d)
+          case _ =>
+            throw new IllegalArgumentException(
+              "bbox_intersects(xmin, ymin, xmax, ymax, qxmin, qymin, qxmax, qymax literals)")
+        },
+        "built-in")
   }
 }

@@ -88,11 +88,10 @@ private[graft] object FileStreamDrain {
           shm.toFile.getUsableSpace > (4L << 30))
         java.nio.file.Files.createTempDirectory(shm, "graft_stream_drain")
       else java.nio.file.Files.createTempDirectory("graft_stream_drain")
-    // a few files per batch: the scan of batch 0 parallelizes across
+    // four files per batch: the scan of batch 0 parallelizes across
     // them (1 file left the 100k-row scan single-task — measured 10-20%
     // on the triad), while dozens would pay per-file stream-source
     // overhead (measured +2s at 32 files)
-    val stageFiles = sys.env.get("SPARK_GRAFT_DRAIN_STAGE_FILES").map(_.toInt).getOrElse(4)
     // the heartbeat's max-event-time scalar rides the stage write as an
     // observed metric — one job writes batch 0 AND yields the max, where
     // the closure form paid a second full scan (agg(max).head()) per drain
@@ -101,7 +100,7 @@ private[graft] object FileStreamDrain {
       case (Some(o), Some(wc)) => staged.observe(o, max(wc.timeExpr).as("maxt"))
       case _                   => staged
     }
-    phase("stage-write") { toWrite.coalesce(stageFiles).write.parquet(s"$dir/b0.parquet") }
+    phase("stage-write") { toWrite.coalesce(4).write.parquet(s"$dir/b0.parquet") }
     // the staged frame's own schema IS the written schema (we wrote it
     // one line up) — re-reading the footer would cost a listing + job
     val schema = staged.schema
@@ -142,8 +141,8 @@ private[graft] object FileStreamDrain {
     // parallelism. The reduced conf lives on a CLONED session (same
     // SparkContext, isolated SQLConf/catalog), so queries planned
     // concurrently on the caller's session never race on it.
-    val drainSession = spark.newSession()
-    // an eighth of the cores, floor 4: enough tasks that a million-row
+    //
+    // An eighth of the cores, floor 4: enough tasks that a million-row
     // batch still parallelizes, few enough that state-store commit
     // overhead stays off the floor for the common small drains. Every
     // stateful operator commits one store per shuffle partition per
@@ -154,17 +153,15 @@ private[graft] object FileStreamDrain {
     // batch-0 scan). Still scale-adaptive for bigger sessions; the
     // driver's 8-core bench point is unchanged (max(4, 8/8) =
     // max(4, 8/4) = 4).
-    drainSession.conf.set("spark.sql.shuffle.partitions",
-      math.max(4, spark.sparkContext.defaultParallelism / 8).toString)
-    // emission-on-arrival pipelines skip the final no-data micro-batch
+    //
+    // Emission-on-arrival pipelines skip the final no-data micro-batch
     // (state eviction only — one more full state-store commit round
-    // that can emit nothing); see the finalNoDataBatch param doc
-    if (!finalNoDataBatch)
-      drainSession.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // state-store provider knob (RocksDB for state that outgrows heap):
-    // the clone doesn't inherit runtime conf, so propagate explicitly
-    StateStores.propagate(spark, drainSession)
+    // that can emit nothing); see the finalNoDataBatch param doc.
+    val drainSession = graft.Sessions.child(spark,
+      Seq("spark.sql.shuffle.partitions" ->
+        math.max(4, spark.sparkContext.defaultParallelism / 8).toString) ++
+      Option.when(!finalNoDataBatch)(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*)
     val q = phase("start") {
       pipeline(drainSession.readStream.schema(schema)
           .option("maxFilesPerTrigger", math.max(b0Files.length, 1).toString)

@@ -92,18 +92,16 @@ private[graft] object IncrementalSink {
     batches.zipWithIndex.foreach { case (b, i) =>
       b.coalesce(1).write.parquet(s"$dir/b$i.parquet")
     }
-    val drainSession = spark.newSession()
     // cores/4 here, unlike FileStreamDrain's cores/8: this harness has
     // NO state stores (the sink is driver-managed), so there is no
     // per-partition commit tax to shave — the per-batch cost is the
     // fold's real aggregation work, which wants the parallelism. The
     // cores/8 A/B (r21) confirmed the split: q87's aggregation fold
-    // lost 20 % while the probe-style drains moved ≤7 %.
-    drainSession.conf.set("spark.sql.shuffle.partitions",
+    // lost 20 % while the probe-style drains moved ≤7 %. The child
+    // keeps the caller's runtime graft settings, so a fold or delete
+    // in the sink runs under the caller's maintenance policy.
+    val drainSession = graft.Sessions.child(spark, "spark.sql.shuffle.partitions" ->
       math.max(4, spark.sparkContext.defaultParallelism / 4).toString)
-    // no stateful operator here (the sink is driver-managed), but the
-    // provider knob propagates for uniformity with FileStreamDrain
-    StateStores.propagate(spark, drainSession)
     val q = drainSession.readStream
       .schema(batches.head.schema)
       .option("maxFilesPerTrigger", "1")

@@ -14,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Resolution order (first hit wins):
   *   1. `spark.sql.streaming.stateStore.providerClass` set on the
-  *      CALLER's session — honored explicitly because the drain
-  *      harnesses run on a `newSession()` clone, which does NOT inherit
-  *      runtime conf changes;
+  *      CALLER's session (a drain harness's child session carries it
+  *      over, see [[graft.Sessions.child]]);
   *   2. `SPARK_GRAFT_STATE_STORE` env: `rocksdb` shorthand or a fully
   *      qualified provider class name (bench/driver runs);
   *   3. none — Spark's default provider.
@@ -34,19 +33,4 @@ private[graft] object StateStores {
         case "rocksdb" => RocksDb
         case other     => other
       })
-
-  /** Propagate the resolved provider onto a drain-clone session —
-    * plus `spark.graft.checkpointDir`: `newSession()` does not inherit
-    * runtime conf, and operators staged INSIDE a foreachBatch sink
-    * (e.g. the batched-probe map in AnnServeStream) resolve their
-    * reliable-checkpoint root from the batch's session. Without the
-    * copy they silently downgrade to localCheckpoint and an executor
-    * loss mid-drain becomes unrecoverable despite the caller having
-    * configured reliable storage.
-    */
-  def propagate(from: SparkSession, to: SparkSession): Unit = {
-    resolveProvider(from).foreach(to.conf.set(ProviderKey, _))
-    from.conf.getOption("spark.graft.checkpointDir")
-      .foreach(to.conf.set("spark.graft.checkpointDir", _))
-  }
 }

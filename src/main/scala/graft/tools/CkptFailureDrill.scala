@@ -70,14 +70,8 @@ object CkptFailureDrill {
     val mode     = args(0)
     val ckptRoot = args.lift(1)
     require(mode == "reliable" || mode == "local", s"bad mode $mode")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName(s"graft-ckpt-drill-$mode")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(s"graft-ckpt-drill-$mode", cores = 4,
+      master = Some("local-cluster[2,1,1024]"))
     if (mode == "reliable")
       spark.conf.set(graft.util.Checkpoints.ConfKey, ckptRoot.get)
     try {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 import graft.operators.Similarity
 
@@ -20,17 +19,7 @@ object CompactionBench {
   def main(args: Array[String]): Unit = {
     val sfDir    = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(20)
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.Sessions.local()
 
     val emb    = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)

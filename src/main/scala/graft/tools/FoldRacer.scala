@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 
 import graft.operators.Similarity
@@ -29,17 +28,13 @@ object FoldRacer {
     val mod    = args(2).toInt
     val res    = args(3).toInt
     val n      = args(4).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-fold-racer-$res")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-racer-wh").toString)
+    val spark = graft.Sessions.local(s"graft-fold-racer-$res", cores = 2, conf = Seq(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-racer-wh").toString,
       // three writers contend on one lineage; folds are seconds each,
       // so a generous bounded wait keeps the drill deterministic
-      .config("spark.graft.index.writerLeaseWaitSeconds", "300")
-      .getOrCreate()
+      "spark.graft.index.writerLeaseWaitSeconds" -> "300"))
     try {
       val vecs = spark.read.parquet(emb)
         .filter(col("vec_id") % mod === res)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Multimodal.MediaRow
 
 /** One-shot generator for the committed media fixture
@@ -128,10 +126,7 @@ object GenMediaFixture {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(graft.operators.Multimodal.MediaFixturePath)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     import spark.implicits._
     rows.toDF().coalesce(1).write.mode("overwrite").parquet(out)
     println(s"[gen-media-fixture] wrote ${rows.size} rows to $out")

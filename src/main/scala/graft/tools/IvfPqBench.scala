@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 import graft.operators.Similarity
 
@@ -31,17 +30,7 @@ object IvfPqBench {
     val ks       = args.lift(4).map(_.toInt).getOrElse(256)
     val kAdcArg  = args.lift(5).map(_.toInt)
     val batchN   = args.lift(6).map(_.toInt).getOrElse(0)
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.Sessions.local()
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val (ivfPath, c)  = Similarity.ensureIvfIndex(emb, srcTag = sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -27,17 +26,7 @@ object IvfServeBench {
     val batchN = args.lift(1).map(_.toInt).getOrElse(200)
     val k      = args.lift(2).map(_.toInt).getOrElse(10)
     val nProbe = args.lift(3).map(_.toInt).getOrElse(4)
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.Sessions.local()
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val (path, c) = Similarity.ensureIvfIndex(emb, srcTag = sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Executed-plan dump for ONE query — including the tool-only
   * [[graft.SparkEntry.probeQueries]] shapes Explain's headline set
   * doesn't cover (`runMain graft.tools.PlanProbe <name> [sfDir]`).
@@ -14,17 +12,7 @@ object PlanProbe {
     require(args.nonEmpty, "usage: PlanProbe <queryName> [sfDir]")
     val name  = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.Sessions.local()
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.probeQueries
     val fn = all.getOrElse(name,
       sys.error(s"unknown query $name; known: ${all.keys.toSeq.sorted.mkString(",")}"))

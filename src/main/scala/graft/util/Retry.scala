@@ -1,9 +1,8 @@
 package graft.util
 
-/** Driver-side resilience utilities (SURVEY §2.8 R1/R2) with the
+/** Driver-side resilience utilities (SURVEY §2.8 R1-R3) with the
   * reference's configuration surface: exponential backoff with jitter
-  * (etl/utils/retry.py:32-94) and a circuit breaker
-  * (etl/utils/circuit_breaker.py:58-243).
+  * (etl/utils/retry.py:32-94) and the degradation re-run.
   *
   * Scope note: these guard DRIVER-side I/O only (HTTP landing, catalog
   * calls). Task-level resilience on the data path is Spark's job
@@ -21,13 +20,6 @@ object Retry {
       backoffFactor: Double = 2.0,
       maxDelayMs: Long = 300000,
       jitter: Boolean = true)
-
-  object RetryConfig {
-    /** profile presets (retry.py:424-458). */
-    val Network: RetryConfig  = RetryConfig(maxAttempts = 3, baseDelayMs = 1000)
-    val Database: RetryConfig = RetryConfig(maxAttempts = 5, baseDelayMs = 2000)
-    val File: RetryConfig     = RetryConfig(maxAttempts = 2, baseDelayMs = 500)
-  }
 
   /** delay = min(cap, base·factor^(n-1)) · jitter(0.5..1.0) — the exact
     * formula at retry.py:85-94.
@@ -60,113 +52,16 @@ object Retry {
 
   // -------------------------------------------------------------------------
 
-  /** Graceful-degradation ladder (R3 — recovery.py:587-612 thresholds,
-    * escalation at recovery.py:303-332): recoverable failures step the
-    * level up, each level shrinking concurrency and stretching timeouts;
-    * a success resets to level 0 (recovery.py:385-392).
-    *
-    * On Spark the "concurrent downloads" knob governs driver-side landing
-    * fan-out (the data path's parallelism belongs to the scheduler), so
-    * the ladder is a small synchronized state machine the pipeline
-    * consults per source.
+  /** Graceful degradation (R3, escalation at recovery.py:303-332): a
+    * failure re-runs `body` up to 3 more times, and the last failure is
+    * rethrown at the floor (the caller falls through to SKIP,
+    * recovery.py:310-312). The result carries the level (the 0-based
+    * attempt index) that finally served it.
     */
-  final case class DegradedConfig(
-      concurrentDownloads: Int, timeoutSeconds: Int, maxFileSizeMb: Int)
-
-  final class DegradationLadder(
-      base: DegradedConfig = DegradedConfig(5, 30, 100)) {
-
-    /** recovery.py:597-601, verbatim thresholds. */
-    private val levels = Map(
-      1 -> DegradedConfig(3, 60, 50),
-      2 -> DegradedConfig(1, 120, 25),
-      3 -> DegradedConfig(1, 300, 10))
-
-    val maxLevel        = 3
-    private var level   = 0
-
-    def currentLevel: Int = synchronized(level)
-
-    def config: DegradedConfig = synchronized {
-      if (level == 0) base else levels(math.min(level, maxLevel))
-    }
-
-    /** Escalate after a recoverable failure; false when already at the
-      * floor (caller falls through to SKIP — recovery.py:310-312).
-      */
-    def degrade(): Boolean = synchronized {
-      if (level >= maxLevel) false
-      else { level += 1; true }
-    }
-
-    /** A healthy pass resets the ladder (recovery.py:385-392). */
-    def reset(): Unit = synchronized { level = 0 }
-
-    /** Run `body` under the ladder: on recoverable failure, escalate and
-      * re-run with the degraded config until success or the floor; the
-      * result carries the level that finally served it.
-      */
-    def run[T](isRecoverable: Throwable => Boolean = _ => true)
-        (body: DegradedConfig => T): (T, Int) = {
-      while (true) {
-        val lvl = currentLevel
-        try {
-          val out = (body(config), lvl)
-          reset()
-          return out
-        } catch {
-          case e: Throwable if isRecoverable(e) =>
-            if (!degrade()) throw e
-          case e: Throwable => throw e
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
-  }
-
-  /** Circuit breaker: CLOSED → OPEN after `failureThreshold` consecutive
-    * failures; half-open probe after `recoveryTimeoutMs`
-    * (circuit_breaker.py:58-243; defaults 5 failures / 60s).
-    */
-  final class CircuitBreaker(
-      failureThreshold: Int = 5,
-      recoveryTimeoutMs: Long = 60000,
-      clock: () => Long = () => System.currentTimeMillis()) {
-
-    sealed trait State
-    case object Closed   extends State
-    case object Open     extends State
-    case object HalfOpen extends State
-
-    private var failures      = 0
-    private var openedAt      = 0L
-    private var currentState: State = Closed
-
-    def state: State = synchronized {
-      if (currentState == Open && clock() - openedAt >= recoveryTimeoutMs)
-        currentState = HalfOpen
-      currentState
-    }
-
-    def call[T](body: => T): T = {
-      val s = state
-      if (s == Open)
-        throw new IllegalStateException("circuit breaker is OPEN")
-      try {
-        val out = body
-        synchronized { failures = 0; currentState = Closed }
-        out
-      } catch {
-        case e: Throwable =>
-          synchronized {
-            failures += 1
-            if (failures >= failureThreshold || s == HalfOpen) {
-              currentState = Open
-              openedAt = clock()
-            }
-          }
-          throw e
-      }
-    }
+  def degrading[T](body: => T): (T, Int) = {
+    def attempt(level: Int): (T, Int) =
+      try (body, level)
+      catch { case _: Throwable if level < 3 => attempt(level + 1) }
+    attempt(0)
   }
 }

@@ -3,19 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite, UTC, AQE on, and the
-  * nanos-as-long flag matching Verify/Bench.
+/** The specs' local session: one per test JVM (the suites share one
+  * forked JVM, and `getOrCreate` hands each the session the first one
+  * built), from [[Sessions.local]] pinned at 4 cores.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(getClass.getSimpleName, cores = 4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

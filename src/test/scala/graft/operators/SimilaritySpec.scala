@@ -1472,27 +1472,32 @@ class SimilaritySpec extends SparkSpec {
 
   test("tombstone-debt cap: a mass delete triggers compaction, bounding the broadcast side") {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
-    val (path, _) = Similarity.ensureIvfIndex(emb,
-      srcTag = s"debtcap-${System.nanoTime()}")
     val key = "spark.graft.index.autoCompactTombstoneRows"
+    // the same deletes called directly and streamed through the delete
+    // drain, whose micro-batches run on a child session: the runtime
+    // cap set here must hold on both paths
+    val direct: (org.apache.spark.sql.DataFrame, String, String) => Unit =
+      Similarity.deleteFromIvfIndex(_, _, _)
+    val streamed: (org.apache.spark.sql.DataFrame, String, String) => Unit =
+      (ids, path, tag) => graft.streaming.AnnIngestStream.drainDeletes(Seq(ids), path, tag)
     spark.conf.set(key, "10")
-    try {
+    try Seq("direct" -> direct, "streamed" -> streamed).foreach { case (how, delete) =>
+      val (path, _) = Similarity.ensureIvfIndex(emb,
+        srcTag = s"debtcap-$how-${System.nanoTime()}")
       // under the cap (3 ids vs cap 10): tombstones stand
-      Similarity.deleteFromIvfIndex(
-        emb.filter($"vec_id" % 200 === 0).select("vec_id"), path, "small")
+      delete(emb.filter($"vec_id" % 200 === 0).select("vec_id"), path, "small")
       assert(Similarity.standingTombstoneFiles(spark, path).nonEmpty,
-        "a sub-cap delete must not compact")
+        s"$how: a sub-cap delete must not compact")
       // over the cap: the delete path itself compacts — tombstones
       // purged physically, live view unchanged
       val live = Similarity.liveCells(spark, path).count()
-      Similarity.deleteFromIvfIndex(
-        emb.filter($"vec_id" % 4 === 1).select("vec_id"), path, "mass")
+      delete(emb.filter($"vec_id" % 4 === 1).select("vec_id"), path, "mass")
       assert(Similarity.standingTombstoneFiles(spark, path).isEmpty,
-        "an over-cap delete must trigger the physical purge")
+        s"$how: an over-cap delete must trigger the physical purge")
       val nMass = emb.filter($"vec_id" % 4 === 1).count()
       assert(Similarity.liveCells(spark, path).count() == live - nMass)
       assert(spark.read.parquet(Similarity.activeCellsDir(spark, path)).count() == live - nMass,
-        "the purge must be physical, not just the live view")
+        s"$how: the purge must be physical, not just the live view")
     } finally spark.conf.unset(key)
   }
 

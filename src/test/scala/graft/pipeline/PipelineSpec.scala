@@ -4,9 +4,9 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
 
+import graft.SparkSpec
 import graft.config._
 import graft.geo.{GeoFunctions, Geometry}
 import graft.sources.{AtomFeedSource, GeoJsonSource, PagedRestSource, ShpSource}
@@ -15,18 +15,27 @@ import graft.sources.{AtomFeedSource, GeoJsonSource, PagedRestSource, ShpSource}
   * geoprocess → publish, plus idempotence of truncate-and-load (K5 run
   * twice ⇒ same counts, SURVEY §5 test plan).
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val warehouse = Files.createTempDirectory("graft_wh").toString
+  // Every database the suite writes. The warehouse outlives the test
+  // JVM, so each is created (adopting a directory left by an earlier
+  // run) and dropped with CASCADE first: the first-load tests start
+  // from an empty catalog and an empty directory.
+  private val databases = Seq(
+    "staging_t1", "staging_aoi", "staging_zip", "staging_http",
+    "staging_health", "staging_health2", "staging_health3", "staging_multi",
+    "staging_gpkg", "staging_shp", "staging_pin", "staging_t3",
+    "staging_seq", "staging_conc", "staging_failfast", "staging_ttl",
+    "underlag_test", "underlag_tst2", "underlag_conc", "underlag_dup",
+    "gng_underlag_x")
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("PipelineSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    databases.foreach { db =>
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
+      spark.sql(s"DROP DATABASE `$db` CASCADE")
+    }
+  }
 
   private val res = "src/test/resources/geodata"
 

@@ -49,49 +49,20 @@ class RetrySpec extends AnyFunSuite {
   }
 
   test("degradation ladder: reference thresholds, escalation, reset, floor") {
-    val ladder = new DegradationLadder()
-    // level 0 = base config
-    assert(ladder.config == DegradedConfig(5, 30, 100))
-    // recovery.py:597-601 thresholds step down 3/60 → 1/120 → 1/300
-    assert(ladder.degrade() && ladder.config == DegradedConfig(3, 60, 50))
-    assert(ladder.degrade() && ladder.config == DegradedConfig(1, 120, 25))
-    assert(ladder.degrade() && ladder.config == DegradedConfig(1, 300, 10))
-    assert(!ladder.degrade()) // floor: caller falls through to SKIP
-    ladder.reset()
-    assert(ladder.currentLevel == 0)
-
-    // run(): fails twice, succeeds at level 2, resets after success
+    // fails twice, served at level 2 (the 0-based attempt index)
     var calls = 0
-    val (out, lvl) = ladder.run() { cfg =>
+    val (out, lvl) = degrading {
       calls += 1
-      if (cfg.concurrentDownloads > 1) throw new RuntimeException("too parallel")
-      cfg.timeoutSeconds
+      if (calls < 3) throw new RuntimeException("transient")
+      "ok"
     }
-    assert(calls == 3 && lvl == 2 && out == 120)
-    assert(ladder.currentLevel == 0)
+    assert(calls == 3 && lvl == 2 && out == "ok")
+    // every call starts at level 0
+    assert(degrading("fine") == (("fine", 0)))
 
-    // deterministic failure exhausts the ladder and rethrows
-    val dead = new DegradationLadder()
-    intercept[RuntimeException](dead.run() { _ => throw new RuntimeException("always") })
-    assert(dead.currentLevel == 3)
-  }
-
-  test("circuit breaker opens after threshold, half-opens after timeout, closes on success") {
-    var now = 0L
-    val cb = new CircuitBreaker(failureThreshold = 2, recoveryTimeoutMs = 100, clock = () => now)
-    def boom(): Unit = intercept[RuntimeException](cb.call(throw new RuntimeException("x")))
-    boom(); assert(cb.state == cb.Closed)
-    boom(); assert(cb.state == cb.Open)
-    intercept[IllegalStateException](cb.call("nope")) // fails fast while open
-    now = 150
-    assert(cb.state == cb.HalfOpen)
-    assert(cb.call("probe") == "probe") // successful probe closes
-    assert(cb.state == cb.Closed)
-    // failed probe reopens immediately
-    boom(); boom()
-    now = 300
-    assert(cb.state == cb.HalfOpen)
-    boom()
-    assert(cb.state == cb.Open)
+    // deterministic failure: 3 re-runs (levels 1-3), then the floor rethrows
+    calls = 0
+    intercept[RuntimeException](degrading { calls += 1; throw new RuntimeException("always") })
+    assert(calls == 4)
   }
 }
