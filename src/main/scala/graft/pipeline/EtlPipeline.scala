@@ -17,12 +17,23 @@ import graft.sources.{GeoJsonSource, GpkgSource, PagedRestSource, ShpSource}
   * continue-on-failure ledger semantics (R3) and run summary (A1/A3).
   *
   * Execution model: [[run]] runs each source's stage → geoprocess →
-  * publish chain as one task on a thread pool of at most
-  * min(#sources, defaultParallelism) threads (the reference's fan-out
-  * over sources, SURVEY §2.8), so one source's jobs overlap another's
+  * publish chain as one task on a thread pool with one thread per lane,
+  * at most 2 × defaultParallelism (the reference's fan-out over sources,
+  * SURVEY §2.8): a chain's cores sit idle for most of its wall time, so
+  * every lane starts at once and one source's jobs overlap another's
   * planning, catalog and commit work. The pool is created per run, so
   * its threads inherit the caller's SparkContext local properties (job
-  * group, description). The outcome does not depend on completion order:
+  * group, description).
+  *
+  * Inside a chain that clips, stage does not write: it caches and counts
+  * the staged frame and hands it to geoprocess, which writes the staged
+  * table once, clipped (no temp table, no copy-back). If the clip or
+  * that write fails, geoprocess writes the unclipped frame first, so
+  * publish sees the table a one-at-a-time run leaves. Calling the phases
+  * one at a time keeps the write-then-clip-in-place path; it is the
+  * oracle the chain is tested against.
+  *
+  * The outcome does not depend on completion order:
   *  - staging names are reserved in declared order before the fan-out,
   *    so they equal a one-at-a-time run's (§7.4);
   *  - the ledger comes back as health rows, then stage, geoprocess and
@@ -223,14 +234,17 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     }.getOrElse(3600L)
 
   /** Stage one source: include-filter (T5), fc naming (F4/F6), lineage
-    * columns, write to the staging database (K1-K4).
+    * columns, write to the staging database (K1-K4). Inside [[run]], when
+    * geoprocess will clip, the staged frame goes to the chain instead and
+    * [[geoprocess]] writes the table once.
     */
   def stageSource(source: Source): Option[String] = {
     val t0 = System.nanoTime()
     if (!source.enabled) { record(source, "stage", "skip", t0); return None } // T1
+    val c = chain.get
     // reserved before the read: the name depends only on the declared
     // enabled sources, never on which reads succeed
-    val fcName = Option(chain.get).flatMap(_.fcName).getOrElse(reserveName(source))
+    val fcName = Option(c).flatMap(_.fcName).getOrElse(reserveName(source))
     var cached: DataFrame = null
     try {
       // the READ is re-run on a failure (degradation levels 1-3); a
@@ -240,29 +254,16 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       // Spark defers scan work until an action, so the read is FORCED
       // here (cache + count): a real decode/read failure surfaces INSIDE
       // the re-run — where it can escalate — not later in the table
-      // write; the staged write below then reads the cached data instead
-      // of re-decoding the source.
-      val (df0, lvl) = graft.util.Retry.degrading {
-        val d = readSource(source)
+      // write; the staged write then reads the cached data instead of
+      // re-decoding the source.
+      val ((staged, count), lvl) = graft.util.Retry.degrading {
+        val d = lineage(source, readSource(source))
         d.cache()
-        try { d.count(); d }
+        try (d, d.count())
         catch { case e: Throwable => d.unpersist(); throw e }
       }
-      cached = df0
+      cached = staged
       if (lvl > 0) record(source, "stage", "degraded", t0, level = lvl.toLong)
-      // include-list semi-filter on the landed file stem (T5) — the stems
-      // are a handful of config strings: isin == broadcast by construction.
-      val df = source.includeStems match {
-        case Seq() => df0
-        case stems =>
-          val stemCol = lower(regexp_replace(
-            regexp_extract(col("_file"), "([^/]+)\\.[A-Za-z0-9]+$", 1), "^main\\.", ""))
-          df0.filter(stemCol.isin(stems.map(_.toLowerCase): _*))
-      }
-      val staged = df
-        .withColumn("source_id", lit(source.name))
-        .withColumn("authority", lit(source.authority))
-        .drop("_file")
       spark.sql(s"CREATE DATABASE IF NOT EXISTS `$stagingDb`")
       if (cfg.pinSchemas && spark.catalog.tableExists(s"`$stagingDb`.`$fcName`")) {
         val existing = spark.table(s"`$stagingDb`.`$fcName`").schema
@@ -272,9 +273,13 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
           throw new IllegalStateException(
             s"schema drift on $fcName: staged ${incoming.mkString(",")} vs pinned ${existing.mkString(",")}")
       }
-      Cleanup.ensureWritable(spark, stagingDb, fcName)
-      staged.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$fcName`")
-      val n = spark.table(s"`$stagingDb`.`$fcName`").count() // T7 verification
+      // in a chain that clips, geoprocess writes the table, once, clipped
+      val n =
+        if (c != null && clips) { c.staged = Some(staged); cached = null; count }
+        else {
+          writeStaged(fcName, staged)
+          spark.table(s"`$stagingDb`.`$fcName`").count() // T7 verification
+        }
       record(source, "stage", "done", t0, fcName, n)
       Some(fcName)
     } catch {
@@ -287,43 +292,91 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     }
   }
 
+  /** The include-list semi-filter on the landed file stem (T5) and the
+    * lineage columns, over one source's read.
+    */
+  private def lineage(source: Source, read: DataFrame): DataFrame = {
+    // the stems are a handful of config strings: isin == broadcast by
+    // construction
+    val df = source.includeStems match {
+      case Seq() => read
+      case stems =>
+        val stemCol = lower(regexp_replace(
+          regexp_extract(col("_file"), "([^/]+)\\.[A-Za-z0-9]+$", 1), "^main\\.", ""))
+        read.filter(stemCol.isin(stems.map(_.toLowerCase): _*))
+    }
+    df.withColumn("source_id", lit(source.name))
+      .withColumn("authority", lit(source.authority))
+      .drop("_file")
+  }
+
+  private def writeStaged(fcName: String, df: DataFrame): Unit = {
+    Cleanup.ensureWritable(spark, stagingDb, fcName)
+    df.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$fcName`")
+  }
+
+  /** Whether [[geoprocess]] clips: geoprocessing on and an AOI set. */
+  private def clips: Boolean =
+    cfg.geoprocessingEnabled && (cfg.aoi.isDefined || cfg.aoiWkt.isDefined)
+
   /** Geoprocess in place (G1+G2, pipeline.py:408-460): skip silently when
     * no AOI is configured — the reference logs and no-ops
     * (pipeline.py:424-429, the 0.001s phase in the shipped run log).
+    * Given the staged frame [[stageSource]] handed off inside [[run]], it
+    * writes the staged table once, clipped; if the clip or that write
+    * fails, the unclipped frame is written first, so the table holds
+    * what a one-at-a-time run leaves behind.
     */
   def geoprocess(source: Source, fcName: String): Unit = {
     val t0 = System.nanoTime()
-    if (!cfg.geoprocessingEnabled || (cfg.aoi.isEmpty && cfg.aoiWkt.isEmpty)) {
-      record(source, "geoprocess", "skip", t0, fcName); return
-    }
+    val handed = Option(chain.get).flatMap(_.takeStaged())
+    if (!clips) { record(source, "geoprocess", "skip", t0, fcName); return }
     val tmp = s"${fcName}__gp_tmp"
     try {
-      val staged = spark.table(s"`$stagingDb`.`$fcName`")
-      // exact polygon boundary when configured (the reference's actual
-      // PairwiseClip semantics); bbox clip otherwise — same plan shape,
-      // only the exact kernel differs
-      val clipped = cfg.aoiWkt match {
-        case Some(wkt) =>
-          GeoFunctions.clipProjectAoi(staged, wkt, cfg.targetSrid)
+      handed match {
+        case Some(staged) =>
+          try writeStaged(fcName, clip(staged))
+          catch {
+            case e: Exception =>
+              try writeStaged(fcName, staged) catch { case f: Exception => e.addSuppressed(f) }
+              throw e
+          }
         case None =>
-          val (a, b, c, d) = cfg.aoi.get
-          GeoFunctions.clipProject(staged, Geometry.BBox(a, b, c, d), cfg.targetSrid)
+          // in-place replace (Delete + CopyFeatures, geoprocess.py:79-81):
+          // stage to temp then overwrite — Spark can't overwrite a table
+          // from a plan that reads the same table
+          clip(spark.table(s"`$stagingDb`.`$fcName`"))
+            .write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`")
+          spark.table(s"`$stagingDb`.`$tmp`").write.mode("overwrite")
+            .saveAsTable(s"`$stagingDb`.`$fcName`")
       }
-      // in-place replace (Delete + CopyFeatures, geoprocess.py:79-81):
-      // stage to temp then overwrite — Spark can't overwrite a table
-      // from a plan that reads the same table. The staged column order
-      // is kept, so re-staging into this table passes the schema pin.
-      clipped.select(staged.columns.toSeq.map(col): _*)
-        .write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`")
-      spark.table(s"`$stagingDb`.`$tmp`").write.mode("overwrite")
-        .saveAsTable(s"`$stagingDb`.`$fcName`")
       val n = spark.table(s"`$stagingDb`.`$fcName`").count()
       record(source, "geoprocess", "done", t0, fcName, n)
     } catch {
       case e: Exception =>
         record(source, "geoprocess", "error", t0, fcName, error = String.valueOf(e.getMessage))
         if (!cfg.continueOnFailure) throw e
-    } finally spark.sql(s"DROP TABLE IF EXISTS `$stagingDb`.`$tmp`")
+    } finally handed match {
+      case Some(staged) => staged.unpersist()
+      case None         => spark.sql(s"DROP TABLE IF EXISTS `$stagingDb`.`$tmp`")
+    }
+  }
+
+  /** The clipped, reprojected rows of a staged frame, in its column
+    * order, so re-staging into the clipped table passes the schema pin.
+    */
+  private def clip(staged: DataFrame): DataFrame = {
+    // exact polygon boundary when configured (the reference's actual
+    // PairwiseClip semantics); bbox clip otherwise — same plan shape,
+    // only the exact kernel differs
+    val clipped = cfg.aoiWkt match {
+      case Some(wkt) =>
+        GeoFunctions.clipProjectAoi(staged, wkt, cfg.targetSrid)
+      case None =>
+        val (a, b, c, d) = cfg.aoi.get
+        GeoFunctions.clipProject(staged, Geometry.BBox(a, b, c, d), cfg.targetSrid)
+    }
+    clipped.select(staged.columns.toSeq.map(col): _*)
   }
 
   /** Publish one staged table through the mapping overlay (K5-K7). */
@@ -385,12 +438,12 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       chain.set(chains(i))
       try stageSource(s).foreach { fc => geoprocess(s, fc); publishTable(s, fc) }
       catch { case e: Throwable => failures(i) = e }
-      finally chain.remove()
+      finally { chains(i).takeStaged().foreach(_.unpersist()); chain.remove() }
       failures(i) == null
     }
     val lanes = EtlPipeline.lanes(sources.indices.map(i => resourcesOf(sources(i), chains(i).fcName)))
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(lanes.size, spark.sparkContext.defaultParallelism)))
+    val pool = Executors.newFixedThreadPool(math.max(1,
+      math.min(lanes.size, EtlPipeline.LanesPerCore * spark.sparkContext.defaultParallelism)))
     try lanes.map(l => CompletableFuture.runAsync(() => l.forall(runChain), pool)).foreach(_.join())
     finally pool.shutdown()
     ledger.synchronized {
@@ -424,11 +477,21 @@ object EtlPipeline {
       table: String, rows: Long, error: String, level: Long = 0L,
       durationMs: Long = 0L)
 
+  /** Threads per core in [[EtlPipeline.run]]'s pool: a chain's cores are
+    * busy for well under half of its wall time (driver work, catalog
+    * calls, commits), so two lanes per core keep them fed.
+    */
+  private[pipeline] val LanesPerCore = 2
+
   /** One source's chain inside [[EtlPipeline.run]]: its reserved staging
-    * name and the ledger rows it has recorded so far.
+    * name, the ledger rows it has recorded so far, and the cached staged
+    * frame stage has handed to geoprocess, if any.
     */
   private final class Chain(val fcName: Option[String]) {
     val rows = mutable.ArrayBuffer[LedgerRow]()
+    var staged: Option[DataFrame] = None
+
+    def takeStaged(): Option[DataFrame] = try staged finally staged = None
   }
 
   /** Groups source indices into lanes: sources that share a resource are

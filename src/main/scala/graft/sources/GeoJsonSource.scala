@@ -6,8 +6,9 @@ import org.apache.spark.sql.types._
 
 import graft.geo.GeoFunctions
 
-/** GeoJSON FeatureCollection reader (S9/K1 path): one file or a glob →
-  * exploded, normalized feature rows.
+/** GeoJSON FeatureCollection reader (S9/K1 path): one file or a glob,
+  * resolved on the driver ([[Globs.resolve]]) → exploded, normalized
+  * feature rows.
   *
   * Schema strategy: `properties` is read as map<string,string> (the
   * reference never declares attribute schemas — SURVEY §1.3) and
@@ -53,7 +54,7 @@ object GeoJsonSource {
     val raw = spark.read
       .schema(featureCollectionSchema)
       .option("multiLine", "true")
-      .json(paths: _*)
+      .json(Globs.resolve(spark, paths): _*)
       .withColumn("_file", input_file_name())
     val exploded = raw
       .select(col("_file"), col("crs"), posexplode_outer(col("features")))

@@ -11,7 +11,8 @@ import graft.geo.{GeoFunctions, Geometry}
   * A layer is a directory of `page-*.json` FeatureCollection pages —
   * exactly what the reference's pagination loop lands per request
   * (rest_api.py:575-637). All pages are read in ONE spark.read over the
-  * glob (each file ≥1 partition → the "pagination" parallelizes away,
+  * files the glob resolves to on the driver ([[Globs.resolve]]; each
+  * file ≥1 partition → the "pagination" parallelizes away,
   * SURVEY §4 "early termination" dissolves into partitioned reads).
   *
   * Pushdown semantics mirror the server-side query params the reference

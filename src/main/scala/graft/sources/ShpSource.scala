@@ -43,13 +43,14 @@ object ShpSource {
   }
 
   /** Read every shapefile under `path` (a .shp file, a glob, or a
-    * directory) into the normalized feature schema.
+    * directory) into the normalized feature schema. A .shp file reads
+    * its `stem.*` siblings, resolved on the driver ([[Globs.resolve]]).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val glob =
       if (path.toLowerCase.endsWith(".shp")) path.dropRight(4) + ".*" else path
-    val bin = spark.read.format("binaryFile").load(glob)
+    val bin = spark.read.format("binaryFile").load(Globs.resolve(spark, Seq(glob)): _*)
       .select("path", "content")
       .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
       .map { case (p, bytes) =>

@@ -26,8 +26,10 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     "staging_health", "staging_health2", "staging_health3", "staging_multi",
     "staging_gpkg", "staging_shp", "staging_pin", "staging_t3",
     "staging_seq", "staging_conc", "staging_failfast", "staging_ttl",
+    "staging_lanes", "staging_gpfail_seq", "staging_gpfail_conc",
+    "staging_noaoi_seq", "staging_noaoi_conc",
     "underlag_test", "underlag_tst2", "underlag_conc", "underlag_dup",
-    "gng_underlag_x")
+    "underlag_lane", "gng_underlag_x")
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -433,18 +435,29 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     .map(fc => OutputMapping(stagingFc = fc, sdeFc = "shared_fc", sdeDataset = "Underlag_CONC")))
   private val clipCfg = GlobalConfig(aoi = Some((17.9, 59.2, 18.2, 59.5)), targetSrid = 3006)
 
+  // the reference: each phase called one source at a time, in order
+  private def oneAtATime(pipe: EtlPipeline, srcs: Seq[Source]): Seq[EtlPipeline.LedgerRow] = {
+    val staged = srcs.flatMap(s => pipe.stageSource(s).map(s -> _))
+    staged.foreach { case (s, fc) => pipe.geoprocess(s, fc) }
+    staged.foreach { case (s, fc) => pipe.publishTable(s, fc) }
+    pipe.results
+  }
+  private def rowsOf(table: String): Seq[String] =
+    spark.table(table).collect().map(_.toString).toSeq.sorted
+  private def published(ledger: Seq[EtlPipeline.LedgerRow]): Map[String, Seq[String]] =
+    ledger.filter(r => r.phase == "publish" && r.status == "done").map(_.table).distinct
+      .map { t =>
+        val (db, table) = Publish.target(t.take(t.lastIndexOf('.')), t.drop(t.lastIndexOf('.') + 1))
+        t -> rowsOf(s"`$db`.`$table`")
+      }.toMap
+  private def stagedTables(db: String, ledger: Seq[EtlPipeline.LedgerRow]): Map[String, Seq[String]] =
+    ledger.filter(r => r.phase == "stage" && r.status == "done")
+      .map(r => r.table -> rowsOf(s"`$db`.`${r.table}`")).toMap
+  private def strip(rows: Seq[EtlPipeline.LedgerRow]) = rows.map(_.copy(durationMs = 0L))
+
   test("run: concurrent chains give the one-at-a-time ledger, names and published tables") {
-    // the reference: each phase called one source at a time, in order
     val seq = new EtlPipeline(spark, clipCfg, sharedTarget, "staging_seq")
-    val staged = concurrencyMix.flatMap(s => seq.stageSource(s).map(s -> _))
-    staged.foreach { case (s, fc) => seq.geoprocess(s, fc) }
-    staged.foreach { case (s, fc) => seq.publishTable(s, fc) }
-    def published(ledger: Seq[EtlPipeline.LedgerRow]): Map[String, Seq[String]] =
-      ledger.filter(r => r.phase == "publish" && r.status == "done").map(_.table).distinct
-        .map { t =>
-          val (db, table) = Publish.target(t.take(t.lastIndexOf('.')), t.drop(t.lastIndexOf('.') + 1))
-          t -> spark.table(s"`$db`.`$table`").collect().map(_.toString).toSeq.sorted
-        }.toMap
+    oneAtATime(seq, concurrencyMix)
     val seqTables = published(seq.results)
 
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
@@ -467,8 +480,8 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     val ledger = try conc.run(concurrencyMix)
       finally spark.sparkContext.setLocalProperty("graft.test", null)
 
-    def strip(rows: Seq[EtlPipeline.LedgerRow]) = rows.map(_.copy(durationMs = 0L))
     assert(strip(ledger) == strip(seq.results))
+    assert(stagedTables("staging_conc", ledger) == stagedTables("staging_seq", seq.results))
     assert(ledger.filter(r => r.phase == "stage" && r.status == "done").map(_.table) ==
       Seq("test_sample_points", "test_sample_points_1", "tst2_rest_layers",
         "mix_mixed_shapes", "dup_points_copy"))
@@ -485,6 +498,42 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     // chains ran on pool threads that inherited the caller's properties
     assert(seen.asScala.map(_._2) == Set("caller"))
     assert(!seen.asScala.map(_._1).contains(Thread.currentThread().getName))
+  }
+
+  test("run: a geoprocess failure leaves the unclipped staged table, as one phase at a time does") {
+    // a holed AOI fails the clip at plan time for every (possibly areal) layer
+    val holed = clipCfg.copy(aoi = None, aoiWkt = Some(
+      "POLYGON ((17.9 59.2, 18.2 59.2, 18.2 59.5, 17.9 59.5, 17.9 59.2), " +
+        "(18.0 59.3, 18.01 59.3, 18.01 59.31, 18.0 59.31, 18.0 59.3))"))
+    val seq = new EtlPipeline(spark, holed, sharedTarget, "staging_gpfail_seq")
+    oneAtATime(seq, concurrencyMix)
+    val seqTables = published(seq.results)
+    val conc = new EtlPipeline(spark, holed, sharedTarget, "staging_gpfail_conc")
+    val ledger = conc.run(concurrencyMix)
+    assert(strip(ledger) == strip(seq.results))
+    val gp = ledger.filter(_.phase == "geoprocess")
+    assert(gp.nonEmpty && gp.forall(r => r.status == "error" && r.error.contains("interior rings")), gp)
+    val staged = stagedTables("staging_gpfail_conc", ledger)
+    assert(staged == stagedTables("staging_gpfail_seq", seq.results))
+    // unclipped: every staged row is still there, the out-of-AOI one too
+    for (r <- ledger if r.phase == "stage" && r.status == "done")
+      assert(staged(r.table).size == r.rows, r)
+    assert(staged("tst2_rest_layers").size == 3)
+    assert(published(ledger) == seqTables)
+  }
+
+  test("run without an AOI: stage writes directly, as one phase at a time does") {
+    val noAoi = clipCfg.copy(aoi = None)
+    val seq = new EtlPipeline(spark, noAoi, sharedTarget, "staging_noaoi_seq")
+    oneAtATime(seq, concurrencyMix)
+    val seqTables = published(seq.results)
+    val conc = new EtlPipeline(spark, noAoi, sharedTarget, "staging_noaoi_conc")
+    val ledger = conc.run(concurrencyMix)
+    assert(strip(ledger) == strip(seq.results))
+    assert(ledger.filter(_.phase == "geoprocess").forall(_.status == "skip"))
+    assert(stagedTables("staging_noaoi_conc", ledger) ==
+      stagedTables("staging_noaoi_seq", seq.results))
+    assert(published(ledger) == seqTables)
   }
 
   test("run with continueOnFailure = false rethrows the first declared failure after all chains settle") {
@@ -512,6 +561,27 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(EtlPipeline.lanes(Seq(Set("a"), Set.empty[String], Set("b"), Set("a", "c"), Set("c", "b"), Set("d"))) ==
       Seq(Seq(0, 2, 3, 4), Seq(1), Seq(5)))
     assert(EtlPipeline.lanes(Seq.empty[Set[String]]) == Seq.empty)
+  }
+
+  test("run starts every lane at once, even with more lanes than cores") {
+    // each read waits until every source's read has begun: the latch
+    // opens only if all lanes are in flight together
+    val n = spark.sparkContext.defaultParallelism + 1
+    val latch = new java.util.concurrent.CountDownLatch(n)
+    val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pipe = new EtlPipeline(spark, GlobalConfig(healthChecksEnabled = false),
+      stagingDb = "staging_lanes") {
+      override def readSource(s: Source) = {
+        latch.countDown()
+        if (!latch.await(30, java.util.concurrent.TimeUnit.SECONDS)) timedOut.set(true)
+        super.readSource(s)
+      }
+    }
+    val srcs = (0 until n).map(i => Source(name = s"Lane $i", authority = "LANE",
+      sourceType = "file", url = s"$res/sample.geojson"))
+    val ledger = pipe.run(srcs)
+    assert(!timedOut.get, s"$n lanes did not all start together")
+    assert(ledger.count(r => r.phase == "publish" && r.status == "done") == n, pipe.firstErrors())
   }
 
   test("mapping overlay: exact, partial, default; sde name split") {
