@@ -294,13 +294,4 @@ object TextFunctions {
     */
   def normalizeText(text: Column): Column =
     graft.plans.CleanWsExpr(graft.plans.NfcNormalizeExpr(text))
-
-  /** The regex form [[graft.plans.CleanWsExpr]] replicates — the
-    * differential-spec reference (and the exact shape of the q104
-    * oracle's DuckDB side).
-    */
-  def normalizeTextComposed(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(graft.plans.NfcNormalizeExpr(text), ControlCharPattern, ""),
-      "\\s+", " "))
 }

@@ -53,13 +53,11 @@ class CartAuditSpec extends SparkSpec {
   )
 
   test("no query has an unsanctioned condition-less join") {
-    graft.plans.GraftExtensions.install(spark)
-    val sfDir = sf("sf0.001")
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
+    val offenders = AuditedPlans.of(spark, sf("sf0.001")).flatMap { q =>
+      val n = q.plan.collect {
         case j: Join if j.condition.isEmpty => j
       }.size
-      if (n > allowedConditionlessJoins.getOrElse(name, 0)) Some(name -> n) else None
+      if (n > allowedConditionlessJoins.getOrElse(q.name, 0)) Some(q.name -> n) else None
     }
     assert(offenders.isEmpty,
       s"condition-less joins outside the sanctioned ANN broadcasts: $offenders")

@@ -25,13 +25,11 @@ class PlanAuditSpec extends SparkSpec {
   )
 
   test("no query has an unsanctioned unpartitioned window") {
-    graft.plans.GraftExtensions.install(spark)
-    val sfDir = sf("sf0.001")
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
+    val offenders = AuditedPlans.of(spark, sf("sf0.001")).flatMap { q =>
+      val n = q.plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }.size
-      if (n > allowedUnpartitionedWindows.getOrElse(name, 0)) Some(name -> n) else None
+      if (n > allowedUnpartitionedWindows.getOrElse(q.name, 0)) Some(q.name -> n) else None
     }
     assert(offenders.isEmpty,
       s"unpartitioned global windows (single-task at scale): $offenders")
@@ -49,18 +47,9 @@ class PlanAuditSpec extends SparkSpec {
     * session's SQL cache is EMPTY after every query is built.
     */
   test("no query returns a cached plan or leaves the SQL cache non-empty") {
-    graft.plans.GraftExtensions.install(spark)
-    val sfDir = sf("sf0.001")
-    spark.catalog.clearCache()
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      val cached = df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-      }.size
-      val leaked = !org.apache.spark.sql.GraftColumnBridge.sqlCacheIsEmpty(spark)
-      if (leaked) spark.catalog.clearCache() // localize the blame
-      if (cached > 0 || leaked)
-        Some(s"$name(inMemoryRelations=$cached, cacheLeaked=$leaked)")
+    val offenders = AuditedPlans.of(spark, sf("sf0.001")).flatMap { q =>
+      if (q.inMemoryRelations > 0 || q.cacheLeaked)
+        Some(s"${q.name}(inMemoryRelations=${q.inMemoryRelations}, cacheLeaked=${q.cacheLeaked})")
       else None
     }
     assert(offenders.isEmpty,

@@ -112,7 +112,7 @@ class DedupSpec extends SparkSpec {
     for (d <- Seq(edgy, corpus)) {
       val fused = Dedup.minhashSignaturesPortable(d, shingleN = 3, numHashes = 64)
         .select("doc_id", "sig").as[(Long, Seq[Long])].collect().toMap
-      val composed = Dedup.minhashSignaturesPortableComposed(d, shingleN = 3, numHashes = 64)
+      val composed = DedupOracles.minhashSignaturesPortableComposed(d, shingleN = 3, numHashes = 64)
         .select("doc_id", "sig").as[(Long, Seq[Long])].collect().toMap
       assert(fused == composed)
     }
@@ -132,7 +132,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash candidates find identical docs, skip unrelated") {
-    val cands = Dedup.minhashCandidatePairs(docs, shingleN = 3, bands = 16, rows = 4)
+    val cands = DedupOracles.minhashCandidatePairs(docs, shingleN = 3, bands = 16, rows = 4)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(cands.contains((1L, 2L)) && cands.contains((1L, 5L)))
     assert(!cands.exists(p => p._1 == 4L || p._2 == 4L))

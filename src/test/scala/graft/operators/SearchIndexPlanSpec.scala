@@ -21,8 +21,8 @@ class SearchIndexPlanSpec extends SparkSpec {
 
   private def withStablePlans[A](body: => A): A = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // the index-lookup queries pin this OFF per query (SparkEntry's
-    // bucketPruningQueries wrapper) so the term lookup keeps its
+    // the index-lookup queries pin this OFF per query (the child
+    // session their QueryDefs run on) so the term lookup keeps its
     // bucketed scan (and with it bucket pruning) even though no
     // operator needs the partitioning — mirror that here
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")

@@ -32,7 +32,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("bruteForceTopKBatch ranks per query") {
-    val out = Similarity.bruteForceTopKBatch(vecs, vecs.filter($"vec_id" <= 1), k = 2)
+    val out = SimilarityOracles.bruteForceTopKBatch(vecs, vecs.filter($"vec_id" <= 1), k = 2)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Int)].collect()
     assert(out.filter(_._1 == 0L).sortBy(_._3).map(_._2).toSeq == Seq(1L, 4L))
     assert(out.filter(_._1 == 1L).sortBy(_._3).map(_._2).toSeq == Seq(0L, 4L))
@@ -104,7 +104,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val single = Similarity.cosineNearDupPairsPortable(emb, minCosineMilli = 400, nBits = 6)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val banded = Similarity.cosineNearDupPairsBanded(emb, minCosineMilli = 400,
+    val banded = SimilarityOracles.cosineNearDupPairsBanded(emb, minCosineMilli = 400,
         nTables = 4, nBits = 6, maxBucketSize = 100000)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     // table 0 slices the same seeded plane stream the single-table
@@ -1196,7 +1196,7 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("cent_id"), $"q".as("cvec"), $"nrm".as("cnrm"))
     val fused = Similarity.assignToCentroids(b, cents)
       .select("vec_id", "cent_id").as[(Long, Long)].collect().sortBy(_._1)
-    val ref = Similarity.assignToCentroidsJoinAgg(b, cents)
+    val ref = SimilarityOracles.assignToCentroidsJoinAgg(b, cents)
       .select("vec_id", "cent_id").as[(Long, Long)].collect().sortBy(_._1)
     assert(fused.toSeq == ref.toSeq)
     // carried columns survive for the downstream writers / Lloyd loop
@@ -1216,7 +1216,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.assignToCentroids(zb, cents).select("cent_id").as[Long].head()
     }
     val zr = intercept[Exception] {
-      Similarity.assignToCentroidsJoinAgg(zb, cents).select("cent_id").as[Long].head()
+      SimilarityOracles.assignToCentroidsJoinAgg(zb, cents).select("cent_id").as[Long].head()
     }
     assert(rootArithmetic(zf) && rootArithmetic(zr),
       s"zero vector must raise arithmetic errors in both forms: $zf / $zr")

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, DedupOracles}
 
 class SimHash64ExprSpec extends SparkSpec {
   import spark.implicits._
@@ -12,7 +12,7 @@ class SimHash64ExprSpec extends SparkSpec {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet").limit(200)
     val both = docs.select(
         Dedup.simhash64($"text").as("fused"),
-        Dedup.simhash64Composed($"text").as("composed"))
+        DedupOracles.simhash64Composed($"text").as("composed"))
       .filter($"fused" =!= $"composed")
     assert(both.count() == 0)
   }
