@@ -71,7 +71,9 @@ object Explain {
     "q125_band_delete", "q126_ivf_delete", "q127_ivfpq_delete")
 
   /** Strip run-dependent counters so committed dumps diff cleanly:
-    * expression ids, codegen stage ids, plan ids, temp-view uuids.
+    * expression ids, codegen stage ids, plan ids, temp-view uuids, RDD
+    * ids (`MapPartitionsRDD[608]`) and JVM lambda class names
+    * (`$$Lambda$1234/0x0000…@1a2b3c`).
     */
   def normalize(plan: String): String =
     plan
@@ -79,6 +81,8 @@ object Explain {
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : x]")
       .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=x]")
       .replaceAll("cte\\[\\d+\\]", "cte[x]")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?", "\\$\\$Lambda")
 
   def main(args: Array[String]): Unit = {
     val out = args.collectFirst { case a if a.startsWith("--out=") => a.drop(6) }

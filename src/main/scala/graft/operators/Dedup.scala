@@ -581,7 +581,6 @@ object Dedup {
     def lockKey: String = prefix
     def leasePath: org.apache.hadoop.fs.Path =
       WriterLease.lockPathFor(spark, "default", prefix)
-    def recover(): Unit = ()
     def active(): String = currentIndexTables(spark, prefix)._1
 
     def generations(): Seq[IndexLifecycle.Generation] = {
@@ -596,8 +595,8 @@ object Dedup {
       }
     }
 
-    def drop(gen: String): Unit =
-      Families.foreach(f => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f${sfxOf(gen)}"))
+    def drop(gens: Set[String]): Unit = for (gen <- gens; f <- Families)
+      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f${sfxOf(gen)}")
 
     def hasTombstones(gen: String): Boolean = standingDels(spark, gen).isDefined
 
@@ -609,8 +608,6 @@ object Dedup {
     }
     def stampedCounts(gen: String): Option[Seq[Long]] =
       propsOf(spark, gen).get(NFiles).flatMap(IndexLifecycle.parseCounts)
-    def writeStamp(gen: String, counts: Seq[Long]): Unit =
-      setProps(spark, gen, NFiles -> counts.mkString(","))
 
     // MATERIALIZED once and reused by both CTAS passes: as a lazy plan
     // it would be evaluated twice, and a cross-process delete landing
@@ -663,10 +660,19 @@ object Dedup {
       s"${prefix}_bands$newSfx"
     }
 
-    def promote(gen: String): Unit =
+    // stamp, then the ONE promoting catalog op, then the late forward;
+    // the base `<prefix>_dels` rows were consumed by this rewrite (as
+    // gen 0's own dels or a pre-upgrade leftover): MARK the table
+    // consumed so new readers skip it; it retires with its generation
+    def promote(old: String, gen: String, s: Snapshot, counts: Seq[Long]): Unit = {
+      setProps(spark, gen, NFiles -> counts.mkString(","))
       spark.sql(s"ALTER TABLE $gen UNSET TBLPROPERTIES IF EXISTS ('$Pending')")
+      forwardLate(old, gen, s)
+      if (s.isDefined && spark.catalog.tableExists(s"${prefix}_dels"))
+        setProps(spark, s"${prefix}_dels", Consumed -> "true")
+    }
 
-    def forwardLate(old: String, gen: String, s: Snapshot): Unit =
+    private def forwardLate(old: String, gen: String, s: Snapshot): Unit =
       standingDels(spark, old).foreach { cur =>
         val late = s.fold(cur.select("doc_id"))(snap =>
           cur.select("doc_id").join(broadcast(snap.df), Seq("doc_id"), "left_anti"))
@@ -685,13 +691,6 @@ object Dedup {
             "writer lease")
         }
       }
-
-    // the base `<prefix>_dels` rows were consumed by this rewrite (as
-    // gen 0's own dels or a pre-upgrade leftover): MARK the table
-    // consumed so new readers skip it; it retires with its generation
-    def consumed(old: String, s: Snapshot): Unit =
-      if (s.isDefined && spark.catalog.tableExists(s"${prefix}_dels"))
-        setProps(spark, s"${prefix}_dels", Consumed -> "true")
   }
 
   /** The bucket count a lineage was actually built with, read from the

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions.broadcast
   * Reference analog: the publish semantics of `etl/pipeline.py:698-725`
   * — append for folds, replace for compaction, truncate-and-load for a
   * rebuild. Each family keeps only its storage (catalog-table
-  * generations with TBLPROPERTIES ledgers vs. a manifest directory with
-  * marker files) behind [[Store]]; the policy is pure functions over
-  * [[Policy]] and the step ORDER is written once here. The contract:
+  * generations with TBLPROPERTIES ledgers vs. generation directories
+  * under one commit log, [[CellsLog]]) behind [[Store]]; the policy is
+  * pure functions over [[Policy]] and the step ORDER is written once
+  * here. The contract:
   *
   *  - '''Lease scoping.''' Every write (fold, delete, compact, rebuild)
   *    runs inside [[guarded]]: per-application memo check → JVM-local
@@ -34,12 +35,14 @@ import org.apache.spark.sql.functions.broadcast
   *    promote path share the same [[Store.fileCounts]] and the same
   *    retirement, so they cannot drift apart.
   *  - '''Promote.''' snapshot tombstones → rewrite live rows into an
-  *    UNPROMOTED new generation → stamp its file counts → race seam →
-  *    promote with ONE atomic metadata op (manifest rename / catalog
-  *    property unset) → forward late tombstones → retire. A crash
-  *    before the promote leaves the old generation active and the new
-  *    one an orphan; after it, the old one is superseded. Nothing needs
-  *    repair. A scan already in flight keeps reading its generation.
+  *    UNPROMOTED new generation → count its files → race seam →
+  *    promote with ONE atomic metadata op (the log commit that names
+  *    the new generation with its stamp and forwarded tombstones / the
+  *    catalog property unset) → retire. A crash before the promote
+  *    leaves the old generation active and the new one an orphan the
+  *    retention drops once aged; after it, the old one is superseded.
+  *    Nothing needs repair. A scan already in flight keeps reading its
+  *    generation.
   *  - '''Late forward.''' Tombstones that landed on the superseded
   *    generation after the snapshot (a writer outside the lease) are
   *    copied into the new generation with their ledger tags.
@@ -237,9 +240,10 @@ object IndexLifecycle {
     * it in a superseded generation no new reader applies, so re-append
     * to the winner (duplicate rows in the loser are anti-join no-ops).
     * Six promotes inside one delete means a writer is compacting outside
-    * the lease: refuse, leaving the tag replayable — the ledger entry or
-    * marker is the delete's durability witness and must only follow a
-    * settled append. Returns the generation the batch settled in.
+    * the lease: refuse, leaving the tag replayable — the ledger entry
+    * is the delete's durability witness and must only follow a settled
+    * append. Returns the generation the batch settled in. (A cells
+    * layout settles by log version instead: [[CellsLog.commit]].)
     */
   def settle[G](what: String, resolve: () => G)(append: G => Unit): G = {
     var gen     = resolve()
@@ -288,29 +292,27 @@ object IndexLifecycle {
     /** The lineage key: JVM lock, logs. */
     def lockKey: String
     def leasePath: Path
-    /** Entry housekeeping under the guard (crash heals, GC). */
-    def recover(): Unit
     def active(): String
     def generations(): Seq[Generation]
-    def drop(gen: String): Unit
+    def drop(gens: Set[String]): Unit
     def hasTombstones(gen: String): Boolean
     /** Data files per table of `gen`, as the nfiles stamp records them. */
     def fileCounts(gen: String): Seq[Long]
     def stampedCounts(gen: String): Option[Seq[Long]]
-    def writeStamp(gen: String, counts: Seq[Long]): Unit
     def snapshot(gen: String): Snapshot
     def release(s: Snapshot): Unit
     /** Live rows of `gen` minus the snapshot, as a new UNPROMOTED generation. */
     def rewrite(gen: String, s: Snapshot): String
-    def promote(gen: String): Unit
-    def forwardLate(old: String, gen: String, s: Snapshot): Unit
-    /** Post-promote cleanup of the snapshot's legacy-location tombstones. */
-    def consumed(old: String, s: Snapshot): Unit
+    /** Make `gen` active with its nfiles stamp `counts`, forwarding the
+      * tombstones that landed on `old` after the snapshot.
+      */
+    def promote(old: String, gen: String, s: Snapshot, counts: Seq[Long]): Unit
   }
 
-  /** Test seam: runs between a compaction's stamp and its promote with
+  /** Test seam: runs between a compaction's rewrite and its promote with
     * the superseded generation's id — lets a spec land a racing delete
-    * in exactly the window the late-tombstone forward closes.
+    * in exactly the window the late-tombstone forward closes, or crash
+    * the compaction before it commits.
     */
   @volatile private[graft] var compactRaceHook: Option[String => Unit] = None
 
@@ -318,7 +320,6 @@ object IndexLifecycle {
   def compact(spark: SparkSession, store: Store, force: Boolean,
       skip: => Boolean = false): Unit =
     guarded(spark, store.lockKey, None, store.leasePath, skip) {
-      store.recover()
       val cur = store.active()
       if (skipCompaction(force, store.hasTombstones(cur),
           store.stampedCounts(cur), store.fileCounts(cur))) {
@@ -331,11 +332,9 @@ object IndexLifecycle {
         val snap = store.snapshot(cur)
         try {
           val gen = store.rewrite(cur, snap)
-          store.writeStamp(gen, store.fileCounts(gen))
+          val counts = store.fileCounts(gen)
           compactRaceHook.foreach(_(cur))
-          store.promote(gen)
-          store.forwardLate(cur, gen, snap)
-          store.consumed(cur, snap)
+          store.promote(cur, gen, snap, counts)
           retire(spark, store, Some(gen), Set(cur))
         } finally store.release(snap)
       }
@@ -349,7 +348,6 @@ object IndexLifecycle {
   /** Drop what [[Policy.toRetire]] selects. */
   def retire(spark: SparkSession, store: Store, active: Option[String],
       protect: Set[String], policy: Option[Policy] = None): Unit =
-    policy.getOrElse(Policy.of(spark))
-      .toRetire(store.generations(), active, protect, System.currentTimeMillis())
-      .foreach(store.drop)
+    store.drop(policy.getOrElse(Policy.of(spark))
+      .toRetire(store.generations(), active, protect, System.currentTimeMillis()))
 }

@@ -689,13 +689,22 @@ object Multimodal {
     * every engine) + 50 "videos" + 100 "audio" clips. Queries read this
     * instead of
     * synthesizing rows so the DuckDB oracle can read the SAME bytes and
-    * verify decode/frame-sample results hash-exactly.
+    * verify decode/frame-sample results hash-exactly. The path is
+    * `fixtures/media.parquet` under the working directory (the checkout
+    * a run starts in); `GRAFT_MEDIA_FIXTURE` overrides it.
     */
-  val MediaFixturePath: String =
-    sys.env.getOrElse("GRAFT_MEDIA_FIXTURE", "/root/repo/fixtures/media.parquet")
+  val MediaFixturePath: String = mediaFixturePath(sys.env)
 
-  def mediaFixture(spark: SparkSession): DataFrame =
+  private[graft] def mediaFixturePath(env: Map[String, String]): String =
+    env.getOrElse("GRAFT_MEDIA_FIXTURE",
+      new java.io.File("fixtures/media.parquet").getAbsolutePath)
+
+  def mediaFixture(spark: SparkSession): DataFrame = {
+    require(new java.io.File(MediaFixturePath).exists,
+      s"media fixture $MediaFixturePath is missing: run from the repository " +
+        "root, or point GRAFT_MEDIA_FIXTURE at the fixture")
     spark.read.parquet(MediaFixturePath)
+  }
 
   /** Deterministic synthetic media table for tests/bench (seeded). */
   def syntheticMedia(spark: SparkSession, n: Int, kind: String, seed: Long = 42L): DataFrame = {

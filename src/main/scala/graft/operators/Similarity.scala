@@ -287,8 +287,16 @@ object Similarity {
     val cents =
       if (refineIters <= 0) seed else refineIvfCentroids(b, seed, refineIters)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
-    assignToCentroids(b, cents)
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/cells")
+    writeCells(assignToCentroids(b, cents), path)
+  }
+
+  /** The last step of every layout build: the cells, then commit 0 of
+    * the layout's [[CellsLog]] — a layout is complete exactly when it
+    * has a log.
+    */
+  private def writeCells(cells: DataFrame, path: String): Unit = {
+    cells.write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/cells")
+    CellsLog.init(cells.sparkSession, path)
   }
 
   /** Probe a [[buildIvfIndex]] layout with a raw query vector: centroid
@@ -373,27 +381,10 @@ object Similarity {
       queries: Seq[(Long, Seq[Float])],
       k: Int,
       nProbe: Int = 4,
-      excludeSelf: Boolean = true): DataFrame =
-    ivfProbeBatchOwned(spark, path, queries, k, nProbe, excludeSelf)._1
-
-  /** [[ivfProbeBatch]] with a CALLER-OWNED lifetime for the staged
-    * probe map (the `tfidfTopKOwned` contract): each batch call stages
-    * one tiny (|batch|·nProbe-row) probe-map block so the ranking runs
-    * once for its two consumers; a long-lived serving driver answering
-    * thousands of batches should consume the result, then `release()`
-    * the handle — otherwise one block per call accumulates in executor
-    * storage for the life of the session.
-    */
-  def ivfProbeBatchOwned(
-      spark: SparkSession,
-      path: String,
-      queries: Seq[(Long, Seq[Float])],
-      k: Int,
-      nProbe: Int = 4,
-      excludeSelf: Boolean = true): (DataFrame, graft.util.Checkpoints.Staged) = {
+      excludeSelf: Boolean = true): DataFrame = {
     import spark.implicits._
     ivfProbeBatchDfOwned(spark, path,
-      queries.toDF("query_id", "emb"), k, nProbe, excludeSelf)
+      queries.toDF("query_id", "emb"), k, nProbe, excludeSelf)._1
   }
 
   /** [[ivfProbeBatch]] over a query DATAFRAME (`query_id` LONG, `emb`
@@ -420,8 +411,13 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame =
     ivfProbeBatchDfOwned(spark, path, queries, k, nProbe, excludeSelf)._1
 
-  /** [[ivfProbeBatchDf]] with the caller-owned staged-probe-map
-    * lifetime (see [[ivfProbeBatchOwned]]).
+  /** [[ivfProbeBatchDf]] with a CALLER-OWNED lifetime for the staged
+    * probe map (the `tfidfTopKOwned` contract): each batch call stages
+    * one tiny (|batch|·nProbe-row) probe-map block so the ranking runs
+    * once for its two consumers; a long-lived serving driver answering
+    * thousands of batches should consume the result, then `release()`
+    * the handle — otherwise one block per call accumulates in executor
+    * storage for the life of the session.
     */
   def ivfProbeBatchDfOwned(
       spark: SparkSession,
@@ -572,8 +568,8 @@ object Similarity {
     * Bucketing/saveAsTable home), not the global java.io.tmpdir —
     * wiping the warehouse resets these sidecars together with the
     * bucketed tables instead of leaving immortal cross-run state.
-    * Local-FS warehouses come back as a plain path (test specs touch
-    * markers with java.io.File); remote schemes stay fully qualified.
+    * Local-FS warehouses come back as a plain path (test specs walk
+    * layouts with java.io.File); remote schemes stay fully qualified.
     */
   private def layoutPath(
       spark: SparkSession, kind: String, key: String): String = {
@@ -672,42 +668,30 @@ object Similarity {
     val c     = nCentroidsForCorpus(ensureCorpusStats(embeddings, srcTag, Some(fp)))
     val key   = s"$srcTag|$kind|c=$c$params|fp=$fp|${embeddings.schema.catalogString}"
     val path  = layoutPath(spark, kind, key)
-    promoteBuilt(spark, path, Some(key), path, s"$kind layout")(build(_, c))
+    promoteBuilt(spark, path, Some(key), s"$kind layout")(build(_, c))
     (path, c)
   }
 
   /** The one build path of a maintained layout (the truncate-and-load
-    * leg of [[IndexLifecycle]]): build into a temp sibling and promote
-    * it with one directory rename, unless a COMPLETE layout (the
-    * active generation's `_SUCCESS`) already stands — then the call is
-    * a read and resolves lease-free. Losing a cross-process race to an
-    * identical complete layout is benign: the key carries a data
-    * fingerprint, so the redundant copy is discarded rather than
-    * deleting a layout a concurrent probe may be scanning. `source` is
-    * the layout whose crash leftovers are recovered first.
+    * leg of [[IndexLifecycle]]): build into a temp sibling — the build
+    * writes commit 0 of its [[CellsLog]] last — and promote it with one
+    * directory rename, unless a COMPLETE layout (one with a log) already
+    * stands; then the call is a read and resolves lease-free. A layout
+    * dir without a log is an unfinished build and is replaced.
     */
   private def promoteBuilt(spark: SparkSession, path: String,
-      memoKey: Option[String], source: String, what: String)(
-      build: String => Unit): Unit = {
+      memoKey: Option[String], what: String)(build: String => Unit): Unit = {
     val dest = new org.apache.hadoop.fs.Path(path)
-    val fs   = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    def complete: Boolean = fs.exists(new org.apache.hadoop.fs.Path(
-      activeCellsDir(spark, path), "_SUCCESS"))
+    val fs   = CellsLog.fsOf(spark, path)
+    def complete: Boolean = CellsLog.latestOption(fs, path).isDefined
     IndexLifecycle.guarded(spark, path, memoKey, WriterLease.lockPathFor(path),
-        skip = try complete catch { case _: IllegalArgumentException => false }) {
-      recoverCells(spark, source)
+        skip = complete) {
       if (!complete) {
         val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp${System.nanoTime()}")
         build(tmp.toString)
-        if (complete) fs.delete(tmp, true)
-        else {
-          fs.delete(dest, true)
-          if (!fs.rename(tmp, dest)) {
-            if (complete) fs.delete(tmp, true) // lost at the wire
-            else throw new java.io.IOException(
-              s"could not promote $what $tmp -> $dest")
-          }
-        }
+        fs.delete(dest, true)
+        if (!fs.rename(tmp, dest))
+          throw new java.io.IOException(s"could not promote $what $tmp -> $dest")
       }
     }
   }
@@ -726,13 +710,12 @@ object Similarity {
     * also serves as small-file compaction after many folds — standard
     * IVF maintenance semantics (insert-into-cell, re-train offline).
     *
-    * Idempotent per `batchTag`: folded tags are recorded as marker
-    * files under `path/folds/` (md5 of the tag — fs-safe), checked
-    * through the Hadoop FileSystem API under the per-layout lock, so a
-    * replayed ingestion batch (driver retry, at-least-once upstream) is
-    * a no-op in this and in any later process. Caller contract: the
-    * batch holds NEW vec_ids only — re-folding an indexed id is the
-    * caller's bug, same as any append sink.
+    * Idempotent per `batchTag`: the fold commit records the tag in the
+    * layout log's fold ledger ([[CellsLog]]), so a replayed ingestion
+    * batch (driver retry, at-least-once upstream) is a no-op in this
+    * and in any later process. Caller contract: the batch holds NEW
+    * vec_ids only — re-folding an indexed id is the caller's bug, same
+    * as any append sink.
     */
   /** The fold's entire DISTRIBUTED half, exposed for the shuffle-probe
     * tooling (p03/p04): quantize the batch, broadcast-assign to the
@@ -761,7 +744,7 @@ object Similarity {
     foldCells(newVecs, path, batchTag)(foldAssignment(newVecs, path))
 
   /** The one fold body of both cells layouts: `encoded` is the batch's
-    * (vec_id, cent_id, payload…) cell rows. The marker lands AFTER the
+    * (vec_id, cent_id, payload…) cell rows. The commit lands AFTER the
     * append (the MinHash fold-ledger order): a crash in between replays
     * the batch — callers needing exactly-once must rebuild, as with any
     * append sink.
@@ -771,36 +754,29 @@ object Similarity {
     val spark = newVecs.sparkSession
     IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"),
         WriterLease.lockPathFor(path)) {
-      recoverCells(spark, path)
-      // the policy check runs under the already-held guard (re-entrant)
-      onceForTag(spark, path, "folds", batchTag) {
-        IndexLifecycle.requireNotTombstoned(
-          tombstonesOf(spark, path, activeCellsDir(spark, path)), newVecs, "vec_id")
-        encoded.write.mode("append").partitionBy("cent_id")
-          .parquet(activeCellsDir(spark, path))
-      }.foreach(_ => maybeAutoCompactCells(spark, path))
+      retireCells(spark, path)
+      val cur = CellsLog.latest(spark, path)
+      if (!cur.folds(batchTag)) {
+        IndexLifecycle.requireNotTombstoned(tombstonesOf(spark, path, cur), newVecs, "vec_id")
+        commitWrite(spark, path, "fold")(
+          encoded.write.mode("append").partitionBy("cent_id").parquet(_))(
+          (c, _) => c.copy(folds = c.folds + batchTag))
+        maybeAutoCompactCells(spark, path)
+      }
     }
   }
 
-  /** The fold/delete ledger of a cells layout: one marker file per tag
-    * under `path/<kind>/` (md5 of the tag — fs-safe), read through the
-    * Hadoop FileSystem API so a replay is a no-op in this and any later
-    * process. Runs `write` and then records the tag unless it is
-    * already recorded; returns what `write` returned, if it ran.
+  /** Commit an op that first writes into the active generation: `write`
+    * runs once per generation the commit loop sees — a promote that won
+    * the version (a writer outside the lease) moves the write to the new
+    * generation; what landed in the superseded one is never served —
+    * and `record` adds the op's entries to the ledger.
     */
-  private def onceForTag[T](spark: SparkSession, path: String, kind: String,
-      tag: String)(write: => T): Option[T] = {
-    val marker = new org.apache.hadoop.fs.Path(path, s"$kind/${md5Hex(tag)}")
-    val fs     = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(marker)) None
-    else {
-      val done = write
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, true)
-      try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      Some(done)
-    }
+  private def commitWrite[T](spark: SparkSession, path: String, op: String)(
+      write: String => T)(record: (CellsLog.Commit, T) => CellsLog.Commit): CellsLog.Commit = {
+    val done = scala.collection.mutable.Map.empty[String, T]
+    CellsLog.commit(spark, path, op)(c =>
+      record(c, done.getOrElseUpdate(c.gen, write(CellsLog.genDir(path, c)))))
   }
 
   // ---- auto-compaction: the policy that keeps a fold tier healthy ----
@@ -816,28 +792,13 @@ object Similarity {
     */
   private def maybeAutoCompactCells(
       spark: SparkSession, path: String): Unit = {
-    val cellsDir = new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
-    val fs = cellsDir.getFileSystem(spark.sessionState.newHadoopConf())
-    var files = 0L
-    val cells = scala.collection.mutable.HashSet.empty[String]
-    try {
-      val it = fs.listFiles(cellsDir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val parent = f.getPath.getParent.getName
-        // skip metadata files AND anything under a metadata dir — the
-        // generation-scoped `_tombstones/` rows are not cell files
-        if (isDataFile(f.getPath.getName) && isDataFile(parent)) {
-          files += 1
-          cells += parent
-        }
-      }
-    } catch { case _: java.io.IOException => return }
-    if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(files, cells.size))
+    val gen = new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
+    val (files, cells) =
+      try CellsLog.cellFiles(CellsLog.fsOf(spark, path), gen)
+      catch { case _: java.io.IOException => return }
+    if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(files, cells))
       compactIvfCells(spark, path)
   }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   // the one definition of "tombstone/cell DATA file" shared by every
   // reader and the compaction purge — two drifting copies of this
@@ -846,263 +807,95 @@ object Similarity {
   private[operators] def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
-  // ---- generation manifest: the atomic cells promote ----
-  // A maintained layout's row data lives in a GENERATION directory;
-  // `cells.MANIFEST` (one line: the directory's name) is the pointer
-  // readers resolve. A layout that has never been compacted has no
-  // manifest and resolves to the original `cells/` — so a fresh build
-  // costs no extra I/O and old layouts read unchanged. Compaction
-  // promotes a NEW generation dir with ONE atomic pointer flip
-  // (create-then-rename-overwrite, POSIX/HDFS atomic) — the promote of
-  // [[IndexLifecycle]] (reference analog: the delete+recreate
-  // visibility hole of the replace strategy, etl/pipeline.py:698-716,
-  // which the reference leaves open).
-
-  private val CellsManifest = "cells.MANIFEST"
-
-  // test seam: counts sleeps of the manifest-absence wait loop — the
-  // loop must NEVER run on the hot path (manifest present, or cells/
-  // standing, or an atomic-flip scheme); a spec pins that the
-  // crash-before-first-flip fallback resolves with ZERO retries
-  // instead of paying 8×50 ms per resolution, timing-insensitively
-  private[graft] val manifestWaitRetries =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def cellsStamp(name: String): Option[Long] =
-    IndexLifecycle.parseStamp(name, "cells", "cells.g")
-
-  // manifest I/O goes through the RAW filesystem: on a local
-  // ChecksumFileSystem the hidden .crc sidecar is a SECOND file, so a
-  // rename-overwrite of the manifest alone leaves readers verifying new
-  // bytes against the stale sidecar (observed as ChecksumException
-  // under concurrent probes). HDFS checksums internally per block and
-  // passes through unchanged; the manifest is one short line, so the
-  // lost crc protection is irrelevant.
-  private def manifestFs(
-      fs: org.apache.hadoop.fs.FileSystem): org.apache.hadoop.fs.FileSystem =
-    fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-
   /** The ACTIVE generation directory of a maintained layout — the one
-    * named by `cells.MANIFEST`, or the original `cells/` for a layout
-    * that has never been compacted. Every reader and every fold append
-    * resolves through this; benches and specs inspecting physical
-    * layout state should too.
+    * its latest [[CellsLog]] commit names. Every reader and every fold
+    * append resolves through this; benches and specs inspecting
+    * physical layout state should too.
     */
-  def activeCellsDir(spark: SparkSession, path: String): String = {
-    val mf = new org.apache.hadoop.fs.Path(path, CellsManifest)
-    val fs = manifestFs(mf.getFileSystem(spark.sessionState.newHadoopConf()))
-    // Absence of the manifest normally means "never compacted → cells/".
-    // When `cells/` survives, that resolution is ALWAYS legitimate —
-    // either the layout was never compacted, or a first-ever compaction
-    // crashed before its flip (documented crash contract: old
-    // generation stays active, and GC never collects `cells/` while
-    // nothing superseded it) — so the hot path resolves immediately
-    // with no retry sleeps and no globStatus RPCs. Only when cells/ is
-    // ALSO gone does absence need interpretation: on a filesystem whose
-    // replace primitive is NOT atomic (any scheme outside the
-    // file:/hdfs: legs of [[flipCellsManifest]]) a reader could land
-    // inside a delete+rename gap — if generation dirs exist the layout
-    // HAS been compacted, so wait the gap out rather than guessing.
-    // On file:/hdfs: the flip is atomic, so there is no gap to wait
-    // for: manifest absent + cells/ absent + generations present is a
-    // TORN layout, refused immediately.
-    var exists = fs.exists(mf)
-    if (!exists &&
-        !fs.exists(new org.apache.hadoop.fs.Path(path, "cells"))) {
-      def gensPresent: Boolean = {
-        val st =
-          fs.globStatus(new org.apache.hadoop.fs.Path(path, "cells.g*"))
-        st != null && st.nonEmpty
-      }
-      val atomicFlip = {
-        val s = fs.getUri.getScheme
-        s == "file" || s == "hdfs"
-      }
-      var retries = 0
-      while (!exists && !atomicFlip && retries < 8 && gensPresent) {
-        Thread.sleep(50L); retries += 1; exists = fs.exists(mf)
-        manifestWaitRetries.incrementAndGet()
-      }
-      // a post-promote layout whose cells/ was GC'd MUST have a
-      // manifest — refusing loudly beats silently resolving a
-      // generation that may no longer exist
-      require(exists || !gensPresent,
-        s"layout $path has generation dirs but no $CellsManifest and no " +
-          "cells/ fallback (torn or non-atomic promote): refusing to " +
-          "guess the active generation")
-    }
-    val name =
-      if (!exists) "cells"
-      else {
-        val in  = fs.open(mf)
-        val raw = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          buf.toString("UTF-8").trim
-        } finally in.close()
-        // a manifest naming anything but an engine-written generation
-        // is corruption — fail fast, never silently read a stale dir
-        require(raw == "cells" || raw.matches("cells\\.g\\d+"),
-          s"corrupt $CellsManifest under $path: '$raw'")
-        raw
-      }
-    new org.apache.hadoop.fs.Path(path, name).toString
-  }
-
-  /** Promote generation dir `gen` (a name under `path`) as the layout's
-    * active cells: write the pointer to a temp sibling, then one
-    * atomic replace. The replace primitive is SCHEME-specific because
-    * Hadoop's rename-with-OVERWRITE is only atomic on HDFS — the
-    * AbstractFileSystem default (which RawLocalFs inherits) is
-    * delete(dst) THEN rename, leaving a window where the manifest does
-    * not exist and a reader would fall back to a stale generation. On
-    * `file:` we therefore use java.nio's ATOMIC_MOVE (a POSIX rename(2),
-    * atomic w.r.t. concurrent opens); everywhere else the FileContext
-    * OVERWRITE rename stands (atomic on HDFS, the deploy target).
-    */
-  private def flipCellsManifest(
-      spark: SparkSession, path: String, gen: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mf   = new org.apache.hadoop.fs.Path(path, CellsManifest)
-    val tmp  = new org.apache.hadoop.fs.Path(
-      path, s"$CellsManifest.tmp${System.nanoTime()}")
-    val fs  = manifestFs(mf.getFileSystem(conf))
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // URI scheme, not FileSystem.getScheme: RawLocalFileSystem (the
-    // manifestFs unwrap target) throws UnsupportedOperationException on
-    // the latter
-    if (fs.getUri.getScheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(fs.makeQualified(mf).toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        mf.toUri, conf)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(mf),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
+  def activeCellsDir(spark: SparkSession, path: String): String =
+    CellsLog.genDir(path, CellsLog.latest(spark, path))
 
   // ---- deletion: the tombstone tier of the maintained-index contract ----
 
   /** The LIVE view of a layout's cells: physical rows minus standing
     * tombstones ([[deleteFromIvfIndex]]). Every probe/stats/rebuild
     * path reads through this, so a delete is SERVED the moment its
-    * tombstone lands — no rewrite on the delete path. The tombstone
-    * set is bounded between compactions — ENFORCED, not assumed:
-    * [[deleteFromIvfIndex]] auto-compacts once the standing set
-    * crosses `spark.graft.index.autoCompactTombstoneRows` (default
-    * 1M) — so the anti-join build side is an explicit BROADCAST — the cells scan
+    * commit lands — no rewrite on the delete path. The tombstone set is
+    * bounded between compactions — ENFORCED, not assumed:
+    * [[deleteFromIvfIndex]] auto-compacts once the standing set crosses
+    * `spark.graft.index.autoCompactTombstoneRows` (default 1M) — so the
+    * anti-join build side is an explicit BROADCAST — the cells scan
     * never reshuffles, and the caller's cent_id partition-prune filter
     * still pushes below the join to the scan (left-side predicate).
+    *
+    * (cells, tombstones) resolve from ONE commit: the generation and
+    * the exact tombstone files standing on it. A generation the
+    * retention collected between the log listing and the file listing
+    * (a reader slower than `spark.graft.index.gcStaleHours` or K
+    * promotes) re-resolves once from the newer commit that superseded
+    * it; with no newer commit the layout is damaged and the read fails.
+    * Nothing sleeps.
     */
-  def liveCells(spark: SparkSession, path: String): DataFrame = {
-    // the manifest promote ([[compactIvfCells]]) leaves no headless
-    // window — a reader resolves either the old generation or the new
-    // one, both complete. The retry below covers one residual race:
-    // resolving a generation whose directory the age-gated GC collects
-    // between the manifest read and the parquet listing (a scan that
-    // outlived `spark.graft.index.gcStaleHours` re-resolves and reads
-    // the current generation). Only path-absence retries — any other
-    // analysis error (corrupt layout, bad schema) must fail fast, and
-    // a genuinely missing layout costs at most the ~1 s budget once.
-    //
-    // (cells, tombstones) resolve ATOMICALLY: the tombstone files live
-    // INSIDE the generation dir ([[tombstoneDataFiles]]), so whichever
-    // generation this read lands on, it applies exactly that
-    // generation's standing deletes — a promote racing this
-    // construction can not pair old cells with a post-purge tombstone
-    // view (served-deleted rows) or vice versa (the PATH_NOT_FOUND
-    // the maintenance fuzz caught at seed 31).
-    //
-    // An absent generation is seen with an existence check before the
-    // read, which counts against the same budget: a parquet read of a
-    // missing path logs a WARN with a stack trace before it throws. The
-    // catch keeps covering a directory that vanishes after the check.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    var cells: DataFrame = null
-    var gen: String = null
-    var attempt = 0
-    while (cells == null) {
+  def liveCells(spark: SparkSession, path: String): DataFrame =
+    liveCellsFrom(spark, path, CellsLog.latest(spark, path))
+
+  private[operators] def liveCellsFrom(spark: SparkSession, path: String,
+      first: CellsLog.Commit): DataFrame = {
+    // the existence check keeps a gone generation out of the parquet
+    // read, which logs a WARN with a stack trace before it throws; the
+    // catch covers one that goes after the check
+    val fs = CellsLog.fsOf(spark, path)
+    def read(c: CellsLog.Commit): Option[DataFrame] =
       try {
-        gen = activeCellsDir(spark, path)
-        if (attempt < 8 && !fs.exists(new org.apache.hadoop.fs.Path(gen))) {
-          attempt += 1; Thread.sleep(125L)
-        } else cells = spark.read.parquet(gen)
+        val gen = CellsLog.genDir(path, c)
+        if (!fs.exists(new org.apache.hadoop.fs.Path(gen))) None
+        else {
+          val cells = spark.read.parquet(gen)
+          Some(tombstonesOf(spark, path, c).fold(cells)(t =>
+            cells.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti")))
+        }
       } catch {
         case e: org.apache.spark.sql.AnalysisException
-            if attempt < 8 &&
-              (e.getCondition == "PATH_NOT_FOUND" ||
-                String.valueOf(e.getMessage).contains("Path does not exist")) =>
-          attempt += 1; Thread.sleep(125L)
+            if e.getCondition == "PATH_NOT_FOUND" ||
+              String.valueOf(e.getMessage).contains("Path does not exist") => None
       }
-    }
-    tombstonesOf(spark, path, gen).fold(cells)(t =>
-      cells.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti"))
-  }
-
-  // Standing tombstone files of ONE generation: `<gen>/_tombstones/`
-  // (the underscore prefix keeps Spark's file index from treating them
-  // as cell data), plus the pre-generation-scoped legacy location
-  // `<path>/tombstones/` — legacy rows are exactly the UN-consumed
-  // deletes of an old-binary layout (its compactions deleted consumed
-  // files), so they union in as live deletes everywhere. A dir can
-  // exist with ZERO data files (crash windows) — spark.read.parquet on
-  // it throws UNABLE_TO_INFER_SCHEMA, so every tombstone read goes
-  // through this listing and treats the empty dir as "no tombstones"
-  // (the same _/. filter compactIvfCells uses).
-  private def tombstoneDataFiles(
-      spark: SparkSession, path: String, genDir: String): Seq[String] = {
-    def ls(dir: org.apache.hadoop.fs.Path): Seq[String] = {
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => isDataFile(p.getName))
-        .map(_.toString)
-    }
-    ls(new org.apache.hadoop.fs.Path(genDir, "_tombstones")) ++
-      ls(new org.apache.hadoop.fs.Path(path, "tombstones"))
+    read(first).orElse {
+      val next = CellsLog.latest(spark, path)
+      if (next.version > first.version) read(next) else None
+    }.getOrElse(throw new java.io.FileNotFoundException(
+      s"$path: generation ${first.gen} is gone and no newer commit names another"))
   }
 
   private def tombstonesOf(
-      spark: SparkSession, path: String, genDir: String): Option[DataFrame] = {
-    val tomb = tombstoneDataFiles(spark, path, genDir)
-    if (tomb.isEmpty) None else Some(spark.read.parquet(tomb: _*))
-  }
+      spark: SparkSession, path: String, c: CellsLog.Commit): Option[DataFrame] =
+    if (c.tombstones.isEmpty) None
+    else Some(spark.read.parquet(CellsLog.tombstoneFiles(path, c): _*))
 
   // every standing tombstone file of the layout's ACTIVE generation —
   // the spec-facing resolution (tests must not hardcode the physical
-  // location, which moved when tombstones became generation-scoped)
+  // location)
   private[graft] def standingTombstoneFiles(
       spark: SparkSession, path: String): Seq[String] =
-    tombstoneDataFiles(spark, path, activeCellsDir(spark, path))
+    CellsLog.tombstoneFiles(path, CellsLog.latest(spark, path))
 
   /** Tombstone DELETION from a maintained [[ensureIvfIndex]] /
     * [[ensureIvfPqIndex]] layout — the missing half of the "never
     * rebuilt, only maintained" contract (the lexical index has folded
     * deletes since q95; reference analog: the replace semantics of
     * `etl/pipeline.py:698-716`). `delIds` (a `vec_id` column) lands as
-    * appended rows under `path/tombstones/` — O(|delete|) work,
-    * index-size independent; the corpus cells are untouched and every
-    * reader ([[liveCells]]) excludes the ids immediately. Physical
-    * purge rides [[compactIvfCells]] (or any rebuild), which drops the
-    * dead rows and clears the tombstone set in the same pass, so
-    * delete∘compact ≡ rebuild-from-remainder (q126/q127 gate this
-    * against the oracle; SimilaritySpec pins probe parity).
+    * appended rows under `<gen>/_tombstones/`, listed by the delete's
+    * commit — O(|delete|) work, index-size independent; the corpus
+    * cells are untouched and every reader ([[liveCells]]) excludes the
+    * ids once the commit lands. Physical purge rides [[compactIvfCells]]
+    * (or any rebuild), which drops the dead rows and clears the
+    * tombstone set in the same pass, so delete∘compact ≡
+    * rebuild-from-remainder (q126/q127 gate this against the oracle;
+    * SimilaritySpec pins probe parity).
     *
-    * Idempotent per `delTag` (marker under `path/dels/`, the fold-
-    * ledger pattern) — and naturally idempotent even WITHOUT the
-    * marker: a crash-replayed delete appends duplicate tombstone rows,
-    * which anti-join semantics make harmless. Deleting an id that was
-    * never indexed is likewise a harmless no-op.
+    * Idempotent per `delTag` (the log's delete ledger). A crash between
+    * the append and the commit leaves unlisted files no reader applies;
+    * the replay writes and commits its own. Deleting an id that was
+    * never indexed is a harmless no-op.
     *
     * Caller contract: re-INSERTING a deleted id (delete X, fold a new
     * X) requires a compaction in between — the fold paths REJECT a
@@ -1118,22 +911,35 @@ object Similarity {
     val spark = delIds.sparkSession
     IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"),
         WriterLease.lockPathFor(path)) {
-      recoverCells(spark, path)
-      val ids = delIds.select(col("vec_id").cast("long").as("vec_id"))
-      onceForTag(spark, path, "dels", delTag) {
-        IndexLifecycle.settle(s"delete '$delTag' on $path",
-          () => activeCellsDir(spark, path))(g =>
-          ids.write.mode("append").parquet(s"$g/_tombstones"))
-      }.foreach { gen =>
+      retireCells(spark, path)
+      if (!CellsLog.latest(spark, path).dels(delTag)) {
+        val ids = delIds.select(col("vec_id").cast("long").as("vec_id"))
+        val c = commitWrite(spark, path, "delete")(appendTombstones(spark, ids, _))(
+          (c, files) => c.copy(tombstones = c.tombstones ++ files, dels = c.dels + delTag))
         // distinct ids, not rows: replayed/overlapping deletes append
         // duplicate tombstone rows, and the broadcast build side every
         // read pays is deduped
         if (IndexLifecycle.Policy.of(spark).tombstoneDebtDue(
-            tombstonesOf(spark, path, gen)
+            tombstonesOf(spark, path, c)
               .fold(0L)(_.select("vec_id").distinct().count())))
           compactIvfCells(spark, path)
       }
     }
+  }
+
+  // append one tombstone batch to `<gen>/_tombstones/`; returns the
+  // names of the files this append wrote (the listing's difference —
+  // unlisted files of a crashed delete stay out)
+  private def appendTombstones(spark: SparkSession, ids: DataFrame,
+      gen: String): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(gen, "_tombstones")
+    val fs  = CellsLog.fsOf(spark, gen)
+    def names(): Set[String] =
+      try fs.listStatus(dir).map(_.getPath.getName).filter(isDataFile).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val before = names()
+    ids.write.mode("append").parquet(dir.toString)
+    (names() -- before).toSeq.sorted
   }
 
   /** Cell-occupancy telemetry for a [[buildIvfIndex]] layout — the
@@ -1155,242 +961,30 @@ object Similarity {
       .orderBy("cent_id")
 
   /** Small-file compaction and tombstone purge for a maintained cells
-    * layout — the [[IndexLifecycle.compact]] skeleton over the manifest
-    * store: every [[foldIntoIvfIndex]] appends one file set per batch,
-    * and this rewrites the cells to ~one file per cell (ONE shuffle of
-    * the index, the inherent compaction cost; at 100 TB run it per-cell
-    * or accept the rebuild, which compacts for free) into a NEW
-    * generation dir promoted by one atomic `cells.MANIFEST` pointer
-    * flip ([[activeCellsDir]]). Rows, centroids and the fold ledger are
-    * untouched — a replayed old batch tag still no-ops after
-    * compaction, and probes see identical data (SimilaritySpec pins
-    * row equality and probe parity). Schema-agnostic over the cells
-    * rows, so the same compactor serves BOTH maintained layouts —
-    * [[buildIvfIndex]] (vector cells) and [[buildIvfPqIndex]] (code
-    * cells).
+    * layout — the [[IndexLifecycle.compact]] skeleton over the log
+    * store ([[CellsLog.Store]]): every [[foldIntoIvfIndex]] appends one
+    * file set per batch, and this rewrites the cells to ~one file per
+    * cell (ONE shuffle of the index, the inherent compaction cost; at
+    * 100 TB run it per-cell or accept the rebuild, which compacts for
+    * free) into a NEW generation dir promoted by one commit. Rows,
+    * centroids and the ledgers are untouched — a replayed old batch tag
+    * still no-ops after compaction, and probes see identical data
+    * (SimilaritySpec pins row equality and probe parity).
+    * Schema-agnostic over the cells rows, so the same compactor serves
+    * BOTH maintained layouts — [[buildIvfIndex]] (vector cells) and
+    * [[buildIvfPqIndex]] (code cells).
     */
   def compactIvfCells(spark: SparkSession, path: String,
       force: Boolean = false): Unit =
-    IndexLifecycle.compact(spark, new CellsStore(spark, path), force)
+    IndexLifecycle.compact(spark, new CellsLog.Store(spark, path), force)
 
-  /** The manifest-directory storage of one cells layout: generations
-    * are `cells` / `cells.g<stamp>` dirs identified by their path (as
-    * [[activeCellsDir]] renders it), tombstones live in
-    * `<gen>/_tombstones/`, the nfiles stamp in `<gen>/_graft_nfiles`,
-    * the ledgers in marker dirs beside them.
+  /** Retention at every maintenance entry ([[IndexLifecycle.retire]]
+    * over every cells* dir: superseded generations and crashed,
+    * uncommitted rewrites).
     */
-  private final class CellsStore(spark: SparkSession, path: String)
-      extends IndexLifecycle.Store {
-    // (active generation's tombstone files incl. legacy-location ones,
-    //  every entry of the legacy `<path>/tombstones/` dir)
-    type Snapshot = (Seq[String], Seq[org.apache.hadoop.fs.Path])
-    private val root = new org.apache.hadoop.fs.Path(path)
-    private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    private val legacyTombDir = new org.apache.hadoop.fs.Path(path, "tombstones")
-
-    def lockKey: String = path
-    def leasePath: org.apache.hadoop.fs.Path = WriterLease.lockPathFor(path)
-    def recover(): Unit = recoverCells(spark, path)
-    def active(): String = activeCellsDir(spark, path)
-
-    // every cells* sibling but the manifest pointer: generations,
-    // crashed rewrites, manifest temp files, legacy cells.old* /
-    // cells.compact* leftovers (the last three carry no stamp). Last
-    // touch = the NEWEST FILE inside (a large rewrite keeps writing
-    // part files; the dir's own mtime only reflects top-level entries).
-    def generations(): Seq[IndexLifecycle.Generation] =
-      (try fs.listStatus(root).toSeq catch { case _: java.io.IOException => Seq.empty })
-        .filter(st => st.getPath.getName.startsWith("cells") &&
-          st.getPath.getName != CellsManifest)
-        .map { st =>
-          val n = st.getPath.getName
-          new IndexLifecycle.Generation(new org.apache.hadoop.fs.Path(path, n).toString,
-            cellsStamp(n), newestMtime(st.getPath, st.getModificationTime))
-        }
-
-    private def newestMtime(p: org.apache.hadoop.fs.Path, own: Long): Long = {
-      var m = own
-      try {
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-      } catch { case _: java.io.IOException => }
-      m
-    }
-
-    def drop(gen: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(gen), true)
-
-    def hasTombstones(gen: String): Boolean = {
-      val (tomb, legacy) = snapshot(gen)
-      tomb.nonEmpty || legacy.nonEmpty
-    }
-    def fileCounts(gen: String): Seq[Long] =
-      Seq(countCellDataFiles(fs, new org.apache.hadoop.fs.Path(gen)))
-    def stampedCounts(gen: String): Option[Seq[Long]] =
-      readNFilesStamp(fs, new org.apache.hadoop.fs.Path(gen))
-    def writeStamp(gen: String, counts: Seq[Long]): Unit =
-      writeNFilesStamp(fs, new org.apache.hadoop.fs.Path(gen), counts.mkString(","))
-
-    def snapshot(gen: String): Snapshot =
-      (tombstoneDataFiles(spark, path, gen),
-        if (fs.exists(legacyTombDir)) fs.listStatus(legacyTombDir).toSeq.map(_.getPath)
-        else Seq.empty)
-    def release(s: Snapshot): Unit = ()
-
-    // ONE shuffle of the index, the inherent compaction cost; the ≤C-row
-    // centroid table is the partition count, so each output task holds
-    // ~one whole cell and writes ~one file for it
-    def rewrite(gen: String, s: Snapshot): String = {
-      val out = new org.apache.hadoop.fs.Path(path, s"cells.g${IndexLifecycle.newStamp()}")
-      val raw = spark.read.parquet(gen)
-      val cells =
-        if (s._1.isEmpty) raw
-        else raw.join(
-          broadcast(spark.read.parquet(s._1: _*).select("vec_id").distinct()),
-          Seq("vec_id"), "left_anti")
-      val c = spark.read.parquet(s"$path/centroids").count().toInt
-      cells.repartition(math.max(c, 1), col("cent_id"))
-        .write.partitionBy("cent_id").parquet(out.toString)
-      out.toString
-    }
-
-    def promote(gen: String): Unit =
-      flipCellsManifest(spark, path, new org.apache.hadoop.fs.Path(gen).getName)
-
-    // COPY (never move — old-generation scans keep their own view)
-    // every tombstone file the snapshot did not consume; any file
-    // visible here landed before the flip
-    def forwardLate(old: String, gen: String, s: Snapshot): Unit = {
-      val late = tombstoneDataFiles(spark, path, old).filterNot(s._1.toSet)
-      if (late.nonEmpty) {
-        val dstDir = new org.apache.hadoop.fs.Path(gen, "_tombstones")
-        fs.mkdirs(dstDir)
-        late.foreach { f =>
-          val src = new org.apache.hadoop.fs.Path(f)
-          org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-            new org.apache.hadoop.fs.Path(dstDir, s"fwd_${src.getName}"),
-            false, spark.sessionState.newHadoopConf())
-        }
-        log.warn(s"compactIvfCells($path): forwarded ${late.size} " +
-          "late tombstone file(s) from the superseded generation — a " +
-          "cross-process delete raced this rewrite outside the writer " +
-          "lease")
-      }
-    }
-
-    // purge only the LEGACY-location files of the snapshot (a one-time
-    // migration); the superseded generation's own tombstones stay with
-    // its dir. Non-recursive rmdir: fails closed if a cross-process
-    // delete committed a tombstone since the listing.
-    def consumed(old: String, s: Snapshot): Unit = {
-      s._2.foreach(fs.delete(_, false))
-      if (s._2.nonEmpty && fs.exists(legacyTombDir) &&
-          fs.listStatus(legacyTombDir).isEmpty)
-        fs.delete(legacyTombDir, false)
-    }
-  }
-
-  /** Data files of a cells generation dir (recursive), EXCLUDING the
-    * `_tombstones/` side dir and `_`/`.`-prefixed bookkeeping files —
-    * the quantity the compaction no-op skip compares against the
-    * nfiles stamp. One recursive listing; never a Spark job.
-    */
-  private def countCellDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Long = {
-    val it = fs.listFiles(dir, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f    = it.next()
-      val name = f.getPath.getName
-      val inSide = f.getPath.toString.contains("/_tombstones/")
-      if (!inSide && isDataFile(name)) n += 1
-    }
-    n
-  }
-
-  private def nFilesStampPath(gen: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(gen, "_graft_nfiles")
-
-  /** The post-rewrite data-file count a compaction stamped into its
-    * generation dir; None for a generation without one (gen-0 layouts,
-    * pre-stamp binaries) or a garbled one — those always rewrite.
-    */
-  private def readNFilesStamp(
-      fs: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path): Option[Seq[Long]] =
-    try {
-      if (!fs.exists(nFilesStampPath(gen))) None
-      else {
-        val in = fs.open(nFilesStampPath(gen))
-        try IndexLifecycle.parseCounts(new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally in.close()
-      }
-    } catch {
-      // a real FS fault must surface in the log, not silently force rewrites
-      case e: java.io.IOException =>
-        log.warn(s"readNFilesStamp(${nFilesStampPath(gen)}): ${e.getMessage}")
-        None
-    }
-
-  private def writeNFilesStamp(
-      fs: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path,
-      stamp: String): Unit = {
-    // temp-name + rename: fs.create(overwrite) is not atomic, and a
-    // crash mid-write must leave either no stamp (always-rewrite) or a
-    // complete one — never a truncated file
-    val tmp = new org.apache.hadoop.fs.Path(gen, s"._graft_nfiles.tmp${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(nFilesStampPath(gen), false)
-    if (!fs.rename(tmp, nFilesStampPath(gen))) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(
-        s"could not promote nfiles stamp $tmp -> ${nFilesStampPath(gen)}")
-    }
-  }
-
-  /** Housekeeping under the layout guard, run by every maintenance
-    * entry point. With the manifest promote there is no crash state to
-    * REPAIR, so this is (a) retention ([[IndexLifecycle.retire]] over
-    * every cells* sibling: superseded generations, crashed rewrites,
-    * legacy `cells.old*`/`cells.compact*` debris), (b) removal of an
-    * aged, EMPTY legacy `tombstones/` dir, and (c) the one legacy heal
-    * kept for layouts written by the pre-manifest binary: a headless
-    * layout (no manifest, no `cells/`) restores its newest `cells.old*`
-    * sibling instead of letting ensure* rebuild and silently discard
-    * the fold ledger.
-    */
-  private[operators] def recoverCells(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val active =
-      try activeCellsDir(spark, path)
-      catch { case _: java.io.IOException => return }
-    val activeP = new org.apache.hadoop.fs.Path(active)
-    val exists =
-      try fs.exists(activeP) catch { case _: java.io.IOException => return }
-    val store = new CellsStore(spark, path)
-    if (!exists)
-      store.generations().map(g => new org.apache.hadoop.fs.Path(g.id))
-        .filter(_.getName.startsWith("cells.old"))
-        .sortBy(_.getName).lastOption
-        .foreach(old => fs.rename(old, activeP))
-    else {
-      val cutoff = System.currentTimeMillis() -
-        IndexLifecycle.Policy.of(spark).gcStaleHours * 3600 * 1000
-      val tombDir = new org.apache.hadoop.fs.Path(path, "tombstones")
-      try {
-        if (fs.exists(tombDir) && fs.listStatus(tombDir).isEmpty &&
-            fs.getFileStatus(tombDir).getModificationTime < cutoff)
-          fs.delete(tombDir, false)
-      } catch { case _: java.io.IOException => }
-      IndexLifecycle.retire(spark, store, Some(active), Set.empty)
-    }
-  }
+  private[operators] def retireCells(spark: SparkSession, path: String): Unit =
+    IndexLifecycle.retire(spark, new CellsLog.Store(spark, path),
+      Some(activeCellsDir(spark, path)), Set.empty)
 
   /** Rebuild advisor over a maintained (built + folded) IVF layout:
     * ONE row of integer drift metrics plus the rebuild decision under
@@ -1443,11 +1037,11 @@ object Similarity {
     * the probe from the raw table). Cost: one broadcast assignment
     * pass + the partitioned write — same as the original build, and it
     * compacts fold small-files for free. Idempotent per `dest`
-    * (marker + lock), skipped when a promoted layout already exists.
+    * (lock + log), skipped when a complete layout already exists.
     */
   def rebuildIvfIndex(
       spark: SparkSession, path: String, dest: String): String = {
-    promoteBuilt(spark, dest, None, path, "rebuilt IVF layout") { tmp =>
+    promoteBuilt(spark, dest, None, "rebuilt IVF layout") { tmp =>
       // rebuild from the LIVE rows: tombstoned ids drop out here, so
       // rebuild-from-index ≡ build-from-remainder and the new layout
       // starts with an empty tombstone set
@@ -1458,9 +1052,7 @@ object Similarity {
         .select(col("vec_id").as("cent_id"),
           col("q").as("cvec"), col("nrm").as("cnrm"))
       seeds.write.mode("overwrite").parquet(s"$tmp/centroids")
-      assignToCentroids(b, spark.read.parquet(s"$tmp/centroids"))
-        .write.mode("overwrite").partitionBy("cent_id")
-        .parquet(s"$tmp/cells")
+      writeCells(assignToCentroids(b, spark.read.parquet(s"$tmp/centroids")), tmp)
     }
     dest
   }
@@ -1694,10 +1286,9 @@ object Similarity {
     // ×C blowup + vector-carrying groupBy AND an n-row vec_id join to
     // zip the two — at 100 TB, five corpus-scale exchanges on every
     // build, all gone
-    withPqCodes(assignToCentroids(b, readCentroids(embeddings, path)),
+    writeCells(withPqCodes(assignToCentroids(b, readCentroids(embeddings, path)),
         pqBooksRow(embeddings, m, ks, subDim), m, subDim)
-      .select("vec_id", "cent_id", "codes")
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/cells")
+      .select("vec_id", "cent_id", "codes"), path)
   }
 
   // read-back of the just-written centroid table so the assignment and
@@ -1768,8 +1359,8 @@ object Similarity {
     * rows, never re-trained — the PQ analog of never moving centroids)
     * and assigned to the standing IVF centroids, then appended as new
     * cell files of (vec_id, codes). O(|batch|) rows written, corpus
-    * cells untouched, idempotent per batchTag via the same fold-ledger
-    * markers — so the serving tier ingests vectors at code size
+    * cells untouched, idempotent per batchTag via the same fold
+    * ledger — so the serving tier ingests vectors at code size
     * (~4 bytes each at the defaults) with zero index rewrites, and
     * drift is governed by the same advisor/rebuild pair as plain IVF.
     */

@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   * etl/pipeline.py:557-568 — a sharded 100 TB ingest tier is not.)
   *
   * Mechanics: one `_writer.lock` file per lineage, created with the
-  * filesystem's ATOMIC create-if-absent primitive (java.nio
-  * CREATE_NEW on `file:`, `FileSystem.create(overwrite=false)` on
-  * HDFS — both one atomic metadata op). The scheme contract is
+  * filesystem's ATOMIC create-if-absent primitive ([[createIfAbsent]]:
+  * a hard link on `file:`, a rename on HDFS — both one atomic metadata
+  * op). The scheme contract is
   * ENFORCED, not just noted: schemes without an atomic
   * create-if-absent (object stores) are REFUSED with a clear message
   * unless `spark.graft.index.writerLeaseAllowNonAtomic=true` opts
@@ -139,12 +139,11 @@ object WriterLease {
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger(WriterLease.getClass)
 
-  /** Schemes whose create-if-absent ([[tryCreate]]) is genuinely one
-    * atomic op: java.nio CREATE_NEW (O_CREAT|O_EXCL) on `file:`, a
-    * single namenode create on `hdfs:`/`viewfs:`/`webhdfs:`. Object
-    * stores (s3a/gs/abfs/oss/...) have no create-if-absent primitive —
-    * Hadoop's `create(overwrite=false)` there is exists-then-PUT, a
-    * check-then-act the whole protocol's safety rests on NOT being.
+  /** Schemes whose create-if-absent ([[createIfAbsent]]) is genuinely
+    * one atomic op: link(2) on `file:`, a single namenode rename on
+    * `hdfs:`/`viewfs:`/`webhdfs:`. Object stores (s3a/gs/abfs/oss/...)
+    * have no create-if-absent primitive — there it is exists-then-PUT,
+    * a check-then-act the whole protocol's safety rests on NOT being.
     */
   private val AtomicCreateSchemes = Set("file", "hdfs", "viewfs", "webhdfs")
   private val nonAtomicWarned =
@@ -259,31 +258,40 @@ object WriterLease {
       } finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  // atomic create-if-absent, scheme-specific for the same reason as
-  // Similarity.flipCellsManifest: RawLocalFileSystem's create(false)
-  // is check-then-create (not atomic); java.nio CREATE_NEW is one
-  // open(O_CREAT|O_EXCL). HDFS create(overwrite=false) is one atomic
-  // namenode op.
   private def tryCreate(
-      fs: org.apache.hadoop.fs.FileSystem, lock: Path): Boolean = {
-    fs.mkdirs(lock.getParent)
-    val bytes = holderId.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      fs: org.apache.hadoop.fs.FileSystem, lock: Path): Boolean =
+    createIfAbsent(fs, lock,
+      holderId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** THE atomic create-if-absent of the maintained indexes — the lease's
+    * lock file and every commit of a cells layout's log
+    * ([[CellsLog]]): `bytes` land at `path` only if nothing stands
+    * there, and the file appears whole or not at all. The bytes go to a
+    * temp sibling first; the claim is then ONE atomic metadata op,
+    * scheme-specific because Hadoop's local create(overwrite=false) is
+    * check-then-create: a hard link on `file:` (link(2) fails with
+    * EEXIST), a rename on HDFS (one namenode op that fails if the
+    * target exists). Elsewhere the check-then-rename is best-effort —
+    * [[enforceSchemeContract]] refuses those schemes by default.
+    */
+  private[graft] def createIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+      path: Path, bytes: Array[Byte]): Boolean = {
+    fs.mkdirs(path.getParent)
+    val tmp = new Path(path.getParent, s".${path.getName}.${System.nanoTime()}.tmp")
     if (fs.getUri.getScheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(fs.makeQualified(lock).toUri.getPath),
-          bytes, java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try {
-        val out = fs.create(lock, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.io.IOException => false // HDFS wraps AlreadyBeingCreated
-      }
+      def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+      java.nio.file.Files.write(local(tmp), bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      try { java.nio.file.Files.createLink(local(path), local(tmp)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(local(tmp))
+    } else if (fs.exists(path)) false
+    else {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      val won = try fs.rename(tmp, path) catch { case _: java.io.IOException => false }
+      if (!won) fs.delete(tmp, false)
+      won
     }
   }
 

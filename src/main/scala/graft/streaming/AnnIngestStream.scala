@@ -72,7 +72,7 @@ object AnnIngestStream {
     * order-independent, duplicate-safe rows, so micro-batch boundaries
     * are invisible in the served index — delete(b1); delete(b2) ≡
     * delete(b1 ∪ b2), and at-least-once replays converge even without
-    * the ledger marker (which just skips the redundant append). The
+    * the delete ledger (which just skips the redundant append). The
     * q111→q112 stream≡batch symmetry, deletion side.
     */
   def drainDeletes(

@@ -15,9 +15,8 @@ import graft.operators.Similarity
   * the layout at `layoutPath`, each fold taking the writer lease like
   * any production ingest job. Every fold runs TWICE — the second call
   * no-ops (the in-process memo here; the parent separately replays a
-  * child's tag from ITS process, which must no-op on the filesystem
-  * fold marker — cross-process idempotence alongside mutual
-  * exclusion). The parent asserts the union landed exactly once.
+  * child's tag from ITS process, which must no-op on the layout log's
+  * fold ledger — cross-process idempotence alongside mutual exclusion). The parent asserts the union landed exactly once.
   */
 object FoldRacer {
   def main(args: Array[String]): Unit = {

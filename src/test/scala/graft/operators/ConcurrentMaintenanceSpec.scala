@@ -8,8 +8,8 @@ import graft.SparkSpec
 
 /** The atomic-promote contract, pinned under real concurrency: a
   * maintained layout's compaction promotes a new generation with one
-  * `cells.MANIFEST` pointer flip, so BOTH races that used to need a
-  * maintenance window are now safe:
+  * commit of the layout's log ([[CellsLog]]), so BOTH races that used
+  * to need a maintenance window are now safe:
   *
   *   1. a scan already IN FLIGHT when the promote lands keeps reading
   *      the old generation's (still physical) files to completion, and
@@ -152,7 +152,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     val (path, _) = Similarity.ensureIvfIndex(
       emb.filter($"vec_id" % 10 =!= 0),
       srcTag = s"flip-${System.nanoTime()}")
-    Similarity.compactIvfCells(spark, path) // first promote: manifest exists
+    Similarity.compactIvfCells(spark, path) // first promote: the log names a new generation
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err  = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val n    = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -279,63 +279,6 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       spark.conf.unset("spark.graft.index.maxStaleGenerations")
   }
 
-  test("torn-manifest states resolve to the legitimate generation or refuse — never guess") {
-    // activeCellsDir's refuse-to-guess path is only reachable through
-    // crash windows; plant each torn state directly and assert the
-    // resolve-or-refuse contract (r18 verdict ask #8)
-    val fsRoot = java.nio.file.Files
-      .createTempDirectory("graft-torn").toString
-    val fs = new org.apache.hadoop.fs.Path(fsRoot)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def mk(parts: String*): String = {
-      val p = new org.apache.hadoop.fs.Path(
-        fsRoot, s"layout${System.nanoTime()}")
-      fs.mkdirs(p)
-      parts.foreach {
-        case s if s.startsWith("MANIFEST=") =>
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(p, "cells.MANIFEST"), true)
-          try out.write(s.stripPrefix("MANIFEST=").getBytes("UTF-8"))
-          finally out.close()
-        case d => fs.mkdirs(new org.apache.hadoop.fs.Path(p, d))
-      }
-      p.toString
-    }
-    // (1) never compacted: no manifest, cells/ only -> cells
-    assert(Similarity.activeCellsDir(spark, mk("cells"))
-      .endsWith("/cells"))
-    // (2) crash BEFORE the first-ever flip: gen dir exists, no
-    // manifest, cells/ intact -> cells stays active (and resolves
-    // immediately, no retry penalty — the r18 ADVICE low)
-    val t0 = System.nanoTime()
-    assert(Similarity.activeCellsDir(
-        spark, mk("cells", "cells.g1111111111111111111"))
-      .endsWith("/cells"))
-    assert((System.nanoTime() - t0) / 1e6 < 300,
-      "the documented crash-before-first-flip state must resolve " +
-        "without paying the manifest-absence retry loop")
-    // (3) manifest present -> named generation wins even with siblings
-    assert(Similarity.activeCellsDir(spark,
-        mk("cells", "cells.g1111111111111111111",
-          "MANIFEST=cells.g1111111111111111111"))
-      .endsWith("/cells.g1111111111111111111"))
-    // (4) TORN: generations exist, no manifest, no cells/ -> refuse
-    // loudly (file: flips atomically, so this is never a transient gap)
-    val torn = intercept[IllegalArgumentException] {
-      Similarity.activeCellsDir(
-        spark, mk("cells.g1111111111111111111", "cells.g2222222222222222222"))
-    }
-    assert(torn.getMessage.contains("refusing"),
-      s"torn layout must refuse, got: ${torn.getMessage}")
-    // (5) corrupt manifest content -> refuse, never resolve a foreign dir
-    val corrupt = intercept[IllegalArgumentException] {
-      Similarity.activeCellsDir(spark,
-        mk("cells", "MANIFEST=../../etc"))
-    }
-    assert(corrupt.getMessage.contains("corrupt"))
-    fs.delete(new org.apache.hadoop.fs.Path(fsRoot), true)
-  }
-
   test("generation order is NUMERIC across stamp widths — band resolution picks the true newest") {
     // two promotes from two driver JVMs carry stamps of different digit
     // width (nanoTime is boot-relative; epoch-nanos only since this
@@ -373,14 +316,14 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       try out.write(1) finally out.close()
     }
     mkGen("cells.g998"); mkGen("cells.g999"); mkGen("cells.g1000")
-    // legacy debris carries no generation number: age-gated only,
-    // never a count-bound victim
+    // debris no commit names carries no generation number: age-gated
+    // only, never a count-bound victim
     mkGen("cells.old1")
-    val mf = fs.create(
-      new org.apache.hadoop.fs.Path(layout, "cells.MANIFEST"), true)
-    try mf.write("cells.g1000".getBytes("UTF-8")) finally mf.close()
+    Seq("cells.g998", "cells.g999", "cells.g1000").zipWithIndex.foreach {
+      case (g, v) => assert(CellsLog.write(spark, layout, CellsLog.Commit(v.toLong, g)))
+    }
     spark.conf.set("spark.graft.index.maxStaleGenerations", "1")
-    try Similarity.recoverCells(spark, layout)
+    try Similarity.retireCells(spark, layout)
     finally spark.conf.unset("spark.graft.index.maxStaleGenerations")
     // numeric: g999 is the newest superseded (kept within K=1), g998
     // the excess (dropped regardless of age). Lexical order would not
@@ -398,7 +341,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
 
   test("IVF: a delete racing the compaction flip is merged forward — doc stays deleted") {
     // the lost-tombstone race, driven on purpose: a delete lands
-    // BETWEEN compactIvfCells' tombstone snapshot and its manifest
+    // BETWEEN compactIvfCells' tombstone snapshot and its promote
     // flip (a lease-broken or pre-lease writer — the lease's per-JVM
     // re-entrancy lets the seam replay it on this thread). Its
     // tombstone settles in the generation about to be superseded and
@@ -504,40 +447,6 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     assert(!Dedup.liveIndexTable(spark, bt, bt).select("doc_id")
         .distinct().as[Long].collect().toSet.contains(2L),
       "the replayed tag must remain effective after the forward")
-  }
-
-  test("crash-before-first-flip fallback resolves with ZERO wait-loop retries") {
-    // the legitimate 'cells/ standing, generation dir present, no
-    // manifest' crash state (first-ever compaction died before its
-    // flip) must resolve to cells/ IMMEDIATELY — the absence wait loop
-    // (8×50 ms + globStatus RPCs, for non-atomic schemes mid-flip) has
-    // no business on this path, and on file:/hdfs: there is never a
-    // gap to wait out at all. Counter-based, so timing noise can't
-    // flake it.
-    val root   = java.nio.file.Files.createTempDirectory("graft-crashres")
-    val layout = s"$root/layout"
-    val fs = new org.apache.hadoop.fs.Path(layout)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def mkDir(name: String): Unit = {
-      val d = new org.apache.hadoop.fs.Path(layout, name)
-      fs.mkdirs(d)
-      val out = fs.create(new org.apache.hadoop.fs.Path(d, "part-0"), true)
-      try out.write(1) finally out.close()
-    }
-    mkDir("cells")       // gen 0, still active
-    mkDir("cells.g777")  // the crashed rewrite, never promoted
-    val before = Similarity.manifestWaitRetries.get()
-    assert(Similarity.activeCellsDir(spark, layout) ==
-      new org.apache.hadoop.fs.Path(layout, "cells").toString)
-    // and the fully-promoted absent-cells state on an atomic scheme:
-    // ALSO zero retries (file: flips atomically — nothing to wait for)
-    fs.delete(new org.apache.hadoop.fs.Path(layout, "cells"), true)
-    intercept[IllegalArgumentException] {
-      Similarity.activeCellsDir(spark, layout) // torn on file:: refuse NOW
-    }
-    assert(Similarity.manifestWaitRetries.get() == before,
-      "neither resolution may enter the manifest-absence wait loop")
-    fs.delete(new org.apache.hadoop.fs.Path(root.toString), true)
   }
 
   test("two threads racing a stale ensureMinhashBandIndex rebuild do not clobber each other") {

@@ -65,9 +65,12 @@ class MaintenanceFuzzSpec extends SparkSpec {
     }
   }
 
-  // IVF / IVF-PQ layout: the same three invariants over the manifest
-  // directory — live cells ≡ model, ≤ maxStale superseded generation
-  // dirs, tombstone files only under `<active>/_tombstones/`
+  // IVF / IVF-PQ layout: the same three invariants over the log and the
+  // store — live cells ≡ model, ≤ maxStale superseded generation dirs,
+  // tombstone files only under `<active>/_tombstones/` — plus replay ≡
+  // physical store: the latest commit's generation and every tombstone
+  // file it lists exist, and every cells* dir is named by a retained
+  // commit or is a crashed rewrite younger than gcStaleHours
   private def checkIvfStep(seed: Int, step: Int, path: String,
       want: Set[Long]): Unit = {
     val live = Similarity.liveCells(spark, path).select("vec_id")
@@ -80,12 +83,28 @@ class MaintenanceFuzzSpec extends SparkSpec {
       Similarity.activeCellsDir(spark, path)).getName
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .map(_.getPath.getName).filter(_.matches("cells(\\.g\\d+)?"))
+    val named = CellsLog.all(spark, path).map(_.gen).toSet
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+      .filter(_.getPath.getName.startsWith("cells"))
+    val gens = dirs.map(_.getPath.getName).filter(named)
     if (maxStale > 0)
       assert(gens.count(_ != active) <= maxStale, stepFailure(seed, step,
         s"${gens.count(_ != active)} superseded generations stand " +
           s"(bound $maxStale): ${gens.sorted}", ""))
+    val cutoff = System.currentTimeMillis() -
+      IndexLifecycle.Policy.of(spark).gcStaleHours * 3600L * 1000L
+    dirs.filterNot(d => named(d.getPath.getName)).foreach { d =>
+      val newest = (d.getModificationTime +: graft.util.LocalFs
+        .walkFiles(new java.io.File(d.getPath.toUri.getPath)).map(_.lastModified())).max
+      assert(newest > cutoff, stepFailure(seed, step,
+        s"${d.getPath.getName} is named by no retained commit and is older " +
+          "than gcStaleHours", ""))
+    }
+    val latest = CellsLog.latest(spark, path)
+    (CellsLog.genDir(path, latest) +: CellsLog.tombstoneFiles(path, latest)).foreach { f =>
+      assert(fs.exists(new org.apache.hadoop.fs.Path(f)), stepFailure(seed, step,
+        s"commit ${latest.version} names $f, which does not exist", ""))
+    }
     val foreign = Similarity.standingTombstoneFiles(spark, path).filterNot { f =>
       val dir = new org.apache.hadoop.fs.Path(f).getParent
       dir.getName == "_tombstones" && dir.getParent.getName == active
@@ -266,19 +285,15 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
     // CONCURRENT probe pressure (the r17 ask): a thread probes the
     // layout continuously while the op sequence folds/deletes/compacts
-    // under it — the manifest promote means every probe must succeed,
-    // whatever maintenance lands mid-flight. The one excluded window is
-    // the LEGACY crash-sim (case 3), which deliberately makes the
-    // layout headless the way only the pre-manifest binary could; the
-    // `legacyGate` serializes probes against that injected state.
-    val legacyGate = new Object
+    // under it — the log promote means every probe must succeed,
+    // whatever maintenance lands mid-flight, crashes included.
     val stopProbes = new java.util.concurrent.atomic.AtomicBoolean(false)
     val probeErr   = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val probeCount = new java.util.concurrent.atomic.AtomicInteger(0)
     val qvFuzz = emb.filter($"vec_id" === 0L).select($"embedding")
       .as[Array[Float]].head()
     val prober = new Thread(() => {
-      try while (!stopProbes.get()) legacyGate.synchronized {
+      try while (!stopProbes.get()) {
         val got = Similarity.ivfProbe(spark, path, qvFuzz.toSeq, k = 5,
           nProbe = 4).select("vec_id").as[Long].collect()
         assert(got.nonEmpty, "concurrent probe returned no rows")
@@ -309,24 +324,19 @@ class MaintenanceFuzzSpec extends SparkSpec {
         case 2 => // compaction (purges standing tombstones)
           Similarity.compactIvfCells(spark, path)
           tombstoned = Set.empty
-        case 3 => legacyGate.synchronized {
-          // LEGACY headless crash (the pre-manifest binary's
-          // two-rename gap): the ACTIVE generation renamed away, the
-          // copy left as cells.old* — the next locked maintenance
-          // entry must heal it via recoverCells. The manifest promote
-          // itself can no longer produce this state, so probes are
-          // gated out of this one injected window.
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val cells = new org.apache.hadoop.fs.Path(
-            Similarity.activeCellsDir(spark, path))
-          val old = new org.apache.hadoop.fs.Path(
-            path, s"cells.old${System.nanoTime()}")
-          assert(fs.rename(cells, old), "crash-sim rename failed")
-          Similarity.compactIvfCells(spark, path) // locked entry heals + compacts
-          tombstoned = Set.empty
-          assert(fs.exists(cells), "recoverCells did not heal the layout")
-        }
+        case 3 =>
+          // the crash the log design can have: a compaction that dies
+          // between its rewrite and its commit. The old generation
+          // stays active with its tombstones; the rewrite is an orphan
+          // the retention drops once aged
+          val active = Similarity.activeCellsDir(spark, path)
+          IndexLifecycle.compactRaceHook =
+            Some(_ => throw new IllegalStateException("crash before commit"))
+          try intercept[IllegalStateException](
+            Similarity.compactIvfCells(spark, path, force = true))
+          finally IndexLifecycle.compactRaceHook = None
+          assert(Similarity.activeCellsDir(spark, path) == active,
+            "a compaction that never committed must not promote")
         case _ => // probe under whatever state stands: k results, no
           // tombstoned id served (the live view is immediate)
           val qv = emb.filter($"vec_id" === 0L).select($"embedding")
@@ -336,8 +346,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
           assert(got.length == 5)
           assert(!got.exists(deleted), s"seed=$seed: probe served a deleted id")
       }
-      // at an op boundary the layout is never headless (case 3 heals
-      // inside its gate), so the check runs beside the prober
+      // the check runs beside the prober
       checkIvfStep(seed, step, path, folded -- deleted)
     }
 

@@ -195,12 +195,12 @@ class MaintenanceStressSpec extends SparkSpec {
     }
 
     def crashCompact(): Unit = {
-      // LEGACY headless crash (pre-manifest two-rename gap): the
-      // ACTIVE generation staged aside — the next maintenance entry
-      // must heal THEN purge
-      val cells = new java.io.File(Similarity.activeCellsDir(spark, path))
-      val old   = new java.io.File(s"$path/cells.old${System.nanoTime()}")
-      assert(cells.renameTo(old), s"op $opN: test setup rename failed")
+      // a compaction that dies between its rewrite and its commit: the
+      // old generation stays active with its tombstones, the rewrite is
+      // an orphan — the next compaction must still purge
+      IndexLifecycle.compactRaceHook = Some(_ => throw new IllegalStateException("crash"))
+      try intercept[IllegalStateException](Similarity.compactIvfCells(spark, path, force = true))
+      finally IndexLifecycle.compactRaceHook = None
       compact()
     }
 

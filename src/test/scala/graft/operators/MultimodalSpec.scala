@@ -395,4 +395,13 @@ class MultimodalSpec extends SparkSpec {
       assert(got(id).timescale == 30L)
     }
   }
+
+  test("the media fixture path resolves under the working directory unless overridden") {
+    val dflt = Multimodal.mediaFixturePath(Map.empty)
+    assert(dflt == new java.io.File(System.getProperty("user.dir"),
+        "fixtures/media.parquet").getAbsolutePath,
+      s"with GRAFT_MEDIA_FIXTURE unset the fixture must lie under user.dir: $dflt")
+    assert(Multimodal.mediaFixturePath(Map("GRAFT_MEDIA_FIXTURE" -> "/data/m.parquet")) ==
+      "/data/m.parquet")
+  }
 }

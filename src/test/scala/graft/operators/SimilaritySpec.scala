@@ -590,13 +590,9 @@ class SimilaritySpec extends SparkSpec {
     // replay via the app memo: no new files
     Similarity.foldIntoIvfIndex(batch, path, batchTag = "b1")
     assert(cellFiles == after)
-    // fresh-JVM-shaped replay (memo cold, marker present): preburn the
-    // marker for a NEW tag, then fold under it — still a no-op
-    val tagHash = java.security.MessageDigest.getInstance("MD5")
-      .digest("preburned".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val m = new java.io.File(s"$path/folds/$tagHash")
-    m.getParentFile.mkdirs()
-    java.nio.file.Files.write(m.toPath, "preburned".getBytes("UTF-8"))
+    // fresh-JVM-shaped replay (memo cold, tag in the log's ledger):
+    // preburn the ledger for a NEW tag, then fold under it — still a no-op
+    CellsLog.commit(spark, path, "fold")(c => c.copy(folds = c.folds + "preburned"))
     Similarity.foldIntoIvfIndex(batch, path, batchTag = "preburned")
     assert(cellFiles == after, "a tag already in the fold ledger must not re-append")
     // a folded vector is immediately servable: its own embedding finds it
@@ -630,12 +626,10 @@ class SimilaritySpec extends SparkSpec {
     assert(rows == rowsBefore, "compaction must not change a single row")
     assert(probe == probeBefore, "probes must be identical after compaction")
     // the fold ledger survives compaction (only cells/ was rewritten):
-    // a fresh JVM replaying b1/b2 would still find both markers
+    // a fresh JVM replaying b1/b2 would still find both tags
     Seq("b1", "b2").foreach { tag =>
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      assert(new java.io.File(s"$path/folds/$h").isFile,
-        s"fold marker for $tag must survive compaction")
+      assert(CellsLog.latest(spark, path).folds(tag),
+        s"fold ledger entry for $tag must survive compaction")
     }
     val f = cellFiles
     Similarity.foldIntoIvfIndex(batch.filter($"vec_id" % 20 === 0), path, "b1")
@@ -784,7 +778,7 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(e.getMessage.contains("compact"))
     // compaction purges physically and clears the tombstone set; the
-    // delete ledger (dels/ markers) survives
+    // delete ledger survives
     Similarity.compactIvfCells(spark, path)
     assert(Similarity.standingTombstoneFiles(spark, path).isEmpty,
       "compaction must leave the promoted generation with no standing tombstones")
@@ -792,10 +786,8 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id", $"cent_id".cast("long"), $"q", $"nrm")
       .as[(Long, Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
     assert(physical == want, "compaction must purge exactly the tombstoned rows")
-    val dh = java.security.MessageDigest.getInstance("MD5")
-      .digest("d1".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(new java.io.File(s"$path/dels/$dh").isFile,
-      "delete marker must survive compaction")
+    assert(CellsLog.latest(spark, path).dels("d1"),
+      "delete ledger entry must survive compaction")
     // after the purge the id folds again as new — the replace recipe
     Similarity.foldIntoIvfIndex(
       emb.filter($"vec_id" % 20 === 10), path, batchTag = "b2")
@@ -890,35 +882,84 @@ class SimilaritySpec extends SparkSpec {
     assert(tombRows() == rows)
   }
 
-  test("recoverCells: a crashed compaction window heals on the next maintenance entry") {
+  test("a compaction that dies before its commit leaves its rewrite an orphan retention drops") {
     val emb    = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val corpus = emb.filter($"vec_id" % 10 =!= 0)
     val (path, _) = Similarity.ensureIvfIndex(corpus,
-      srcTag = s"recover-${System.nanoTime()}")
+      srcTag = s"crashcommit-${System.nanoTime()}")
     Similarity.foldIntoIvfIndex(
       emb.filter($"vec_id" % 10 === 0), path, "b1")
-    def rows = spark.read.parquet(Similarity.activeCellsDir(spark, path))
+    def rows = Similarity.liveCells(spark, path)
       .select($"vec_id").as[Long].collect().toSeq.sorted
     val before = rows
-    // simulate a LEGACY pre-manifest crash state: cells staged aside,
-    // layout headless (the old two-rename promote's gap; the manifest
-    // promote can no longer produce this, but layouts written by the
-    // old binary can still carry it)
-    val cells = new java.io.File(s"$path/cells")
-    val old   = new java.io.File(s"$path/cells.old12345")
-    assert(cells.renameTo(old), "test setup: stage cells aside")
-    assert(!cells.exists())
-    // the next locked maintenance entry must heal, then do its work —
-    // instead of ensure* rebuilding and discarding the fold ledger
-    Similarity.compactIvfCells(spark, path)
-    assert(rows == before, "healed layout must hold every pre-crash row")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest("b1".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(new java.io.File(s"$path/folds/$h").isFile,
-      "the fold ledger must survive the heal")
+    val active = Similarity.activeCellsDir(spark, path)
+    // the crash the log design can have: the rewrite landed, the
+    // commit never did
+    IndexLifecycle.compactRaceHook = Some(_ => throw new IllegalStateException("crash"))
+    try intercept[IllegalStateException](Similarity.compactIvfCells(spark, path))
+    finally IndexLifecycle.compactRaceHook = None
+    def dirs = new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("cells")).toSet
+    val orphan = dirs - "cells"
+    assert(orphan.size == 1, s"the crashed rewrite must stand as one orphan: $dirs")
+    assert(Similarity.activeCellsDir(spark, path) == active && rows == before,
+      "the old generation must stay active with every row")
+    assert(CellsLog.latest(spark, path).folds("b1"), "the fold ledger is untouched")
+    // fresh, it may be a live rewrite elsewhere: the age gate keeps it
+    Similarity.deleteFromIvfIndex(Seq(-2L).toDF("vec_id"), path, "gc-d0")
+    assert(orphan.subsetOf(dirs), "a FRESH uncommitted rewrite must survive retention")
+    // aged past gcStaleHours, the next maintenance entry drops it
+    val aged = System.currentTimeMillis() - 25L * 3600 * 1000
+    java.nio.file.Files.walk(new java.io.File(path, orphan.head).toPath)
+      .forEach(f => f.toFile.setLastModified(aged))
+    Similarity.deleteFromIvfIndex(Seq(-1L).toDF("vec_id"), path, "gc-d1")
+    assert(dirs == Set("cells"), s"the aged orphan must be retired: $dirs")
+    assert(rows == before)
   }
 
-  test("recoverCells: aged superseded generations and legacy leftovers are GC'd, fresh ones kept") {
+  test("a cells layout keeps its lineage in one log: no manifest, markers or stamp files") {
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    val (path, _) = Similarity.ensureIvfIndex(emb.filter($"vec_id" % 10 =!= 0),
+      srcTag = s"logonly-${System.nanoTime()}")
+    Similarity.foldIntoIvfIndex(emb.filter($"vec_id" % 10 === 0), path, "b1")
+    Similarity.deleteFromIvfIndex(emb.filter($"vec_id" % 20 === 10).select("vec_id"),
+      path, "d1")
+    Similarity.compactIvfCells(spark, path)
+    val names = graft.util.LocalFs.walkFiles(new java.io.File(path)).map(_.getName).toSet ++
+      new java.io.File(path).listFiles().map(_.getName)
+    assert(!names.exists(n => n.contains("MANIFEST") || n == "folds" || n == "dels" ||
+        n.contains("_graft_nfiles")),
+      s"a fresh layout must hold no pre-log metadata: ${names.toSeq.sorted.take(20)}")
+    val c = CellsLog.latest(spark, path)
+    assert(c.folds == Set("b1") && c.dels == Set("d1") && c.nfiles.isDefined &&
+      c.tombstones.isEmpty && c.op == "compact")
+    // a version is created once: a second writer of the same version loses
+    assert(!CellsLog.write(spark, path, c.copy(gen = "cells")))
+    assert(CellsLog.latest(spark, path) == c)
+  }
+
+  test("two writers racing one log version: exactly one wins, whole") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lograce").toString
+    (0 until 20).foreach { v =>
+      val barrier = new java.util.concurrent.CyclicBarrier(4)
+      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+      val ts = (0 until 4).map { w =>
+        new Thread(() => {
+          barrier.await()
+          if (CellsLog.write(spark, dir, CellsLog.Commit(v.toLong, s"cells.g$w",
+              folds = Set(s"writer-$w")))) wins.incrementAndGet()
+          ()
+        })
+      }
+      ts.foreach(_.start()); ts.foreach(_.join())
+      assert(wins.get() == 1, s"version $v: ${wins.get()} writers won")
+      val c = CellsLog.latest(spark, dir)
+      assert(c.version == v && c.folds == Set(s"writer-${c.gen.stripPrefix("cells.g")}"),
+        s"version $v must hold exactly its winner's commit: $c")
+    }
+  }
+
+  test("retireCells: aged superseded generations and legacy leftovers are GC'd, fresh ones kept") {
     val emb    = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val corpus = emb.filter($"vec_id" % 10 =!= 0)
     val (path, _) = Similarity.ensureIvfIndex(corpus,
@@ -927,37 +968,44 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id").as[Long].collect().toSeq.sorted
     val before = rows
     // a REAL compaction supersedes the original cells/ generation: the
-    // manifest flips, the old dir stays for in-flight scans — it must
-    // survive while fresh and go once aged past gcStaleHours
+    // promote commit names a new one, the old dir stays for in-flight
+    // scans — it must survive while fresh and go once aged past
+    // gcStaleHours
     Similarity.compactIvfCells(spark, path)
     val gen0 = new java.io.File(s"$path/cells")
     assert(gen0.isDirectory,
       "the superseded generation must survive its own promote (in-flight scans)")
-    assert(Similarity.activeCellsDir(spark, path).endsWith(".MANIFEST") == false &&
-      !Similarity.activeCellsDir(spark, path).endsWith("/cells"),
-      "after compaction the manifest must name a new generation")
-    // plant legacy leftovers from the pre-manifest binary alongside:
-    // everything is age-gated — a fresh dir may be an in-flight scan's
-    // generation or a LIVE cross-process rewrite (lockFor is JVM-local)
-    val oldA  = new java.io.File(s"$path/cells.old99999")    // aged legacy copy
+    assert(!Similarity.activeCellsDir(spark, path).endsWith("/cells"),
+      "after compaction the log must name a new generation")
+    // plant leftovers no commit names alongside: everything is
+    // age-gated — a fresh dir may be a LIVE cross-process rewrite
+    // (lockFor is JVM-local)
+    val oldA  = new java.io.File(s"$path/cells.old99999")    // aged leftover
     val cmpL  = new java.io.File(s"$path/cells.compact88888") // live (fresh)
     assert(oldA.mkdir() && cmpL.mkdir(), "test setup: plant stale siblings")
     java.nio.file.Files.write(oldA.toPath.resolve("leftover.parquet"),
       Array[Byte](1, 2, 3))
-    val aged = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 25L * 3600 * 1000)
-    java.nio.file.Files.setLastModifiedTime(oldA.toPath.resolve("leftover.parquet"), aged)
-    java.nio.file.Files.setLastModifiedTime(oldA.toPath, aged)
-    // age the superseded generation too (newest-file liveness key)
-    java.nio.file.Files.walk(gen0.toPath).forEach(f =>
-      java.nio.file.Files.setLastModifiedTime(f, aged))
+    val aged = System.currentTimeMillis() - 25L * 3600 * 1000
+    java.nio.file.Files.setLastModifiedTime(oldA.toPath.resolve("leftover.parquet"),
+      java.nio.file.attribute.FileTime.fromMillis(aged))
+    java.nio.file.Files.setLastModifiedTime(oldA.toPath,
+      java.nio.file.attribute.FileTime.fromMillis(aged))
+    // age the superseded generation too: its last touch is the time of
+    // the last commit naming it, so re-date those commits
+    val fs = CellsLog.fsOf(spark, path)
+    CellsLog.all(spark, path).filter(_.gen == "cells").foreach { c =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_log/${c.version}.json"), false)
+      assert(CellsLog.write(spark, path, c.copy(timeMs = aged)))
+    }
     // the next locked maintenance entry garbage-collects the aged ones
     Similarity.foldIntoIvfIndex(
       emb.filter($"vec_id" % 10 === 0), path, "gc1")
     assert(!oldA.exists() && !gen0.exists(),
-      "AGED legacy copies and superseded generations must be deleted")
+      "AGED leftovers and superseded generations must be deleted")
     assert(cmpL.exists(),
       "a FRESH sibling (possibly a live cross-process rewrite) must survive")
+    assert(!CellsLog.all(spark, path).exists(_.gen == "cells"),
+      "commits naming only dropped generations must be truncated")
     cmpL.delete()
     assert(rows.toSet.subsetOf(spark.read.parquet(Similarity.activeCellsDir(spark, path))
         .select($"vec_id").as[Long].collect().toSet),
@@ -1342,7 +1390,8 @@ class SimilaritySpec extends SparkSpec {
       .map { case (id, v) => (id, v.toSeq) }
     def ids(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = ids()
-    val (out, staged) = Similarity.ivfProbeBatchOwned(spark, path, qs, 5, 4)
+    val (out, staged) =
+      Similarity.ivfProbeBatchDfOwned(spark, path, qs.toDF("query_id", "emb"), 5, 4)
     val added = ids() -- before
     assert(added.nonEmpty, "the probe map must be staged")
     assert(out.count() > 0)
@@ -1375,6 +1424,7 @@ class SimilaritySpec extends SparkSpec {
     }.flatten
     cellRows.toDF("vec_id", "q", "nrm", "cent_id")
       .write.partitionBy("cent_id").parquet(s"$dir/cells")
+    CellsLog.init(spark, dir)
     val queries = (0 until 8).map { i =>
       (i.toLong, Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
     }
@@ -1402,72 +1452,24 @@ class SimilaritySpec extends SparkSpec {
       s"distributed ranking diverged from the driver loop:\n$got\nvs\n$expected")
   }
 
-  test("a tombstones/ dir with no data files reads as no tombstones and heals") {
-    val emb    = spark.read.parquet(s"${sf()}/embeddings.parquet")
-    val corpus = emb.filter($"vec_id" % 10 =!= 0)
-    val batch  = emb.filter($"vec_id" % 10 === 0).select("vec_id", "embedding")
-    val (path, _) = Similarity.ensureIvfIndex(corpus,
-      srcTag = s"emptytomb-${System.nanoTime()}")
-    // the crash shape: compaction purged every tombstone FILE but died
-    // before deleting the dir — every reader must treat it as "no
-    // tombstones" instead of failing schema inference on an empty dir
-    val tombDir = new java.io.File(s"$path/tombstones")
-    assert(tombDir.mkdirs())
-    val n = Similarity.liveCells(spark, path).count()
-    assert(n == corpus.count(), "empty tombstones dir must not drop rows")
-    val qv = emb.filter($"vec_id" === 1L).select($"embedding")
-      .as[Array[Float]].head()
-    assert(Similarity.ivfProbe(spark, path, qv.toSeq, k = 5, nProbe = 4)
-      .count() == 5L)
-    assert(Similarity.ivfCellStats(spark, path)
-      .agg(sum($"n_vecs")).as[Long].head() == n)
-    // marker-only contents (_/. prefixed) read as empty too
-    assert(new java.io.File(tombDir, "_SUCCESS").createNewFile())
-    assert(Similarity.liveCells(spark, path).count() == n)
-    assert(new java.io.File(tombDir, "_SUCCESS").delete())
-    // the fold path's re-insert guard sees no tombstones and the fold
-    // lands; a FRESH empty dir survives the GC (the age gate protects
-    // a cross-process delete whose commit hasn't staged yet) ...
-    Similarity.foldIntoIvfIndex(batch, path, batchTag = "b1")
-    assert(tombDir.exists(),
-      "a fresh empty tombstones dir must NOT be GC'd (age gate)")
-    // ... while a STALE one (the real crash leftover, old by the next
-    // maintenance entry) is collected
-    assert(tombDir.setLastModified(
-      System.currentTimeMillis() - 48L * 3600 * 1000))
-    Similarity.compactIvfCells(spark, path) // any locked maintenance entry
-    assert(!tombDir.exists(),
-      "recoverCells must GC a stale fully-empty tombstones dir")
-    assert(Similarity.liveCells(spark, path).count() ==
-      corpus.count() + batch.count())
-  }
-
-  test("liveCells rides out a transient cells/ absence (the compaction rename window)") {
+  test("a generation GC'd under a reader re-resolves from the newer commit, without sleeping") {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val (path, _) = Similarity.ensureIvfIndex(emb,
-      srcTag = s"renamewin-${System.nanoTime()}")
+      srcTag = s"gcreader-${System.nanoTime()}")
     val n = Similarity.liveCells(spark, path).count()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val cells = new org.apache.hadoop.fs.Path(path, "cells")
-    val aside = new org.apache.hadoop.fs.Path(path, "cells.aside")
-    // open the window deterministically: cells/ renamed away, restored
-    // 400 ms later from another thread — inside liveCells' ~1 s retry
-    // budget, far wider than the real two-rename gap
-    assert(fs.rename(cells, aside))
-    val restorer = new Thread(() => {
-      Thread.sleep(400L)
-      fs.rename(aside, cells)
-      ()
-    })
-    restorer.start()
-    try {
-      val got = Similarity.liveCells(spark, path).count()
-      assert(got == n, "probe through the rename window lost rows")
-    } finally {
-      restorer.join()
-      if (fs.exists(aside)) fs.rename(aside, cells) // restore on failure
-    }
+    // a reader resolves commit 0 ...
+    val stale = CellsLog.latest(spark, path)
+    // ... a promote lands and retention takes the generation it named
+    // (a reader slower than gcStaleHours / K promotes)
+    Similarity.compactIvfCells(spark, path)
+    val fs = CellsLog.fsOf(spark, path)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(CellsLog.genDir(path, stale)), true))
+    // the read of the stale commit re-resolves once from the newer
+    // commit: full rows, no retry budget to wait out
+    assert(Similarity.liveCellsFrom(spark, path, stale).count() == n)
+    // with NO newer commit the damaged layout fails instead of guessing
+    assert(fs.delete(new org.apache.hadoop.fs.Path(Similarity.activeCellsDir(spark, path)), true))
+    intercept[java.io.FileNotFoundException](Similarity.liveCells(spark, path))
   }
 
   test("tombstone-debt cap: a mass delete triggers compaction, bounding the broadcast side") {
@@ -1517,33 +1519,5 @@ class SimilaritySpec extends SparkSpec {
         path, batchTag = "b1")
       assert(Similarity.liveCells(spark, path).count() == emb.count())
     } finally spark.conf.unset(key)
-  }
-
-  test("legacy root tombstones/ rows: served as live deletes, migrated by compaction") {
-    // a layout whose last writer predates generation-scoped tombstones
-    // holds UN-consumed delete rows at `<path>/tombstones/` — readers
-    // must keep applying them, and one compaction must consume them,
-    // clear the legacy location, and leave the re-insert contract
-    // working (delete, compact, fold-again)
-    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
-    val (path, _) = Similarity.ensureIvfIndex(emb,
-      srcTag = s"legacytomb-${System.nanoTime()}")
-    emb.filter($"vec_id" % 20 === 10).select("vec_id")
-      .write.mode("append").parquet(s"$path/tombstones")
-    val nDel = emb.filter($"vec_id" % 20 === 10).count()
-    assert(Similarity.liveCells(spark, path).count() == emb.count() - nDel,
-      "legacy-location tombstones must be served as live deletes")
-    Similarity.compactIvfCells(spark, path)
-    assert(!new java.io.File(s"$path/tombstones").exists(),
-      "compaction must clear the legacy tombstone location")
-    assert(Similarity.standingTombstoneFiles(spark, path).isEmpty)
-    assert(spark.read.parquet(Similarity.activeCellsDir(spark, path)).count()
-        == emb.count() - nDel,
-      "legacy tombstones must be consumed physically by the rewrite")
-    Similarity.foldIntoIvfIndex(
-      emb.filter($"vec_id" % 20 === 10).select("vec_id", "embedding"),
-      path, batchTag = "legacy-refold")
-    assert(Similarity.liveCells(spark, path).count() == emb.count(),
-      "after the migration compaction the ids must fold again as new")
   }
 }
