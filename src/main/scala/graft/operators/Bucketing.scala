@@ -105,6 +105,14 @@ object Bucketing {
     }
   }
 
+  /** Drop the memo of `table`: it was dropped, so the next
+    * [[ensureBucketed]] must probe (and write) it again.
+    */
+  private[graft] def forget(spark: SparkSession, table: String): Unit = {
+    validated.remove(s"${spark.sparkContext.applicationId}|$table")
+    ()
+  }
+
   def ensureBucketed(
       df: DataFrame,
       table: String,

@@ -19,8 +19,6 @@ import graft.util.Checkpoints
   */
 object Dedup {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Hash-distribute on `key` across the session's default parallelism
     * with an EXPLICIT partition count, so an expensive per-row kernel
     * above it runs on every core. The count matters twice: a bare
@@ -449,248 +447,127 @@ object Dedup {
     sigs.select(col("doc_id"),
       explode(bandKeyArray(col("sig"), bands, rows)).as("bk"))
 
-  // the tombstone table of ONE band-index GENERATION: `<prefix>_dels`
-  // for gen 0, `<prefix>_dels_g<nano>` for a promoted generation — the
-  // name derives from the bands table's own generation suffix, so a
-  // reader's (bands, sigs, dels) triple resolves ATOMICALLY from the
-  // one currentIndexTables call (see [[IndexLifecycle]] "Generations").
-  private[graft] def delsTableFor(bandsTable: String): String = {
-    val prefix = prefixOf(bandsTable)
-    prefix + "_dels" + bandsTable.stripPrefix(s"${prefix}_bands")
-  }
-
-  // the standing deletes a reader of `curBands` must apply: the
-  // generation's own dels table, plus the base `<prefix>_dels` table
-  // when it holds UN-consumed rows. The base table appears in two
-  // roles: (a) gen 0's own dels after a compaction promoted past it —
-  // its rows were CONSUMED by that rewrite and the table is only
-  // retained (age-gated) for scans still reading gen 0, marked
-  // `graft.consumed` at promote time so new readers skip it (unioning
-  // it would wrongly suppress ids re-folded after the purge); (b) a
-  // layout last written by the pre-generation-scoped binary — no
-  // marker, rows are live deletes (the old binary deleted files on
-  // consumption), union them.
-  private[graft] def standingDels(
-      spark: SparkSession, curBands: String): Option[DataFrame] = {
-    val genDels  = delsTableFor(curBands)
-    val baseDels = prefixOf(curBands) + "_dels"
-    val sources = (Seq(genDels).filter(spark.catalog.tableExists) ++
-      (if (baseDels != genDels && spark.catalog.tableExists(baseDels) &&
-           !propsOf(spark, baseDels).contains(Consumed)) Seq(baseDels)
-       else Seq.empty))
-    if (sources.isEmpty) None
-    else Some(sources.map(spark.table).reduce(_ union _))
-  }
-
   /** The lineage prefix of any band/sig index table name — base
     * (`<prefix>_bands`) or generation (`<prefix>_bands_g<nano>`).
     */
   private[graft] def prefixOf(table: String): String =
     table.replaceAll("_(bands|sigs)(_g\\d+)?$", "")
 
-  // the band lineage's ledger keys (all in the ACTIVE bands table's
-  // TBLPROPERTIES; copied forward by every compaction)
-  private val Folds    = "graft.folds"
-  private val Intent   = "graft.folds.intent"
-  private val PurgeWin = "graft.folds.purgewin"
-  private val Dels     = "graft.dels"
-  private val NFiles   = "graft.compact.nfiles"
-  private val Consumed = "graft.consumed"
-  // set by a compaction's CTAS, unset by its promote: a generation
-  // carrying it is not yet readable ([[currentIndexTables]])
-  private val Pending  = "graft.pending"
+  /** The commit log of one band lineage: next to its writer lease under
+    * the database location (`<db location>/_graft_index_logs/<prefix>`),
+    * the medium every process sharing the catalog also shares. A commit
+    * names the active (bands, sigs) pair by its suffix: `""` for the
+    * pair [[ensureMinhashBandIndex]] writes, `_g<stamp>` for a
+    * compaction's.
+    */
+  private[graft] def bandLog(spark: SparkSession, prefix: String): IndexLog =
+    IndexLog(new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
+      spark.catalog.getDatabase("default").locationUri, "_graft_index_logs"), prefix).toString,
+      "(_g\\d+)?")
 
-  private def propsOf(spark: SparkSession, table: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+  private def tablesOf(prefix: String, gen: String): (String, String) =
+    (s"${prefix}_bands$gen", s"${prefix}_sigs$gen")
 
-  private def tagsOf(props: Map[String, String], key: String): Set[String] =
-    props.get(key).map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-
-  private def setProps(spark: SparkSession, table: String,
-      kv: (String, String)*): Unit =
-    if (kv.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" + kv.map { case (k, v) =>
-        s"'$k'='${v.replace("'", "''")}'" }.mkString(",") + ")")
-
-  private def ledger(tags: Set[String]): String = tags.toSeq.sorted.mkString(",")
-
-  /** Resolve a lineage's CURRENT physical tables — the generation
-    * manifest of the table-backed index family (the band-index analog
-    * of [[Similarity.activeCellsDir]]). Generation 0 is the unsuffixed
-    * pair [[ensureMinhashBandIndex]] writes; each
-    * [[compactMinhashBandIndex]] writes a fresh `_g<nano>` pair marked
-    * pending, and the PROMOTE EVENT is the one catalog op that unsets
-    * the mark on the new bands table (see [[IndexLifecycle]]). Callers
+  /** Resolve a lineage's CURRENT physical tables — the pair its latest
+    * commit names (the band-index analog of [[Similarity.activeCellsDir]]);
+    * a lineage without a log resolves to the unsuffixed pair. Callers
     * may hold any generation's names across maintenance; every read
     * path re-resolves through this.
     */
   def currentIndexTables(
-      spark: SparkSession, tablePrefix: String): (String, String) = {
-    val cat  = spark.sessionState.catalog
-    val base = s"${tablePrefix}_bands"
-    def promoted(sfx: String): Boolean =
-      sfx.isEmpty || (
-        try !cat.getTableMetadata(org.apache.spark.sql.catalyst
-          .TableIdentifier(base + sfx, Some("default"))).properties.contains(Pending)
-        catch { case _: org.apache.spark.sql.AnalysisException => false })
-    familySuffixes(spark, tablePrefix, "bands")
-      .find(sfx => cat.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          s"${tablePrefix}_sigs$sfx", Some("default"))) && promoted(sfx))
-      .map(sfx => (s"$base$sfx", s"${tablePrefix}_sigs$sfx"))
-      .getOrElse((base, s"${tablePrefix}_sigs"))
+      spark: SparkSession, tablePrefix: String): (String, String) =
+    tablesOf(tablePrefix, bandLog(spark, tablePrefix).latestOption(spark).fold("")(_.gen))
+
+  // every tombstone file the lineage's latest commit lists — the
+  // spec-facing resolution (tests must not hardcode the location)
+  private[graft] def standingTombstoneFiles(
+      spark: SparkSession, tablePrefix: String): Seq[String] = {
+    val store = new BandStore(spark, tablePrefix, 0)
+    store.log.latestOption(spark).fold(Seq.empty[String])(IndexLifecycle.tombstoneFiles(store, _))
   }
 
-  private def bandStamp(sfx: String): Option[Long] =
-    IndexLifecycle.parseStamp(sfx, "", "_g")
-
-  // every standing generation suffix of one table family, newest first
-  // ("" = the unsuffixed gen-0 pair, always last). Resolution only
-  // trusts bands, but retirement must also see ORPHAN sigs/dels
-  // generations (a crash between the two CTAS).
-  private def familySuffixes(
-      spark: SparkSession, tablePrefix: String,
-      family: String): Seq[String] = {
-    val base = s"${tablePrefix}_$family"
-    val gens = spark.sessionState.catalog
-      .listTables("default", s"$base*")
-      .map(_.table)
-      .collect {
-        case n if n == base => ""
-        case n if n.startsWith(s"${base}_g") &&
-            n.stripPrefix(s"${base}_g").forall(_.isDigit) =>
-          n.stripPrefix(base)
-      }
-    gens.filter(_.nonEmpty).sortBy(s => -bandStamp(s).getOrElse(-1L)) ++
-      gens.filter(_.isEmpty)
-  }
-
-  /** The catalog-table storage of one band lineage: generations are
-    * `<prefix>_{bands,sigs,dels}<suffix>` triples identified by their
-    * bands table name, ledgers and the nfiles stamp live in the bands
-    * TBLPROPERTIES.
+  /** The catalog-table storage of one band lineage: a generation is a
+    * `<prefix>_{bands,sigs}<suffix>` pair named by its suffix; its
+    * tombstone files live in `<bands table location>/_tombstones/`,
+    * which the table scan skips (a `_`-prefixed dir) and its DROP TABLE
+    * removes.
     */
   private final class BandStore(spark: SparkSession, prefix: String,
       buckets: Int) extends IndexLifecycle.Store {
-    type Snapshot = Option[Checkpoints.Staged]
-    private val Families = Seq("bands", "sigs", "dels")
-    private def sfxOf(bands: String) = bands.stripPrefix(s"${prefix}_bands")
-    private def sigsOf(bands: String) = s"${prefix}_sigs${sfxOf(bands)}"
+    private val catalog = spark.sessionState.catalog
+    private def id(t: String) = org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default"))
 
-    def lockKey: String = prefix
-    def leasePath: org.apache.hadoop.fs.Path =
-      WriterLease.lockPathFor(spark, "default", prefix)
-    def active(): String = currentIndexTables(spark, prefix)._1
+    val log: IndexLog = bandLog(spark, prefix)
+    def leasePath: org.apache.hadoop.fs.Path = WriterLease.lockPathFor(spark, "default", prefix)
+    def tombstoneDir(gen: String): org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(catalog.defaultTablePath(id(s"${prefix}_bands$gen"))),
+      "_tombstones")
 
-    def generations(): Seq[IndexLifecycle.Generation] = {
-      val cat = spark.sessionState.catalog
-      def created(t: String): Option[Long] =
-        try Some(cat.getTableMetadata(org.apache.spark.sql.catalyst
-          .TableIdentifier(t, Some("default"))).createTime)
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      Families.flatMap(familySuffixes(spark, prefix, _)).distinct.map { sfx =>
-        new IndexLifecycle.Generation(s"${prefix}_bands$sfx", bandStamp(sfx),
-          Families.flatMap(f => created(s"${prefix}_$f$sfx")).maxOption.getOrElse(0L))
+    // every suffix either table family stands under: retirement must
+    // also see an ORPHAN sigs generation (a crash between the two CTAS).
+    // One no commit names is as old as its newest table
+    def generations(): Seq[IndexLifecycle.Generation] =
+      Seq("bands", "sigs").flatMap { family =>
+        val base = s"${prefix}_$family"
+        catalog.listTables("default", s"$base*").map(_.table).collect {
+          case n if n == base => ""
+          case n if n.startsWith(s"${base}_g") &&
+              n.stripPrefix(s"${base}_g").forall(_.isDigit) => n.stripPrefix(base)
+        }
+      }.distinct.map { sfx =>
+        def created(t: String): Option[Long] =
+          try Some(catalog.getTableMetadata(id(t)).createTime)
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+        new IndexLifecycle.Generation(sfx, IndexLifecycle.parseStamp(sfx, "", "_g"),
+          Seq("bands", "sigs").flatMap(f => created(s"${prefix}_$f$sfx")).maxOption.getOrElse(0L))
       }
+
+    def drop(gens: Set[String]): Unit = for (gen <- gens; f <- Seq("bands", "sigs")) {
+      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f$gen")
+      Bucketing.forget(spark, s"${prefix}_$f$gen")
     }
-
-    def drop(gens: Set[String]): Unit = for (gen <- gens; f <- Families)
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f${sfxOf(gen)}")
-
-    def hasTombstones(gen: String): Boolean = standingDels(spark, gen).isDefined
 
     // refreshed first: a fold appended by ANOTHER process is invisible
     // in this session's cached file index
-    def fileCounts(gen: String): Seq[Long] = Seq(gen, sigsOf(gen)).map { t =>
-      spark.catalog.refreshTable(t)
-      spark.table(t).inputFiles.length.toLong
+    def fileCounts(gen: String): Seq[Long] = {
+      val (b, s) = tablesOf(prefix, gen)
+      Seq(b, s).map { t =>
+        spark.catalog.refreshTable(t)
+        spark.table(t).inputFiles.length.toLong
+      }
     }
-    def stampedCounts(gen: String): Option[Seq[Long]] =
-      propsOf(spark, gen).get(NFiles).flatMap(IndexLifecycle.parseCounts)
 
-    // MATERIALIZED once and reused by both CTAS passes: as a lazy plan
-    // it would be evaluated twice, and a cross-process delete landing
-    // between the evaluations would make bands and sigs DISAGREE on
-    // purged docs. Also the baseline of the late forward.
-    def snapshot(gen: String): Snapshot = standingDels(spark, gen).map(d =>
-      Checkpoints.stageOwned(d.select("doc_id").distinct(),
-        Checkpoints.configured(spark)))
-    def release(s: Snapshot): Unit = s.foreach(_.release())
-
-    // both tables drop the snapshot's docs; the new generation starts
-    // with NO dels table (the purge is the rewrite). buckets=0 derives
+    // both tables drop the tombstoned docs; the new generation starts
+    // with no tombstones (the purge is the rewrite). buckets=0 derives
     // the count from the standing table's bucket spec, so a caller-free
     // compaction never re-buckets a lineage (a later fold's append
-    // would fail on the mismatch). Sigs first; the bands table is
-    // created pending, so neither is readable before the promote, and
-    // both then take the copied `graft.*` properties (ledgers, the
-    // Bucketing validity key).
-    def rewrite(gen: String, s: Snapshot): String = {
-      val bk = if (buckets > 0) buckets else bucketCountOf(spark, gen).getOrElse(8)
-      val props = propsOf(spark, gen)
-      // the purge-window ledger (names only, O(crashed tags)): a purge
-      // while a crashed fold's intent stands makes that tag's replay
-      // undecidable when nothing of the batch survived — record those
-      // tags so the replay refuses (see foldIntoMinhashBandIndex)
-      val purgewin =
-        if (s.isEmpty) tagsOf(props, PurgeWin)
-        else tagsOf(props, PurgeWin) ++ (tagsOf(props, Intent) -- tagsOf(props, Folds))
-      val newSfx = s"_g${IndexLifecycle.newStamp()}"
-      Seq((sigsOf(gen), s"${prefix}_sigs$newSfx", "doc_id", Map.empty[String, String]),
-          (gen, s"${prefix}_bands$newSfx", "bk",
-            if (purgewin.nonEmpty) Map(PurgeWin -> ledger(purgewin)) else Map.empty[String, String]))
-        .foreach { case (src, destTable, key, extra) =>
-          val live = s.fold(spark.table(src))(dels =>
-            spark.table(src).join(broadcast(dels.df), Seq("doc_id"), "left_anti"))
+    // would fail on the mismatch). Neither table is readable before the
+    // promote commit names it; both take the Bucketing validity key
+    def rewrite(gen: String, tombstones: Option[DataFrame]): String = {
+      val (srcBands, srcSigs) = tablesOf(prefix, gen)
+      val bk = if (buckets > 0) buckets else bucketCountOf(spark, srcBands).getOrElse(8)
+      val newGen = s"_g${IndexLifecycle.newStamp()}"
+      val (dstBands, dstSigs) = tablesOf(prefix, newGen)
+      Seq((srcSigs, dstSigs, "doc_id"), (srcBands, dstBands, "bk")).foreach {
+        case (src, dest, key) =>
+          val live = tombstones.fold(spark.table(src))(t => spark.table(src)
+            .join(broadcast(t.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
           val staged = Checkpoints.stageOwned(live.repartition(bk, col(key)),
             Checkpoints.configured(spark))
           try {
-            val view = s"${destTable}_ctas_src"
+            val view = s"${dest}_ctas_src"
             staged.df.createOrReplaceTempView(view)
-            val pending = if (key == "bk") s" TBLPROPERTIES('$Pending'='true')" else ""
-            spark.sql(s"CREATE TABLE $destTable USING parquet " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $bk BUCKETS$pending " +
+            spark.sql(s"CREATE TABLE $dest USING parquet " +
+              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $bk BUCKETS " +
               s"AS SELECT * FROM $view")
             spark.catalog.dropTempView(view)
           } finally staged.release()
-          setProps(spark, destTable,
-            (propsOf(spark, src).filter(_._1.startsWith("graft.")) ++ extra).toSeq: _*)
-        }
-      s"${prefix}_bands$newSfx"
-    }
-
-    // stamp, then the ONE promoting catalog op, then the late forward;
-    // the base `<prefix>_dels` rows were consumed by this rewrite (as
-    // gen 0's own dels or a pre-upgrade leftover): MARK the table
-    // consumed so new readers skip it; it retires with its generation
-    def promote(old: String, gen: String, s: Snapshot, counts: Seq[Long]): Unit = {
-      setProps(spark, gen, NFiles -> counts.mkString(","))
-      spark.sql(s"ALTER TABLE $gen UNSET TBLPROPERTIES IF EXISTS ('$Pending')")
-      forwardLate(old, gen, s)
-      if (s.isDefined && spark.catalog.tableExists(s"${prefix}_dels"))
-        setProps(spark, s"${prefix}_dels", Consumed -> "true")
-    }
-
-    private def forwardLate(old: String, gen: String, s: Snapshot): Unit =
-      standingDels(spark, old).foreach { cur =>
-        val late = s.fold(cur.select("doc_id"))(snap =>
-          cur.select("doc_id").join(broadcast(snap.df), Seq("doc_id"), "left_anti"))
-        if (!late.isEmpty) {
-          val newDels = delsTableFor(gen)
-          if (!spark.catalog.tableExists(newDels))
-            graft.pipeline.Cleanup.ensureWritable(spark, "default", newDels)
-          late.write.mode("append").format("parquet").saveAsTable(newDels)
-          val lateTags = tagsOf(propsOf(spark, old), Dels)
-          val newTags  = tagsOf(propsOf(spark, gen), Dels)
-          if ((lateTags -- newTags).nonEmpty)
-            setProps(spark, gen, Dels -> ledger(lateTags ++ newTags))
-          log.warn(s"compactMinhashBandIndex($prefix): forwarded late " +
-            "tombstone rows from the superseded generation — a " +
-            "cross-process delete raced this rewrite outside the " +
-            "writer lease")
-        }
+          spark.sql(s"SHOW TBLPROPERTIES $src").collect().find(_.getString(0) == "graft.src")
+            .foreach(r => spark.sql(s"ALTER TABLE $dest SET TBLPROPERTIES(" +
+              s"'graft.src'='${r.getString(1).replace("'", "''")}')"))
       }
+      newGen
+    }
   }
 
   /** The bucket count a lineage was actually built with, read from the
@@ -727,13 +604,15 @@ object Dedup {
     // names from before a compaction promote, and the superseded pair
     // is retained (then retired) rather than rewritten in place
     val prefix = prefixOf(bandsTable)
-    val (curBands, curSigs) = currentIndexTables(spark, prefix)
+    val store = new BandStore(spark, prefix, 0)
+    val cur = store.log.latestOption(spark)
+    val (curBands, curSigs) = tablesOf(prefix, cur.fold("")(_.gen))
     val resolved =
       if (prefixOf(table) != prefix) table
       else if (table.startsWith(s"${prefix}_sigs")) curSigs
       else curBands
     val t = spark.table(resolved)
-    standingDels(spark, curBands).fold(t)(dels =>
+    cur.flatMap(IndexLifecycle.tombstones(spark, store, _)).fold(t)(dels =>
       t.join(broadcast(dels.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
   }
 
@@ -778,40 +657,39 @@ object Dedup {
     // silently deduping new text against old band/sig tables
     val fpTag = s"$srcTag|fp=${Similarity.inputFingerprint(docs)}"
     // validity is probed with the UNSTAGED plan (schema + catalog props
-    // only) against the lineage's CURRENT generation (compaction copies
-    // the graft.src key forward): a repeated ensure call costs ZERO
-    // corpus work. Staging preserves the plan's schema, so the staged
-    // frames below produce the same layout keys the probe checked.
+    // only) against the tables the latest commit names (compaction
+    // copies the graft.src key forward): a repeated ensure call costs
+    // ZERO corpus work. A lineage without a log is incomplete — an
+    // unfinished rebuild — and rebuilds whatever its tables carry.
+    // Staging preserves the plan's schema, so the staged frames below
+    // produce the same layout keys the probe checked.
     val rawSigs = minhashSignaturesPortable(docs, shingleN, bands * rows, seed)
-    def current(tables: (String, String)): Boolean =
-      Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), tables._1,
-        buckets, Seq("bk"), fpTag) &&
-      Bucketing.isCurrent(rawSigs, tables._2, buckets, Seq("doc_id"), fpTag)
-    val cur = currentIndexTables(spark, tablePrefix)
-    if (current(cur)) cur
-    else {
-      // the rebuild is a WRITE: it retires every generation and
-      // restarts the lineage at gen 0. Validity is re-probed under the
-      // JVM lock, so the loser of a thread race reuses the winner's
-      // rebuild instead of redoing (and clobbering) it.
-      IndexLifecycle.guarded(spark, tablePrefix, None,
-          WriterLease.lockPathFor(spark, "default", tablePrefix),
-          skip = current(currentIndexTables(spark, tablePrefix))) {
-        // truncate-and-load: every generation of the stale lineage goes
-        // — stale tombstones must not suppress freshly indexed docs
-        IndexLifecycle.retire(spark, new BandStore(spark, tablePrefix, buckets),
-          None, Set.empty, Some(IndexLifecycle.Policy.of(spark).copy(gcStaleHours = 0L)))
-        // ... including any orphaned warehouse dir a previous JVM left
-        graft.pipeline.Cleanup.ensureWritable(
-          spark, "default", delsTableFor(bandsTable))
+    val store = new BandStore(spark, tablePrefix, buckets)
+    def current(): Boolean = store.log.latestOption(spark).exists { c =>
+      val (b, s) = tablesOf(tablePrefix, c.gen)
+      Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), b, buckets, Seq("bk"), fpTag) &&
+        Bucketing.isCurrent(rawSigs, s, buckets, Seq("doc_id"), fpTag)
+    }
+    // the rebuild is a WRITE: it retires every generation and restarts
+    // the lineage at gen 0, writing commit 0 last. Validity is
+    // re-probed under the JVM lock, so the loser of a thread race
+    // reuses the winner's rebuild instead of redoing (and clobbering) it.
+    if (!current())
+      IndexLifecycle.guarded(spark, store.log.root, None, store.leasePath, skip = current()) {
+        // truncate-and-load: the log goes first, then every generation
+        // of the stale lineage — stale tombstones and ledgers must not
+        // outlive it
+        store.log.clear(spark)
+        IndexLifecycle.retire(spark, store, None, Set.empty,
+          Some(IndexLifecycle.Policy.of(spark).copy(gcStaleHours = 0L)))
         // staged so the expensive minhash kernel runs ONCE for both writes
         val sigs = Checkpoints.stage(rawSigs, Checkpoints.configured(spark))
         Bucketing.ensureBucketed(bandKeys(sigs, bands, rows),
           bandsTable, buckets, Seq("bk"), fpTag)
         Bucketing.ensureBucketed(sigs, sigsTable, buckets, Seq("doc_id"), fpTag)
+        store.log.init(spark, "")
       }
-      currentIndexTables(spark, tablePrefix)
-    }
+    currentIndexTables(spark, tablePrefix)
   }
 
   /** Fold an ADMITTED batch into a persisted MinHash band index — the
@@ -825,19 +703,19 @@ object Dedup {
     * (DedupSpec): folding batch B into index(A) yields tables row-equal
     * to [[ensureMinhashBandIndex]](A ∪ B).
     *
-    * Idempotent per `batchTag`: folded tags are recorded in the bands
-    * table's TBLPROPERTIES (`graft.folds`), so a replayed ingestion
+    * Idempotent per `batchTag`: folded tags are recorded in the
+    * lineage log's fold ledger ([[bandLog]]), so a replayed ingestion
     * batch (driver retry, at-least-once upstream) is a no-op rather
     * than a double-append. The crash window between the two appends and
-    * the ledger write is closed by an INTENT property
-    * (`graft.folds.intent`, set before the appends): a replay of a tag
-    * whose intent is still standing probes each table for the batch's
-    * doc_ids and re-appends only the table whose append never committed
-    * (Spark appends are all-or-nothing via the commit protocol), so a
-    * crashed fold REPAIRS on replay instead of double-appending — the
-    * probe scan is paid only on that crash-replay path, never in the
-    * O(|batch|) happy path. A rebuild through [[ensureMinhashBandIndex]]
-    * (new srcTag/schema) drops the table and with it the fold ledger —
+    * the tag commit is closed by the INTENT commit before the appends
+    * ([[IndexLifecycle.fold]]): a replay of a tag whose intent is still
+    * standing probes each table for the batch's doc_ids and re-appends
+    * only the table whose append never committed (Spark appends are
+    * all-or-nothing via the commit protocol), so a crashed fold
+    * REPAIRS on replay instead of double-appending — the probe scan is
+    * paid only on that crash-replay path, never in the O(|batch|)
+    * happy path. A rebuild through [[ensureMinhashBandIndex]] (new
+    * srcTag/schema) replaces the log and with it the fold ledger —
     * folds always belong to exactly one base lineage. Caller contract:
     * `admitted` holds NEW doc_ids only (admission filtered them);
     * re-folding an id that is already indexed is the caller's bug, same
@@ -852,32 +730,18 @@ object Dedup {
       rows: Int = 4,
       buckets: Int = 8,
       seed: Long = 7L): Unit = {
-    require(!batchTag.contains(","),
-      s"batchTag must not contain ',' (the fold-ledger separator): '$batchTag'")
     val spark = admitted.sparkSession
+    val store = new BandStore(spark, tablePrefix, buckets)
     // the physical pair resolves UNDER the guard, so a fold never
     // appends to a generation a concurrent compaction is retiring
-    IndexLifecycle.guarded(spark, tablePrefix, Some(s"$tablePrefix|fold|$batchTag"),
-        WriterLease.lockPathFor(spark, "default", tablePrefix)) {
-      val (bandsTable, sigsTable) = currentIndexTables(spark, tablePrefix)
-      val props  = propsOf(spark, bandsTable)
-      val folded = tagsOf(props, Folds)
-      if (!folded.contains(batchTag)) {
+    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|fold|$batchTag"),
+        store.leasePath) {
+      val folded = IndexLifecycle.fold(spark, store, admitted, "doc_id", batchTag) { cur =>
+        val (bandsTable, sigsTable) = tablesOf(tablePrefix, cur.gen)
         // a standing intent for THIS tag means a previous attempt
-        // crashed between its appends and the ledger write — probe each
-        // table before re-appending (repair instead of double-append).
-        // The intent is a SET (one crashed tag must survive other tags
-        // folding in between), trimmed to tags still absent from the
-        // ledger so it can't grow past the crash population
-        val intents  = tagsOf(props, Intent)
-        val suspect  = intents.contains(batchTag)
-        // tags whose crash window CONTAINED a tombstone purge — for
-        // these, "no batch doc present" no longer means "append never
-        // landed"
-        val purgewin = tagsOf(props, PurgeWin)
-        IndexLifecycle.requireNotTombstoned(
-          standingDels(spark, bandsTable), admitted, "doc_id")
-        setProps(spark, bandsTable, Intent -> ledger((intents -- folded) + batchTag))
+        // crashed between its intent and its tag commit — probe each
+        // table before re-appending (repair instead of double-append)
+        val suspect = cur.intents(batchTag)
         // owned stage, released once both appends land: an ingestion
         // loop folding batches for the session's lifetime must not
         // accumulate one staged block per batch
@@ -894,8 +758,8 @@ object Dedup {
             .isEmpty
           // crash-replay REPAIR must not resurrect deleted docs:
           // between the crash and the replay, batch docs may have been
-          // tombstoned and the index compacted (purging the dels
-          // table), so the landed sibling now holds only the
+          // tombstoned and the index compacted (purging the
+          // tombstones), so the landed sibling now holds only the
           // SURVIVORS — re-appending the full batch to the missing
           // table would diverge sigs from bands and bring deleted
           // signatures back into verification joins. On the suspect
@@ -903,7 +767,7 @@ object Dedup {
           // sibling still holds (the batch-ids broadcast keeps the
           // probe tiny; paid only on crash-replay). A batch deleted IN
           // FULL and compacted away leaves no survivors at all — that
-          // replay is refused below via the purge-window ledger (the
+          // replay is refused below via the purge window (the
           // standing-tombstone guard covers the uncompacted case
           // loudly), so no silent re-append can resurrect a completed
           // takedown.
@@ -916,24 +780,10 @@ object Dedup {
               Seq("doc_id"), "left_semi")
           val bandsLanded = landed(bandsTable)
           val sigsLanded  = landed(sigsTable)
-          // the UNDECIDABLE region, fenced: when a purge ran inside this
-          // tag's crash window and NEITHER side holds any batch doc, a
-          // batch deleted in full and physically purged is
-          // indistinguishable from one whose appends never landed —
-          // silently re-appending would resurrect a completed takedown,
-          // silently skipping would drop a never-indexed batch. Refuse
-          // loudly and demand an explicit operator decision under a
-          // fresh tag (the tag stays poisoned in the intent + purge
-          // ledgers).
-          if (suspect && purgewin.contains(batchTag) &&
-              !bandsLanded && !sigsLanded)
-            throw new IllegalStateException(
-              s"fold replay of crashed tag '$batchTag' is undecidable: " +
-                "a tombstone purge ran while its intent was standing, " +
-                "so a batch deleted in full and compacted away is " +
-                "indistinguishable from one whose appends never " +
-                "landed. Re-submit under a NEW batchTag if the batch " +
-                "should (re-)enter the index.")
+          // the UNDECIDABLE region, fenced: the tag stays poisoned in
+          // the intent and purge-window ledgers
+          if (cur.purgewin(batchTag) && !bandsLanded && !sigsLanded)
+            throw IndexLifecycle.undecidable(batchTag)
           // append resolves columns BY NAME and must match the table's
           // bucket spec exactly — same keys/counts as ensureMinhashBandIndex
           if (!bandsLanded) {
@@ -950,72 +800,45 @@ object Dedup {
               .saveAsTable(sigsTable)
           }
         } finally staged.release()
-        // a tag resolved decidably (something landed → survivors
-        // repair) leaves the purge-window ledger
-        setProps(spark, bandsTable,
-          Folds    -> ledger(folded + batchTag),
-          Intent   -> ledger(intents -- folded - batchTag),
-          PurgeWin -> ledger(purgewin - batchTag))
-        // every fold appends one file set per bucket: compact under the
-        // guard this fold already holds once the bands table averages
-        // `autoCompactFilesPerUnit` files per bucket
-        if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(
-            spark.table(bandsTable).inputFiles.length, buckets))
-          compactMinhashBandIndex(spark, tablePrefix, buckets)
       }
+      // every fold appends one file set per bucket: compact under the
+      // guard this fold already holds once the bands table averages
+      // `autoCompactFilesPerUnit` files per bucket
+      if (folded && IndexLifecycle.Policy.of(spark).filesPerUnitDue(
+          spark.table(currentIndexTables(spark, tablePrefix)._1).inputFiles.length, buckets))
+        compactMinhashBandIndex(spark, tablePrefix, buckets)
     }
   }
 
   /** Tombstone DELETION from a maintained [[ensureMinhashBandIndex]]
     * lineage — [[graft.operators.Similarity.deleteFromIvfIndex]]'s
     * contract for the band index (the replace leg of
-    * [[IndexLifecycle]]): `delIds` (a `doc_id` column) appends to the
-    * active generation's dels table — O(|delete|) work, the band/sig
-    * tables untouched — and every reader ([[liveIndexTable]]) excludes
-    * the docs immediately, so the next batch can re-admit text that
-    * only the deleted docs duplicated. Physical purge rides
+    * [[IndexLifecycle]]): `delIds` (a `doc_id` column) lands as parquet
+    * files in the active generation's tombstone dir, listed by the
+    * delete's commit — O(|delete|) work, the band/sig tables untouched
+    * — and every reader ([[liveIndexTable]]) excludes the docs once the
+    * commit lands, so the next batch can re-admit text that only the
+    * deleted docs duplicated. Physical purge rides
     * [[compactMinhashBandIndex]]: delete∘compact ≡
     * rebuild-from-remainder (q125 gates this against the oracle).
     *
-    * Idempotent per `delTag` (ledger in the bands table's
-    * `graft.dels` TBLPROPERTIES, the fold-ledger pattern) — and
-    * naturally idempotent even without it: a crash between the append
-    * and the ledger write replays as duplicate tombstone rows, which
-    * anti-join semantics make harmless. Deleting a never-indexed doc
-    * is likewise a no-op. Re-INSERTING a deleted doc requires a
-    * compaction in between (the fold path rejects batches that
-    * intersect standing tombstones — the old rows are still physical).
+    * Idempotent per `delTag` (the log's delete ledger). A crash between
+    * the append and the commit leaves unlisted files no reader applies;
+    * the replay writes and commits its own. Deleting a never-indexed
+    * doc is a no-op. Re-INSERTING a deleted doc requires a compaction
+    * in between (the fold path rejects batches that intersect standing
+    * tombstones — the old rows are still physical).
     */
   def deleteFromMinhashBandIndex(
       delIds: DataFrame,
       tablePrefix: String,
       delTag: String): Unit = {
-    require(!delTag.contains(","),
-      s"delTag must not contain ',' (the ledger separator): '$delTag'")
     val spark = delIds.sparkSession
-    IndexLifecycle.guarded(spark, tablePrefix, Some(s"${tablePrefix}_dels|$delTag"),
-        WriterLease.lockPathFor(spark, "default", tablePrefix)) {
-      val resolve = () => currentIndexTables(spark, tablePrefix)._1
-      if (!tagsOf(propsOf(spark, resolve()), Dels).contains(delTag)) {
-        // the graft.dels LEDGER rides the settle loop so the winning
-        // bands table records the tag
-        val bandsTable = IndexLifecycle.settle(
-            s"delete '$delTag' on lineage '$tablePrefix'", resolve) { bt =>
-          val delsTable = delsTableFor(bt)
-          // first delete of a generation CREATES its dels table — clear
-          // any orphaned same-name warehouse dir first
-          if (!spark.catalog.tableExists(delsTable))
-            graft.pipeline.Cleanup.ensureWritable(spark, "default", delsTable)
-          delIds.select(col("doc_id").cast("long").as("doc_id"))
-            .write.mode("append").format("parquet").saveAsTable(delsTable)
-          setProps(spark, bt, Dels -> ledger(tagsOf(propsOf(spark, bt), Dels) + delTag))
-        }
-        // distinct ids, not rows: replayed deletes append duplicates
-        if (IndexLifecycle.Policy.of(spark).tombstoneDebtDue(
-            standingDels(spark, bandsTable)
-              .fold(0L)(_.select("doc_id").distinct().count())))
-          compactMinhashBandIndex(spark, tablePrefix)
-      }
+    val store = new BandStore(spark, tablePrefix, 0)
+    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|del|$delTag"),
+        store.leasePath) {
+      IndexLifecycle.delete(spark, store, delIds.select(col("doc_id").cast("long").as("doc_id")),
+        "doc_id", delTag)(compactMinhashBandIndex(spark, tablePrefix))
     }
   }
 
@@ -1026,20 +849,22 @@ object Dedup {
     * batch, and this rewrites both tables to ~one file per bucket
     * (aligning the shuffle partitioner with the bucket hash so each
     * writer task holds one whole bucket) as a NEW generation pair
-    * carrying every `graft.*` table property — the Bucketing validity
-    * key AND the fold/delete ledgers survive, so repeated ensure calls
-    * stay zero-cost and a replayed tag still no-ops. Rows are unchanged
-    * apart from the purged tombstones (DedupSpec pins row equality and
-    * pair-output parity). `buckets` = 0 keeps the lineage's own bucket
-    * count; `force` rewrites even when the skip rule holds.
+    * carrying the Bucketing validity key, so repeated ensure calls stay
+    * zero-cost; the ledgers live in the log, so a replayed tag still
+    * no-ops. Rows are unchanged apart from the purged tombstones
+    * (DedupSpec pins row equality and pair-output parity). `buckets` = 0
+    * keeps the lineage's own bucket count; `force` rewrites even when
+    * the skip rule holds.
     */
   def compactMinhashBandIndex(
       spark: SparkSession,
       tablePrefix: String,
       buckets: Int = 0,
-      force: Boolean = false): Unit =
-    IndexLifecycle.compact(spark, new BandStore(spark, tablePrefix, buckets), force,
-      skip = !spark.catalog.tableExists(currentIndexTables(spark, tablePrefix)._1))
+      force: Boolean = false): Unit = {
+    val store = new BandStore(spark, tablePrefix, buckets)
+    IndexLifecycle.compact(spark, store, force, skip = store.log.latestOption(spark)
+      .forall(c => !spark.catalog.tableExists(tablesOf(tablePrefix, c.gen)._1)))
+  }
 
   /** Incremental near-dup INGESTION: dedup a NEW batch of documents
     * against the persisted band index of the standing corpus — the

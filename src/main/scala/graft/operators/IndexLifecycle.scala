@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions.broadcast
   * ([[Similarity.ensureIvfIndex]], [[Similarity.ensureIvfPqIndex]]).
   * Reference analog: the publish semantics of `etl/pipeline.py:698-725`
   * — append for folds, replace for compaction, truncate-and-load for a
-  * rebuild. Each family keeps only its storage (catalog-table
-  * generations with TBLPROPERTIES ledgers vs. generation directories
-  * under one commit log, [[CellsLog]]) behind [[Store]]; the policy is
-  * pure functions over [[Policy]] and the step ORDER is written once
-  * here. The contract:
+  * rebuild. Both families keep their whole lineage state in one commit
+  * log ([[IndexLog]]); each keeps only its storage (bucketed catalog
+  * tables vs. generation directories) behind [[Store]]. The policy is
+  * pure functions over [[Policy]], and the fold, delete and compaction
+  * steps are written once here. The contract:
   *
   *  - '''Lease scoping.''' Every write (fold, delete, compact, rebuild)
   *    runs inside [[guarded]]: per-application memo check → JVM-local
@@ -21,41 +21,44 @@ import org.apache.spark.sql.functions.broadcast
   *    [[WriterLease]] → body → memo add. The lock comes FIRST because
   *    the lease is re-entrant per JVM, not per thread; nested entry
   *    points (a fold's or delete's auto-compaction, a compaction's race
-  *    seam) re-enter both. Complete layouts resolve lease-free: an
+  *    seam) re-enter both. Complete lineages resolve lease-free: an
   *    ensure that finds a complete index is logically a read.
   *  - '''Generations.''' Data lives in generations named by an
   *    epoch-nanos stamp ([[newStamp]]); generation 0 is the unstamped
-  *    original. Tombstones live INSIDE their generation, so a reader
-  *    resolves (rows, tombstones) from one generation atomically. A
-  *    tombstone append re-resolves after writing and re-appends to a
-  *    generation that won a concurrent promote ([[settle]]).
+  *    original. A generation is readable exactly when the latest commit
+  *    names it, and (rows, tombstones) resolve from that one commit.
+  *    Tombstones are parquet files in the generation's own tombstone
+  *    dir, served once a commit lists them ([[delete]]).
+  *  - '''Folds.''' An intent commit precedes the append and the tag
+  *    commit clears it, so a replay after a crash in between repairs
+  *    instead of double-appending ([[fold]]).
   *  - '''Skip.''' A compaction with no standing tombstones and no data
-  *    files appended since its generation's own rewrite (the nfiles
-  *    stamp) does not rewrite; `force` overrides. The skip and the
-  *    promote path share the same [[Store.fileCounts]] and the same
+  *    files appended since its generation's own rewrite (the commit's
+  *    nfiles stamp) does not rewrite; `force` overrides. The skip and
+  *    the promote path share the same [[Store.fileCounts]] and the same
   *    retirement, so they cannot drift apart.
-  *  - '''Promote.''' snapshot tombstones → rewrite live rows into an
-  *    UNPROMOTED new generation → count its files → race seam →
-  *    promote with ONE atomic metadata op (the log commit that names
-  *    the new generation with its stamp and forwarded tombstones / the
-  *    catalog property unset) → retire. A crash before the promote
-  *    leaves the old generation active and the new one an orphan the
-  *    retention drops once aged; after it, the old one is superseded.
-  *    Nothing needs repair. A scan already in flight keeps reading its
-  *    generation.
-  *  - '''Late forward.''' Tombstones that landed on the superseded
+  *  - '''Promote.''' snapshot (the latest commit) → rewrite live rows
+  *    into an UNPROMOTED new generation → count its files → race seam →
+  *    promote with ONE commit naming the new generation with its stamp,
+  *    its forwarded tombstones and the purge window → retire. A crash
+  *    before the commit leaves the old generation active and the new
+  *    one an orphan the retention drops once aged; after it, the old
+  *    one is superseded. Nothing needs repair. A scan already in flight
+  *    keeps reading its generation.
+  *  - '''Late forward.''' Tombstones committed on the superseded
   *    generation after the snapshot (a writer outside the lease) are
-  *    copied into the new generation with their ledger tags.
+  *    copied into the new generation; their tags are in the ledger.
   *  - '''Retention.''' [[Policy.toRetire]]: the active generation and
   *    the protected set (the one just superseded) always stay; any
-  *    other generation goes once its last touch is older than
-  *    `gcStaleHours` (0 = no age protection — the rebuild path);
-  *    superseded generations (stamp below the active one) beyond the
-  *    newest `maxStaleGenerations` go regardless of age. Generations
-  *    stamped ABOVE the active one or with no parseable stamp may be a
-  *    live rewrite in another process: age-gated only, never
-  *    count-forced. An in-flight scan therefore survives
-  *    min(gcStaleHours, K promotes).
+  *    other generation goes once its last touch (the last commit naming
+  *    it) is older than `gcStaleHours` (0 = no age protection — the
+  *    rebuild path); superseded generations (stamp below the active
+  *    one) beyond the newest `maxStaleGenerations` go regardless of age.
+  *    Generations stamped ABOVE the active one or with no parseable
+  *    stamp may be a live rewrite in another process: age-gated only,
+  *    never count-forced. An in-flight scan therefore survives
+  *    min(gcStaleHours, K promotes). Commits older than the oldest
+  *    standing generation go with them.
   *  - '''Thresholds.''' A fold compacts once the layout averages
   *    `autoCompactFilesPerUnit` data files per bucket/cell; a delete
   *    compacts once standing tombstones reach `autoCompactTombstoneRows`
@@ -200,12 +203,6 @@ object IndexLifecycle {
       c.length == s.length && c.zip(s).forall { case (n, m) => n <= m }
     }
 
-  /** An nfiles stamp as written by [[compact]] ("n" or "n1,n2"). */
-  def parseCounts(v: String): Option[Seq[Long]] = {
-    val parts = v.trim.split(",").toSeq.map(_.trim.toLongOption)
-    if (parts.forall(_.isDefined)) Some(parts.flatten) else None
-  }
-
   // ---------------- the write guard ----------------
 
   // writes already applied THIS application (fold/delete tags, complete
@@ -233,36 +230,101 @@ object IndexLifecycle {
     }
   }
 
-  // ---------------- tombstones ----------------
+  // ---------------- tombstones and folds ----------------
 
-  /** Append a tombstone batch to the ACTIVE generation, then re-resolve:
-    * a cross-process compaction that promoted in between would strand
-    * it in a superseded generation no new reader applies, so re-append
-    * to the winner (duplicate rows in the loser are anti-join no-ops).
-    * Six promotes inside one delete means a writer is compacting outside
-    * the lease: refuse, leaving the tag replayable — the ledger entry
-    * is the delete's durability witness and must only follow a settled
-    * append. Returns the generation the batch settled in. (A cells
-    * layout settles by log version instead: [[CellsLog.commit]].)
+  /** The tombstone files `c` lists, as paths under its generation. */
+  def tombstoneFiles(store: Store, c: IndexLog.Commit): Seq[String] =
+    c.tombstones.map(n => new Path(store.tombstoneDir(c.gen), n).toString)
+
+  /** The tombstones `c` lists as one frame, None when it lists none. */
+  def tombstones(spark: SparkSession, store: Store, c: IndexLog.Commit): Option[DataFrame] =
+    if (c.tombstones.isEmpty) None
+    else Some(spark.read.parquet(tombstoneFiles(store, c): _*))
+
+  /** Delete `ids` (column `idCol`) under `tag`, idempotent per tag (the
+    * log's delete ledger): the batch lands as parquet files in the
+    * active generation's tombstone dir and is served once the commit
+    * listing them lands. A promote that won the commit version (a
+    * writer outside the lease) moves the append to the new generation;
+    * what landed in the superseded one is never listed, and neither is
+    * anything a delete that crashed before its commit wrote. Compacts
+    * (`compact`) once standing tombstones reach the debt threshold.
     */
-  def settle[G](what: String, resolve: () => G)(append: G => Unit): G = {
-    var gen     = resolve()
-    var settled = false
-    var rounds  = 0
-    while (!settled && rounds < 6) {
-      append(gen)
-      val now = resolve()
-      settled = now == gen
-      gen = now
-      rounds += 1
+  def delete(spark: SparkSession, store: Store, ids: DataFrame, idCol: String,
+      tag: String)(compact: => Unit): Unit =
+    if (!store.log.latest(spark).dels(tag)) {
+      val written = scala.collection.mutable.Map.empty[String, Seq[String]]
+      val c = store.log.commit(spark, "delete") { c =>
+        val files = written.getOrElseUpdate(c.gen,
+          appendTombstones(spark, ids, store.tombstoneDir(c.gen)))
+        c.copy(tombstones = c.tombstones ++ files, dels = c.dels + tag)
+      }
+      // distinct ids, not rows: overlapping deletes append duplicate
+      // tombstone rows, and the broadcast build side every read pays is
+      // deduped
+      if (Policy.of(spark).tombstoneDebtDue(
+          tombstones(spark, store, c).fold(0L)(_.select(idCol).distinct().count())))
+        compact
     }
-    require(settled,
-      s"$what could not settle: the active generation changed through 6 " +
-        "consecutive append attempts (a concurrent writer is compacting " +
-        "outside the writer lease). The tag is replayable — retry once " +
-        "the index is quiescent.")
-    gen
+
+  // append one tombstone batch to `dir`; returns the names of the files
+  // this append wrote (the listing's difference)
+  private def appendTombstones(spark: SparkSession, ids: DataFrame,
+      dir: Path): Seq[String] = {
+    val fs = IndexLog.fsOf(spark, dir.toString)
+    def names(): Set[String] =
+      try fs.listStatus(dir).map(_.getPath.getName).filter(Similarity.isDataFile).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val before = names()
+    ids.write.mode("append").parquet(dir.toString)
+    (names() -- before).toSeq.sorted
   }
+
+  /** Fold a batch under `tag`, idempotent per tag (the log's fold
+    * ledger), with crash repair: an INTENT commit precedes the family's
+    * `append` into the generation of `cur` (the commit the fold began
+    * from), and the tag commit clears it. A replay of a tag whose intent
+    * still stands (`cur.intents(tag)`) is a crash replay: `append` must
+    * probe what landed and re-append only what did not — a Spark append
+    * is all-or-nothing — and refuse ([[undecidable]]) when nothing
+    * landed and `cur.purgewin(tag)` holds. A batch that re-inserts a
+    * standing tombstone is refused before anything is written. Returns
+    * whether the batch was folded now.
+    */
+  def fold(spark: SparkSession, store: Store, batch: DataFrame, idCol: String,
+      tag: String)(append: IndexLog.Commit => Unit): Boolean = {
+    val cur = store.log.latest(spark)
+    if (cur.folds(tag)) false
+    else {
+      requireNotTombstoned(tombstones(spark, store, cur), batch, idCol)
+      if (!cur.intents(tag))
+        store.log.commit(spark, "fold-intent")(c => c.copy(intents = c.intents + tag))
+      append(cur)
+      store.log.commit(spark, "fold") { c =>
+        require(c.gen == cur.gen, s"fold '$tag' on ${store.log.root}: ${c.gen} was " +
+          s"promoted while this fold appended to ${cur.gen} (a writer outside the " +
+          "lease). The intent stands — replay the tag to repair.")
+        c.copy(folds = c.folds + tag, intents = c.intents - tag, purgewin = c.purgewin - tag)
+      }
+      true
+    }
+  }
+
+  /** The refusal of a crash replay no probe can decide: a tombstone
+    * purge ran while the tag's intent stood and nothing of the batch is
+    * left, so a batch deleted in full and compacted away is
+    * indistinguishable from one whose appends never landed. Silently
+    * re-appending would resurrect a completed takedown; silently
+    * skipping would drop a never-indexed batch.
+    */
+  def undecidable(tag: String): IllegalStateException =
+    new IllegalStateException(
+      s"fold replay of crashed tag '$tag' is undecidable: " +
+        "a tombstone purge ran while its intent was standing, " +
+        "so a batch deleted in full and compacted away is " +
+        "indistinguishable from one whose appends never " +
+        "landed. Re-submit under a NEW batchTag if the batch " +
+        "should (re-)enter the index.")
 
   /** The re-insert guard: a fold batch that intersects standing
     * tombstones fails loudly before its append — the old rows are still
@@ -283,61 +345,82 @@ object IndexLifecycle {
 
   // ---------------- storage + the compaction skeleton ----------------
 
-  /** The storage steps that really differ between the two families.
-    * Generation ids are whatever the family's readers resolve (a bands
-    * table name, a cells directory path).
+  /** The storage that really differs between the two families; all
+    * lineage state lives in `log`. Generation ids are the names commits
+    * carry (a cells dir name, a band-table suffix).
     */
   trait Store {
-    type Snapshot
-    /** The lineage key: JVM lock, logs. */
-    def lockKey: String
+    /** The lineage's log; its root is also the JVM lock key. */
+    def log: IndexLog
     def leasePath: Path
-    def active(): String
+    /** Where the tombstone files of `gen` live. */
+    def tombstoneDir(gen: String): Path
+    /** Every standing generation, committed or not; `touched` is the
+      * age of an uncommitted one (a crashed rewrite).
+      */
     def generations(): Seq[Generation]
     def drop(gens: Set[String]): Unit
-    def hasTombstones(gen: String): Boolean
     /** Data files per table of `gen`, as the nfiles stamp records them. */
     def fileCounts(gen: String): Seq[Long]
-    def stampedCounts(gen: String): Option[Seq[Long]]
-    def snapshot(gen: String): Snapshot
-    def release(s: Snapshot): Unit
-    /** Live rows of `gen` minus the snapshot, as a new UNPROMOTED generation. */
-    def rewrite(gen: String, s: Snapshot): String
-    /** Make `gen` active with its nfiles stamp `counts`, forwarding the
-      * tombstones that landed on `old` after the snapshot.
-      */
-    def promote(old: String, gen: String, s: Snapshot, counts: Seq[Long]): Unit
+    /** Live rows of `gen` minus `tombstones`, as a new UNPROMOTED generation. */
+    def rewrite(gen: String, tombstones: Option[DataFrame]): String
   }
 
   /** Test seam: runs between a compaction's rewrite and its promote with
-    * the superseded generation's id — lets a spec land a racing delete
+    * the superseded generation's name — lets a spec land a racing delete
     * in exactly the window the late-tombstone forward closes, or crash
     * the compaction before it commits.
     */
   @volatile private[graft] var compactRaceHook: Option[String => Unit] = None
 
-  /** Compact a lineage (see "Skip" and "Promote" above). */
+  /** Compact a lineage (see "Skip" and "Promote" above). The latest
+    * commit is the snapshot: its generation, tombstones and stamp. A
+    * commit never changes, so every pass of the rewrite reads the same
+    * tombstone files.
+    */
   def compact(spark: SparkSession, store: Store, force: Boolean,
       skip: => Boolean = false): Unit =
-    guarded(spark, store.lockKey, None, store.leasePath, skip) {
-      val cur = store.active()
-      if (skipCompaction(force, store.hasTombstones(cur),
-          store.stampedCounts(cur), store.fileCounts(cur))) {
-        log.info(s"compact(${store.lockKey}): nothing to purge and no " +
+    guarded(spark, store.log.root, None, store.leasePath, skip) {
+      val snap = store.log.latest(spark)
+      if (skipCompaction(force, snap.tombstones.nonEmpty, snap.nfiles,
+          store.fileCounts(snap.gen))) {
+        log.info(s"compact(${store.log.root}): nothing to purge and no " +
           "appends since the last rewrite — skipping")
         // keep the generation superseded most recently, as a promote
         // does: an in-flight scan may still read it
-        retire(spark, store, Some(cur), previous(store.generations(), cur).toSet)
+        retire(spark, store, Some(snap.gen), previous(store.generations(), snap.gen).toSet)
       } else {
-        val snap = store.snapshot(cur)
-        try {
-          val gen = store.rewrite(cur, snap)
-          val counts = store.fileCounts(gen)
-          compactRaceHook.foreach(_(cur))
-          store.promote(cur, gen, snap, counts)
-          retire(spark, store, Some(gen), Set(cur))
-        } finally store.release(snap)
+        val gen = store.rewrite(snap.gen, tombstones(spark, store, snap))
+        val counts = store.fileCounts(gen)
+        compactRaceHook.foreach(_(snap.gen))
+        promote(spark, store, snap, gen, counts)
+        retire(spark, store, Some(gen), Set(snap.gen))
       }
+    }
+
+  // the promote commit. Tombstones committed on the superseded
+  // generation after the snapshot (a delete outside the lease) are
+  // COPIED into the new one — never moved: old-generation scans keep
+  // their own view — and their tags are already in the ledger. A purge
+  // records the standing intents in the purge window
+  private def promote(spark: SparkSession, store: Store, snap: IndexLog.Commit,
+      gen: String, counts: Seq[Long]): Unit =
+    store.log.commit(spark, "compact") { c =>
+      require(c.gen == snap.gen, s"compact(${store.log.root}): ${c.gen} was " +
+        s"promoted while this compaction rewrote ${snap.gen} (a writer outside the lease)")
+      val late = c.tombstones.filterNot(snap.tombstones.toSet)
+      val fs = IndexLog.fsOf(spark, store.log.root)
+      late.foreach { n =>
+        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(store.tombstoneDir(snap.gen), n),
+          fs, new Path(store.tombstoneDir(gen), s"fwd_$n"), false,
+          spark.sessionState.newHadoopConf())
+      }
+      if (late.nonEmpty)
+        log.warn(s"compact(${store.log.root}): forwarded ${late.size} late " +
+          "tombstone file(s) from the superseded generation — a delete " +
+          "raced this rewrite outside the writer lease")
+      c.copy(gen = gen, tombstones = late.map(n => s"fwd_$n"), nfiles = Some(counts),
+        purgewin = if (snap.tombstones.isEmpty) c.purgewin else c.purgewin ++ c.intents)
     }
 
   private def previous(gens: Seq[Generation], cur: String): Option[String] = {
@@ -345,9 +428,24 @@ object IndexLifecycle {
     gens.filter(_.stamp.exists(_ < curStamp)).maxByOption(_.stamp.get).map(_.id)
   }
 
-  /** Drop what [[Policy.toRetire]] selects. */
+  /** Drop what [[Policy.toRetire]] selects, then every commit older than
+    * the oldest one naming a generation still standing: no retained
+    * commit names a dropped one. A generation's last touch is the time
+    * of the last commit naming it; one no commit names keeps the age
+    * its store reports.
+    */
   def retire(spark: SparkSession, store: Store, active: Option[String],
-      protect: Set[String], policy: Option[Policy] = None): Unit =
-    store.drop(policy.getOrElse(Policy.of(spark))
-      .toRetire(store.generations(), active, protect, System.currentTimeMillis()))
+      protect: Set[String], policy: Option[Policy] = None): Unit = {
+    val commits = store.log.all(spark)
+    val touched = commits.groupMapReduce(_.gen)(_.timeMs)(math.max)
+    val gens = store.generations().map(g =>
+      new Generation(g.id, g.stamp, touched.getOrElse(g.id, g.touchedMs)))
+    val gone = policy.getOrElse(Policy.of(spark))
+      .toRetire(gens, active, protect, System.currentTimeMillis())
+    if (gone.nonEmpty) {
+      store.drop(gone)
+      val standing = gens.map(_.id).toSet -- gone
+      commits.find(c => standing(c.gen)).foreach(c => store.log.truncate(spark, c.version))
+    }
+  }
 }

@@ -291,12 +291,12 @@ object Similarity {
   }
 
   /** The last step of every layout build: the cells, then commit 0 of
-    * the layout's [[CellsLog]] — a layout is complete exactly when it
+    * the layout's [[IndexLog]] — a layout is complete exactly when it
     * has a log.
     */
   private def writeCells(cells: DataFrame, path: String): Unit = {
     cells.write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/cells")
-    CellsLog.init(cells.sparkSession, path)
+    IndexLog.cells(path).init(cells.sparkSession, "cells")
   }
 
   /** Probe a [[buildIvfIndex]] layout with a raw query vector: centroid
@@ -674,7 +674,7 @@ object Similarity {
 
   /** The one build path of a maintained layout (the truncate-and-load
     * leg of [[IndexLifecycle]]): build into a temp sibling — the build
-    * writes commit 0 of its [[CellsLog]] last — and promote it with one
+    * writes commit 0 of its [[IndexLog]] last — and promote it with one
     * directory rename, unless a COMPLETE layout (one with a log) already
     * stands; then the call is a read and resolves lease-free. A layout
     * dir without a log is an unfinished build and is replaced.
@@ -682,8 +682,8 @@ object Similarity {
   private def promoteBuilt(spark: SparkSession, path: String,
       memoKey: Option[String], what: String)(build: String => Unit): Unit = {
     val dest = new org.apache.hadoop.fs.Path(path)
-    val fs   = CellsLog.fsOf(spark, path)
-    def complete: Boolean = CellsLog.latestOption(fs, path).isDefined
+    val fs   = IndexLog.fsOf(spark, path)
+    def complete: Boolean = IndexLog.cells(path).latestOption(spark).isDefined
     IndexLifecycle.guarded(spark, path, memoKey, WriterLease.lockPathFor(path),
         skip = complete) {
       if (!complete) {
@@ -711,9 +711,11 @@ object Similarity {
     * IVF maintenance semantics (insert-into-cell, re-train offline).
     *
     * Idempotent per `batchTag`: the fold commit records the tag in the
-    * layout log's fold ledger ([[CellsLog]]), so a replayed ingestion
+    * layout log's fold ledger ([[IndexLog]]), so a replayed ingestion
     * batch (driver retry, at-least-once upstream) is a no-op in this
-    * and in any later process. Caller contract: the batch holds NEW
+    * and in any later process; a fold that crashed between its append
+    * and its tag commit repairs on replay ([[IndexLifecycle.fold]]).
+    * Caller contract: the batch holds NEW
     * vec_ids only — re-folding an indexed id is the caller's bug, same
     * as any append sink.
     */
@@ -744,39 +746,28 @@ object Similarity {
     foldCells(newVecs, path, batchTag)(foldAssignment(newVecs, path))
 
   /** The one fold body of both cells layouts: `encoded` is the batch's
-    * (vec_id, cent_id, payload…) cell rows. The commit lands AFTER the
-    * append (the MinHash fold-ledger order): a crash in between replays
-    * the batch — callers needing exactly-once must rebuild, as with any
-    * append sink.
+    * (vec_id, cent_id, payload…) cell rows, appended as ONE write — all
+    * or nothing — so a crash replay (the tag's intent standing) skips
+    * the append when any batch vec_id is already in the generation, and
+    * refuses when nothing is and a purge ran in the crash window.
     */
   private def foldCells(newVecs: DataFrame, path: String, batchTag: String)(
       encoded: => DataFrame): Unit = {
     val spark = newVecs.sparkSession
-    IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"),
-        WriterLease.lockPathFor(path)) {
+    val store = new CellsStore(spark, path)
+    IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"), store.leasePath) {
       retireCells(spark, path)
-      val cur = CellsLog.latest(spark, path)
-      if (!cur.folds(batchTag)) {
-        IndexLifecycle.requireNotTombstoned(tombstonesOf(spark, path, cur), newVecs, "vec_id")
-        commitWrite(spark, path, "fold")(
-          encoded.write.mode("append").partitionBy("cent_id").parquet(_))(
-          (c, _) => c.copy(folds = c.folds + batchTag))
-        maybeAutoCompactCells(spark, path)
+      val folded = IndexLifecycle.fold(spark, store, newVecs, "vec_id", batchTag) { cur =>
+        val gen = genDir(path, cur.gen)
+        val landed = cur.intents(batchTag) && !spark.read.parquet(gen).select("vec_id")
+          .join(broadcast(newVecs.select("vec_id").distinct()), "vec_id").isEmpty
+        if (!landed) {
+          if (cur.purgewin(batchTag)) throw IndexLifecycle.undecidable(batchTag)
+          encoded.write.mode("append").partitionBy("cent_id").parquet(gen)
+        }
       }
+      if (folded) maybeAutoCompactCells(spark, path)
     }
-  }
-
-  /** Commit an op that first writes into the active generation: `write`
-    * runs once per generation the commit loop sees — a promote that won
-    * the version (a writer outside the lease) moves the write to the new
-    * generation; what landed in the superseded one is never served —
-    * and `record` adds the op's entries to the ledger.
-    */
-  private def commitWrite[T](spark: SparkSession, path: String, op: String)(
-      write: String => T)(record: (CellsLog.Commit, T) => CellsLog.Commit): CellsLog.Commit = {
-    val done = scala.collection.mutable.Map.empty[String, T]
-    CellsLog.commit(spark, path, op)(c =>
-      record(c, done.getOrElseUpdate(c.gen, write(CellsLog.genDir(path, c)))))
   }
 
   // ---- auto-compaction: the policy that keeps a fold tier healthy ----
@@ -794,7 +785,7 @@ object Similarity {
       spark: SparkSession, path: String): Unit = {
     val gen = new org.apache.hadoop.fs.Path(activeCellsDir(spark, path))
     val (files, cells) =
-      try CellsLog.cellFiles(CellsLog.fsOf(spark, path), gen)
+      try cellFiles(IndexLog.fsOf(spark, path), gen)
       catch { case _: java.io.IOException => return }
     if (IndexLifecycle.Policy.of(spark).filesPerUnitDue(files, cells))
       compactIvfCells(spark, path)
@@ -808,12 +799,15 @@ object Similarity {
     !name.startsWith("_") && !name.startsWith(".")
 
   /** The ACTIVE generation directory of a maintained layout — the one
-    * its latest [[CellsLog]] commit names. Every reader and every fold
+    * its latest [[IndexLog]] commit names. Every reader and every fold
     * append resolves through this; benches and specs inspecting
     * physical layout state should too.
     */
   def activeCellsDir(spark: SparkSession, path: String): String =
-    CellsLog.genDir(path, CellsLog.latest(spark, path))
+    genDir(path, IndexLog.cells(path).latest(spark).gen)
+
+  private def genDir(path: String, gen: String): String =
+    new org.apache.hadoop.fs.Path(path, gen).toString
 
   // ---- deletion: the tombstone tier of the maintained-index contract ----
 
@@ -837,21 +831,22 @@ object Similarity {
     * Nothing sleeps.
     */
   def liveCells(spark: SparkSession, path: String): DataFrame =
-    liveCellsFrom(spark, path, CellsLog.latest(spark, path))
+    liveCellsFrom(spark, path, IndexLog.cells(path).latest(spark))
 
   private[operators] def liveCellsFrom(spark: SparkSession, path: String,
-      first: CellsLog.Commit): DataFrame = {
+      first: IndexLog.Commit): DataFrame = {
     // the existence check keeps a gone generation out of the parquet
     // read, which logs a WARN with a stack trace before it throws; the
     // catch covers one that goes after the check
-    val fs = CellsLog.fsOf(spark, path)
-    def read(c: CellsLog.Commit): Option[DataFrame] =
+    val fs = IndexLog.fsOf(spark, path)
+    val store = new CellsStore(spark, path)
+    def read(c: IndexLog.Commit): Option[DataFrame] =
       try {
-        val gen = CellsLog.genDir(path, c)
+        val gen = genDir(path, c.gen)
         if (!fs.exists(new org.apache.hadoop.fs.Path(gen))) None
         else {
           val cells = spark.read.parquet(gen)
-          Some(tombstonesOf(spark, path, c).fold(cells)(t =>
+          Some(IndexLifecycle.tombstones(spark, store, c).fold(cells)(t =>
             cells.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti")))
         }
       } catch {
@@ -860,23 +855,18 @@ object Similarity {
               String.valueOf(e.getMessage).contains("Path does not exist") => None
       }
     read(first).orElse {
-      val next = CellsLog.latest(spark, path)
+      val next = IndexLog.cells(path).latest(spark)
       if (next.version > first.version) read(next) else None
     }.getOrElse(throw new java.io.FileNotFoundException(
       s"$path: generation ${first.gen} is gone and no newer commit names another"))
   }
-
-  private def tombstonesOf(
-      spark: SparkSession, path: String, c: CellsLog.Commit): Option[DataFrame] =
-    if (c.tombstones.isEmpty) None
-    else Some(spark.read.parquet(CellsLog.tombstoneFiles(path, c): _*))
 
   // every standing tombstone file of the layout's ACTIVE generation —
   // the spec-facing resolution (tests must not hardcode the physical
   // location)
   private[graft] def standingTombstoneFiles(
       spark: SparkSession, path: String): Seq[String] =
-    CellsLog.tombstoneFiles(path, CellsLog.latest(spark, path))
+    IndexLifecycle.tombstoneFiles(new CellsStore(spark, path), IndexLog.cells(path).latest(spark))
 
   /** Tombstone DELETION from a maintained [[ensureIvfIndex]] /
     * [[ensureIvfPqIndex]] layout — the missing half of the "never
@@ -909,37 +899,12 @@ object Similarity {
       path: String,
       delTag: String): Unit = {
     val spark = delIds.sparkSession
-    IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"),
-        WriterLease.lockPathFor(path)) {
+    val store = new CellsStore(spark, path)
+    IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"), store.leasePath) {
       retireCells(spark, path)
-      if (!CellsLog.latest(spark, path).dels(delTag)) {
-        val ids = delIds.select(col("vec_id").cast("long").as("vec_id"))
-        val c = commitWrite(spark, path, "delete")(appendTombstones(spark, ids, _))(
-          (c, files) => c.copy(tombstones = c.tombstones ++ files, dels = c.dels + delTag))
-        // distinct ids, not rows: replayed/overlapping deletes append
-        // duplicate tombstone rows, and the broadcast build side every
-        // read pays is deduped
-        if (IndexLifecycle.Policy.of(spark).tombstoneDebtDue(
-            tombstonesOf(spark, path, c)
-              .fold(0L)(_.select("vec_id").distinct().count())))
-          compactIvfCells(spark, path)
-      }
+      IndexLifecycle.delete(spark, store, delIds.select(col("vec_id").cast("long").as("vec_id")),
+        "vec_id", delTag)(compactIvfCells(spark, path))
     }
-  }
-
-  // append one tombstone batch to `<gen>/_tombstones/`; returns the
-  // names of the files this append wrote (the listing's difference —
-  // unlisted files of a crashed delete stay out)
-  private def appendTombstones(spark: SparkSession, ids: DataFrame,
-      gen: String): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(gen, "_tombstones")
-    val fs  = CellsLog.fsOf(spark, gen)
-    def names(): Set[String] =
-      try fs.listStatus(dir).map(_.getPath.getName).filter(isDataFile).toSet
-      catch { case _: java.io.FileNotFoundException => Set.empty }
-    val before = names()
-    ids.write.mode("append").parquet(dir.toString)
-    (names() -- before).toSeq.sorted
   }
 
   /** Cell-occupancy telemetry for a [[buildIvfIndex]] layout — the
@@ -962,7 +927,7 @@ object Similarity {
 
   /** Small-file compaction and tombstone purge for a maintained cells
     * layout — the [[IndexLifecycle.compact]] skeleton over the log
-    * store ([[CellsLog.Store]]): every [[foldIntoIvfIndex]] appends one
+    * store ([[CellsStore]]): every [[foldIntoIvfIndex]] appends one
     * file set per batch, and this rewrites the cells to ~one file per
     * cell (ONE shuffle of the index, the inherent compaction cost; at
     * 100 TB run it per-cell or accept the rebuild, which compacts for
@@ -976,15 +941,88 @@ object Similarity {
     */
   def compactIvfCells(spark: SparkSession, path: String,
       force: Boolean = false): Unit =
-    IndexLifecycle.compact(spark, new CellsLog.Store(spark, path), force)
+    IndexLifecycle.compact(spark, new CellsStore(spark, path), force)
 
   /** Retention at every maintenance entry ([[IndexLifecycle.retire]]
     * over every cells* dir: superseded generations and crashed,
     * uncommitted rewrites).
     */
   private[operators] def retireCells(spark: SparkSession, path: String): Unit =
-    IndexLifecycle.retire(spark, new CellsLog.Store(spark, path),
-      Some(activeCellsDir(spark, path)), Set.empty)
+    IndexLifecycle.retire(spark, new CellsStore(spark, path),
+      Some(IndexLog.cells(path).latest(spark).gen), Set.empty)
+
+  /** The data files of a generation and the number of cells they fall
+    * in — one recursive listing, never a Spark job; `_tombstones/` and
+    * `_`/`.`-prefixed bookkeeping are not cell files.
+    */
+  private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
+      gen: org.apache.hadoop.fs.Path): (Long, Int) = {
+    var files = 0L
+    val cells = scala.collection.mutable.HashSet.empty[String]
+    val it = fs.listFiles(gen, true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (isDataFile(p.getName) && isDataFile(p.getParent.getName)) {
+        files += 1
+        cells += p.getParent.getName
+      }
+    }
+    (files, cells.size)
+  }
+
+  /** One cells layout as [[IndexLifecycle.Store]]: generations are the
+    * `cells` / `cells.g<stamp>` dirs under the layout, each with its
+    * tombstones in `<gen>/_tombstones/`.
+    */
+  private final class CellsStore(spark: SparkSession, path: String)
+      extends IndexLifecycle.Store {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    private val fs = IndexLog.fsOf(spark, path)
+
+    val log: IndexLog = IndexLog.cells(path)
+    def leasePath: Path = WriterLease.lockPathFor(path)
+    def tombstoneDir(gen: String): Path = new Path(new Path(path, gen), "_tombstones")
+
+    // every cells* dir under the layout; one no commit names (a crashed
+    // rewrite) is as old as its newest file — a large rewrite keeps
+    // writing part files under a stale dir mtime
+    def generations(): Seq[IndexLifecycle.Generation] =
+      (try fs.listStatus(new Path(path)).toSeq
+       catch { case _: java.io.IOException => Seq.empty })
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cells"))
+        .map { st =>
+          val n = st.getPath.getName
+          new IndexLifecycle.Generation(n, IndexLifecycle.parseStamp(n, "cells", "cells.g"),
+            newestMtime(st))
+        }
+
+    private def newestMtime(dir: FileStatus): Long = {
+      var m = dir.getModificationTime
+      try {
+        val it = fs.listFiles(dir.getPath, true)
+        while (it.hasNext) m = math.max(m, it.next().getModificationTime)
+      } catch { case _: java.io.IOException => }
+      m
+    }
+
+    def drop(gens: Set[String]): Unit = gens.foreach(g => fs.delete(new Path(path, g), true))
+
+    def fileCounts(gen: String): Seq[Long] = Seq(cellFiles(fs, new Path(path, gen))._1)
+
+    // ONE shuffle of the index, the inherent compaction cost; the ≤C-row
+    // centroid table is the partition count, so each output task holds
+    // ~one whole cell and writes ~one file for it
+    def rewrite(gen: String, tombstones: Option[DataFrame]): String = {
+      val out = s"cells.g${IndexLifecycle.newStamp()}"
+      val raw = spark.read.parquet(genDir(path, gen))
+      val cells = tombstones.fold(raw)(t =>
+        raw.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti"))
+      val c = spark.read.parquet(s"$path/centroids").count().toInt
+      cells.repartition(math.max(c, 1), col("cent_id"))
+        .write.partitionBy("cent_id").parquet(genDir(path, out))
+      out
+    }
+  }
 
   /** Rebuild advisor over a maintained (built + folded) IVF layout:
     * ONE row of integer drift metrics plus the rebuild decision under

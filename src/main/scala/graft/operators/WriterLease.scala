@@ -264,8 +264,8 @@ object WriterLease {
       holderId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** THE atomic create-if-absent of the maintained indexes — the lease's
-    * lock file and every commit of a cells layout's log
-    * ([[CellsLog]]): `bytes` land at `path` only if nothing stands
+    * lock file and every commit of an index lineage's log
+    * ([[IndexLog]]): `bytes` land at `path` only if nothing stands
     * there, and the file appears whole or not at all. The bytes go to a
     * temp sibling first; the claim is then ONE atomic metadata op,
     * scheme-specific because Hadoop's local create(overwrite=false) is

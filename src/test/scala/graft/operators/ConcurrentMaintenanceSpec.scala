@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** The atomic-promote contract, pinned under real concurrency: a
   * maintained layout's compaction promotes a new generation with one
-  * commit of the layout's log ([[CellsLog]]), so BOTH races that used
+  * commit of the lineage's log ([[IndexLog]]), so BOTH races that used
   * to need a maintenance window are now safe:
   *
   *   1. a scan already IN FLIGHT when the promote lands keeps reading
@@ -279,30 +279,6 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       spark.conf.unset("spark.graft.index.maxStaleGenerations")
   }
 
-  test("generation order is NUMERIC across stamp widths — band resolution picks the true newest") {
-    // two promotes from two driver JVMs carry stamps of different digit
-    // width (nanoTime is boot-relative; epoch-nanos only since this
-    // fix) — string order reads _g999... ABOVE _g1000..., resolving to
-    // the SUPERSEDED pair: stale serving, and folds appended there die
-    // when the pair retires. Resolution must order numerically.
-    spark.sql(
-      "CREATE TABLE default.graft_mwres_sigs_g999 (doc_id BIGINT) USING PARQUET")
-    spark.sql(
-      "CREATE TABLE default.graft_mwres_bands_g999 (bk BIGINT) USING PARQUET")
-    spark.sql(
-      "CREATE TABLE default.graft_mwres_sigs_g1000 (doc_id BIGINT) USING PARQUET")
-    spark.sql(
-      "CREATE TABLE default.graft_mwres_bands_g1000 (bk BIGINT) USING PARQUET")
-    try {
-      val (bands, sigs) = Dedup.currentIndexTables(spark, "graft_mwres")
-      assert(bands == "graft_mwres_bands_g1000" &&
-          sigs == "graft_mwres_sigs_g1000",
-        s"numeric 1000 > 999 must win resolution, got ($bands, $sigs)")
-    } finally
-      Seq("sigs_g999", "bands_g999", "sigs_g1000", "bands_g1000").foreach(
-        t => spark.sql(s"DROP TABLE IF EXISTS default.graft_mwres_$t"))
-  }
-
   test("IVF generation GC selects count-bound victims by numeric stamp, never lexical") {
     val root = java.nio.file.Files
       .createTempDirectory("graft-genorder").toString
@@ -320,7 +296,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     // only, never a count-bound victim
     mkGen("cells.old1")
     Seq("cells.g998", "cells.g999", "cells.g1000").zipWithIndex.foreach {
-      case (g, v) => assert(CellsLog.write(spark, layout, CellsLog.Commit(v.toLong, g)))
+      case (g, v) => assert(IndexLog.cells(layout).write(spark, IndexLog.Commit(v.toLong, g)))
     }
     spark.conf.set("spark.graft.index.maxStaleGenerations", "1")
     try Similarity.retireCells(spark, layout)
@@ -361,7 +337,8 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
         Seq(victim).toDF("vec_id"), path, delTag)
       // the racing delete's settle loop resolved the OLD (about to be
       // superseded) generation — the exact stranding precondition
-      assert(Similarity.activeCellsDir(spark, path) == supersededGen,
+      assert(new org.apache.hadoop.fs.Path(Similarity.activeCellsDir(spark, path)).getName
+          == supersededGen,
         "test setup: the delete must land pre-flip")
       ()
     }
@@ -389,12 +366,12 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
   }
 
   test("band index: a delete racing the CTAS promote is forwarded; bands/sigs agree") {
-    // the band-family analog: the dels snapshot is MATERIALIZED once
-    // before the sigs/bands CTAS pair, so a delete appended between
-    // the snapshot and the promote must (a) leave the new generation's
-    // bands and sigs AGREEING on purged docs (a lazily re-evaluated
-    // snapshot would make them disagree) and (b) be forwarded into the
-    // new generation's dels table with its ledger tag merged.
+    // the band-family analog: the tombstone snapshot is the commit the
+    // compaction started from, whose file list never changes, so a
+    // delete committed between the snapshot and the promote must (a)
+    // leave the new generation's bands and sigs AGREEING on purged docs
+    // (both CTAS passes read the same files) and (b) be forwarded into
+    // the new generation's tombstones with its ledger tag kept.
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text")
     val prefix = s"graft_racebd${System.nanoTime()}"
@@ -436,10 +413,8 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(!liveDocs.contains(2L) && !liveDocs.contains(1L),
       "both deletes must be excluded from the live view post-promote")
-    val tags = spark.sql(s"SHOW TBLPROPERTIES $bt").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse("graft.dels", "")
-    assert(tags.split(",").contains(lateTag),
+    val tags = Dedup.bandLog(spark, prefix).latest(spark).dels
+    assert(tags.contains(lateTag),
       s"the late delete's ledger tag must be merged forward: '$tags'")
     // the tag's replay is a CORRECT no-op: doc still excluded
     Dedup.deleteFromMinhashBandIndex(Seq(2L).toDF("doc_id"), prefix,

@@ -261,12 +261,11 @@ class DedupSpec extends SparkSpec {
     assert(spark.table(bt).count() == n1)
     // a second batch folds incrementally on top
     Dedup.foldIntoMinhashBandIndex(c, "graft_foldspec", batchTag = "b2")
-    // fresh-JVM-shaped replay (memo cold, TBLPROPERTIES ledger present):
+    // fresh-JVM-shaped replay (memo cold, log ledger present):
     // pre-record a tag in the ledger, then fold under it — still a no-op
-    val ledger = spark.sql(s"SHOW TBLPROPERTIES $bt").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(ledger("graft.folds") == "b1,b2")
-    spark.sql(s"ALTER TABLE $bt SET TBLPROPERTIES('graft.folds'='b1,b2,preburned')")
+    val log = Dedup.bandLog(spark, "graft_foldspec")
+    assert(log.latest(spark).folds == Set("b1", "b2"))
+    log.commit(spark, "fold")(c => c.copy(folds = c.folds + "preburned"))
     val n2 = spark.table(bt).count()
     Dedup.foldIntoMinhashBandIndex(c, "graft_foldspec", batchTag = "preburned")
     assert(spark.table(bt).count() == n2,
@@ -295,8 +294,8 @@ class DedupSpec extends SparkSpec {
     // landed (appends are all-or-nothing via the commit protocol), the
     // sigs append and the ledger write never happened — exactly the
     // state a killed driver leaves behind mid-fold
-    spark.sql(s"ALTER TABLE $bt SET TBLPROPERTIES(" +
-      "'graft.folds.intent'='ghost,crashed')")
+    val log = Dedup.bandLog(spark, "graft_crashspec")
+    log.commit(spark, "fold-intent")(c => c.copy(intents = Set("ghost", "crashed")))
     val sigs = Dedup.minhashSignaturesPortable(b, 3, 64, 7L)
     sigs.select($"doc_id", explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))
       .write.mode("append").format("parquet")
@@ -317,13 +316,12 @@ class DedupSpec extends SparkSpec {
       "repaired bands table must equal a from-scratch rebuild")
     assert(sigsOf(st) == sigsOf(rst),
       "repaired sigs table must equal a from-scratch rebuild")
-    val props = spark.sql(s"SHOW TBLPROPERTIES $bt").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props("graft.folds") == "crashed")
+    val c = log.latest(spark)
+    assert(c.folds == Set("crashed"))
     // the OTHER crashed tag's standing intent survives this fold — it
     // must still be treated as suspect when ITS replay arrives
-    assert(props("graft.folds.intent") == "ghost",
-      s"unrelated standing intent lost: ${props("graft.folds.intent")}")
+    assert(c.intents == Set("ghost"),
+      s"unrelated standing intent lost: ${c.intents}")
   }
 
   test("compactMinhashBandIndex: fewer files, identical rows, ledger survives") {
@@ -368,9 +366,8 @@ class DedupSpec extends SparkSpec {
       "ensure must resolve (not rebuild) the compacted generation")
     assert(spark.table(cur._1).count() == n1, "ensure must still see the layout current")
     // the fold ledger survives: a replayed tag is still a no-op
-    val ledger = spark.sql(s"SHOW TBLPROPERTIES ${cur._1}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(ledger("graft.folds") == "b1,b2", s"ledger lost: $ledger")
+    val ledger = Dedup.bandLog(spark, "graft_compactspec").latest(spark).folds
+    assert(ledger == Set("b1", "b2"), s"ledger lost: $ledger")
     Dedup.foldIntoMinhashBandIndex(b, "graft_compactspec", batchTag = "b1")
     assert(spark.table(cur._1).count() == n1)
     // and the index still answers: incremental pairs over the compacted
@@ -415,7 +412,7 @@ class DedupSpec extends SparkSpec {
     Dedup.compactMinhashBandIndex(spark, prefix)
     val (g4b, g4s) = Dedup.currentIndexTables(spark, prefix)
     assert(g4b != g3b, "standing tombstones must re-arm the rewrite")
-    assert(Dedup.standingDels(spark, g4b).isEmpty,
+    assert(Dedup.standingTombstoneFiles(spark, prefix).isEmpty,
       "the re-armed rewrite must have purged the tombstones")
     assert(spark.table(g4s).select("doc_id").distinct().count() ==
       docs.filter($"doc_id" % 20 =!= 0).count(),
@@ -481,11 +478,13 @@ class DedupSpec extends SparkSpec {
     assert(pairs(bt, st) == pairs(rbt, rst),
       "live probe must equal rebuild-from-remainder")
     // replayed delete: ledger no-op (memo path and preburned-ledger path)
-    val delsN = spark.table("graft_delspec_dels").count()
+    val log = Dedup.bandLog(spark, "graft_delspec")
+    def tombRows = spark.read.parquet(Dedup.standingTombstoneFiles(spark, "graft_delspec"): _*).count()
+    val delsN = tombRows
     Dedup.deleteFromMinhashBandIndex(del, "graft_delspec", delTag = "d1")
-    spark.sql(s"ALTER TABLE ${cur._1} SET TBLPROPERTIES('graft.dels'='d1,preburn')")
+    log.commit(spark, "delete")(c => c.copy(dels = c.dels + "preburn"))
     Dedup.deleteFromMinhashBandIndex(del, "graft_delspec", delTag = "preburn")
-    assert(spark.table("graft_delspec_dels").count() == delsN,
+    assert(tombRows == delsN,
       "a tag already in the delete ledger must not re-append")
     // re-inserting a tombstoned doc before compaction: LOUD rejection,
     // and nothing (intent/ledger/rows) recorded for the failed tag
@@ -494,15 +493,12 @@ class DedupSpec extends SparkSpec {
         docs.filter($"doc_id" % 20 === 0), "graft_delspec", batchTag = "bad")
     }
     assert(e.getMessage.contains("compact"))
-    val props0 = spark.sql(s"SHOW TBLPROPERTIES ${cur._1}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(!props0.get("graft.folds.intent").exists(_.contains("bad")),
+    assert(!log.latest(spark).intents.contains("bad"),
       "a rejected fold must not leave a standing intent")
-    // compaction purges both tables and drops the dels table; content
-    // now BYTE-equals the remainder rebuild
+    // compaction purges both tables and starts the new generation with
+    // no tombstones; content now BYTE-equals the remainder rebuild
     Dedup.compactMinhashBandIndex(spark, "graft_delspec")
-    def standingN(): Long = Dedup.standingDels(spark, cur._1)
-      .map(_.count()).getOrElse(0L)
+    def standingN(): Long = Dedup.standingTombstoneFiles(spark, "graft_delspec").size.toLong
     assert(standingN() == 0,
       "compaction must leave the promoted generation with no standing dels")
     def bandsOf(t: String) =
@@ -515,9 +511,8 @@ class DedupSpec extends SparkSpec {
     assert(sigsOf(cur._2) == sigsOf(rst),
       "purged sigs must equal rebuild-from-remainder")
     // the delete ledger survives the purge: a replayed tag still no-ops
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${cur._1}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props("graft.dels").contains("d1"), s"delete ledger lost: $props")
+    val dels = log.latest(spark).dels
+    assert(dels.contains("d1"), s"delete ledger lost: $dels")
     Dedup.deleteFromMinhashBandIndex(del, "graft_delspec", delTag = "preburn")
     assert(standingN() == 0,
       "a replayed delete tag must not recreate tombstones after the purge")
@@ -566,19 +561,18 @@ class DedupSpec extends SparkSpec {
     val key = "spark.graft.index.autoCompactTombstoneRows"
     spark.conf.set(key, "10")
     try {
-      val delsTable = s"${prefix}_dels"
       Dedup.deleteFromMinhashBandIndex(
         docs.filter($"doc_id" % 60 === 0).select("doc_id"), prefix, "small")
-      assert(spark.table(delsTable).count() > 0,
+      assert(Dedup.standingTombstoneFiles(spark, prefix).nonEmpty,
         "a sub-cap delete must leave its tombstones standing")
       Dedup.deleteFromMinhashBandIndex(
         docs.filter($"doc_id" % 4 === 1).select("doc_id"), prefix, "mass")
-      // over the cap: the delete path compacts — no dels stand for the
-      // promoted generation (the superseded generation's table is only
-      // RETAINED, consumed + marked, for scans still reading it), and
-      // both physical tables hold the remainder only
+      // over the cap: the delete path compacts — no tombstones stand
+      // for the promoted generation (the superseded generation keeps
+      // its own for scans still reading it), and both physical tables
+      // hold the remainder only
       val (cb, cs) = Dedup.currentIndexTables(spark, prefix)
-      assert(Dedup.standingDels(spark, cb).map(_.count()).getOrElse(0L) == 0L,
+      assert(Dedup.standingTombstoneFiles(spark, prefix).isEmpty,
         "an over-cap delete must trigger the physical purge")
       val gone = spark.table(cb)
         .filter($"doc_id" % 4 === 1 || $"doc_id" % 60 === 0).count() +
@@ -600,7 +594,8 @@ class DedupSpec extends SparkSpec {
     val (bt, st) = Dedup.ensureMinhashBandIndex(a, "graft_resspec", srcTag = tag)
     // the crash window: intent standing, bands append landed, sigs
     // append and ledger write lost (the crashed-fold spec's shape)
-    spark.sql(s"ALTER TABLE $bt SET TBLPROPERTIES('graft.folds.intent'='crashed')")
+    Dedup.bandLog(spark, "graft_resspec")
+      .commit(spark, "fold-intent")(c => c.copy(intents = c.intents + "crashed"))
     val sigs = Dedup.minhashSignaturesPortable(b, 3, 64, 7L)
     sigs.select($"doc_id", explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))
       .write.mode("append").format("parquet")
@@ -634,34 +629,43 @@ class DedupSpec extends SparkSpec {
       "repaired sigs must equal rebuild-from-remainder")
   }
 
-  test("legacy base _dels rows: served as live deletes, consumed + marked by compaction") {
-    // simulate a layout the pre-generation-scoped binary last wrote:
-    // current generation is suffixed, and the base `<prefix>_dels`
-    // table holds UN-consumed rows (no graft.consumed marker)
+  test("a band lineage keeps its state in one log: tombstones ride the bands table, no dels tables") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text")
-    val prefix = s"graft_legacy${System.nanoTime()}"
-    Dedup.ensureMinhashBandIndex(docs.filter($"doc_id" % 10 =!= 0), prefix,
-      srcTag = s"legacy-${System.nanoTime()}")
-    Dedup.compactMinhashBandIndex(spark, prefix) // promote to a suffixed gen
-    val (cb, _) = Dedup.currentIndexTables(spark, prefix)
-    assert(cb != s"${prefix}_bands", "setup: generation must be suffixed")
-    docs.filter($"doc_id" % 20 === 0).select("doc_id")
-      .write.format("parquet").saveAsTable(s"${prefix}_dels")
-    val nDel = docs.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 20 === 0).count()
-    val total = docs.filter($"doc_id" % 10 =!= 0).count()
-    assert(Dedup.liveIndexTable(spark, s"${prefix}_sigs", cb).count()
-        == total - nDel,
-      "legacy base dels rows must be served as live deletes")
+    val prefix = s"graft_bandlog${System.nanoTime()}"
+    val tag    = s"bandlog-${System.nanoTime()}"
+    val corpus = docs.filter($"doc_id" % 10 =!= 0)
+    Dedup.ensureMinhashBandIndex(corpus, prefix, srcTag = tag)
+    Dedup.foldIntoMinhashBandIndex(docs.filter($"doc_id" % 10 === 0), prefix, batchTag = "b1")
+    Dedup.deleteFromMinhashBandIndex(
+      docs.filter($"doc_id" % 20 === 0).select("doc_id"), prefix, delTag = "d1")
+    val (bt, _) = Dedup.currentIndexTables(spark, prefix)
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(bt, Some("default"))).location.getPath
+    // the tombstones sit under the bands table's own location, in a
+    // `_`-prefixed dir the table scan skips
+    val tomb = Dedup.standingTombstoneFiles(spark, prefix)
+    assert(tomb.nonEmpty && tomb.forall(f =>
+      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(s"$loc/_tombstones/")), tomb)
+    spark.catalog.refreshTable(bt)
+    assert(!spark.table(bt).inputFiles.exists(_.contains("_tombstones")),
+      "the bands scan must never read the tombstone files")
     Dedup.compactMinhashBandIndex(spark, prefix)
-    val (cb2, cs2) = Dedup.currentIndexTables(spark, prefix)
-    assert(Dedup.standingDels(spark, cb2).map(_.count()).getOrElse(0L) == 0L,
-      "the migration compaction must consume the legacy rows")
-    assert(spark.table(cs2).count() == total - nDel,
-      "legacy dels must purge physically in the rewrite")
-    // the retained base table is marked, not silently re-applied
-    assert(spark.sql(s"SHOW TBLPROPERTIES ${prefix}_dels").collect()
-      .exists(_.getString(0) == "graft.consumed"),
-      "consumed base dels table must carry the marker")
+    assert(spark.catalog.listTables("default", s"${prefix}_dels*").isEmpty,
+      "fold, delete and compact must create no dels table")
+    val c = Dedup.bandLog(spark, prefix).latest(spark)
+    assert(c.folds == Set("b1") && c.dels == Set("d1") && c.intents.isEmpty &&
+      c.nfiles.exists(_.size == 2) && c.tombstones.isEmpty && c.op == "compact")
+    // the superseded generation's DROP TABLE takes its tombstones along
+    spark.sql(s"DROP TABLE $bt")
+    assert(!new java.io.File(loc).exists(), s"$loc must be gone with its table")
+    // a lineage without a log is incomplete: ensure rebuilds it even
+    // though the tables it names carry a current validity key
+    Dedup.bandLog(spark, prefix).clear(spark)
+    val (rb, rs) = Dedup.ensureMinhashBandIndex(corpus, prefix, srcTag = tag)
+    assert(rb == s"${prefix}_bands" && Dedup.bandLog(spark, prefix).latest(spark).version == 0L)
+    assert(spark.table(rs).count() ==
+      corpus.filter(TextFunctions.hasShingles($"text", 3)).count(),
+      "the rebuild must index the corpus alone: no fold, no tombstone")
   }
 }

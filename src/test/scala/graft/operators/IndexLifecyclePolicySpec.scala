@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import IndexLifecycle.{Generation, Policy}
 
 /** The pure half of [[IndexLifecycle]]: retention, the stamp parser, the
-  * compaction skip decision, the auto-compaction thresholds, settings
-  * parsing and the delete-settle loop — no SparkSession anywhere.
+  * compaction skip decision, the auto-compaction thresholds and
+  * settings parsing — no SparkSession anywhere.
   */
 class IndexLifecyclePolicySpec extends AnyFunSuite {
 
@@ -126,9 +126,6 @@ class IndexLifecyclePolicySpec extends AnyFunSuite {
     // no stamp (gen 0, a garbled stamp): always rewrite, never counts
     assert(!skipCompaction(force = false, hasTombstones = false, None,
       fail("file counts listed without a stamp")))
-    assert(IndexLifecycle.parseCounts("12,3") == Some(Seq(12L, 3L)))
-    assert(IndexLifecycle.parseCounts(" 7 ") == Some(Seq(7L)))
-    assert(IndexLifecycle.parseCounts("7,x") == None)
   }
 
   test("thresholds: tombstone debt and files per unit, <=0 disables") {
@@ -160,20 +157,5 @@ class IndexLifecyclePolicySpec extends AnyFunSuite {
       Policy.GcStaleHoursKey  -> "24h",
       Policy.MaxStaleKey      -> "9999999999")
     assert(Policy.from(bad.get) == Policy())
-  }
-
-  test("delete settle: re-appends to the generation that won a promote, refuses a hot loop") {
-    val appended = scala.collection.mutable.ArrayBuffer.empty[String]
-    // one promote lands between the first append and the re-resolve
-    val script = Iterator("g1", "g2", "g2")
-    assert(IndexLifecycle.settle("d", () => script.next())(appended += _) == "g2")
-    assert(appended == Seq("g1", "g2"))
-    // a generation that changes on every resolve never settles
-    var n = 0
-    val e = intercept[IllegalArgumentException] {
-      IndexLifecycle.settle("delete 'x'", () => { n += 1; s"g$n" })(_ => ())
-    }
-    assert(e.getMessage.contains("delete 'x' could not settle"))
-    assert(n == 7, "six append rounds, each followed by a re-resolve")
   }
 }

@@ -30,9 +30,12 @@ class MaintenanceFuzzSpec extends SparkSpec {
   private def stepFailure(seed: Int, step: Int, what: String, ops: => String): String =
     s"seed=$seed step=$step: $what; ops=$ops"
 
-  // band index: live view ≡ model, ≤ maxStale superseded generations,
-  // and every tombstone a reader applies lives in the ACTIVE
-  // generation's own dels table
+  // band index: live view ≡ model, ≤ maxStale superseded generations
+  // among the pairs commits name, plus replay ≡ store: the latest
+  // commit's bands and sigs tables and every tombstone file it lists
+  // exist, and every `<prefix>_{bands,sigs}*` table is named by a
+  // retained commit or is an uncommitted rewrite younger than
+  // gcStaleHours
   private def checkBandStep(seed: Int, step: Int, prefix: String,
       want: Set[Long], ops: => String): Unit = {
     // sigs hold one row per doc: no distinct, so no shuffle
@@ -43,25 +46,40 @@ class MaintenanceFuzzSpec extends SparkSpec {
       s"live sigs ${live.size} ids vs model ${want.size} " +
         s"(extra ${(live -- want).toSeq.sorted.take(5)}, " +
         s"missing ${(want -- live).toSeq.sorted.take(5)})", ops))
-    val gens = Seq("bands", "sigs", "dels").flatMap { fam =>
+    val catalog = spark.sessionState.catalog
+    val tables = Seq("bands", "sigs").flatMap { fam =>
       val base = s"${prefix}_$fam"
-      spark.sessionState.catalog.listTables("default", s"$base*").map(_.table)
+      catalog.listTables("default", s"$base*").map(_.table)
         .collect {
-          case n if n == base => ""
-          case n if n.startsWith(s"${base}_g") => n.stripPrefix(base)
+          case n if n == base => (n, "")
+          case n if n.startsWith(s"${base}_g") => (n, n.stripPrefix(base))
         }
-    }.toSet
-    val active = cb.stripPrefix(s"${prefix}_bands")
+    }
+    val log = Dedup.bandLog(spark, prefix)
+    val named = log.all(spark).map(_.gen).toSet
+    val active = log.latest(spark).gen
+    val gens = tables.map(_._2).toSet.filter(named)
     if (maxStale > 0)
       assert((gens - active).size <= maxStale, stepFailure(seed, step,
         s"${(gens - active).size} superseded generations stand " +
           s"(bound $maxStale): ${(gens - active).toSeq.sorted}", ops))
-    val ownDels = Dedup.delsTableFor(cb)
-    Dedup.standingDels(spark, cb).foreach { d =>
-      val foreign = d.inputFiles.filterNot(f =>
-        new org.apache.hadoop.fs.Path(f).getParent.getName == ownDels)
-      assert(foreign.isEmpty, stepFailure(seed, step,
-        s"tombstones outside the active generation $cb: ${foreign.take(3).toSeq}", ops))
+    val cutoff = System.currentTimeMillis() -
+      IndexLifecycle.Policy.of(spark).gcStaleHours * 3600L * 1000L
+    tables.filterNot(t => named(t._2)).foreach { case (t, _) =>
+      assert(catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default"))).createTime > cutoff,
+        stepFailure(seed, step,
+          s"$t is named by no retained commit and is older than gcStaleHours", ops))
+    }
+    Seq(cb, cs).foreach(t => assert(spark.catalog.tableExists(t), stepFailure(seed, step,
+      s"the latest commit names $t, which does not exist", ops)))
+    val fs = new org.apache.hadoop.fs.Path(cb).getFileSystem(spark.sessionState.newHadoopConf())
+    Dedup.standingTombstoneFiles(spark, prefix).foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      assert(fs.exists(p), stepFailure(seed, step,
+        s"the latest commit lists $f, which does not exist", ops))
+      assert(p.getParent.getName == "_tombstones" && p.getParent.getParent.getName == cb,
+        stepFailure(seed, step, s"tombstones outside the active generation $cb: $f", ops))
     }
   }
 
@@ -83,7 +101,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       Similarity.activeCellsDir(spark, path)).getName
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val named = CellsLog.all(spark, path).map(_.gen).toSet
+    val named = IndexLog.cells(path).all(spark).map(_.gen).toSet
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
       .filter(_.getPath.getName.startsWith("cells"))
     val gens = dirs.map(_.getPath.getName).filter(named)
@@ -100,8 +118,8 @@ class MaintenanceFuzzSpec extends SparkSpec {
         s"${d.getPath.getName} is named by no retained commit and is older " +
           "than gcStaleHours", ""))
     }
-    val latest = CellsLog.latest(spark, path)
-    (CellsLog.genDir(path, latest) +: CellsLog.tombstoneFiles(path, latest)).foreach { f =>
+    val latest = IndexLog.cells(path).latest(spark)
+    (s"$path/${latest.gen}" +: Similarity.standingTombstoneFiles(spark, path)).foreach { f =>
       assert(fs.exists(new org.apache.hadoop.fs.Path(f)), stepFailure(seed, step,
         s"commit ${latest.version} names $f, which does not exist", ""))
     }
@@ -113,7 +131,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       s"tombstones outside the active generation $active: ${foreign.take(3)}", ""))
   }
 
-  // ---------- band index (table-backed, intent-ledger repair) ----------
+  // ---------- band index (table-backed, intent-commit repair) ----------
 
   private def bandFuzz(seed: Int): Unit = {
     val rnd  = new scala.util.Random(seed)
@@ -167,8 +185,8 @@ class MaintenanceFuzzSpec extends SparkSpec {
         case 1 if nextBatch <= 5 => // crash mid-fold, interleave, replay
           val i = nextBatch
           ops += s"crashfold(b$i)"
-          spark.sql(s"ALTER TABLE $bt SET TBLPROPERTIES(" +
-            s"'graft.folds.intent'='b$i')")
+          Dedup.bandLog(spark, prefix)
+            .commit(spark, "fold-intent")(c => c.copy(intents = c.intents + s"b$i"))
           val sigs = Dedup.minhashSignaturesPortable(batch(i), 3, 64, 7L)
           sigs.select($"doc_id",
               explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))

@@ -69,11 +69,8 @@ class MaintenanceStressSpec extends SparkSpec {
       // the mid-fold crash: intent standing, bands side landed, sigs and
       // ledger lost — then the replay must REPAIR, not double-append
       val ids = pool(nextBatch); nextBatch += 1
-      val tagSet = (spark.sql(s"SHOW TBLPROPERTIES $bt").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-        .get("graft.folds.intent").toSeq.flatMap(_.split(",").filter(_.nonEmpty))
-        :+ s"cf$opN").sorted.mkString(",")
-      spark.sql(s"ALTER TABLE $bt SET TBLPROPERTIES('graft.folds.intent'='$tagSet')")
+      Dedup.bandLog(spark, prefix)
+        .commit(spark, "fold-intent")(c => c.copy(intents = c.intents + s"cf$opN"))
       val sigs = Dedup.minhashSignaturesPortable(byIds(ids), 3, 64, 7L)
       sigs.select($"doc_id", explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))
         .write.mode("append").format("parquet")
@@ -93,15 +90,16 @@ class MaintenanceStressSpec extends SparkSpec {
     }
 
     def crashDelete(): Unit = {
-      // the mid-delete crash: tombstone rows landed, ledger lost — the
-      // replay re-appends DUPLICATE tombstones, which must stay harmless
+      // the mid-delete crash: tombstone files landed, the commit listing
+      // them lost — no reader applies them, and the replay writes and
+      // commits its own
       val live = (indexed -- deleted).toSeq.sorted
       if (live.nonEmpty) {
         val ids = rnd.shuffle(live).take(1 + rnd.nextInt(3)).toSet
+        val loc = spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(bt, Some("default"))).location
         byIds(ids).select("doc_id")
-          .write.mode("append").format("parquet")
-          .saveAsTable(Dedup.delsTableFor(
-            Dedup.currentIndexTables(spark, prefix)._1))
+          .write.mode("append").parquet(s"$loc/_tombstones")
         Dedup.deleteFromMinhashBandIndex(
           byIds(ids).select("doc_id"), prefix, delTag = s"cd$opN")
         deleted ++= ids

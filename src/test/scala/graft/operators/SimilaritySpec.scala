@@ -592,7 +592,7 @@ class SimilaritySpec extends SparkSpec {
     assert(cellFiles == after)
     // fresh-JVM-shaped replay (memo cold, tag in the log's ledger):
     // preburn the ledger for a NEW tag, then fold under it — still a no-op
-    CellsLog.commit(spark, path, "fold")(c => c.copy(folds = c.folds + "preburned"))
+    IndexLog.cells(path).commit(spark, "fold")(c => c.copy(folds = c.folds + "preburned"))
     Similarity.foldIntoIvfIndex(batch, path, batchTag = "preburned")
     assert(cellFiles == after, "a tag already in the fold ledger must not re-append")
     // a folded vector is immediately servable: its own embedding finds it
@@ -601,6 +601,40 @@ class SimilaritySpec extends SparkSpec {
     val top = Similarity.ivfProbe(spark, path, qv.toSeq, k = 1, nProbe = 4)
       .as[(Long, Long)].head()
     assert(top._1 == 0L, "the folded vector must be served as its own nearest neighbor")
+  }
+
+  test("foldIntoIvfIndex: a crashed fold REPAIRS on replay, no double-append") {
+    val emb    = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    val corpus = emb.filter($"vec_id" % 10 =!= 0)
+    val batch  = emb.filter($"vec_id" % 20 === 0).select("vec_id", "embedding")
+    val gone   = emb.filter($"vec_id" % 20 === 10).select("vec_id", "embedding")
+    val (path, _) = Similarity.ensureIvfIndex(corpus,
+      srcTag = s"ivfcrash-${System.nanoTime()}")
+    val log = IndexLog.cells(path)
+    // the crash window: intent committed, the cell append landed (one
+    // append is all-or-nothing), the tag commit never happened
+    def crash(tag: String, b: org.apache.spark.sql.DataFrame): Unit = {
+      log.commit(spark, "fold-intent")(c => c.copy(intents = c.intents + tag))
+      Similarity.foldAssignment(b, path)
+        .write.mode("append").partitionBy("cent_id").parquet(Similarity.activeCellsDir(spark, path))
+    }
+    crash("crashed", batch)
+    Similarity.foldIntoIvfIndex(batch, path, batchTag = "crashed")
+    val ids = Similarity.liveCells(spark, path).select("vec_id").as[Long].collect().toSeq
+    assert(ids.size == ids.distinct.size,
+      s"replay double-appended ${ids.size - ids.distinct.size} rows")
+    assert(ids.toSet == emb.filter($"vec_id" % 20 =!= 10).select("vec_id").as[Long].collect().toSet)
+    val c = log.latest(spark)
+    assert(c.folds("crashed") && c.intents.isEmpty && c.purgewin.isEmpty)
+    // a batch deleted in full and purged inside its crash window leaves
+    // nothing to probe: the replay refuses instead of guessing
+    crash("gone", gone)
+    Similarity.deleteFromIvfIndex(gone.select("vec_id"), path, delTag = "takedown")
+    Similarity.compactIvfCells(spark, path)
+    assert(log.latest(spark).purgewin == Set("gone"))
+    val e = intercept[IllegalStateException](
+      Similarity.foldIntoIvfIndex(gone, path, batchTag = "gone"))
+    assert(e.getMessage.contains("undecidable"))
   }
 
   test("compactIvfCells: fewer files, identical rows and probes, ledger survives") {
@@ -628,7 +662,7 @@ class SimilaritySpec extends SparkSpec {
     // the fold ledger survives compaction (only cells/ was rewritten):
     // a fresh JVM replaying b1/b2 would still find both tags
     Seq("b1", "b2").foreach { tag =>
-      assert(CellsLog.latest(spark, path).folds(tag),
+      assert(IndexLog.cells(path).latest(spark).folds(tag),
         s"fold ledger entry for $tag must survive compaction")
     }
     val f = cellFiles
@@ -786,7 +820,7 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id", $"cent_id".cast("long"), $"q", $"nrm")
       .as[(Long, Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
     assert(physical == want, "compaction must purge exactly the tombstoned rows")
-    assert(CellsLog.latest(spark, path).dels("d1"),
+    assert(IndexLog.cells(path).latest(spark).dels("d1"),
       "delete ledger entry must survive compaction")
     // after the purge the id folds again as new — the replace recipe
     Similarity.foldIntoIvfIndex(
@@ -904,7 +938,7 @@ class SimilaritySpec extends SparkSpec {
     assert(orphan.size == 1, s"the crashed rewrite must stand as one orphan: $dirs")
     assert(Similarity.activeCellsDir(spark, path) == active && rows == before,
       "the old generation must stay active with every row")
-    assert(CellsLog.latest(spark, path).folds("b1"), "the fold ledger is untouched")
+    assert(IndexLog.cells(path).latest(spark).folds("b1"), "the fold ledger is untouched")
     // fresh, it may be a live rewrite elsewhere: the age gate keeps it
     Similarity.deleteFromIvfIndex(Seq(-2L).toDF("vec_id"), path, "gc-d0")
     assert(orphan.subsetOf(dirs), "a FRESH uncommitted rewrite must survive retention")
@@ -930,12 +964,12 @@ class SimilaritySpec extends SparkSpec {
     assert(!names.exists(n => n.contains("MANIFEST") || n == "folds" || n == "dels" ||
         n.contains("_graft_nfiles")),
       s"a fresh layout must hold no pre-log metadata: ${names.toSeq.sorted.take(20)}")
-    val c = CellsLog.latest(spark, path)
+    val c = IndexLog.cells(path).latest(spark)
     assert(c.folds == Set("b1") && c.dels == Set("d1") && c.nfiles.isDefined &&
       c.tombstones.isEmpty && c.op == "compact")
     // a version is created once: a second writer of the same version loses
-    assert(!CellsLog.write(spark, path, c.copy(gen = "cells")))
-    assert(CellsLog.latest(spark, path) == c)
+    assert(!IndexLog.cells(path).write(spark, c.copy(gen = "cells")))
+    assert(IndexLog.cells(path).latest(spark) == c)
   }
 
   test("two writers racing one log version: exactly one wins, whole") {
@@ -946,14 +980,14 @@ class SimilaritySpec extends SparkSpec {
       val ts = (0 until 4).map { w =>
         new Thread(() => {
           barrier.await()
-          if (CellsLog.write(spark, dir, CellsLog.Commit(v.toLong, s"cells.g$w",
+          if (IndexLog.cells(dir).write(spark, IndexLog.Commit(v.toLong, s"cells.g$w",
               folds = Set(s"writer-$w")))) wins.incrementAndGet()
           ()
         })
       }
       ts.foreach(_.start()); ts.foreach(_.join())
       assert(wins.get() == 1, s"version $v: ${wins.get()} writers won")
-      val c = CellsLog.latest(spark, dir)
+      val c = IndexLog.cells(dir).latest(spark)
       assert(c.version == v && c.folds == Set(s"writer-${c.gen.stripPrefix("cells.g")}"),
         s"version $v must hold exactly its winner's commit: $c")
     }
@@ -992,10 +1026,10 @@ class SimilaritySpec extends SparkSpec {
       java.nio.file.attribute.FileTime.fromMillis(aged))
     // age the superseded generation too: its last touch is the time of
     // the last commit naming it, so re-date those commits
-    val fs = CellsLog.fsOf(spark, path)
-    CellsLog.all(spark, path).filter(_.gen == "cells").foreach { c =>
+    val fs = IndexLog.fsOf(spark, path)
+    IndexLog.cells(path).all(spark).filter(_.gen == "cells").foreach { c =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/_log/${c.version}.json"), false)
-      assert(CellsLog.write(spark, path, c.copy(timeMs = aged)))
+      assert(IndexLog.cells(path).write(spark, c.copy(timeMs = aged)))
     }
     // the next locked maintenance entry garbage-collects the aged ones
     Similarity.foldIntoIvfIndex(
@@ -1004,7 +1038,7 @@ class SimilaritySpec extends SparkSpec {
       "AGED leftovers and superseded generations must be deleted")
     assert(cmpL.exists(),
       "a FRESH sibling (possibly a live cross-process rewrite) must survive")
-    assert(!CellsLog.all(spark, path).exists(_.gen == "cells"),
+    assert(!IndexLog.cells(path).all(spark).exists(_.gen == "cells"),
       "commits naming only dropped generations must be truncated")
     cmpL.delete()
     assert(rows.toSet.subsetOf(spark.read.parquet(Similarity.activeCellsDir(spark, path))
@@ -1424,7 +1458,7 @@ class SimilaritySpec extends SparkSpec {
     }.flatten
     cellRows.toDF("vec_id", "q", "nrm", "cent_id")
       .write.partitionBy("cent_id").parquet(s"$dir/cells")
-    CellsLog.init(spark, dir)
+    IndexLog.cells(dir).init(spark, "cells")
     val queries = (0 until 8).map { i =>
       (i.toLong, Seq.fill(dim)(rnd.nextFloat() * 2f - 1f))
     }
@@ -1458,12 +1492,12 @@ class SimilaritySpec extends SparkSpec {
       srcTag = s"gcreader-${System.nanoTime()}")
     val n = Similarity.liveCells(spark, path).count()
     // a reader resolves commit 0 ...
-    val stale = CellsLog.latest(spark, path)
+    val stale = IndexLog.cells(path).latest(spark)
     // ... a promote lands and retention takes the generation it named
     // (a reader slower than gcStaleHours / K promotes)
     Similarity.compactIvfCells(spark, path)
-    val fs = CellsLog.fsOf(spark, path)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(CellsLog.genDir(path, stale)), true))
+    val fs = IndexLog.fsOf(spark, path)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/${stale.gen}"), true))
     // the read of the stale commit re-resolves once from the newer
     // commit: full rows, no retry budget to wait out
     assert(Similarity.liveCellsFrom(spark, path, stale).count() == n)

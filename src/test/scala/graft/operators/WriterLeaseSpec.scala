@@ -106,8 +106,11 @@ class WriterLeaseSpec extends SparkSpec {
       }
       assert(spark.table(bt).count() == rowsBefore,
         "refused writes must leave the index untouched")
-      assert(Dedup.standingDels(spark, bt).isEmpty,
-        "a refused delete must not have created a dels table")
+      assert(Dedup.standingTombstoneFiles(spark, prefix).isEmpty,
+        "a refused delete must not have committed tombstones")
+      val c = Dedup.bandLog(spark, prefix).latest(spark)
+      assert(c.version == 0L && c.intents.isEmpty && c.dels.isEmpty,
+        s"a refused write must not have committed anything: $c")
     } finally {
       spark.conf.unset("spark.graft.index.writerLeaseWaitSeconds")
       lock.getFileSystem(spark.sessionState.newHadoopConf())

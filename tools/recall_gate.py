@@ -12,25 +12,28 @@ the bench artifacts; exits non-zero on a miss so the round close can't
 quietly carry a regressed default.
 
 Usage: python3 tools/recall_gate.py [sfDir] [minRecall=0.95]
-  With no sfDir, picks the largest fixture that exists:
-  /tmp/sf10 > /tmp/sf3 > fixtures/sf1.0 > /root/testdata/sf0.1
-  (regenerate the /tmp tiers with tools/gen_sf1.py first).
+  With no sfDir, picks the largest gate-scale fixture that exists:
+  /tmp/sf10 > /tmp/sf3 > fixtures/sf1.0 (regenerate one with
+  tools/gen_sf1.py first). A smaller fixture is never picked: at the
+  sf0.1 test fixture's 2,000 vectors the nProbe=4 IVF ceiling is 0.945,
+  under the floor on every tree.
 """
 import json
+import os
 import re
 import subprocess
 import sys
 
-CANDIDATES = ["/tmp/sf10", "/tmp/sf3", "/root/repo/fixtures/sf1.0",
-              "/root/testdata/sf0.1"]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CANDIDATES = ["/tmp/sf10", "/tmp/sf3", os.path.join(REPO, "fixtures", "sf1.0")]
 
 
 def pick():
-    import os
     for c in CANDIDATES:
         if os.path.isfile(os.path.join(c, "embeddings.parquet")):
             return c
-    sys.exit("no fixture found; run tools/gen_sf1.py")
+    sys.exit("no gate-scale fixture found (looked in " + ", ".join(CANDIDATES) +
+             "); generate one with: python3 tools/gen_sf1.py <dir> 100")
 
 
 sf = sys.argv[1] if len(sys.argv) > 1 else pick()
@@ -38,8 +41,8 @@ min_recall = float(sys.argv[2]) if len(sys.argv) > 2 else 0.95
 
 cp = subprocess.run(
     ["sbt", "-batch", f"runMain graft.tools.IvfPqBench {sf} 20 10 4 256 1000"],
-    cwd="/root/repo", capture_output=True, text=True, timeout=3600,
-    env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "16"})
+    cwd=REPO, capture_output=True, text=True, timeout=3600,
+    env={**os.environ, "SPARK_GRAFT_CPUS": "16"})
 m = None
 for line in cp.stdout.splitlines():
     line = re.sub(r"^\[info\]\s*", "", line.strip())
@@ -66,7 +69,7 @@ result = {
 # physical purge, and emits it into BENCH_delete.json — merge that row
 # into the gate so a round close asserts BOTH operating points.
 try:
-    with open("/root/repo/BENCH_delete.json") as f:
+    with open(os.path.join(REPO, "BENCH_delete.json")) as f:
         db = json.load(f)
     if "pq_recall_after_purge" in db:
         result["post_takedown"] = {
@@ -80,7 +83,7 @@ except (FileNotFoundError, json.JSONDecodeError):
     pass
 
 ok = result["pass"] and result.get("post_takedown", {}).get("pass", True)
-with open("/root/repo/RECALL_GATE.json", "w") as f:
+with open(os.path.join(REPO, "RECALL_GATE.json"), "w") as f:
     json.dump(result, f, indent=1)
 print(f"recall@10 = {recall} at {sf} "
       f"({'PASS' if result['pass'] else 'FAIL'}, floor {min_recall})")

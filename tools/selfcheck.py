@@ -18,6 +18,7 @@ Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--skip-verify]
 import decimal
 import json
 import math
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -29,6 +30,7 @@ SF = pos[0] if len(pos) > 0 else "/root/testdata/sf0.01"
 OUT = pos[1] if len(pos) > 1 else "/tmp/graft_verify"
 ONLY = next((set(a.split("=", 1)[1].split(","))
              for a in sys.argv[1:] if a.startswith("--only=")), None)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -36,7 +38,7 @@ def run_verify():
     flt = f" {','.join(sorted(ONLY))}" if ONLY else ""
     cp = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{flt}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
     for line in cp.stdout.splitlines():
         if "[verify]" in line or "error" in line.lower():
             print(line)
