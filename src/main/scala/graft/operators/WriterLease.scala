@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * ledger or layout, so two driver JVMs folding the same lineage
   * either SERIALIZE (the second waits out the first's short op) or
   * REFUSE loudly — never the silent double-append / lost-ledger-entry
-  * interleaving the TBLPROPERTIES read-modify-write and the
-  * resolve-append-settle loops would otherwise admit. (Reference
+  * interleaving two writers' appends and log commits would otherwise
+  * admit (the log's version CAS catches a lost race, not a duplicate
+  * append that preceded it). (Reference
   * analog: the SDE load is single-process by construction,
   * etl/pipeline.py:557-568 — a sharded 100 TB ingest tier is not.)
   *
