@@ -279,6 +279,12 @@ object Similarity {
       path: String,
       nCentroids: Int,
       refineIters: Int = 0): Unit = {
+    // centroids are seeded from the ids below nCentroids: with none, the
+    // layout would have no centroid, and no later compaction could
+    // partition its cells
+    if (embeddings.filter(col("vec_id") < nCentroids).isEmpty)
+      throw new IllegalArgumentException(
+        s"buildIvfIndex: no vec_id below nCentroids = $nCentroids to seed a centroid from")
     val b = embeddings
       .select(col("vec_id"), VectorFunctions.quantize(col("embedding")).as("q"))
       .withColumn("nrm", VectorFunctions.qdot(col("q"), col("q")))

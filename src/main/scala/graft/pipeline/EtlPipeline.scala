@@ -3,6 +3,7 @@ package graft.pipeline
 import java.util.concurrent.{CompletableFuture, Executors}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions._
 import graft.config.{GlobalConfig, OutputMapping, Source}
 import graft.functions.{Naming => Names}
 import graft.geo.{GeoFunctions, Geometry}
-import graft.sources.{GeoJsonSource, GpkgSource, PagedRestSource, ShpSource}
+import graft.sources.{GeoJsonSource, GpkgSource, ShpSource}
+import graft.sources.v2.{RestDataSource, RestTable}
 
 /** The end-to-end config-driven pipeline (SURVEY §3.1):
   * Extract → Stage → Geoprocess → Publish, with the reference's
@@ -130,7 +132,6 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
         val extractDir = landDir.resolve("extracted")
         val cachedListing =
           if (fromCache && java.nio.file.Files.isDirectory(extractDir)) {
-            import scala.jdk.CollectionConverters._
             val walk = java.nio.file.Files.walk(extractDir)
             try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
             finally walk.close()
@@ -177,37 +178,37 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
       case "file" | "atom_feed" =>
         GeoJsonSource.read(spark, path)
       case "rest_api" =>
-        val layerIds = source.raw.get("layer_ids") match {
-          case Some(l: java.util.List[_]) =>
-            import scala.jdk.CollectionConverters._
-            l.asScala.map(_.toString.toInt).toSeq
-          case Some(s: Seq[_]) => s.map(_.toString.toInt)
-          case _               => Seq.empty
-        }
-        val q = PagedRestSource.Query(
-          whereClause = source.raw.get("where_clause").map(_.toString),
-          outFields = source.raw.get("out_fields").map(_.toString)
-            .filter(_ != "*").map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty),
-          bbox = source.raw.get("bbox").map { b =>
-            val Array(a, c, d, e) = b.toString.split(",").map(_.trim.toDouble)
-            Geometry.BBox(a, c, d, e)
-          })
-        PagedRestSource.readService(spark, path, layerIds, q,
-          discoveryTtlSeconds = discoveryTtl(source))
+        val configured = listField(source, "layer_ids").map(intItem(source, "layer_ids", _))
+        val layers =
+          if (configured.nonEmpty) configured
+          else RestTable.discoverLayers(path, discoveryTtl(source))
+        // named by class: the `graft-rest` short name resolves only where
+        // the META-INF service registration is on the classpath, and a
+        // classpath of just the compiled main sources (the benchmark's)
+        // does not carry it
+        val read = spark.read.format(classOf[RestDataSource].getName)
+          .option("path", path).option("layer_ids", layers.mkString(",")).load()
+        // the server-side query params (rest_api.py:189-209), pushed into
+        // the scan where the connector can evaluate them
+        val filters = Seq(
+          Option.when(configured.nonEmpty)(col("layer_id").isin(configured: _*)),
+          bboxField(source).map(b => GeoFunctions.bboxIntersects(
+            col("xmin"), col("ymin"), col("xmax"), col("ymax"), b)),
+          source.raw.get("where_clause").map(_.toString.trim)
+            .filter(w => w.nonEmpty && w != "1=1").map(expr)).flatten
+        val outFields = listField(source, "out_fields").filter(_ != "*")
+        val geo = Seq("geom_type", "geometry", "srid", "xmin", "ymin", "xmax", "ymax").map(col)
+        // out_fields (T3) has always staged `properties` after the bbox
+        // columns; kept, so a table pinned by an earlier run does not drift
+        val cols =
+          if (outFields.isEmpty) Seq(col("_file"), col("feature_id"), col("properties")) ++ geo
+          else (col("feature_id") +: geo) ++ Seq(col("_file"), map_from_arrays(
+            array(outFields.map(lit): _*),
+            array(outFields.map(col("properties").getItem): _*)).as("properties"))
+        filters.foldLeft(read)(_ filter _).select(cols :+ col("layer_id"): _*)
       case "ogc_api" =>
-        val collections = source.raw.get("collections") match {
-          case Some(l: java.util.List[_]) =>
-            import scala.jdk.CollectionConverters._
-            l.asScala.map(_.toString).toSeq
-          case Some(s: Seq[_]) => s.map(_.toString)
-          case _               => Seq.empty
-        }
-        val bbox = source.raw.get("bbox").map { b =>
-          val Array(x0, y0, x1, y1) = b.toString.split(",").map(_.trim.toDouble)
-          Geometry.BBox(x0, y0, x1, y1)
-        }
-        graft.sources.OgcApiSource.readService(spark, path, collections, bbox,
-          discoveryTtlSeconds = discoveryTtl(source))
+        graft.sources.OgcApiSource.readService(spark, path, listField(source, "collections"),
+          bboxField(source), discoveryTtlSeconds = discoveryTtl(source))
       case other =>
         throw new IllegalArgumentException(s"no reader for source type '$other'")
     }
@@ -228,10 +229,35 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
         .orElse(s.toDoubleOption.collect {
           case d if d.isWhole && math.abs(d) <= Long.MaxValue.toDouble => d.toLong
         })
-        .getOrElse(throw new IllegalArgumentException(
-          s"source '${source.name}': cache_ttl must be an integral number " +
-            s"of seconds, got '$s'"))
+        .getOrElse(throw configError(source, "cache_ttl", "an integral number of seconds", s))
     }.getOrElse(3600L)
+
+  /** A list-valued raw config field (`layer_ids`, `collections`,
+    * `out_fields`, `bbox`): a YAML list or a comma-separated string;
+    * absent is empty.
+    */
+  private[pipeline] def listField(source: Source, field: String): Seq[String] =
+    source.raw.get(field) match {
+      case None | Some(null)          => Seq.empty
+      case Some(l: java.util.List[_]) => l.asScala.map(String.valueOf).toSeq
+      case Some(l: Seq[_])            => l.map(String.valueOf)
+      case Some(v)                    => v.toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    }
+
+  private def intItem(source: Source, field: String, item: String): Int =
+    item.trim.toIntOption.getOrElse(throw configError(source, field, "a list of integers", item))
+
+  /** The `bbox` raw config field: four numbers, xmin,ymin,xmax,ymax. */
+  private[pipeline] def bboxField(source: Source): Option[Geometry.BBox] =
+    source.raw.get("bbox").map { v =>
+      listField(source, "bbox").map(_.trim.toDoubleOption) match {
+        case Seq(Some(x0), Some(y0), Some(x1), Some(y1)) => Geometry.BBox(x0, y0, x1, y1)
+        case _ => throw configError(source, "bbox", "four numbers xmin,ymin,xmax,ymax", v)
+      }
+    }
+
+  private def configError(source: Source, field: String, want: String, got: Any) =
+    new IllegalArgumentException(s"source '${source.name}': $field must be $want, got '$got'")
 
   /** Stage one source: include-filter (T5), fc naming (F4/F6), lineage
     * columns, write to the staging database (K1-K4). Inside [[run]], when

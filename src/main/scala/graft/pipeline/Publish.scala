@@ -72,7 +72,7 @@ object Publish {
       df: DataFrame,
       spoolDir: String,
       overwrite: Boolean = true): Unit =
-    df.write.format("graft-rest")
+    df.write.format(classOf[graft.sources.v2.RestDataSource].getName) // see readSource
       .mode(if (overwrite) "overwrite" else "append")
       .save(spoolDir)
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
@@ -17,24 +17,24 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.geo.Geometry
 
 /** DataSource V2 connector for the ESRI-REST-style paged source
-  * (`spark.read.format("graft-rest").option("path", serviceDir)`),
-  * the engine-grade version of graft.sources.PagedRestSource.
+  * (`spark.read.format("graft-rest").option("path", serviceDir)`), the
+  * pipeline's `rest_api` reader. A layer is a directory `layer-<id>` of
+  * `page-*.json` FeatureCollection pages, what the reference's
+  * pagination loop lands per request (rest_api.py:575-637).
   *
-  * What the reference hand-implements at the HTTP layer
-  * (rest_api.py:189-209 query params, :575-637 pagination), this
-  * connector expresses through the DSv2 pushdown contracts, so Catalyst
-  * drives it:
-  *  - SupportsPushDownFilters → the `where`/bbox params: filters on
-  *    layer_id / feature_id / srid / bbox columns are evaluated INSIDE
-  *    the page reader ("at the server"); residuals stay in Spark.
-  *  - SupportsPushDownRequiredColumns → `outFields`: pruned columns are
-  *    never materialized from JSON.
-  *  - SupportsPushDownLimit → `resultRecordCount`: page partitions stop
-  *    emitting at the limit (early termination, rest_api.py:280-298).
+  * The reference's server-side query params (rest_api.py:189-209) are
+  * the DSv2 pushdown contracts here, so Catalyst drives them:
+  *  - SupportsPushDownFilters → `where`/bbox: each filter the page reader
+  *    evaluates exactly ([[RestFilters.compile]]) runs inside it;
+  *  - SupportsPushDownRequiredColumns → `outFields`;
+  *  - SupportsPushDownLimit → `resultRecordCount` (early termination,
+  *    rest_api.py:280-298).
   *
-  * Each page file is one InputPartition — pagination becomes a
-  * partitioned parallel read instead of the reference's sequential
-  * offset loop. At cluster scale each executor fetches its own pages.
+  * Option `layer_ids` (comma-separated) lists only those layers, and one
+  * without pages fails the scan, naming it; without the option the
+  * layers are discovered. The `_file` metadata column is each row's page
+  * file, as `input_file_name()` is for the file readers. Each page is one
+  * InputPartition: pagination becomes a parallel read.
   */
 class RestDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
 
@@ -65,36 +65,64 @@ object RestTable {
     StructField("xmax", DoubleType),
     StructField("ymax", DoubleType)))
 
-  /** page files under a service dir: layer-<id>/page-<n>.json (single
-    * layer dirs are treated as layer 0).
+  // R5: discoveries inside a TTL window are served from the driver-side
+  // cache (performance.py:435-466 cached_request over rest_api.py:74-187)
+  private[sources] val discoveryCache =
+    new graft.util.ResponseCache[Seq[Int]](maxSize = 256)
+
+  /** Layer discovery (S5): the sorted ids of the `layer-<id>` dirs under
+    * the service dir, cached per service for `ttlSeconds` (the
+    * `cache_ttl` source field; 0 re-lists every time).
     */
-  def discoverPages(path: String): Seq[(Int, java.io.File)] = {
-    val root = new java.io.File(path)
-    val layerDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("layer-"))
-    val dirs =
-      if (layerDirs.nonEmpty) layerDirs.map(d => d.getName.stripPrefix("layer-").toInt -> d).toSeq
-      else Seq(0 -> root)
-    dirs.sortBy(_._1).flatMap { case (id, dir) =>
-      Option(dir.listFiles()).getOrElse(Array.empty)
+  def discoverLayers(serviceDir: String, ttlSeconds: Long = 3600): Seq[Int] =
+    discoveryCache.getOrElseUpdate(
+      graft.util.ResponseCache.requestKey(serviceDir,
+        Map("op" -> "discoverLayers")), Some(ttlSeconds)) {
+      Option(new java.io.File(serviceDir).listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isDirectory && f.getName.startsWith("layer-"))
+        .map(_.getName.stripPrefix("layer-").toInt)
+        .sorted.toSeq
+    }
+
+  /** The page files of each layer, in layer then page-name order; a
+    * layer without pages fails, naming it.
+    */
+  def pages(serviceDir: String, layerIds: Seq[Int]): Seq[(Int, java.io.File)] = {
+    if (layerIds.isEmpty)
+      throw new java.io.FileNotFoundException(s"no layer-<id> directory under '$serviceDir'")
+    layerIds.flatMap { id =>
+      val files = Option(new java.io.File(serviceDir, s"layer-$id").listFiles())
+        .getOrElse(Array.empty)
         .filter(f => f.getName.startsWith("page-") && f.getName.endsWith(".json"))
         .sortBy(_.getName)
-        .map(id -> _)
+      if (files.isEmpty)
+        throw new java.io.FileNotFoundException(s"layer $id of '$serviceDir' has no page-*.json file")
+      files.map(id -> _)
     }
   }
 }
 
 class RestTable(path: String, providedSchema: Option[StructType] = None) extends Table
   with SupportsRead
+  with SupportsMetadataColumns
   with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String                          = s"graft-rest:$path"
   override def schema(): StructType                    = providedSchema.getOrElse(RestTable.Schema)
+  override def metadataColumns(): Array[MetadataColumn] = Array(new MetadataColumn {
+    override def name(): String       = "_file"
+    override def dataType(): DataType = StringType
+  })
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RestScanBuilder(path)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val layerIds = Option(options.get("layer_ids")) match {
+      case Some(ids) => ids.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+      case None      => RestTable.discoverLayers(path)
+    }
+    new RestScanBuilder(path, layerIds)
+  }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -102,7 +130,7 @@ class RestTable(path: String, providedSchema: Option[StructType] = None) extends
     new RestWriteBuilder(path, info)
 }
 
-class RestScanBuilder(path: String)
+class RestScanBuilder(path: String, layerIds: Seq[Int])
   extends ScanBuilder
   with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns
@@ -112,19 +140,12 @@ class RestScanBuilder(path: String)
   private var requiredSchema: StructType  = RestTable.Schema
   private var limit: Int                  = -1
 
-  /** which filters the "server" (page reader) can evaluate — the analog
-    * of what the reference can put into where/bbox query params.
-    */
-  private def supported(f: Filter): Boolean = {
-    val cols = f.references.toSet
-    cols.nonEmpty && cols.subsetOf(Set("layer_id", "feature_id", "srid",
-      "xmin", "ymin", "xmax", "ymax", "geom_type"))
-  }
-
+  // Spark does not re-apply a pushed filter, so only the filters the
+  // page reader evaluates exactly are pushed; the rest stay residual
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (canPush, residual) = filters.partition(supported)
+    val (canPush, residual) = filters.partition(RestFilters.compile(_).isDefined)
     pushed = canPush
-    residual // Spark re-applies these (standard pushdown contract)
+    residual
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -133,10 +154,11 @@ class RestScanBuilder(path: String)
 
   override def pushLimit(l: Int): Boolean = { limit = l; true /* guaranteed */ }
 
-  override def build(): Scan = new RestScan(path, pushed, requiredSchema, limit)
+  override def build(): Scan = new RestScan(path, layerIds, pushed, requiredSchema, limit)
 }
 
-class RestScan(path: String, filters: Array[Filter], required: StructType, limit: Int)
+class RestScan(
+    path: String, layerIds: Seq[Int], filters: Array[Filter], required: StructType, limit: Int)
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -147,7 +169,7 @@ class RestScan(path: String, filters: Array[Filter], required: StructType, limit
       s"ReadSchema=[${required.fieldNames.mkString(",")}] limit=$limit"
 
   override def planInputPartitions(): Array[InputPartition] =
-    RestTable.discoverPages(path).map { case (layerId, file) =>
+    RestTable.pages(path, layerIds).map { case (layerId, file) =>
       RestPagePartition(layerId, file.getAbsolutePath): InputPartition
     }.toArray
 
@@ -165,6 +187,73 @@ class RestReaderFactory(filters: Array[Filter], required: StructType, limit: Int
   }
 }
 
+/** One feature of a page, as the page reader holds it. Every field but
+  * `props` is non-null: features without a parseable geometry are not
+  * emitted. `props` is null when the feature has no properties object.
+  */
+private[v2] final case class RestFeature(
+    layerId: Int, featureId: Long, props: Seq[(String, String)], geomType: String,
+    wkt: String, srid: Int, bb: Geometry.BBox)
+
+/** The filters the page reader evaluates. One function answers both
+  * "can this filter be pushed" (it compiles) and "does this feature pass"
+  * (the compiled predicate), so the two cannot drift apart. Every column
+  * a filter may name is non-null on every feature, so two-valued logic
+  * is exact for non-null literals; a null literal, an unknown column or
+  * an unlisted kind does not compile.
+  */
+private[v2] object RestFilters {
+
+  type Pred = RestFeature => Boolean
+
+  // each column with the boxed type Spark casts its literals to
+  val columns: Map[String, (Class[_], RestFeature => Any)] = Map(
+    "layer_id"   -> (classOf[java.lang.Integer], _.layerId),
+    "feature_id" -> (classOf[java.lang.Long], _.featureId),
+    "srid"       -> (classOf[java.lang.Integer], _.srid),
+    "geom_type"  -> (classOf[String], _.geomType),
+    "xmin"       -> (classOf[java.lang.Double], _.bb.xmin),
+    "ymin"       -> (classOf[java.lang.Double], _.bb.ymin),
+    "xmax"       -> (classOf[java.lang.Double], _.bb.xmax),
+    "ymax"       -> (classOf[java.lang.Double], _.bb.ymax))
+
+  // Spark's order: -0.0 equals 0.0, NaN equals itself and sorts last,
+  // strings compare by their UTF-8 bytes
+  private def cmp(x: Any, y: Any): Int = (x, y) match {
+    case (a: Double, b: Double) => if (a == b) 0 else java.lang.Double.compare(a, b)
+    case (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    case (a: Comparable[Any @unchecked], b) => a.compareTo(b)
+  }
+
+  private def order(a: String, v: Any): Option[RestFeature => Int] =
+    columns.get(a).collect { case (cls, get) if v != null && v.getClass == cls => f => cmp(get(f), v) }
+
+  private def string(a: String, v: String)(test: (String, String) => Boolean): Option[Pred] =
+    columns.get(a).collect { case (cls, get) if v != null && cls == classOf[String] =>
+      f => test(get(f).asInstanceOf[String], v) }
+
+  def compile(flt: Filter): Option[Pred] = flt match {
+    case EqualTo(a, v)            => order(a, v).map(c => f => c(f) == 0)
+    case EqualNullSafe(a, v)      => order(a, v).map(c => f => c(f) == 0)
+    case GreaterThan(a, v)        => order(a, v).map(c => f => c(f) > 0)
+    case GreaterThanOrEqual(a, v) => order(a, v).map(c => f => c(f) >= 0)
+    case LessThan(a, v)           => order(a, v).map(c => f => c(f) < 0)
+    case LessThanOrEqual(a, v)    => order(a, v).map(c => f => c(f) <= 0)
+    case In(a, vs) =>
+      val cs = vs.toSeq.map(order(a, _))
+      Option.when(cs.forall(_.isDefined)) { val eq = cs.flatten; f: RestFeature => eq.exists(_(f) == 0) }
+    case IsNull(a) if columns.contains(a)    => Some(_ => false)
+    case IsNotNull(a) if columns.contains(a) => Some(_ => true)
+    case StringStartsWith(a, v) => string(a, v)(_.startsWith(_))
+    case StringEndsWith(a, v)   => string(a, v)(_.endsWith(_))
+    case StringContains(a, v)   => string(a, v)(_.contains(_))
+    case And(l, r) => for (pl <- compile(l); pr <- compile(r)) yield f => pl(f) && pr(f)
+    case Or(l, r)  => for (pl <- compile(l); pr <- compile(r)) yield f => pl(f) || pr(f)
+    case Not(c)    => compile(c).map(p => f => !p(f))
+    case _         => None
+  }
+}
+
 /** Reads one canned page (FeatureCollection JSON), applies pushed
   * filters and the limit, emits only required columns.
   */
@@ -173,94 +262,59 @@ class RestPageReader(
     required: StructType, limit: Int)
   extends PartitionReader[InternalRow] {
 
-  private case class Feature(
-      featureId: Long, props: Map[String, String], geomType: String,
-      wkt: String, srid: Int, bb: Geometry.BBox)
+  // every pushed filter compiled (pushFilters admitted only those)
+  private val preds = filters.map(RestFilters.compile(_).get)
+  // the form input_file_name() gives a file reader's rows
+  private val fileUri = UTF8String.fromString(java.nio.file.Paths.get(file).toUri.toString)
 
-  private lazy val features: Iterator[Feature] = {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root   = mapper.readTree(text)
-    val srid   = Option(root.get("crs")).map(_.toString)
+  private lazy val features: Iterator[RestFeature] = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+    val srid = Option(root.get("crs")).map(_.toString)
       .map(graft.sources.GeoJsonSource.parseSrid(_, 3006)).getOrElse(3006)
-    val fs = Option(root.get("features")).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    fs.iterator.zipWithIndex.flatMap { case (f, i) =>
-      val props = Option(f.get("properties")).map { p =>
-        p.properties().asScala.map(e =>
-          e.getKey -> (if (e.getValue.isTextual) e.getValue.asText() else e.getValue.toString)).toMap
-      }.getOrElse(Map.empty)
+    val fs = Option(root.get("features")).map(_.elements().asScala).getOrElse(Iterator.empty)
+    fs.zipWithIndex.flatMap { case (f, i) =>
+      // null where the JSON reader has null: a missing or non-object
+      // properties member, and a JSON null value
+      val props = Option(f.get("properties")).filter(_.isObject).map { p =>
+        p.properties().asScala.toSeq.map { e =>
+          val v = e.getValue
+          e.getKey -> (if (v.isNull) null else if (v.isTextual) v.asText() else v.toString)
+        }
+      }.orNull
       Option(f.get("geometry")).map(_.toString).flatMap(Geometry.fromGeoJson).map { g =>
-        Feature(i.toLong, props, g.kind, Geometry.toWkt(g), srid, Geometry.bbox(g))
+        RestFeature(layerId, i.toLong, props, g.kind, Geometry.toWkt(g), srid, Geometry.bbox(g))
       }
     }
   }
 
-  private def matches(f: Feature): Boolean = filters.forall(ev(_, f))
-
-  private def fieldVal(name: String, f: Feature): Any = name match {
-    case "layer_id"   => layerId
-    case "feature_id" => f.featureId
-    case "srid"       => f.srid
-    case "geom_type"  => f.geomType
-    case "xmin"       => f.bb.xmin
-    case "ymin"       => f.bb.ymin
-    case "xmax"       => f.bb.xmax
-    case "ymax"       => f.bb.ymax
-    case _            => null
-  }
-
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: Int, y: Number)    => java.lang.Double.compare(x.toDouble, y.doubleValue())
-    case (x: Long, y: Number)   => java.lang.Double.compare(x.toDouble, y.doubleValue())
-    case (x: Double, y: Number) => java.lang.Double.compare(x, y.doubleValue())
-    case (x: String, y: String) => x.compareTo(y)
-    case _                      => 0
-  }
-
-  private def ev(flt: Filter, f: Feature): Boolean = flt match {
-    case EqualTo(a, v)            => cmp(fieldVal(a, f), v) == 0
-    case GreaterThan(a, v)        => cmp(fieldVal(a, f), v) > 0
-    case GreaterThanOrEqual(a, v) => cmp(fieldVal(a, f), v) >= 0
-    case LessThan(a, v)           => cmp(fieldVal(a, f), v) < 0
-    case LessThanOrEqual(a, v)    => cmp(fieldVal(a, f), v) <= 0
-    case In(a, vs)                => vs.exists(v => cmp(fieldVal(a, f), v) == 0)
-    case IsNotNull(a)             => fieldVal(a, f) != null
-    case IsNull(a)                => fieldVal(a, f) == null
-    case And(l, r)                => ev(l, f) && ev(r, f)
-    case Or(l, r)                 => ev(l, f) || ev(r, f)
-    case Not(c)                   => !ev(c, f)
-    case _                        => true // unknown → let Spark recheck
-  }
-
-  private var current: Feature = _
-  private var emitted          = 0
+  private var current: RestFeature = _
+  private var emitted              = 0
 
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false // early termination
     while (features.hasNext) {
       val f = features.next()
-      if (matches(f)) { current = f; emitted += 1; return true }
+      if (preds.forall(_(f))) { current = f; emitted += 1; return true }
     }
     false
   }
 
   override def get(): InternalRow = {
-    val values = required.fields.map { sf =>
+    val f = current
+    InternalRow.fromSeq(required.fields.toIndexedSeq.map { sf =>
       sf.name match {
+        case "properties" if f.props == null => null
         case "properties" =>
           ArrayBasedMapData(
-            current.props.keys.map(k => UTF8String.fromString(k)).toArray,
-            current.props.values.map(v => UTF8String.fromString(v)).toArray)
-        case "geometry"  => UTF8String.fromString(current.wkt)
-        case "geom_type" => UTF8String.fromString(current.geomType)
-        case other =>
-          fieldVal(other, current) match {
-            case s: String => UTF8String.fromString(s)
-            case x         => x
-          }
+            f.props.map(kv => UTF8String.fromString(kv._1)).toArray,
+            f.props.map(kv => UTF8String.fromString(kv._2)).toArray)
+        case "geom_type"  => UTF8String.fromString(f.geomType)
+        case "geometry"   => UTF8String.fromString(f.wkt)
+        case "_file"      => fileUri
+        case other        => RestFilters.columns.get(other).map(_._2(f)).orNull
       }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    })
   }
 
   override def close(): Unit = ()

@@ -20,6 +20,32 @@ import graft.functions.VectorFunctions
 class MaintenanceFuzzSpec extends SparkSpec {
   import spark.implicits._
 
+  // ---------- per-run cleanup: a passed run leaves nothing behind ----------
+
+  // a band lineage: its tables (every generation), any directory under
+  // its prefix (a crash op's unregistered rewrite), its log and its lease
+  private def dropBandLineage(prefix: String): Unit = {
+    spark.sessionState.catalog.listTables("default", s"${prefix}_*").map(_.table).foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      Bucketing.forget(spark, t)
+    }
+    val db = new org.apache.hadoop.fs.Path(spark.catalog.getDatabase("default").locationUri)
+    val fs = db.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(db, s"${prefix}_*")))
+      .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
+    fs.delete(new org.apache.hadoop.fs.Path(Dedup.bandLog(spark, prefix).root), true)
+    fs.delete(WriterLease.lockPathFor(spark, "default", prefix), true)
+  }
+
+  // an IVF or IVF-PQ layout: its directory (every generation and the
+  // log) and its siblings (lease, unfinished builds)
+  private def dropLayout(path: String): Unit = {
+    val p  = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(p.getParent, s"${p.getName}*")))
+      .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
+  }
+
   // ---------- per-step invariant helpers (listings + one id collect) ----------
 
   // the retention bound every maintenance op must leave behind
@@ -273,6 +299,8 @@ class MaintenanceFuzzSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().toSet
     assert(pairs(bt, st) == pairs(rbt, rst),
       s"seed=$seed: probe verdicts diverged from the rebuilt index")
+    dropBandLineage(prefix)
+    dropBandLineage(s"graft_fuzzref$run")
   }
 
   test("band index: randomized fold/delete/compact/crash ≡ rebuild (seed 11)") {
@@ -395,6 +423,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       s"seed=$seed: maintained IVF cells diverged from remainder assignment")
     assert(Similarity.standingTombstoneFiles(spark, path).isEmpty,
       s"seed=$seed: compaction left tombstones standing")
+    dropLayout(path)
   }
 
   test("IVF layout: randomized fold/delete/compact/crash ≡ remainder assignment (seed 13)") {
@@ -465,6 +494,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     assert(physical == want,
       s"seed=$seed: surviving PQ codes diverged (rows ${physical.size} vs ${want.size})")
     assert(Similarity.standingTombstoneFiles(spark, path).isEmpty)
+    dropLayout(path)
   }
 
   test("IVF-PQ layout: randomized fold/delete/compact keeps survivor codes bit-stable (seed 17)") {

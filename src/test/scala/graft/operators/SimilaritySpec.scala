@@ -418,6 +418,17 @@ class SimilaritySpec extends SparkSpec {
       f"refinement must tighten cells: before=$before%.5f after=$after%.5f")
   }
 
+  test("buildIvfIndex refuses a corpus with no id below nCentroids, writing nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_noseed").resolve("layout").toString
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      .filter($"vec_id" >= 8)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.buildIvfIndex(emb, dir, nCentroids = 8)
+    }
+    assert(e.getMessage.contains("nCentroids = 8"), e.getMessage)
+    assert(!new java.io.File(dir).exists())
+  }
+
   test("buildIvfIndex with refineIters writes refined centroids and consistent cells") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_refined").toString
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")

@@ -9,7 +9,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.SparkSpec
 import graft.config._
 import graft.geo.{GeoFunctions, Geometry}
-import graft.sources.{AtomFeedSource, GeoJsonSource, PagedRestSource, ShpSource}
+import graft.sources.{AtomFeedSource, GeoJsonSource, ShpSource}
+import graft.sources.v2.RestTable
 
 /** End-to-end pipeline over the reference-shaped fixtures: stage →
   * geoprocess → publish, plus idempotence of truncate-and-load (K5 run
@@ -27,7 +28,7 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     "staging_gpkg", "staging_shp", "staging_pin", "staging_t3",
     "staging_seq", "staging_conc", "staging_failfast", "staging_ttl",
     "staging_lanes", "staging_gpfail_seq", "staging_gpfail_conc",
-    "staging_noaoi_seq", "staging_noaoi_conc",
+    "staging_noaoi_seq", "staging_noaoi_conc", "staging_rest",
     "underlag_test", "underlag_tst2", "underlag_conc", "underlag_dup",
     "underlag_lane", "gng_underlag_x")
 
@@ -70,21 +71,116 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(GeoFunctions.detectGeometryType(sample) == "POINT")
   }
 
+  private def restSource(raw: Map[String, Any], url: String = s"$res/rest_stub") =
+    Source(name = "Rest Query", authority = "TST", sourceType = "rest_api", url = url, raw = raw)
+
   test("paged REST source: pages union, where/outFields/bbox pushdown semantics") {
-    val all = PagedRestSource.readLayer(spark, s"$res/rest_stub/layer-0")
+    val pipe = new EtlPipeline(spark)
+    val all = pipe.readSource(restSource(Map("layer_ids" -> Seq(0))))
     assert(all.count() == 4) // 2 pages unioned
-    val q = PagedRestSource.Query(
-      whereClause = Some("properties['category'] = 'A'"),
-      outFields = Seq("id", "name"),
-      bbox = Some(Geometry.BBox(17.9, 59.2, 18.2, 59.5)))
-    val filtered = PagedRestSource.readLayer(spark, s"$res/rest_stub/layer-0", q)
+    val q = Map(
+      "where_clause" -> "properties['category'] = 'A'",
+      "out_fields" -> "id, name",
+      "bbox" -> "17.9, 59.2, 18.2, 59.5")
+    val filtered = pipe.readSource(restSource(q + ("layer_ids" -> Seq(0))))
     val rows = filtered.collect()
     // category A ∧ inside bbox → ids 1,3 (4 is cat A but outside bbox)
     assert(rows.map(_.getAs[Map[String, String]]("properties")("id")).sorted.toSeq == Seq("1", "3"))
     assert(rows.head.getAs[Map[String, String]]("properties").keySet == Set("id", "name"))
     // discovery finds both layers
-    assert(PagedRestSource.discoverLayers(s"$res/rest_stub") == Seq(0, 1))
-    assert(PagedRestSource.readService(spark, s"$res/rest_stub").count() == 5)
+    assert(RestTable.discoverLayers(s"$res/rest_stub") == Seq(0, 1))
+    assert(pipe.readSource(restSource(Map.empty)).count() == 5)
+  }
+
+  test("REST lane: configured bbox and layer_ids are PushedFilters of the connector scan") {
+    val df = new EtlPipeline(spark).readSource(restSource(Map(
+      "layer_ids" -> Seq(0, 1), "bbox" -> "17.9, 59.2, 18.2, 59.5",
+      "where_clause" -> "properties['category'] = 'A'")))
+    val plan = df.queryExecution.executedPlan.toString
+    val start = plan.indexOf("PushedFilters=[")
+    val pushed = plan.substring(start, plan.indexOf("] ReadSchema=", start))
+    assert(pushed.contains("In(layer_id, [0,1]") && pushed.contains("xmax,17.9") &&
+      pushed.contains("xmin,18.2") && pushed.contains("ymax,59.2") && pushed.contains("ymin,59.5"),
+      s"bbox and layer_ids not pushed:\n$plan")
+    // the where clause reads the property map, which the scan cannot
+    // evaluate: it stays in Spark
+    assert(!pushed.contains("category"), plan)
+    assert(df.collect().map(_.getAs[Map[String, String]]("properties")("id")).sorted.toSeq ==
+      Seq("1", "3"))
+  }
+
+  test("REST lane ≡ the JSON-reader composition, row for row, on every column") {
+    val pipe = new EtlPipeline(spark)
+    def multiset(rows: Seq[org.apache.spark.sql.Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    // the rows the reference has and the lane does not: those with no
+    // geometry (the connector emits only features it can parse)
+    def compare(url: String, layers: Seq[Int], raw: Map[String, Any],
+        where: Option[String] = None, outFields: Seq[String] = Seq.empty,
+        bbox: Option[Geometry.BBox] = None): Seq[org.apache.spark.sql.Row] = {
+      val lane = pipe.readSource(restSource(raw + ("layer_ids" -> layers), url))
+      val ref = RestLaneReference.read(spark, url, layers, where, outFields, bbox)
+      assert(lane.schema.map(f => (f.name, f.dataType)) == ref.schema.map(f => (f.name, f.dataType)))
+      val (kept, dropped) = ref.collect().toSeq.partition(_.getAs[String]("geometry") != null)
+      assert(multiset(lane.collect().toSeq) == multiset(kept), s"$url $raw")
+      dropped
+    }
+    val stubQuery = Map("where_clause" -> "properties['category'] = 'A'",
+      "out_fields" -> "id,name", "bbox" -> "17.9,59.2,18.2,59.5")
+    assert(compare(s"$res/rest_stub", Seq(0, 1), Map.empty).isEmpty)
+    assert(compare(s"$res/rest_stub", Seq(0, 1), stubQuery,
+      Some("properties['category'] = 'A'"), Seq("id", "name"),
+      Some(Geometry.BBox(17.9, 59.2, 18.2, 59.5))).isEmpty)
+
+    // numeric properties, a JSON null value, a null geometry, an empty page
+    val mixed = s"$res/rest_mixed"
+    val dropped = compare(mixed, Seq(0, 1), Map.empty)
+    // expected difference 1: a feature with no geometry is not emitted
+    // (the JSON reader keeps it with null geometry columns);
+    // expected difference 2: an empty page emits nothing (posexplode_outer
+    // makes it one all-null row)
+    assert(dropped.map(r => Option(r.getAs[Map[String, String]]("properties")).map(_("id"))).toSet ==
+      Set(Some("3"), None))
+    val emptyPageRow = dropped.find(_.getAs[Map[String, String]]("properties") == null).get
+    assert(emptyPageRow.getAs[String]("_file").endsWith("layer-0/page-1.json"))
+    assert(emptyPageRow.isNullAt(emptyPageRow.fieldIndex("feature_id")))
+    // a JSON null property value is a null map value on both readers
+    val lane = pipe.readSource(restSource(Map("layer_ids" -> Seq(0, 1)), mixed)).collect()
+    val props = lane.map(_.getAs[Map[String, String]]("properties")).map(p => p("id") -> p).toMap
+    assert(props("2").contains("value") && props("2")("value") == null)
+    assert(props("1")("value") == "2.5" && props("1")("count") == "7" && props("4")("value") == "-0.75")
+    assert(lane.map(_.getAs[Int]("srid")).toSet == Set(3006, 4326))
+    assert(compare(mixed, Seq(0, 1), Map("where_clause" -> "properties['name'] != 'line'",
+      "out_fields" -> Seq("id", "value")), Some("properties['name'] != 'line'"), Seq("id", "value"))
+      .map(_.getAs[Map[String, String]]("properties")("id")) == Seq("3"))
+  }
+
+  test("REST lane: a configured layer without pages fails the stage, naming the layer") {
+    val pipe = new EtlPipeline(spark, GlobalConfig(), stagingDb = "staging_rest")
+    val src = restSource(Map("layer_ids" -> Seq(0, 7)))
+    assert(pipe.stageSource(src).isEmpty)
+    val err = pipe.results.find(r => r.phase == "stage" && r.status == "error").get.error
+    assert(err.contains("layer 7"), err)
+  }
+
+  test("malformed list and bbox config fields fail the stage naming the source and field") {
+    val pipe = new EtlPipeline(spark, GlobalConfig(), stagingDb = "staging_rest")
+    def stageError(src: Source): String = {
+      assert(pipe.stageSource(src).isEmpty)
+      pipe.results.filter(r => r.source == src.name && r.phase == "stage")
+        .find(_.status == "error").get.error
+    }
+    for (bad <- Seq("17.9, 59.2, 18.2", "a, b, c, d", Seq(1, 2, 3, 4, 5))) {
+      val err = stageError(restSource(Map("bbox" -> bad)).copy(name = s"Bbox $bad"))
+      assert(err.contains("bbox") && err.contains(s"Bbox $bad"), err)
+    }
+    val ogc = Source(name = "Ogc Bbox", authority = "TST", sourceType = "ogc_api",
+      url = s"$res/ogc_stub", raw = Map("bbox" -> "1,2,x,4"))
+    assert(stageError(ogc).contains("bbox"))
+    val ids = stageError(restSource(Map("layer_ids" -> Seq("0", "one"))).copy(name = "Ids"))
+    assert(ids.contains("layer_ids") && ids.contains("Ids"), ids)
+    // a list-valued bbox parses like the comma-separated one
+    assert(pipe.bboxField(restSource(Map("bbox" -> java.util.List.of(1, 2, 3.5, 4)))) ==
+      Some(Geometry.BBox(1, 2, 3.5, 4)))
   }
 
   test("atom feed link extraction dedups preserving order") {

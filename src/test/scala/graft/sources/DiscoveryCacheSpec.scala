@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.v2.RestTable
+
 /** R5 wiring proof: the catalog-discovery paths (REST layer list, OGC
   * collections document) are served through the driver-side
   * ResponseCache — a second discovery inside the TTL window never
@@ -24,27 +26,27 @@ class DiscoveryCacheSpec extends AnyFunSuite {
     val svc = tempService()
     new java.io.File(svc, "layer-0").mkdir()
     new java.io.File(svc, "layer-2").mkdir()
-    val hits0 = PagedRestSource.discoveryCache.stats.hits
-    assert(PagedRestSource.discoverLayers(svc.toString) == Seq(0, 2))
+    val hits0 = RestTable.discoveryCache.stats.hits
+    assert(RestTable.discoverLayers(svc.toString) == Seq(0, 2))
     // mutate the "server": a cached second discovery must not see this
     new java.io.File(svc, "layer-2").delete()
-    assert(PagedRestSource.discoverLayers(svc.toString) == Seq(0, 2),
+    assert(RestTable.discoverLayers(svc.toString) == Seq(0, 2),
       "second discovery inside TTL must be served from cache, not re-listed")
-    assert(PagedRestSource.discoveryCache.stats.hits > hits0,
+    assert(RestTable.discoveryCache.stats.hits > hits0,
       "cache stats must record the hit")
     // TTL 0 = caching disabled for the source → a real refetch, which
     // sees the mutation (and does not poison the cached entry)
-    assert(PagedRestSource.discoverLayers(svc.toString, ttlSeconds = 0) == Seq(0))
-    assert(PagedRestSource.discoverLayers(svc.toString) == Seq(0, 2))
+    assert(RestTable.discoverLayers(svc.toString, ttlSeconds = 0) == Seq(0))
+    assert(RestTable.discoverLayers(svc.toString) == Seq(0, 2))
   }
 
   test("REST layer discovery refetches after the TTL expires") {
     val svc = tempService()
     new java.io.File(svc, "layer-1").mkdir()
-    assert(PagedRestSource.discoverLayers(svc.toString, ttlSeconds = 1) == Seq(1))
+    assert(RestTable.discoverLayers(svc.toString, ttlSeconds = 1) == Seq(1))
     new java.io.File(svc, "layer-3").mkdir()
     Thread.sleep(1100) // cross the 1 s TTL
-    assert(PagedRestSource.discoverLayers(svc.toString, ttlSeconds = 1) == Seq(1, 3),
+    assert(RestTable.discoverLayers(svc.toString, ttlSeconds = 1) == Seq(1, 3),
       "expired entry must refetch and see the new layer")
   }
 

@@ -54,4 +54,38 @@ class RestDataSourceSpec extends SparkSpec {
   test("each page is its own partition (pagination → parallel read)") {
     assert(restDf.rdd.getNumPartitions == 3) // 2 pages + 1 page
   }
+
+  test("pushed filters keep SQL semantics: no wrong rows") {
+    // string kinds, null-safe equality and a negation of a pushed kind
+    assert(restDf.filter(expr("geom_type LIKE 'Zz%'")).count() == 0)
+    assert(restDf.filter(expr("contains(geom_type, 'Zz')")).count() == 0)
+    assert(restDf.filter(expr("geom_type <=> 'Zz'")).count() == 0)
+    assert(restDf.filter(expr("NOT (geom_type LIKE 'Zz%')")).count() == 5)
+    // a string kind is evaluated at the scan
+    val like = restDf.filter(expr("geom_type LIKE 'Line%'"))
+    assert(like.queryExecution.executedPlan.toString.contains("StringStartsWith(geom_type,Line)"))
+    assert(like.count() == 1)
+    // a null literal keeps a filter in Spark: NOT IN with a null is never true
+    val notIn = restDf.filter(expr("NOT (geom_type IN ('Point', CAST(NULL AS STRING)))"))
+    assert(notIn.count() == 0)
+    // a property-map filter stays residual and is still applied
+    assert(restDf.filter(expr("properties['category'] = 'C' OR layer_id = 0")).count() == 5)
+  }
+
+  test("_file is a metadata column: out of the default schema, the page file when asked") {
+    assert(!restDf.columns.contains("_file"))
+    val files = restDf.select("layer_id", "_file").as[(Int, String)].collect()
+    assert(files.length == 5)
+    assert(files.map { case (l, f) => l -> f.substring(f.indexOf("/layer-") + 1) }.toSet == Set(
+      0 -> "layer-0/page-0.json", 0 -> "layer-0/page-1.json", 1 -> "layer-1/page-0.json"))
+  }
+
+  test("layer_ids lists only those layers; one without pages fails naming it") {
+    val one = spark.read.format("graft-rest").option("path", svc).option("layer_ids", "1").load()
+    assert(one.count() == 1)
+    val e = intercept[java.io.FileNotFoundException] {
+      spark.read.format("graft-rest").option("path", svc).option("layer_ids", "0,3").load().count()
+    }
+    assert(e.getMessage.contains("layer 3"), e.getMessage)
+  }
 }
