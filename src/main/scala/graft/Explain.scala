@@ -41,9 +41,9 @@ object Explain {
     "q90_lexical_and", "q91_ranked_tfidf", "q92_phrase_query",
     "q96_bm25", "q100_pmi_colloc", "q102_repetition_profile",
     "q103_budget_select", "q106_incr_neardup",
-    // batched IVF serving: the plan must show the broadcast probe map +
-    // query-partitioned windows over ONE partition-pruned cells scan —
-    // no driver-side ranking anywhere
+    // batched IVF serving: the plan must show the broadcast probe map
+    // (a local relation: the ranking ran on the driver) + the query-
+    // partitioned window over ONE partition-pruned cells scan
     "q107_ivf_batch",
     // the IVF fold's distributed half (q111/q112 run it inside a write;
     // this probe shape exposes the plan): MAP-ONLY since the r21 fused

@@ -498,6 +498,7 @@ object Dedup {
     private def id(t: String) = org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default"))
 
     val log: IndexLog = bandLog(spark, prefix)
+    val idCol = "doc_id"
     def leasePath: org.apache.hadoop.fs.Path = WriterLease.lockPathFor(spark, "default", prefix)
     def tombstoneDir(gen: String): org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(catalog.defaultTablePath(id(s"${prefix}_bands$gen"))),
@@ -736,7 +737,7 @@ object Dedup {
     // appends to a generation a concurrent compaction is retiring
     IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|fold|$batchTag"),
         store.leasePath) {
-      val folded = IndexLifecycle.fold(spark, store, admitted, "doc_id", batchTag) { cur =>
+      val folded = IndexLifecycle.fold(spark, store, admitted, batchTag) { cur =>
         val (bandsTable, sigsTable) = tablesOf(tablePrefix, cur.gen)
         // a standing intent for THIS tag means a previous attempt
         // crashed between its intent and its tag commit — probe each
@@ -838,7 +839,7 @@ object Dedup {
     IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|del|$delTag"),
         store.leasePath) {
       IndexLifecycle.delete(spark, store, delIds.select(col("doc_id").cast("long").as("doc_id")),
-        "doc_id", delTag)(compactMinhashBandIndex(spark, tablePrefix))
+        delTag)(compactMinhashBandIndex(spark, tablePrefix))
     }
   }
 

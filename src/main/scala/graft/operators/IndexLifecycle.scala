@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The ONE lifecycle of the maintained indexes — the MinHash band index
   * ([[Dedup.ensureMinhashBandIndex]]) and the IVF / IVF-PQ cells layouts
@@ -236,10 +239,47 @@ object IndexLifecycle {
   def tombstoneFiles(store: Store, c: IndexLog.Commit): Seq[String] =
     c.tombstones.map(n => new Path(store.tombstoneDir(c.gen), n).toString)
 
-  /** The tombstones `c` lists as one frame, None when it lists none. */
+  /** The tombstones `c` lists as one frame of the family's one BIGINT
+    * id column, None when it lists none. Throws FileNotFoundException
+    * when a listed file is gone (its generation was retired).
+    */
   def tombstones(spark: SparkSession, store: Store, c: IndexLog.Commit): Option[DataFrame] =
     if (c.tombstones.isEmpty) None
-    else Some(spark.read.parquet(tombstoneFiles(store, c): _*))
+    else {
+      val fs = IndexLog.fsOf(spark, store.log.root)
+      val root = fs.makeQualified(store.tombstoneDir(c.gen))
+      Some(preListed(spark, root, c.tombstones.map(n => fs.getFileStatus(new Path(root, n))),
+        StructType(Seq(StructField(store.idCol, LongType)))))
+    }
+
+  // ---------------- driver-listed reads ----------------
+
+  /** Every file under `dir` (`_`/`.`-named entries skipped when
+    * `dataOnly`; none when `dir` is gone), by `listStatus` alone: the
+    * LocatedFileStatus of `listFiles` forks `ls -ld` per file on a local
+    * FS without native Hadoop.
+    */
+  def filesUnder(fs: FileSystem, dir: Path, dataOnly: Boolean = true): Seq[FileStatus] =
+    (try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Seq.empty })
+      .filter(st => !dataOnly || Similarity.isDataFile(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) filesUnder(fs, st.getPath, dataOnly) else Seq(st))
+
+  /** A parquet scan of `files` under the qualified `root` with `schema`
+    * (`partitionCols` from the `col=value` dirs), handed to Spark as a
+    * pre-resolved file index: no listing job, no schema-inference job.
+    */
+  def preListed(spark: SparkSession, root: Path, files: Seq[FileStatus], schema: StructType,
+      partitionCols: String*): DataFrame = {
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Some(files.toArray)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema), listed)
+    val (parts, data) = schema.partition(f => partitionCols.contains(f.name))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, StructType(parts), StructType(data),
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Delete `ids` (column `idCol`) under `tag`, idempotent per tag (the
     * log's delete ledger): the batch lands as parquet files in the
@@ -250,7 +290,7 @@ object IndexLifecycle {
     * anything a delete that crashed before its commit wrote. Compacts
     * (`compact`) once standing tombstones reach the debt threshold.
     */
-  def delete(spark: SparkSession, store: Store, ids: DataFrame, idCol: String,
+  def delete(spark: SparkSession, store: Store, ids: DataFrame,
       tag: String)(compact: => Unit): Unit =
     if (!store.log.latest(spark).dels(tag)) {
       val written = scala.collection.mutable.Map.empty[String, Seq[String]]
@@ -263,7 +303,7 @@ object IndexLifecycle {
       // tombstone rows, and the broadcast build side every read pays is
       // deduped
       if (Policy.of(spark).tombstoneDebtDue(
-          tombstones(spark, store, c).fold(0L)(_.select(idCol).distinct().count())))
+          tombstones(spark, store, c).fold(0L)(_.select(store.idCol).distinct().count())))
         compact
     }
 
@@ -291,12 +331,12 @@ object IndexLifecycle {
     * standing tombstone is refused before anything is written. Returns
     * whether the batch was folded now.
     */
-  def fold(spark: SparkSession, store: Store, batch: DataFrame, idCol: String,
+  def fold(spark: SparkSession, store: Store, batch: DataFrame,
       tag: String)(append: IndexLog.Commit => Unit): Boolean = {
     val cur = store.log.latest(spark)
     if (cur.folds(tag)) false
     else {
-      requireNotTombstoned(tombstones(spark, store, cur), batch, idCol)
+      requireNotTombstoned(tombstones(spark, store, cur), batch, store.idCol)
       if (!cur.intents(tag))
         store.log.commit(spark, "fold-intent")(c => c.copy(intents = c.intents + tag))
       append(cur)
@@ -352,6 +392,8 @@ object IndexLifecycle {
   trait Store {
     /** The lineage's log; its root is also the JVM lock key. */
     def log: IndexLog
+    /** The BIGINT id column rows and tombstones are keyed by. */
+    def idCol: String
     def leasePath: Path
     /** Where the tombstone files of `gen` live. */
     def tombstoneDir(gen: String): Path

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions
 
@@ -305,11 +308,11 @@ object Similarity {
     IndexLog.cells(path).init(cells.sparkSession, "cells")
   }
 
-  /** Probe a [[buildIvfIndex]] layout with a raw query vector: centroid
-    * ranking happens driver-side over the ≤nCentroids-row table (a
-    * sanctioned tiny collect), then the cells scan is partition-pruned
-    * to the chosen nProbe ids. Ranking matches [[ivfTopKPortable]]
-    * exactly (quantized integer dots, IEEE-identical cosine ordering).
+  /** Probe a [[buildIvfIndex]] layout with a raw query vector: the
+    * centroids are ranked on the driver ([[probeCells]]), then the cells
+    * scan reads only the chosen nProbe cells. Ranking matches
+    * [[ivfTopKPortable]] exactly (quantized integer dots, IEEE-identical
+    * cosine ordering).
     */
   def ivfProbe(
       spark: SparkSession,
@@ -318,64 +321,88 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       exclude: Option[Long] = None): DataFrame = {
-    val (qq, qn, probeIds) = probeCells(spark, path, queryVec, nProbe)
-    val qCol = array(qq.map(lit): _*)
-    val cells = liveCells(spark, path)
-      .filter(col("cent_id").isin(probeIds.toIndexedSeq: _*))
+    val p = probeCells(layoutTables(spark, path), Seq(0L -> quantizeQuery(queryVec)), nProbe).head
+    val qCol = array(p.q.toSeq.map(lit): _*)
+    val cells = liveCells(spark, path, Some(p.cells.toSeq))
     exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
       .withColumn("dot", VectorFunctions.qdot(col("q"), qCol))
       .withColumn("cos", col("dot").cast("double") /
-        sqrt(col("nrm").cast("double") * lit(qn.toDouble)))
+        sqrt(col("nrm").cast("double") * lit(p.qn.toDouble)))
       .orderBy(col("cos").desc, col("vec_id"))
       .select("vec_id", "dot")
       .limit(k)
   }
 
-  /** The driver-side half of a single-vector probe of either layout:
-    * the query quantized HALF-AWAY-FROM-ZERO, matching
+  /** The bound on one batch's driver-side centroid ranking:
+    * |batch|·C·dim multiply-adds, 2^28 (≈2.7·10⁸, well under a second
+    * of one driver core). It also bounds the probe map a batch ships to
+    * the cells scan (|batch|·nProbe·dim longs). A batch past it is
+    * refused; shard a larger stream of queries into batches under it —
+    * each batch pays one pruned scan.
+    */
+  val MaxBatchRankWork: Long = 1L << 28
+
+  // one ranked query: its quantized vector, squared norm and probed cells
+  private final case class Probe(id: Long, q: Array[Long], qn: Long, cells: Array[Long])
+
+  /** A query vector quantized HALF-AWAY-FROM-ZERO, matching
     * VectorFunctions.quantize (Spark SQL round) and the oracle's DuckDB
     * round (math.round is floor(x+0.5), which disagrees on negative
-    * halves: -62.5 → -62 vs -63), its squared norm, and the `nProbe`
-    * cells whose centroids rank highest by cosine (ties → larger id).
+    * halves: -62.5 → -62 vs -63).
     */
-  private def probeCells(spark: SparkSession, path: String,
-      queryVec: Seq[Float], nProbe: Int): (Seq[Long], Long, Array[Long]) = {
-    val qq = queryVec.map { f =>
+  private[operators] def quantizeQuery(v: Seq[Float]): Array[Long] =
+    v.iterator.map { f =>
       val d = f.toDouble * 1000
       if (d >= 0) math.round(d) else -math.round(-d)
+    }.toArray
+
+  /** The driver-side ranking of every probe of a maintained layout,
+    * single or batched: per quantized query, the `nProbe` cells whose
+    * centroids rank highest by cosine in SQL order (NaN first, ties →
+    * larger cent_id) — the order the probes' oracle applies.
+    */
+  private def probeCells(t: LayoutTables, queries: Seq[(Long, Array[Long])],
+      nProbe: Int): Seq[Probe] = {
+    val work = queries.size.toLong * t.c * t.dim
+    require(work <= MaxBatchRankWork,
+      s"a batch of ${queries.size} queries against ${t.c} centroids of dim ${t.dim} is " +
+        s"$work ranking multiply-adds, over Similarity.MaxBatchRankWork = $MaxBatchRankWork: " +
+        s"shard the queries into batches of at most ${MaxBatchRankWork / math.max(1L, t.c.toLong * t.dim)}")
+    queries.map { case (id, q) =>
+      val qn = q.iterator.map(x => x * x).sum
+      val cos = Array.tabulate(t.c) { i =>
+        val cv = t.vecs(i)
+        var dot = 0L
+        var j = 0
+        while (j < cv.length && j < q.length) { dot += cv(j) * q(j); j += 1 }
+        dot.toDouble / math.sqrt(t.norms(i).toDouble * qn.toDouble)
+      }
+      val top = Array.range(0, t.c).sortWith { (a, b) =>
+        val c = java.lang.Double.compare(cos(a), cos(b))
+        c > 0 || (c == 0 && t.ids(a) > t.ids(b))
+      }.take(nProbe)
+      Probe(id, q, qn, top.map(t.ids(_)))
     }
-    val qn = qq.map(x => x * x).sum
-    val probeIds = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm").collect().map { r =>
-        val cv  = r.getAs[collection.Seq[Long]]("cvec")
-        val dot = cv.iterator.zip(qq.iterator).map { case (a, b) => a * b }.sum
-        val cos = dot.toDouble / math.sqrt(r.getAs[Long]("cnrm").toDouble * qn.toDouble)
-        (cos, r.getAs[Long]("cent_id"))
-      }.sortBy { case (cos, id) => (-cos, -id) }.take(nProbe).map(_._2)
-    (qq, qn, probeIds)
   }
+
+  // a batch frame (`query_id`, `emb`) on the driver, quantized by the
+  // corpus-side kernel itself
+  private def collectQueries(queries: DataFrame): Seq[(Long, Array[Long])] =
+    queries.select(col("query_id").cast("long"), VectorFunctions.quantize(col("emb")))
+      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+
+  private def probedCells(probes: Seq[Probe]): Seq[Long] = probes.flatMap(_.cells).distinct
 
   /** Batched probe of a [[buildIvfIndex]] layout — the serving-
     * throughput shape: N query vectors answered by ONE partition-pruned
-    * scan instead of N sequential probes.
-    *
-    * Centroid ranking is DISTRIBUTED: the query batch becomes a
-    * DataFrame, the ≤C-row centroid table is broadcast against it, and
-    * a query-partitioned window takes each query's top-nProbe cells —
-    * |batch|·C dot products as executor map work (formerly a
-    * single-threaded driver loop: ~10¹⁰ driver multiply-adds at the
-    * C=65536 clamp × a 10k batch). The probe map (query_id, cent_id,
-    * qvec, qn — |batch|·nProbe rows) is staged once and feeds both
-    * consumers; the only driver materialization left is the DISTINCT
-    * probed cell ids (≤ min(|batch|·nProbe, C) longs — metadata for
-    * static partition pruning of the cells scan, same class as
-    * [[ivfProbe]]'s sanctioned collect).
-    *
-    * The cells half is unchanged: the union of probed cells prunes ONE
-    * scan, the broadcast probe map fans each scanned row out to only
-    * the queries probing its cell, and a query-partitioned window takes
-    * each top-k (candidate volume ≈ N·nProbe·√n rows — every shuffle
-    * bounded by the batch, never the corpus).
+    * scan instead of N sequential probes. The centroids are ranked on
+    * the driver ([[probeCells]], refused past [[MaxBatchRankWork]]);
+    * the probe map (query_id, cent_id, qvec, qn — |batch|·nProbe rows)
+    * is a local relation, so the call runs no ranking job and persists
+    * nothing. The broadcast probe map fans each scanned row of the
+    * probed cells ([[liveCells]]) out to the queries probing its cell,
+    * and a query-partitioned window takes each top-k — every shuffle
+    * bounded by the batch, never the corpus.
     *
     * Output: (query_id, rk, vec_id, dot), rk = 1-based rank by the
     * portable cosine (identical integer dots + IEEE ordering on every
@@ -387,26 +414,15 @@ object Similarity {
       queries: Seq[(Long, Seq[Float])],
       k: Int,
       nProbe: Int = 4,
-      excludeSelf: Boolean = true): DataFrame = {
-    import spark.implicits._
-    ivfProbeBatchDfOwned(spark, path,
-      queries.toDF("query_id", "emb"), k, nProbe, excludeSelf)._1
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    ivfProbeQuantized(spark, path, queries.map { case (id, v) => id -> quantizeQuery(v) },
+      k, nProbe, excludeSelf)
 
   /** [[ivfProbeBatch]] over a query DATAFRAME (`query_id` LONG, `emb`
-    * ARRAY<FLOAT>) — the batch never rides through the driver at all:
-    * queries may come straight off a parquet scan, a streaming
-    * micro-batch, or an upstream join. The `Seq` overloads are
-    * convenience wrappers over this; prefer this form whenever the
-    * batch is already distributed data.
-    *
-    * Scale contract: every term is bounded by the BATCH or by C, never
-    * the corpus — the ranking is |batch|·C map work, the staged probe
-    * map is |batch|·nProbe rows, and the driver sees only the ≤C
-    * distinct probed cell ids (partition-prune literals). The probe map
-    * is BROADCAST to the cells scan, so one batch should stay within
-    * broadcast size (~10⁵ queries at typical dims); shard a larger
-    * stream of queries into such batches — each pays one pruned scan.
+    * ARRAY<FLOAT>) — a parquet scan, a streaming micro-batch or an
+    * upstream join. The batch is collected to the driver first (it is
+    * quantized there by the corpus-side kernel), so the same
+    * [[MaxBatchRankWork]] bound holds.
     */
   def ivfProbeBatchDf(
       spark: SparkSession,
@@ -415,72 +431,74 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       excludeSelf: Boolean = true): DataFrame =
-    ivfProbeBatchDfOwned(spark, path, queries, k, nProbe, excludeSelf)._1
+    ivfProbeQuantized(spark, path, collectQueries(queries), k, nProbe, excludeSelf)
 
-  /** [[ivfProbeBatchDf]] with a CALLER-OWNED lifetime for the staged
-    * probe map (the `tfidfTopKOwned` contract): each batch call stages
-    * one tiny (|batch|·nProbe-row) probe-map block so the ranking runs
-    * once for its two consumers; a long-lived serving driver answering
-    * thousands of batches should consume the result, then `release()`
-    * the handle — otherwise one block per call accumulates in executor
-    * storage for the life of the session.
-    */
-  def ivfProbeBatchDfOwned(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nProbe: Int = 4,
-      excludeSelf: Boolean = true): (DataFrame, graft.util.Checkpoints.Staged) = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm")
-    // same quantization kernel as the corpus side ([[VectorFunctions
-    // .quantize]]), so query and centroid arithmetic stay bit-identical
-    val qdf = queries
-      .select(col("query_id"),
-        VectorFunctions.quantize(col("emb")).as("qvec"))
-      .withColumn("qn", VectorFunctions.qdot(col("qvec"), col("qvec")))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("pcos").desc, col("cent_id").desc)
-    // the |batch|·C ranking sheds qvec/qn BEFORE the window's
-    // partitionBy(query_id) exchange — the crossJoin side is map-only
-    // (broadcast nested loop), so the qvec array (~550B/row at dim 64)
-    // would otherwise ride the full |batch|·C shuffle just to be
-    // re-selected after the filter; ranking on (query_id, cent_id,
-    // pcos) alone shrinks that exchange ~20×, and the survivors
-    // (|batch|·nProbe rows) get qvec/qn back from a broadcast of the
-    // |batch|-row query side
-    val ranked = qdf.crossJoin(broadcast(cents))
-      .withColumn("pcos",
-        VectorFunctions.qdot(col("cvec"), col("qvec")).cast("double") /
-          sqrt(col("cnrm").cast("double") * col("qn").cast("double")))
-      .select(col("query_id"), col("cent_id"), col("pcos"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("cent_id"))
-    // staged: the distinct-cells prune below and the candidate join both
-    // read the ranking — one |batch|·C pass, not two
-    val staged = graft.util.Checkpoints.stageOwned(
-      ranked.join(broadcast(qdf), Seq("query_id"))
-        .select(col("query_id"), col("cent_id"), col("qvec"), col("qn")))
-    val probeMap = staged.df
-    val probedCells: Seq[Long] =
-      probeMap.select("cent_id").distinct().as[Long].collect().toIndexedSeq
+  private val ProbeMapSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("cent_id", LongType), StructField("qvec", ArrayType(LongType)),
+    StructField("qn", LongType)))
+
+  private def ivfProbeQuantized(spark: SparkSession, path: String,
+      queries: Seq[(Long, Array[Long])], k: Int, nProbe: Int, excludeSelf: Boolean): DataFrame = {
+    val probes = probeCells(layoutTables(spark, path), queries, nProbe)
+    val probeMap = spark.createDataFrame(probes.flatMap(p =>
+      p.cells.toSeq.map(c => Row(p.id, c, p.q.toSeq, p.qn))).asJava, ProbeMapSchema)
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    val cells = liveCells(spark, path)
-      .filter(col("cent_id").isin(probedCells: _*))
+    val cells = liveCells(spark, path, Some(probedCells(probes)))
       .join(broadcast(probeMap), Seq("cent_id"))
-    val out =
-      (if (excludeSelf) cells.filter(col("vec_id") =!= col("query_id")) else cells)
-        .withColumn("dot", VectorFunctions.qdot(col("q"), col("qvec")))
-        .withColumn("cos", col("dot").cast("double") /
-          sqrt(col("nrm").cast("double") * col("qn").cast("double")))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= k)
-        .select(col("query_id"), col("rk"), col("vec_id"), col("dot"))
-    (out, staged)
+    (if (excludeSelf) cells.filter(col("vec_id") =!= col("query_id")) else cells)
+      .withColumn("dot", VectorFunctions.qdot(col("q"), col("qvec")))
+      .withColumn("cos", col("dot").cast("double") /
+        sqrt(col("nrm").cast("double") * col("qn").cast("double")))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
+      .select(col("query_id"), col("rk"), col("vec_id"), col("dot"))
+  }
+
+  /** A layout's centroid table — and, for an IVF-PQ layout, its
+    * codebooks — as the driver holds them: the rows with their read
+    * schemas (so a local frame of them equals the parquet read) and the
+    * centroids unpacked for [[probeCells]].
+    */
+  private[operators] final class LayoutTables(
+      cents: (Seq[Row], StructType), books: Option[(Seq[Row], StructType)]) {
+    val ids: Array[Long] = cents._1.map(_.getAs[Long]("cent_id")).toArray
+    val vecs: Array[Array[Long]] =
+      cents._1.map(_.getAs[collection.Seq[Long]]("cvec").toArray).toArray
+    val norms: Array[Long] = cents._1.map(_.getAs[Long]("cnrm")).toArray
+    def c: Int = ids.length
+    def dim: Int = vecs.headOption.fold(0)(_.length)
+    def pq: Boolean = books.isDefined
+    def centroids(spark: SparkSession): DataFrame = spark.createDataFrame(cents._1.asJava, cents._2)
+    def codebooks(spark: SparkSession): DataFrame = spark.createDataFrame(books.get._1.asJava, books.get._2)
+    // (sub, code_id, cvec, cnrm) per codeword
+    val words = books.toSeq.flatMap(_._1).map(r => (r.getAs[Number]("sub").intValue,
+      r.getAs[Long]("code_id"), r.getAs[collection.Seq[Long]]("cvec").toArray, r.getAs[Long]("cnrm")))
+  }
+
+  // layout path → (mtime of <path>/centroids, its tables): a rebuild at
+  // the same path writes a new centroids dir, so a changed mtime reloads
+  private val layoutCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, LayoutTables)]()
+
+  /** The centroids and codebooks of the layout at `path`, collected once
+    * per layout build: every later call costs one `getFileStatus`.
+    */
+  private[operators] def layoutTables(spark: SparkSession, path: String): LayoutTables = {
+    val fs    = IndexLog.fsOf(spark, path)
+    val cdir  = new org.apache.hadoop.fs.Path(path, "centroids")
+    val books = new org.apache.hadoop.fs.Path(path, "codebooks")
+    val mtime = fs.getFileStatus(cdir).getModificationTime
+    def collected(dir: org.apache.hadoop.fs.Path, cols: String*): (Seq[Row], StructType) = {
+      val df = spark.read.parquet(dir.toString).select(cols.map(col): _*)
+      (df.collect().toSeq, df.schema)
+    }
+    Option(layoutCache.get(path)).collect { case (`mtime`, t) => t }.getOrElse {
+      val t = new LayoutTables(collected(cdir, "cent_id", "cvec", "cnrm"),
+        if (fs.exists(books)) Some(collected(books, "sub", "code_id", "cvec", "cnrm")) else None)
+      layoutCache.put(path, mtime -> t)
+      t
+    }
   }
 
   /** The hyperplane count that keeps expected LSH bucket OCCUPANCY at
@@ -735,9 +753,7 @@ object Similarity {
     * is shuffle-free (partitionBy writes per-task files).
     */
   def foldAssignment(newVecs: DataFrame, path: String): DataFrame = {
-    val spark = newVecs.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm")
+    val cents = layoutTables(newVecs.sparkSession, path).centroids(newVecs.sparkSession)
     val b = newVecs
       .select(col("vec_id"),
         VectorFunctions.quantize(col("embedding")).as("q"))
@@ -763,10 +779,10 @@ object Similarity {
     val store = new CellsStore(spark, path)
     IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"), store.leasePath) {
       retireCells(spark, path)
-      val folded = IndexLifecycle.fold(spark, store, newVecs, "vec_id", batchTag) { cur =>
+      val folded = IndexLifecycle.fold(spark, store, newVecs, batchTag) { cur =>
         val gen = genDir(path, cur.gen)
-        val landed = cur.intents(batchTag) && !spark.read.parquet(gen).select("vec_id")
-          .join(broadcast(newVecs.select("vec_id").distinct()), "vec_id").isEmpty
+        val landed = cur.intents(batchTag) && !cellsScan(spark, path, cur.gen, None)
+          .select("vec_id").join(broadcast(newVecs.select("vec_id").distinct()), "vec_id").isEmpty
         if (!landed) {
           if (cur.purgewin(batchTag)) throw IndexLifecycle.undecidable(batchTag)
           encoded.write.mode("append").partitionBy("cent_id").parquet(gen)
@@ -817,54 +833,65 @@ object Similarity {
 
   // ---- deletion: the tombstone tier of the maintained-index contract ----
 
-  /** The LIVE view of a layout's cells: physical rows minus standing
-    * tombstones ([[deleteFromIvfIndex]]). Every probe/stats/rebuild
-    * path reads through this, so a delete is SERVED the moment its
-    * commit lands — no rewrite on the delete path. The tombstone set is
-    * bounded between compactions — ENFORCED, not assumed:
-    * [[deleteFromIvfIndex]] auto-compacts once the standing set crosses
-    * `spark.graft.index.autoCompactTombstoneRows` (default 1M) — so the
-    * anti-join build side is an explicit BROADCAST — the cells scan
-    * never reshuffles, and the caller's cent_id partition-prune filter
-    * still pushes below the join to the scan (left-side predicate).
+  /** The LIVE view of a layout's cells — of the `cells` ids only, when
+    * given: physical rows minus standing tombstones
+    * ([[deleteFromIvfIndex]]), so a delete is SERVED the moment its
+    * commit lands. The tombstone set is bounded between compactions
+    * ([[deleteFromIvfIndex]] auto-compacts past
+    * `spark.graft.index.autoCompactTombstoneRows`), so the anti-join
+    * build side is an explicit BROADCAST and the cells scan never
+    * reshuffles. Both sides are read from driver listings with known
+    * schemas: no metadata job.
     *
-    * (cells, tombstones) resolve from ONE commit: the generation and
-    * the exact tombstone files standing on it. A generation the
-    * retention collected between the log listing and the file listing
-    * (a reader slower than `spark.graft.index.gcStaleHours` or K
-    * promotes) re-resolves once from the newer commit that superseded
-    * it; with no newer commit the layout is damaged and the read fails.
-    * Nothing sleeps.
+    * (cells, tombstones) resolve from ONE commit. A generation the
+    * retention collected under a slow reader re-resolves once from the
+    * newer commit that superseded it; with no newer commit the layout is
+    * damaged and the read fails. Nothing sleeps.
     */
-  def liveCells(spark: SparkSession, path: String): DataFrame =
-    liveCellsFrom(spark, path, IndexLog.cells(path).latest(spark))
+  def liveCells(spark: SparkSession, path: String,
+      cells: Option[Seq[Long]] = None): DataFrame =
+    liveCellsFrom(spark, path, IndexLog.cells(path).latest(spark), cells)
 
   private[operators] def liveCellsFrom(spark: SparkSession, path: String,
-      first: IndexLog.Commit): DataFrame = {
-    // the existence check keeps a gone generation out of the parquet
-    // read, which logs a WARN with a stack trace before it throws; the
-    // catch covers one that goes after the check
-    val fs = IndexLog.fsOf(spark, path)
+      first: IndexLog.Commit, cells: Option[Seq[Long]] = None): DataFrame = {
     val store = new CellsStore(spark, path)
     def read(c: IndexLog.Commit): Option[DataFrame] =
       try {
-        val gen = genDir(path, c.gen)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(gen))) None
-        else {
-          val cells = spark.read.parquet(gen)
-          Some(IndexLifecycle.tombstones(spark, store, c).fold(cells)(t =>
-            cells.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti")))
-        }
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              String.valueOf(e.getMessage).contains("Path does not exist") => None
-      }
+        val scan = cellsScan(spark, path, c.gen, cells)
+        Some(IndexLifecycle.tombstones(spark, store, c).fold(scan)(t =>
+          scan.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti")))
+      } catch { case _: java.io.FileNotFoundException => None }
     read(first).orElse {
       val next = IndexLog.cells(path).latest(spark)
       if (next.version > first.version) read(next) else None
     }.getOrElse(throw new java.io.FileNotFoundException(
       s"$path: generation ${first.gen} is gone and no newer commit names another"))
+  }
+
+  /** The cells of a [[buildIvfIndex]] layout as a scan reads them: the
+    * written (vec_id, q, nrm) and the `cent_id` partition column.
+    */
+  val IvfCellsSchema: StructType = StructType(Seq(StructField("vec_id", LongType),
+    StructField("q", ArrayType(LongType)), StructField("nrm", LongType),
+    StructField("cent_id", IntegerType)))
+
+  /** The scan of generation `gen`: the files of the `cells` ids, or of
+    * every cell, from one driver walk ([[IndexLifecycle.filesUnder]]),
+    * read with the family's cells schema as a pre-listed relation — no
+    * partition-discovery job, no schema-inference job. The `cent_id`
+    * filter stays on the plan as its partition filter. Throws
+    * FileNotFoundException when the generation is gone.
+    */
+  private def cellsScan(spark: SparkSession, path: String, gen: String,
+      cells: Option[Seq[Long]]): DataFrame = {
+    val fs   = IndexLog.fsOf(spark, path)
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path, gen))
+    if (!fs.exists(root)) throw new java.io.FileNotFoundException(root.toString)
+    val files = cells.fold(IndexLifecycle.filesUnder(fs, root))(_.distinct.flatMap(id =>
+      IndexLifecycle.filesUnder(fs, new org.apache.hadoop.fs.Path(root, s"cent_id=$id"))))
+    val scan = IndexLifecycle.preListed(spark, root, files,
+      if (layoutTables(spark, path).pq) IvfPqCellsSchema else IvfCellsSchema, "cent_id")
+    cells.fold(scan)(ids => scan.filter(col("cent_id").isin(ids: _*)))
   }
 
   // every standing tombstone file of the layout's ACTIVE generation —
@@ -909,7 +936,7 @@ object Similarity {
     IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"), store.leasePath) {
       retireCells(spark, path)
       IndexLifecycle.delete(spark, store, delIds.select(col("vec_id").cast("long").as("vec_id")),
-        "vec_id", delTag)(compactIvfCells(spark, path))
+        delTag)(compactIvfCells(spark, path))
     }
   }
 
@@ -958,22 +985,13 @@ object Similarity {
       Some(IndexLog.cells(path).latest(spark).gen), Set.empty)
 
   /** The data files of a generation and the number of cells they fall
-    * in — one recursive listing, never a Spark job; `_tombstones/` and
+    * in — one driver walk, never a Spark job; `_tombstones/` and
     * `_`/`.`-prefixed bookkeeping are not cell files.
     */
   private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
       gen: org.apache.hadoop.fs.Path): (Long, Int) = {
-    var files = 0L
-    val cells = scala.collection.mutable.HashSet.empty[String]
-    val it = fs.listFiles(gen, true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (isDataFile(p.getName) && isDataFile(p.getParent.getName)) {
-        files += 1
-        cells += p.getParent.getName
-      }
-    }
-    (files, cells.size)
+    val files = IndexLifecycle.filesUnder(fs, gen)
+    (files.size.toLong, files.map(_.getPath.getParent.getName).distinct.size)
   }
 
   /** One cells layout as [[IndexLifecycle.Store]]: generations are the
@@ -986,6 +1004,7 @@ object Similarity {
     private val fs = IndexLog.fsOf(spark, path)
 
     val log: IndexLog = IndexLog.cells(path)
+    val idCol = "vec_id"
     def leasePath: Path = WriterLease.lockPathFor(path)
     def tombstoneDir(gen: String): Path = new Path(new Path(path, gen), "_tombstones")
 
@@ -1002,14 +1021,9 @@ object Similarity {
             newestMtime(st))
         }
 
-    private def newestMtime(dir: FileStatus): Long = {
-      var m = dir.getModificationTime
-      try {
-        val it = fs.listFiles(dir.getPath, true)
-        while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-      } catch { case _: java.io.IOException => }
-      m
-    }
+    private def newestMtime(dir: FileStatus): Long =
+      (dir +: IndexLifecycle.filesUnder(fs, dir.getPath, dataOnly = false))
+        .map(_.getModificationTime).max
 
     def drop(gens: Set[String]): Unit = gens.foreach(g => fs.delete(new Path(path, g), true))
 
@@ -1020,10 +1034,10 @@ object Similarity {
     // ~one whole cell and writes ~one file for it
     def rewrite(gen: String, tombstones: Option[DataFrame]): String = {
       val out = s"cells.g${IndexLifecycle.newStamp()}"
-      val raw = spark.read.parquet(genDir(path, gen))
+      val raw = cellsScan(spark, path, gen, None)
       val cells = tombstones.fold(raw)(t =>
         raw.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti"))
-      val c = spark.read.parquet(s"$path/centroids").count().toInt
+      val c = layoutTables(spark, path).c
       cells.repartition(math.max(c, 1), col("cent_id"))
         .write.partitionBy("cent_id").parquet(genDir(path, out))
       out
@@ -1040,8 +1054,8 @@ object Similarity {
     * costs less than the recall it recovers. `corpusN` is the build-
     * time corpus count, INGEST-LEDGER METADATA ([[ensureCorpusStats]]
     * — a memoized sidecar read, never a scan). Plan: the zero-column
-    * occupancy scan of [[ivfCellStats]] aggregated to one row, cross-
-    * joined with the ≤C-row centroid count — shuffle is C count rows,
+    * occupancy scan of [[ivfCellStats]] aggregated to one row, beside
+    * the centroid count the driver holds — shuffle is C count rows,
     * index-size independent, so an ingestion tier can run this after
     * every fold.
     */
@@ -1055,8 +1069,7 @@ object Similarity {
       .agg(sum(col("n_vecs")).as("n_vecs"),
         count(lit(1)).as("n_cells"),
         max(col("n_vecs")).as("max_cell"))
-      .crossJoin(
-        spark.read.parquet(s"$path/centroids").agg(count(lit(1)).as("c")))
+      .withColumn("c", lit(layoutTables(spark, path).c.toLong))
       .withColumn("skew_permille",
         expr("(max_cell * c * 1000) div n_vecs"))
       .withColumn("new_mass_permille",
@@ -1330,15 +1343,18 @@ object Similarity {
     // ×C blowup + vector-carrying groupBy AND an n-row vec_id join to
     // zip the two — at 100 TB, five corpus-scale exchanges on every
     // build, all gone
-    writeCells(withPqCodes(assignToCentroids(b, readCentroids(embeddings, path)),
+    // the assignment reads back the written centroids, the bytes every
+    // probe ranks against
+    writeCells(withPqCodes(assignToCentroids(b, embeddings.sparkSession.read.parquet(s"$path/centroids")),
         pqBooksRow(embeddings, m, ks, subDim), m, subDim)
       .select("vec_id", "cent_id", "codes"), path)
   }
 
-  // read-back of the just-written centroid table so the assignment and
-  // the probe rank against the SAME bytes (not a re-planned frame)
-  private def readCentroids(embeddings: DataFrame, path: String): DataFrame =
-    embeddings.sparkSession.read.parquet(s"$path/centroids")
+  /** The cells of a [[buildIvfPqIndex]] layout as a scan reads them:
+    * the written (vec_id, codes) and the `cent_id` partition column.
+    */
+  val IvfPqCellsSchema: StructType = StructType(Seq(StructField("vec_id", LongType),
+    StructField("codes", ArrayType(LongType)), StructField("cent_id", IntegerType)))
 
   /** Idempotent IVF-PQ layout ([[ensureIvfIndex]]'s contract for the
     * composed index): C adaptive from the staged corpus count, keyed by
@@ -1354,8 +1370,8 @@ object Similarity {
   /** Probe an IVF-PQ layout: [[ivfProbe]]'s driver-side centroid
     * ranking prunes the cells scan to nProbe partitions, then ADC runs
     * as a MAP-ONLY expression — the m·ks lookup table is computed
-    * driver-side from the tiny codebook file and inlined as literal
-    * arrays, so each scanned row costs m array-index adds, no join, no
+    * driver-side from the cached codebooks and inlined as one literal
+    * array, so each scanned row costs m array-index adds, no join, no
     * shuffle beyond the top-k partials. The scan reads (vec_id, codes)
     * only: at 100 TB the serving tier holds ~4 bytes per vector and
     * the exact vectors stay in cold storage (re-rank there if recall
@@ -1370,31 +1386,46 @@ object Similarity {
       nProbe: Int = 4,
       exclude: Option[Long] = None,
       m: Int = 4, subDim: Int = 16): DataFrame = {
-    val (qq, _, probeIds) = probeCells(spark, path, queryVec, nProbe)
-    // the ADC lookup table: exact integer ‖q_sub − codeword‖² per
-    // (sub, code), from the m·ks-row codebook file — driver metadata
-    val lut = Array.fill(m)(collection.mutable.Map.empty[Long, Long])
-    spark.read.parquet(s"$path/codebooks").collect().foreach { r =>
-      val s0   = r.getAs[Number]("sub").intValue()
-      val cv   = r.getAs[collection.Seq[Long]]("cvec")
-      val cnrm = r.getAs[Long]("cnrm")
-      val qs   = qq.slice(s0 * subDim, s0 * subDim + subDim)
-      val dot  = qs.iterator.zip(cv.iterator).map { case (a, b) => a * b }.sum
-      val qsn  = qs.map(x => x * x).sum
-      lut(s0)(r.getAs[Long]("code_id")) = qsn + cnrm - 2 * dot
-    }
-    val lutCols = (0 until m).map { s0 =>
-      val arr = (0L until lut(s0).keys.max + 1)
-        .map(cid => lut(s0).getOrElse(cid, Long.MaxValue / (2 * m)))
-      element_at(typedlit(arr), col("codes").getItem(s0).cast("int") + 1)
-    }
-    val cells = liveCells(spark, path)
-      .filter(col("cent_id").isin(probeIds.toIndexedSeq: _*))
+    val t = layoutTables(spark, path)
+    val p = probeCells(t, Seq(0L -> quantizeQuery(queryVec)), nProbe).head
+    val cells = liveCells(spark, path, Some(p.cells.toSeq))
     exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
-      .withColumn("adist", lutCols.reduce(_ + _))
+      .withColumn("adist", adistOf(t, typedlit(adcTable(t, p.q, m, subDim).toSeq), m))
       .orderBy(col("adist").asc, col("vec_id"))
       .select("vec_id", "adist")
       .limit(k)
+  }
+
+  // a query's ADC lookup table, flattened by subspace: entry
+  // offset(sub) + code_id holds the exact integer ‖q_sub − codeword‖²,
+  // from the m·ks-row codebook; a code id absent from its book holds a
+  // sentinel no sum of m entries can overflow
+  private def adcTable(t: LayoutTables, qq: Array[Long], m: Int, subDim: Int): Array[Long] = {
+    val off = adcOffsets(t, m)
+    val lut = Array.fill(off(m))(Long.MaxValue / (2 * m))
+    t.words.foreach { case (s0, cid, cv, cnrm) =>
+      if (s0 < m) {
+        val qs = qq.slice(s0 * subDim, s0 * subDim + subDim)
+        val dot = qs.iterator.zip(cv.iterator).map { case (a, b) => a * b }.sum
+        lut(off(s0) + cid.toInt) = qs.iterator.map(x => x * x).sum + cnrm - 2 * dot
+      }
+    }
+    lut
+  }
+
+  // where each subspace's entries start in an ADC table: per sub, its
+  // largest code id + 1 entries
+  private def adcOffsets(t: LayoutTables, m: Int): Array[Int] = {
+    val width = t.words.groupMapReduce(_._1)(_._2.toInt + 1)(math.max)
+    require((0 until m).forall(width.contains), s"a codebook has no codeword for some of the $m subspaces")
+    (0 to m).map(s0 => (0 until s0).map(width).sum).toArray
+  }
+
+  // the ADC distance of a scanned code row: m lookups into `lut`
+  private def adistOf(t: LayoutTables, lut: Column, m: Int): Column = {
+    val off = adcOffsets(t, m)
+    (0 until m).map(s0 =>
+      element_at(lut, col("codes").getItem(s0).cast("int") + (off(s0) + 1))).reduce(_ + _)
   }
 
   /** Incremental ingestion into a standing [[ensureIvfPqIndex]] layout
@@ -1424,14 +1455,12 @@ object Similarity {
       newVecs: DataFrame, path: String,
       m: Int = 4, subDim: Int = 16): DataFrame = {
     val spark = newVecs.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm")
-    val cb = spark.read.parquet(s"$path/codebooks")
+    val t = layoutTables(spark, path)
     val b = newVecs
       .select(col("vec_id"),
         VectorFunctions.quantize(col("embedding")).as("q"))
       .withColumn("nrm", VectorFunctions.qdot(col("q"), col("q")))
-    withPqCodes(assignToCentroids(b, cents), booksRowOf(cb), m, subDim)
+    withPqCodes(assignToCentroids(b, t.centroids(spark)), booksRowOf(t.codebooks(spark)), m, subDim)
       .select("vec_id", "cent_id", "codes")
   }
 
@@ -1443,86 +1472,12 @@ object Similarity {
     foldCells(newVecs, path, batchTag)(pqFoldEncoding(newVecs, path, m, subDim))
 
   /** Batched probe of an [[ensureIvfPqIndex]] layout — [[
-    * ivfProbeBatchDf]]'s serving-throughput shape for the COMPRESSED
-    * index: N queries answered by ONE partition-pruned scan of code
-    * rows. Centroid ranking is the same distributed |batch|·C pass +
-    * per-query window; the ADC lookup table becomes a BROADCAST FRAME
-    * (query_id, sub, code_id, pd) of |batch|·m·ks exact integer
-    * distances (the distributed analog of the single-probe literal
-    * arrays — m·ks ≈ 10³ rows/query at the defaults, so ~10⁴-query
-    * batches stay broadcastable; shard beyond that). Scanned code rows fan out
-    * only to the queries probing their cell, explode to m (sub, code)
-    * pairs, join the LUT map-side, and partial-agg back to one adist
-    * per (query, vec) before the per-query top-k window — every
-    * exchange bounded by batch·nProbe·cellsize·m SMALL rows, never the
-    * corpus, and the scan still reads ~4-byte payloads.
-    * Output: (query_id, rk, vec_id, adist), all BIGINT.
-    */
-  def ivfPqProbeBatchDfOwned(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nProbe: Int = 4,
-      excludeSelf: Boolean = true,
-      m: Int = 4, subDim: Int = 16): (DataFrame, graft.util.Checkpoints.Staged) = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cent_id", "cvec", "cnrm")
-    val qdf = queries
-      .select(col("query_id"),
-        VectorFunctions.quantize(col("emb")).as("qvec"))
-      .withColumn("qn", VectorFunctions.qdot(col("qvec"), col("qvec")))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("pcos").desc, col("cent_id").desc)
-    // shed qvec/qn BEFORE the window's partitionBy(query_id) exchange
-    // (the ivfProbeBatchDfOwned rationale) — the PQ probe map never
-    // needs them back, so no re-join either
-    val staged = graft.util.Checkpoints.stageOwned(
-      qdf.crossJoin(broadcast(cents))
-        .withColumn("pcos",
-          VectorFunctions.qdot(col("cvec"), col("qvec")).cast("double") /
-            sqrt(col("cnrm").cast("double") * col("qn").cast("double")))
-        .select(col("query_id"), col("cent_id"), col("pcos"))
-        .withColumn("pr", row_number().over(pw))
-        .filter(col("pr") <= nProbe)
-        .select(col("query_id"), col("cent_id")))
-    val probeMap = staged.df
-    val probedCells: Seq[Long] =
-      probeMap.select("cent_id").distinct().as[Long].collect().toIndexedSeq
-    // the batch LUT: per-query subvectors × the standing codebooks
-    val lut = qdf
-      .select(col("query_id"),
-        explode(array((0 until m).map(lit(_)): _*)).as("sub"), col("qvec"))
-      .withColumn("qsv", slice(col("qvec"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("qsn", VectorFunctions.qdot(col("qsv"), col("qsv")))
-      .join(broadcast(spark.read.parquet(s"$path/codebooks")), Seq("sub"))
-      .withColumn("pd", col("qsn") + col("cnrm") -
-        lit(2L) * VectorFunctions.qdot(col("qsv"), col("cvec")))
-      .select("query_id", "sub", "code_id", "pd")
-    val cells = liveCells(spark, path)
-      .filter(col("cent_id").isin(probedCells: _*))
-      .join(broadcast(probeMap), Seq("cent_id"))
-    val cand =
-      if (excludeSelf) cells.filter(col("vec_id") =!= col("query_id"))
-      else cells
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("vec_id"))
-    val out = cand
-      .select(col("query_id"), col("vec_id"),
-        posexplode(col("codes")).as(Seq("sub", "code_id")))
-      .join(broadcast(lut), Seq("query_id", "sub", "code_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum(col("pd")).as("adist"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("vec_id"), col("adist"))
-    (out, staged)
-  }
-
-  /** [[ivfPqProbeBatchDfOwned]] over an in-memory query batch, staged
-    * block released implicitly with the session (convenience form —
-    * long-lived serving drivers should use the Owned variant).
+    * ivfProbeBatch]] for the COMPRESSED index, with the same driver-side
+    * ranking. Each query's ADC lookup table (m·ks exact integer
+    * distances) rides in its probe-map rows, so a scanned code row sums
+    * m lookups map-side, as [[ivfPqProbe]] does; the one shuffle is the
+    * per-query top-k window. Output: (query_id, rk, vec_id, adist), all
+    * BIGINT.
     */
   def ivfPqProbeBatch(
       spark: SparkSession,
@@ -1532,10 +1487,25 @@ object Similarity {
       nProbe: Int = 4,
       excludeSelf: Boolean = true,
       m: Int = 4, subDim: Int = 16): DataFrame = {
-    import spark.implicits._
-    ivfPqProbeBatchDfOwned(spark, path,
-      queries.toDF("query_id", "emb"), k, nProbe, excludeSelf, m, subDim)._1
+    val t = layoutTables(spark, path)
+    val probes = probeCells(t, queries.map { case (id, v) => id -> quantizeQuery(v) }, nProbe)
+    val probeMap = spark.createDataFrame(probes.flatMap { p =>
+      val lut = adcTable(t, p.q, m, subDim).toSeq
+      p.cells.toSeq.map(c => Row(p.id, c, lut))
+    }.asJava, PqProbeMapSchema)
+    val cells = liveCells(spark, path, Some(probedCells(probes)))
+      .join(broadcast(probeMap), Seq("cent_id"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("adist").asc, col("vec_id"))
+    (if (excludeSelf) cells.filter(col("vec_id") =!= col("query_id")) else cells)
+      .withColumn("adist", adistOf(t, col("lut"), m))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
+      .select(col("query_id"), col("rk"), col("vec_id"), col("adist"))
   }
+
+  private val PqProbeMapSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("cent_id", LongType), StructField("lut", ArrayType(LongType))))
 
   /** [[ivfPqProbe]] + EXACT RE-RANK — the full production recipe: the
     * compressed index nominates `kAdc` candidates by ADC (cheap, code-
@@ -1568,10 +1538,7 @@ object Similarity {
     val candIds =
       ivfPqProbe(spark, path, queryVec, kAdc, nProbe, exclude, m, subDim)
       .select("vec_id").collect().map(_.getLong(0)).toIndexedSeq
-    val qq = queryVec.map { f =>
-      val d = f.toDouble * 1000
-      if (d >= 0) math.round(d) else -math.round(-d)
-    }
+    val qq   = quantizeQuery(queryVec).toSeq
     val qn   = qq.map(x => x * x).sum
     val qCol = array(qq.map(lit): _*)
     embeddings

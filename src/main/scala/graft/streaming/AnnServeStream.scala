@@ -7,17 +7,18 @@ import graft.operators.Similarity
 /** STREAMING ANN serving — the online form of
   * [[Similarity.ivfProbeBatchDf]]: query vectors arrive as micro-
   * batches of a real Structured Streaming query, and every micro-batch
-  * is answered by ONE distributed centroid ranking + ONE partition-
-  * pruned scan of the staged IVF cells layout, results accruing
-  * append-only. The q106→q108 symmetry applied to the serving side:
-  * q107 proves the batched operator, q110 proves the SAME answers come
-  * out when the batch boundary is a stream's micro-batch boundary.
+  * is collected, ranked on the driver against the layout's cached
+  * centroids and answered by ONE partition-pruned scan of the IVF cells
+  * layout, results accruing append-only. The q106→q108 symmetry applied
+  * to the serving side: q107 proves the batched operator, q110 proves
+  * the SAME answers come out when the batch boundary is a stream's
+  * micro-batch boundary.
   *
   * Scale shape (a serving tier fed by a request stream):
-  *  - per micro-batch cost is the q107 contract — ranking is
-  *    |batch|·C map work against the broadcast centroid table, the
-  *    cells scan is pruned to the union of probed cells, every shuffle
-  *    bounded by the batch, never the corpus;
+  *  - per micro-batch cost is the q107 contract — |batch|·C·dim driver
+  *    ranking work under [[Similarity.MaxBatchRankWork]], the cells
+  *    scan pruned to the union of probed cells, every shuffle bounded
+  *    by the batch, never the corpus;
   *  - queries are INDEPENDENT rows, so micro-batching is pure
   *    amortization — the union of per-batch answers is row-identical
   *    to one big batch (and to N sequential probes; SimilaritySpec
@@ -32,7 +33,9 @@ object AnnServeStream {
   /** Drain `queryBatches` (each `(query_id LONG, emb ARRAY<FLOAT>)`;
     * one micro-batch each) against the staged layout at `path` through
     * a real foreachBatch stream. Returns the accrued
-    * (query_id, rk, vec_id, dot) answers, checkpointed.
+    * (query_id, rk, vec_id, dot) answers, checkpointed. A batch probe
+    * persists nothing of its own (its probe map is a local relation),
+    * so the drain holds no per-batch handles.
     */
   def drainServe(
       queryBatches: Seq[DataFrame],
@@ -44,22 +47,7 @@ object AnnServeStream {
     import spark.implicits._
     val zero = Seq.empty[(Long, Long, Long, Long)]
       .toDF("query_id", "rk", "vec_id", "dot")
-    // owned probe maps, released when the drain returns: each batch's
-    // answers are folded into the (checkpointed, self-contained)
-    // accumulator, after which its probe-map block is dead weight — a
-    // thousand-batch drain must not accumulate a thousand blocks.
-    // Release happens AFTER drainFolded because the fold's stage of
-    // batch N runs after the fold callback returns.
-    val handles =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.util.Checkpoints.Staged]()
-    try
-      IncrementalSink.drainFolded(queryBatches, zero,
-        (acc, batch) => {
-          val (out, staged) = Similarity.ivfProbeBatchDfOwned(
-            batch.sparkSession, path, batch, k, nProbe)
-          handles.add(staged)
-          acc.unionByName(out)
-        })
-    finally handles.forEach(_.release())
+    IncrementalSink.drainFolded(queryBatches, zero, (acc, batch) =>
+      acc.unionByName(Similarity.ivfProbeBatchDf(batch.sparkSession, path, batch, k, nProbe)))
   }
 }

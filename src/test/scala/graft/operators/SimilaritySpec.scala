@@ -523,8 +523,8 @@ class SimilaritySpec extends SparkSpec {
     }.sorted
     assert(batch == sequential)
     // one scan serves the batch: the plan reads the cells layout once
-    // (its only FileScan — the centroid ranking feeds in as the staged
-    // probe-map RDD), pruned to the union of probed cells
+    // (its only FileScan — the driver-side ranking feeds in as the
+    // probe map's local relation), pruned to the union of probed cells
     val plan = Similarity.ivfProbeBatch(spark, path, qs, k = 5, nProbe = 4)
       .queryExecution.executedPlan.toString
     assert("FileScan parquet".r.findAllIn(plan).size == 1 &&
@@ -1426,31 +1426,37 @@ class SimilaritySpec extends SparkSpec {
     assert(drained == oneShot && drained.nonEmpty)
   }
 
-  test("ivfProbeBatchOwned: release frees the staged probe map") {
+  test("a batch probe persists nothing") {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
-    val tag = s"ivfowned-${System.nanoTime()}"
+    val tag = s"ivfnopersist-${System.nanoTime()}"
     val (path, _) = Similarity.ensureIvfIndex(emb, srcTag = tag)
-    val qs = emb.filter($"vec_id" < 3).select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
-      .map { case (id, v) => (id, v.toSeq) }
+    val qdf = emb.filter($"vec_id" < 3)
+      .select($"vec_id".as("query_id"), $"embedding".as("emb"))
     def ids(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = ids()
-    val (out, staged) =
-      Similarity.ivfProbeBatchDfOwned(spark, path, qs.toDF("query_id", "emb"), 5, 4)
-    val added = ids() -- before
-    assert(added.nonEmpty, "the probe map must be staged")
-    assert(out.count() > 0)
-    staged.release()
-    assert((ids() intersect added).isEmpty,
-      s"release must free the probe-map blocks: $added still persisted")
+    assert(Similarity.ivfProbeBatchDf(spark, path, qdf, 5, 4).count() > 0)
+    assert(ids() == before, s"a batch probe persisted ${ids() -- before}")
+    // a drain checkpoints its own accumulator (once at the start and once
+    // per micro-batch): serving through it persists no more than the
+    // same drain with a probe-free fold does, nothing per probe
+    val batches = Seq(qdf.filter($"query_id" < 2), qdf.filter($"query_id" >= 2))
+    val beforeServe = ids()
+    assert(graft.streaming.AnnServeStream.drainServe(batches, path, k = 5, nProbe = 4)
+      .count() > 0)
+    val byServe = ids() -- beforeServe
+    val beforeBare = ids()
+    val zero = Seq.empty[(Long, Long, Long, Long)].toDF("query_id", "rk", "vec_id", "dot")
+    graft.streaming.IncrementalSink.drainFolded(batches, zero, (acc, _) => acc).count()
+    val byBare = ids() -- beforeBare
+    assert(byServe.size <= byBare.size,
+      s"drainServe persisted $byServe; the probe-free drain persisted $byBare")
   }
 
-  test("ivfProbeBatch distributed centroid ranking ≡ driver ranking at C=4096") {
-    // a large synthetic centroid table (C=4096, the scale the former
-    // driver-side |batch|·C loop choked on) with a hand-planted cells
-    // layout: the broadcast+window ranking must pick EXACTLY the cells
-    // the driver-side loop picks — cos ordering, cent_id DESC
-    // tie-break, nProbe cut — and serve the identical top-k
+  test("ivfProbeBatch ≡ its driver-side replay at C=4096") {
+    // a large synthetic centroid table (C=4096) with a hand-planted
+    // cells layout: the batch must probe EXACTLY the cells an
+    // independent replay of the ranking picks — cos ordering, cent_id
+    // DESC tie-break, nProbe cut — and serve the identical top-k
     val dir = s"${java.nio.file.Files.createTempDirectory("graft_ivf_dist")}/ivf"
     val rnd = new scala.util.Random(421)
     val dim = 8
@@ -1476,9 +1482,10 @@ class SimilaritySpec extends SparkSpec {
     val nProbe = 6
     val got = Similarity.ivfProbeBatch(spark, dir, queries, k = 4, nProbe = nProbe)
       .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-    // driver-side replay: the pre-round-14 ranking loop, verbatim
+    // the replay: a plain sort over every centroid, quantizing as the
+    // engine does (half away from zero)
     val expected = queries.flatMap { case (qid, vec) =>
-      val qq = vec.map(f => math.round(f.toDouble * 1000))
+      val qq = Similarity.quantizeQuery(vec).toSeq
       val qn = qq.map(x => x * x).sum
       val probe = cents.map { case (cid, cv, cn) =>
           val dot = cv.iterator.zip(qq.iterator).map { case (a, b) => a * b }.sum
@@ -1494,7 +1501,7 @@ class SimilaritySpec extends SparkSpec {
         .map { case ((vid, dot, _), i) => (qid, (i + 1).toLong, vid, dot) }
     }.sorted
     assert(got == expected,
-      s"distributed ranking diverged from the driver loop:\n$got\nvs\n$expected")
+      s"the batch diverged from its replay:\n$got\nvs\n$expected")
   }
 
   test("a generation GC'd under a reader re-resolves from the newer commit, without sleeping") {
