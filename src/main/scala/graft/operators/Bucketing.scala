@@ -77,42 +77,6 @@ object Bucketing {
       props.get("graft.src").contains(key)
     }
 
-  /** The read-only half of [[ensureBucketed]]: true when `table`
-    * already carries exactly this layout (app memo, else catalog
-    * props). For callers that must decide whether to pay an expensive
-    * SHARED input materialization before building several tables at
-    * once (the [[Dedup.ensureMinhashBandIndex]] shape) — probing costs
-    * schema derivation plus at most one catalog roundtrip, never a
-    * Spark job over the data.
-    */
-  def isCurrent(
-      df: DataFrame,
-      table: String,
-      buckets: Int,
-      bucketCols: Seq[String],
-      srcTag: String,
-      sortCols: Seq[String] = Seq.empty): Boolean = {
-    val spark   = df.sparkSession
-    val key     = layoutKey(df, buckets, bucketCols, srcTag, sortCols)
-    val memoKey = s"${spark.sparkContext.applicationId}|$table"
-    validated.get(memoKey) == key || {
-      val ok = propsCurrent(spark, table, key)
-      // memoize the catalog-confirmed layout: a hot serving loop whose
-      // tables were built by a PRIOR app must pay the tableExists +
-      // SHOW TBLPROPERTIES roundtrips once, not per call
-      if (ok) validated.put(memoKey, key)
-      ok
-    }
-  }
-
-  /** Drop the memo of `table`: it was dropped, so the next
-    * [[ensureBucketed]] must probe (and write) it again.
-    */
-  private[graft] def forget(spark: SparkSession, table: String): Unit = {
-    validated.remove(s"${spark.sparkContext.applicationId}|$table")
-    ()
-  }
-
   def ensureBucketed(
       df: DataFrame,
       table: String,

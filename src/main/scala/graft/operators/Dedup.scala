@@ -1,8 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{PortableHash, TextFunctions}
 import graft.util.Checkpoints
@@ -453,168 +457,180 @@ object Dedup {
   private[graft] def prefixOf(table: String): String =
     table.replaceAll("_(bands|sigs)(_g\\d+)?$", "")
 
-  /** The commit log of one band lineage: next to its writer lease under
-    * the database location (`<db location>/_graft_index_logs/<prefix>`),
-    * the medium every process sharing the catalog also shares. A commit
-    * names the active (bands, sigs) pair by its suffix: `""` for the
-    * pair [[ensureMinhashBandIndex]] writes, `_g<stamp>` for a
-    * compaction's.
+  /** `<prefix>_bands`: one row per (doc, band), bucketed on `bk`. */
+  val BandsSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType), StructField("bk", StringType)))
+
+  /** `<prefix>_sigs`: one row per doc, bucketed on `doc_id`. */
+  val SigsSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType), StructField("sig", ArrayType(LongType))))
+
+  // a table of a generation pair: its dir, schema and bucket (sort) key
+  private final case class PairTable(dir: String, schema: StructType, key: String)
+  private val Bands = PairTable("bands", BandsSchema, "bk")
+  private val Sigs  = PairTable("sigs", SigsSchema, "doc_id")
+
+  /** The commit log of one band lineage, at its root under the database
+    * location (`<db location>/_graft_bands/<prefix>`), the medium every
+    * process sharing the warehouse also shares. A generation is a
+    * directory `pair` (the one [[ensureMinhashBandIndex]] writes) or
+    * `pair.g<stamp>` (a compaction's) under the root, holding the two
+    * tables' files (`bands/`, `sigs/`) and `_tombstones/`.
     */
   private[graft] def bandLog(spark: SparkSession, prefix: String): IndexLog =
-    IndexLog(new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
-      spark.catalog.getDatabase("default").locationUri, "_graft_index_logs"), prefix).toString,
-      "(_g\\d+)?")
+    IndexLog(new Path(new Path(spark.catalog.getDatabase("default").locationUri,
+      "_graft_bands"), prefix).toString, "pair")
 
-  private def tablesOf(prefix: String, gen: String): (String, String) =
-    (s"${prefix}_bands$gen", s"${prefix}_sigs$gen")
+  // the table names of generation `gen`: `pair` → `<prefix>_bands`,
+  // `pair.g<stamp>` → `<prefix>_bands_g<stamp>`
+  private def tablesOf(prefix: String, gen: String): (String, String) = {
+    val sfx = gen.stripPrefix("pair").replace(".g", "_g")
+    (s"${prefix}_bands$sfx", s"${prefix}_sigs$sfx")
+  }
+
+  /** The catalog entries of the pair `c` names, registered from the
+    * commit alone when this session lacks them (`CREATE TABLE IF NOT
+    * EXISTS … CLUSTERED BY … LOCATION '<root>/<gen>/…'`), so any JVM
+    * sharing the warehouse resolves any lineage. An entry with another
+    * bucket spec (a rebuild elsewhere) is registered anew. */
+  private def registerPair(spark: SparkSession, log: IndexLog, prefix: String,
+      c: IndexLog.Commit): (CatalogTable, CatalogTable) = {
+    val catalog = spark.sessionState.catalog
+    val n = c.buckets.getOrElse(throw new IllegalStateException(
+      s"${log.root}: commit ${c.version} carries no bucket count"))
+    val (b, s) = tablesOf(prefix, c.gen)
+    def entry(table: String, t: PairTable): CatalogTable = {
+      val id = TableIdentifier(table, Some("default"))
+      val stale = catalog.tableExists(id) &&
+        !catalog.getTableMetadata(id).bucketSpec.contains(BucketSpec(n, Seq(t.key), Seq(t.key)))
+      if (stale) spark.sql(s"DROP TABLE $table")
+      if (!catalog.tableExists(id)) spark.sql(
+        s"CREATE TABLE IF NOT EXISTS $table (${t.schema.toDDL}) ${entryOf(log, c.gen, t, n)}")
+      catalog.getTableMetadata(id)
+    }
+    (entry(b, Bands), entry(s, Sigs))
+  }
+
+  // THE catalog entry of table `t` of generation `gen`: the clauses both
+  // the CTAS of a writer and the registration of a reader declare
+  private def entryOf(log: IndexLog, gen: String, t: PairTable, buckets: Int): String =
+    s"USING parquet CLUSTERED BY (${t.key}) SORTED BY (${t.key}) INTO $buckets BUCKETS " +
+      s"LOCATION '${new Path(new Path(log.root, gen), t.dir)}'"
+
+  // the signatures the index stores: doc_id as BIGINT whatever the
+  // corpus declares, so every write matches SigsSchema
+  private def sigsOf(docs: DataFrame, shingleN: Int, numHashes: Int, seed: Long): DataFrame =
+    minhashSignaturesPortable(docs, shingleN, numHashes, seed)
+      .select(col("doc_id").cast("long").as("doc_id"), col("sig"))
+
+  /** Write one table of generation `gen` — of the build and of the
+    * compaction — through a bucketed CTAS, as an external table at
+    * `<root>/<gen>/<dir>` (a name standing in this session is replaced).
+    */
+  private def writeTable(spark: SparkSession, log: IndexLog, gen: String, table: String,
+      t: PairTable, buckets: Int, rows: DataFrame): Unit = {
+    val view = s"${table}_ctas_src"
+    rows.createOrReplaceTempView(view)
+    try {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"CREATE TABLE $table ${entryOf(log, gen, t, buckets)} AS SELECT * FROM $view")
+    } finally spark.catalog.dropTempView(view)
+  }
+
+  /** One table of a pair, scanned as the cells are: pre-listed from its
+    * dir with the entry's bucket spec, so another process's appends are
+    * seen and no metadata job runs. Throws FileNotFoundException when the
+    * generation is gone. */
+  private def tableScan(spark: SparkSession, t: CatalogTable): DataFrame = {
+    val fs  = IndexLog.fsOf(spark, t.location.toString)
+    val dir = fs.makeQualified(new Path(t.location))
+    if (!fs.exists(dir)) throw new java.io.FileNotFoundException(dir.toString)
+    IndexLifecycle.preListed(spark, dir, IndexLifecycle.filesUnder(fs, dir), t.schema,
+      table = Some(t))
+  }
 
   /** Resolve a lineage's CURRENT physical tables — the pair its latest
-    * commit names (the band-index analog of [[Similarity.activeCellsDir]]);
-    * a lineage without a log resolves to the unsuffixed pair. Callers
-    * may hold any generation's names across maintenance; every read
-    * path re-resolves through this.
+    * commit names (the band-index analog of [[Similarity.activeCellsDir]]),
+    * registered in this session; a lineage without a log resolves to the
+    * unsuffixed pair. Callers may hold any generation's names across
+    * maintenance; every read path re-resolves through this.
     */
   def currentIndexTables(
-      spark: SparkSession, tablePrefix: String): (String, String) =
-    tablesOf(tablePrefix, bandLog(spark, tablePrefix).latestOption(spark).fold("")(_.gen))
+      spark: SparkSession, tablePrefix: String): (String, String) = {
+    val log = bandLog(spark, tablePrefix)
+    log.latestOption(spark).fold(tablesOf(tablePrefix, "pair")) { c =>
+      val (b, s) = registerPair(spark, log, tablePrefix, c)
+      (b.identifier.table, s.identifier.table)
+    }
+  }
 
   // every tombstone file the lineage's latest commit lists — the
   // spec-facing resolution (tests must not hardcode the location)
   private[graft] def standingTombstoneFiles(
       spark: SparkSession, tablePrefix: String): Seq[String] = {
-    val store = new BandStore(spark, tablePrefix, 0)
+    val store = new BandStore(spark, tablePrefix)
     store.log.latestOption(spark).fold(Seq.empty[String])(IndexLifecycle.tombstoneFiles(store, _))
   }
 
-  /** The catalog-table storage of one band lineage: a generation is a
-    * `<prefix>_{bands,sigs}<suffix>` pair named by its suffix; its
-    * tombstone files live in `<bands table location>/_tombstones/`,
-    * which the table scan skips (a `_`-prefixed dir) and its DROP TABLE
-    * removes.
+  /** One band lineage as [[IndexLifecycle.Store]]: a generation is the
+    * directory of a `<prefix>_{bands,sigs}<suffix>` table pair, whose
+    * catalog entries are unregistered when it is dropped.
     */
-  private final class BandStore(spark: SparkSession, prefix: String,
-      buckets: Int) extends IndexLifecycle.Store {
-    private val catalog = spark.sessionState.catalog
-    private def id(t: String) = org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default"))
-
+  private final class BandStore(spark: SparkSession, prefix: String)
+      extends IndexLifecycle.Store {
     val log: IndexLog = bandLog(spark, prefix)
     val idCol = "doc_id"
-    def leasePath: org.apache.hadoop.fs.Path = WriterLease.lockPathFor(spark, "default", prefix)
-    def tombstoneDir(gen: String): org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(catalog.defaultTablePath(id(s"${prefix}_bands$gen"))),
-      "_tombstones")
 
-    // every suffix either table family stands under: retirement must
-    // also see an ORPHAN sigs generation (a crash between the two CTAS).
-    // One no commit names is as old as its newest table
-    def generations(): Seq[IndexLifecycle.Generation] =
-      Seq("bands", "sigs").flatMap { family =>
-        val base = s"${prefix}_$family"
-        catalog.listTables("default", s"$base*").map(_.table).collect {
-          case n if n == base => ""
-          case n if n.startsWith(s"${base}_g") &&
-              n.stripPrefix(s"${base}_g").forall(_.isDigit) => n.stripPrefix(base)
-        }
-      }.distinct.map { sfx =>
-        def created(t: String): Option[Long] =
-          try Some(catalog.getTableMetadata(id(t)).createTime)
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        new IndexLifecycle.Generation(sfx, IndexLifecycle.parseStamp(sfx, "", "_g"),
-          Seq("bands", "sigs").flatMap(f => created(s"${prefix}_$f$sfx")).maxOption.getOrElse(0L))
-      }
-
-    def drop(gens: Set[String]): Unit = for (gen <- gens; f <- Seq("bands", "sigs")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$f$gen")
-      Bucketing.forget(spark, s"${prefix}_$f$gen")
-    }
-
-    // refreshed first: a fold appended by ANOTHER process is invisible
-    // in this session's cached file index
+    // listed, so a fold another process appended counts too
     def fileCounts(gen: String): Seq[Long] = {
-      val (b, s) = tablesOf(prefix, gen)
-      Seq(b, s).map { t =>
-        spark.catalog.refreshTable(t)
-        spark.table(t).inputFiles.length.toLong
-      }
+      val fs = IndexLog.fsOf(spark, log.root)
+      Seq(Bands, Sigs).map(t => IndexLifecycle.filesUnder(fs,
+        new Path(new Path(log.root, gen), t.dir)).size.toLong)
     }
 
-    // both tables drop the tombstoned docs; the new generation starts
-    // with no tombstones (the purge is the rewrite). buckets=0 derives
-    // the count from the standing table's bucket spec, so a caller-free
-    // compaction never re-buckets a lineage (a later fold's append
-    // would fail on the mismatch). Neither table is readable before the
-    // promote commit names it; both take the Bucketing validity key
-    def rewrite(gen: String, tombstones: Option[DataFrame]): String = {
-      val (srcBands, srcSigs) = tablesOf(prefix, gen)
-      val bk = if (buckets > 0) buckets else bucketCountOf(spark, srcBands).getOrElse(8)
-      val newGen = s"_g${IndexLifecycle.newStamp()}"
-      val (dstBands, dstSigs) = tablesOf(prefix, newGen)
-      Seq((srcSigs, dstSigs, "doc_id"), (srcBands, dstBands, "bk")).foreach {
-        case (src, dest, key) =>
-          val live = tombstones.fold(spark.table(src))(t => spark.table(src)
-            .join(broadcast(t.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
-          val staged = Checkpoints.stageOwned(live.repartition(bk, col(key)),
+    // both tables drop the tombstoned docs and keep the lineage's
+    // bucket count (a later fold's append must match); partitioned by
+    // the bucket hash, each writer task writes one whole bucket. Neither
+    // table is readable before the promote commit names it
+    def rewrite(snap: IndexLog.Commit, tombstones: Option[DataFrame]): String = {
+      val n = snap.buckets.get
+      val gen = log.newGen()
+      val (srcBands, srcSigs) = registerPair(spark, log, prefix, snap)
+      val (dstBands, dstSigs) = tablesOf(prefix, gen)
+      Seq((srcSigs, dstSigs, Sigs), (srcBands, dstBands, Bands)).foreach {
+        case (src, dest, t) =>
+          val live = IndexLifecycle.live(tableScan(spark, src), tombstones, idCol)
+          val staged = Checkpoints.stageOwned(live.repartition(n, col(t.key)),
             Checkpoints.configured(spark))
-          try {
-            val view = s"${dest}_ctas_src"
-            staged.df.createOrReplaceTempView(view)
-            spark.sql(s"CREATE TABLE $dest USING parquet " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $bk BUCKETS " +
-              s"AS SELECT * FROM $view")
-            spark.catalog.dropTempView(view)
-          } finally staged.release()
-          spark.sql(s"SHOW TBLPROPERTIES $src").collect().find(_.getString(0) == "graft.src")
-            .foreach(r => spark.sql(s"ALTER TABLE $dest SET TBLPROPERTIES(" +
-              s"'graft.src'='${r.getString(1).replace("'", "''")}')"))
+          try writeTable(spark, log, gen, dest, t, n, staged.df)
+          finally staged.release()
       }
-      newGen
+      gen
     }
-  }
 
-  /** The bucket count a lineage was actually built with, read from the
-    * catalog's bucket spec — the source of truth every append is
-    * validated against, so maintenance rewrites derive from it instead
-    * of trusting a default that may not match the build.
-    */
-  private[graft] def bucketCountOf(
-      spark: SparkSession, table: String): Option[Int] = {
-    val Array(db, tbl) =
-      if (table.contains(".")) table.split("\\.", 2)
-      else Array("default", table)
-    try {
-      if (!spark.catalog.tableExists(s"$db.$tbl")) None
-      else spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl, Some(db)))
-        .bucketSpec.map(_.numBuckets)
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    override def dropped(gen: String): Unit =
+      tablesOf(prefix, gen).productIterator.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   /** The LIVE view of a persisted index table (`_bands` or `_sigs`):
-    * physical rows minus the lineage's standing tombstones. The
-    * tombstone set is bounded between compactions, so the anti-join
-    * build side is an explicit BROADCAST — the bucketed scan keeps its
-    * layout (broadcast joins preserve child partitioning; the bucket-
-    * consuming window above this still plans zero exchanges).
-    */
-  private[graft] def liveIndexTable(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
+    * physical rows minus the lineage's standing tombstones
+    * ([[IndexLifecycle.live]]: the bucketed scan keeps its layout, so the
+    * bucket-consuming window above this plans zero exchanges). A table
+    * of no maintained lineage reads as it stands. */
+  private[graft] def liveIndexTable(spark: SparkSession, table: String,
       bandsTable: String): DataFrame = {
     // re-resolve the lineage's CURRENT generation: the caller may hold
     // names from before a compaction promote, and the superseded pair
     // is retained (then retired) rather than rewritten in place
     val prefix = prefixOf(bandsTable)
-    val store = new BandStore(spark, prefix, 0)
-    val cur = store.log.latestOption(spark)
-    val (curBands, curSigs) = tablesOf(prefix, cur.fold("")(_.gen))
-    val resolved =
-      if (prefixOf(table) != prefix) table
-      else if (table.startsWith(s"${prefix}_sigs")) curSigs
-      else curBands
-    val t = spark.table(resolved)
-    cur.flatMap(IndexLifecycle.tombstones(spark, store, _)).fold(t)(dels =>
-      t.join(broadcast(dels.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
+    val store = new BandStore(spark, prefix)
+    store.log.latestOption(spark).filter(_ => prefixOf(table) == prefix) match {
+      case Some(first) => IndexLifecycle.liveRows(spark, store, first) { c =>
+        val (b, s) = registerPair(spark, store.log, prefix, c)
+        tableScan(spark, if (table.startsWith(s"${prefix}_sigs")) s else b)
+      }
+      case None => spark.table(table)
+    }
   }
 
   /** The skew-capped LIVE view of a persisted band index (tombstoned
@@ -635,9 +651,9 @@ object Dedup {
     * [[incrementalNearDupPairs]]: the STANDING corpus is shingled,
     * minhashed and banded ONCE, landing as two bucketed tables
     * (`<prefix>_bands` (doc_id, bk) bucketed on `bk`; `<prefix>_sigs`
-    * (doc_id, sig) bucketed on `doc_id`) via the
-    * [[Bucketing.ensureBucketed]] idempotence contract — pay at ingest,
-    * reuse every batch. Returns (bandsTable, sigsTable).
+    * (doc_id, sig) bucketed on `doc_id`) in generation `pair` of the
+    * lineage ([[bandLog]]) — pay at ingest, reuse every batch. Returns
+    * (bandsTable, sigsTable).
     */
   def ensureMinhashBandIndex(
       docs: DataFrame,
@@ -648,35 +664,27 @@ object Dedup {
       rows: Int = 4,
       buckets: Int = 8,
       seed: Long = 7L): (String, String) = {
-    val spark      = docs.sparkSession
-    val bandsTable = s"${tablePrefix}_bands"
-    val sigsTable  = s"${tablePrefix}_sigs"
+    val spark = docs.sparkSession
     // fold the DATA FINGERPRINT into the validity key (the
     // Similarity.inputFingerprint contract): a corpus regenerated at
     // the same path with the same schema — the wiped-and-rebuilt /tmp
     // fixture case — must invalidate the persisted index instead of
     // silently deduping new text against old band/sig tables
-    val fpTag = s"$srcTag|fp=${Similarity.inputFingerprint(docs)}"
-    // validity is probed with the UNSTAGED plan (schema + catalog props
-    // only) against the tables the latest commit names (compaction
-    // copies the graft.src key forward): a repeated ensure call costs
-    // ZERO corpus work. A lineage without a log is incomplete — an
-    // unfinished rebuild — and rebuilds whatever its tables carry.
-    // Staging preserves the plan's schema, so the staged frames below
-    // produce the same layout keys the probe checked.
-    val rawSigs = minhashSignaturesPortable(docs, shingleN, bands * rows, seed)
-    val store = new BandStore(spark, tablePrefix, buckets)
-    def current(): Boolean = store.log.latestOption(spark).exists { c =>
-      val (b, s) = tablesOf(tablePrefix, c.gen)
-      Bucketing.isCurrent(bandKeys(rawSigs, bands, rows), b, buckets, Seq("bk"), fpTag) &&
-        Bucketing.isCurrent(rawSigs, s, buckets, Seq("doc_id"), fpTag)
-    }
+    val key = s"$srcTag|fp=${Similarity.inputFingerprint(docs)}" +
+      s"|shingle=$shingleN|bands=$bands|rows=$rows|seed=$seed"
+    // validity is the latest commit's key and bucket count (every commit
+    // carries them forward): a repeated ensure call costs ZERO corpus
+    // work. A lineage without a log is incomplete — an unfinished
+    // rebuild — and rebuilds whatever its directories hold.
+    val store = new BandStore(spark, tablePrefix)
+    def current(): Boolean = store.log.latestOption(spark)
+      .exists(c => c.key.contains(key) && c.buckets.contains(buckets))
     // the rebuild is a WRITE: it retires every generation and restarts
     // the lineage at gen 0, writing commit 0 last. Validity is
     // re-probed under the JVM lock, so the loser of a thread race
     // reuses the winner's rebuild instead of redoing (and clobbering) it.
     if (!current())
-      IndexLifecycle.guarded(spark, store.log.root, None, store.leasePath, skip = current()) {
+      IndexLifecycle.guarded(spark, store.log.root, None, skip = current()) {
         // truncate-and-load: the log goes first, then every generation
         // of the stale lineage — stale tombstones and ledgers must not
         // outlive it
@@ -684,43 +692,31 @@ object Dedup {
         IndexLifecycle.retire(spark, store, None, Set.empty,
           Some(IndexLifecycle.Policy.of(spark).copy(gcStaleHours = 0L)))
         // staged so the expensive minhash kernel runs ONCE for both writes
-        val sigs = Checkpoints.stage(rawSigs, Checkpoints.configured(spark))
-        Bucketing.ensureBucketed(bandKeys(sigs, bands, rows),
-          bandsTable, buckets, Seq("bk"), fpTag)
-        Bucketing.ensureBucketed(sigs, sigsTable, buckets, Seq("doc_id"), fpTag)
-        store.log.init(spark, "")
+        val sigs = Checkpoints.stage(sigsOf(docs, shingleN, bands * rows, seed),
+          Checkpoints.configured(spark))
+        val (bandsTable, sigsTable) = tablesOf(tablePrefix, "pair")
+        writeTable(spark, store.log, "pair", bandsTable, Bands, buckets,
+          bandKeys(sigs, bands, rows))
+        writeTable(spark, store.log, "pair", sigsTable, Sigs, buckets, sigs)
+        store.log.init(spark, "pair", Some(buckets), Some(key))
       }
     currentIndexTables(spark, tablePrefix)
   }
 
   /** Fold an ADMITTED batch into a persisted MinHash band index — the
-    * q95 incremental-index contract applied to near-dup ingestion
-    * (the append leg of [[IndexLifecycle]]).
-    * After [[incrementalNearDupPairs]] admits the batch's
-    * non-duplicates, their band/sig rows land as NEW BUCKET FILES
-    * appended to the two bucketed tables — O(|batch|) work; the corpus
-    * rows are never re-read, re-hashed or rewritten — so the next batch
-    * dedups against corpus ∪ admitted. Fold ≡ full rebuild
-    * (DedupSpec): folding batch B into index(A) yields tables row-equal
-    * to [[ensureMinhashBandIndex]](A ∪ B).
+    * q95 incremental-index contract applied to near-dup ingestion (the
+    * append leg of [[IndexLifecycle]]): the batch's band/sig rows land
+    * as NEW BUCKET FILES appended to the active pair — O(|batch|) work,
+    * the corpus rows never re-read or rewritten — so the next batch
+    * dedups against corpus ∪ admitted. Fold ≡ full rebuild (DedupSpec).
     *
-    * Idempotent per `batchTag`: folded tags are recorded in the
-    * lineage log's fold ledger ([[bandLog]]), so a replayed ingestion
-    * batch (driver retry, at-least-once upstream) is a no-op rather
-    * than a double-append. The crash window between the two appends and
-    * the tag commit is closed by the INTENT commit before the appends
-    * ([[IndexLifecycle.fold]]): a replay of a tag whose intent is still
-    * standing probes each table for the batch's doc_ids and re-appends
-    * only the table whose append never committed (Spark appends are
-    * all-or-nothing via the commit protocol), so a crashed fold
-    * REPAIRS on replay instead of double-appending — the probe scan is
-    * paid only on that crash-replay path, never in the O(|batch|)
-    * happy path. A rebuild through [[ensureMinhashBandIndex]] (new
-    * srcTag/schema) replaces the log and with it the fold ledger —
-    * folds always belong to exactly one base lineage. Caller contract:
-    * `admitted` holds NEW doc_ids only (admission filtered them);
-    * re-folding an id that is already indexed is the caller's bug, same
-    * as any append sink.
+    * Idempotent per `batchTag` (the log's fold ledger, [[bandLog]]). A
+    * replay of a tag whose INTENT still stands ([[IndexLifecycle.fold]])
+    * probes each table for the batch's doc_ids and re-appends only the
+    * table whose append never committed (appends are all-or-nothing), so
+    * a crashed fold REPAIRS instead of double-appending; the probe is
+    * paid only on that path. A rebuild replaces the log and with it the
+    * ledger. Caller contract: `admitted` holds NEW doc_ids only.
     */
   def foldIntoMinhashBandIndex(
       admitted: DataFrame,
@@ -732,13 +728,13 @@ object Dedup {
       buckets: Int = 8,
       seed: Long = 7L): Unit = {
     val spark = admitted.sparkSession
-    val store = new BandStore(spark, tablePrefix, buckets)
+    val store = new BandStore(spark, tablePrefix)
     // the physical pair resolves UNDER the guard, so a fold never
     // appends to a generation a concurrent compaction is retiring
-    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|fold|$batchTag"),
-        store.leasePath) {
+    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|fold|$batchTag")) {
       val folded = IndexLifecycle.fold(spark, store, admitted, batchTag) { cur =>
-        val (bandsTable, sigsTable) = tablesOf(tablePrefix, cur.gen)
+        val (bandsEntry, sigsEntry) = registerPair(spark, store.log, tablePrefix, cur)
+        val (bandsTable, sigsTable) = (bandsEntry.identifier.table, sigsEntry.identifier.table)
         // a standing intent for THIS tag means a previous attempt
         // crashed between its intent and its tag commit — probe each
         // table before re-appending (repair instead of double-append)
@@ -746,41 +742,31 @@ object Dedup {
         // owned stage, released once both appends land: an ingestion
         // loop folding batches for the session's lifetime must not
         // accumulate one staged block per batch
-        val staged = Checkpoints.stageOwned(
-          minhashSignaturesPortable(admitted, shingleN, bands * rows, seed),
+        val staged = Checkpoints.stageOwned(sigsOf(admitted, shingleN, bands * rows, seed),
           Checkpoints.configured(spark))
         try {
           val sigs = staged.df
           // an append is all-or-nothing (commit protocol), so under a
           // standing intent "any batch doc_id present" ⇔ "that table's
           // append landed" — paid only on the crash-replay path
-          def landed(table: String): Boolean = suspect && !spark.table(table)
+          def landed(table: CatalogTable): Boolean = suspect && !tableScan(spark, table)
             .join(broadcast(sigs.select("doc_id").distinct()), "doc_id")
             .isEmpty
-          // crash-replay REPAIR must not resurrect deleted docs:
-          // between the crash and the replay, batch docs may have been
-          // tombstoned and the index compacted (purging the
-          // tombstones), so the landed sibling now holds only the
-          // SURVIVORS — re-appending the full batch to the missing
-          // table would diverge sigs from bands and bring deleted
-          // signatures back into verification joins. On the suspect
-          // path, the missing table gets only the doc_ids the landed
-          // sibling still holds (the batch-ids broadcast keeps the
-          // probe tiny; paid only on crash-replay). A batch deleted IN
-          // FULL and compacted away leaves no survivors at all — that
-          // replay is refused below via the purge window (the
-          // standing-tombstone guard covers the uncompacted case
-          // loudly), so no silent re-append can resurrect a completed
-          // takedown.
-          def survivorsOf(sibling: String)(df: DataFrame): DataFrame =
+          // crash-replay REPAIR must not resurrect deleted docs: batch
+          // docs tombstoned and compacted away between the crash and the
+          // replay are gone from the landed sibling, so the missing table
+          // gets only the doc_ids the sibling still holds. A batch
+          // deleted IN FULL leaves no survivors — that replay is refused
+          // below via the purge window.
+          def survivorsOf(sibling: CatalogTable)(df: DataFrame): DataFrame =
             if (!suspect) df
             else df.join(
-              broadcast(spark.table(sibling)
+              broadcast(tableScan(spark, sibling)
                 .join(broadcast(sigs.select("doc_id").distinct()), "doc_id")
                 .select("doc_id").distinct()),
               Seq("doc_id"), "left_semi")
-          val bandsLanded = landed(bandsTable)
-          val sigsLanded  = landed(sigsTable)
+          val bandsLanded = landed(bandsEntry)
+          val sigsLanded  = landed(sigsEntry)
           // the UNDECIDABLE region, fenced: the tag stays poisoned in
           // the intent and purge-window ledgers
           if (cur.purgewin(batchTag) && !bandsLanded && !sigsLanded)
@@ -788,14 +774,14 @@ object Dedup {
           // append resolves columns BY NAME and must match the table's
           // bucket spec exactly — same keys/counts as ensureMinhashBandIndex
           if (!bandsLanded) {
-            val out = if (sigsLanded) survivorsOf(sigsTable)(bandKeys(sigs, bands, rows))
+            val out = if (sigsLanded) survivorsOf(sigsEntry)(bandKeys(sigs, bands, rows))
                       else bandKeys(sigs, bands, rows)
             out.write.mode("append").format("parquet")
               .bucketBy(buckets, "bk").sortBy("bk")
               .saveAsTable(bandsTable)
           }
           if (!sigsLanded) {
-            val out = if (bandsLanded) survivorsOf(bandsTable)(sigs) else sigs
+            val out = if (bandsLanded) survivorsOf(bandsEntry)(sigs) else sigs
             out.write.mode("append").format("parquet")
               .bucketBy(buckets, "doc_id").sortBy("doc_id")
               .saveAsTable(sigsTable)
@@ -806,7 +792,7 @@ object Dedup {
       // guard this fold already holds once the bands table averages
       // `autoCompactFilesPerUnit` files per bucket
       if (folded && IndexLifecycle.Policy.of(spark).filesPerUnitDue(
-          spark.table(currentIndexTables(spark, tablePrefix)._1).inputFiles.length, buckets))
+          store.fileCounts(store.log.latest(spark).gen).head, buckets))
         compactMinhashBandIndex(spark, tablePrefix, buckets)
     }
   }
@@ -835,9 +821,8 @@ object Dedup {
       tablePrefix: String,
       delTag: String): Unit = {
     val spark = delIds.sparkSession
-    val store = new BandStore(spark, tablePrefix, 0)
-    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|del|$delTag"),
-        store.leasePath) {
+    val store = new BandStore(spark, tablePrefix)
+    IndexLifecycle.guarded(spark, store.log.root, Some(s"$tablePrefix|del|$delTag")) {
       IndexLifecycle.delete(spark, store, delIds.select(col("doc_id").cast("long").as("doc_id")),
         delTag)(compactMinhashBandIndex(spark, tablePrefix))
     }
@@ -845,26 +830,28 @@ object Dedup {
 
   /** Small-file compaction and tombstone purge for a maintained
     * [[ensureMinhashBandIndex]] lineage — the [[IndexLifecycle.compact]]
-    * skeleton over the catalog-table store: every
-    * [[foldIntoMinhashBandIndex]] appends one bucket-file set per
-    * batch, and this rewrites both tables to ~one file per bucket
-    * (aligning the shuffle partitioner with the bucket hash so each
-    * writer task holds one whole bucket) as a NEW generation pair
-    * carrying the Bucketing validity key, so repeated ensure calls stay
-    * zero-cost; the ledgers live in the log, so a replayed tag still
-    * no-ops. Rows are unchanged apart from the purged tombstones
-    * (DedupSpec pins row equality and pair-output parity). `buckets` = 0
-    * keeps the lineage's own bucket count; `force` rewrites even when
-    * the skip rule holds.
+    * skeleton over the band store: every [[foldIntoMinhashBandIndex]]
+    * appends one bucket-file set per batch, and this rewrites both
+    * tables to ~one file per bucket as a NEW generation pair; the
+    * validity key and the ledgers live in the log, so repeated ensure
+    * calls stay zero-cost and a replayed tag still no-ops. Rows are
+    * unchanged apart from the purged tombstones (DedupSpec pins row
+    * equality and pair-output parity). A compaction keeps the lineage's
+    * bucket count: `buckets`, when not 0, must equal it. `force`
+    * rewrites even when the skip rule holds. A lineage without a log
+    * (never built, or an unfinished rebuild) is left alone.
     */
   def compactMinhashBandIndex(
       spark: SparkSession,
       tablePrefix: String,
       buckets: Int = 0,
       force: Boolean = false): Unit = {
-    val store = new BandStore(spark, tablePrefix, buckets)
-    IndexLifecycle.compact(spark, store, force, skip = store.log.latestOption(spark)
-      .forall(c => !spark.catalog.tableExists(tablesOf(tablePrefix, c.gen)._1)))
+    val store = new BandStore(spark, tablePrefix)
+    val cur = store.log.latestOption(spark)
+    require(buckets == 0 || cur.forall(_.buckets.contains(buckets)),
+      s"compactMinhashBandIndex($tablePrefix, buckets = $buckets): the lineage has " +
+        s"${cur.flatMap(_.buckets).getOrElse("?")} buckets, and a compaction keeps them")
+    IndexLifecycle.compact(spark, store, force, skip = store.log.latestOption(spark).isEmpty)
   }
 
   /** Incremental near-dup INGESTION: dedup a NEW batch of documents

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -12,26 +14,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * ([[Similarity.ensureIvfIndex]], [[Similarity.ensureIvfPqIndex]]).
   * Reference analog: the publish semantics of `etl/pipeline.py:698-725`
   * — append for folds, replace for compaction, truncate-and-load for a
-  * rebuild. Both families keep their whole lineage state in one commit
-  * log ([[IndexLog]]); each keeps only its storage (bucketed catalog
-  * tables vs. generation directories) behind [[Store]]. The policy is
+  * rebuild. Both families store a lineage one way: a root directory
+  * holding the commit log ([[IndexLog]]) and one directory per
+  * generation, each with its own `_tombstones/`. So the generation
+  * listing, the tombstone dir, dropping a generation and the writer
+  * lease are written once here, from the root; a family keeps behind
+  * [[Store]] only what differs (how a generation is counted and
+  * rewritten, and the band family's catalog entries). The policy is
   * pure functions over [[Policy]], and the fold, delete and compaction
   * steps are written once here. The contract:
   *
   *  - '''Lease scoping.''' Every write (fold, delete, compact, rebuild)
   *    runs inside [[guarded]]: per-application memo check → JVM-local
-  *    lock on the lineage key → memo re-check → cross-process
-  *    [[WriterLease]] → body → memo add. The lock comes FIRST because
-  *    the lease is re-entrant per JVM, not per thread; nested entry
-  *    points (a fold's or delete's auto-compaction, a compaction's race
-  *    seam) re-enter both. Complete lineages resolve lease-free: an
-  *    ensure that finds a complete index is logically a read.
-  *  - '''Generations.''' Data lives in generations named by an
-  *    epoch-nanos stamp ([[newStamp]]); generation 0 is the unstamped
-  *    original. A generation is readable exactly when the latest commit
-  *    names it, and (rows, tombstones) resolve from that one commit.
-  *    Tombstones are parquet files in the generation's own tombstone
-  *    dir, served once a commit lists them ([[delete]]).
+  *    lock on the lineage root → memo re-check → cross-process
+  *    [[WriterLease]] at the root's sibling lock file → body → memo
+  *    add. The lock comes FIRST because the lease is re-entrant per JVM,
+  *    not per thread; nested entry points (a fold's or delete's
+  *    auto-compaction, a compaction's race seam) re-enter both.
+  *    Complete lineages resolve lease-free: an ensure that finds a
+  *    complete index is logically a read.
+  *  - '''Generations.''' Data lives in generation directories under
+  *    the root, `<base>` (generation 0) and `<base>.g<stamp>` with an
+  *    epoch-nanos stamp ([[newStamp]]). A generation is readable exactly
+  *    when the latest commit names it, and (rows, tombstones) resolve
+  *    from that one commit. Tombstones are parquet files in the
+  *    generation's own tombstone dir, served once a commit lists them
+  *    ([[delete]]) and dropped by every read ([[live]]).
   *  - '''Folds.''' An intent commit precedes the append and the tag
   *    commit clears it, so a replay after a crash in between repairs
   *    instead of double-appending ([[fold]]).
@@ -54,14 +62,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - '''Retention.''' [[Policy.toRetire]]: the active generation and
   *    the protected set (the one just superseded) always stay; any
   *    other generation goes once its last touch (the last commit naming
-  *    it) is older than `gcStaleHours` (0 = no age protection — the
-  *    rebuild path); superseded generations (stamp below the active
+  *    it, or for a directory no commit names, its newest file) is older
+  *    than `gcStaleHours` (0 = no age protection — the rebuild path);
+  *    superseded generations (stamp below the active
   *    one) beyond the newest `maxStaleGenerations` go regardless of age.
   *    Generations stamped ABOVE the active one or with no parseable
   *    stamp may be a live rewrite in another process: age-gated only,
   *    never count-forced. An in-flight scan therefore survives
   *    min(gcStaleHours, K promotes). Commits older than the oldest
-  *    standing generation go with them.
+  *    standing generation go with them. The listing is the root's, so a
+  *    generation any process wrote is retired by any other.
   *  - '''Thresholds.''' A fold compacts once the layout averages
   *    `autoCompactFilesPerUnit` data files per bucket/cell; a delete
   *    compacts once standing tombstones reach `autoCompactTombstoneRows`
@@ -156,8 +166,8 @@ object IndexLifecycle {
     longSetting(key, spark.conf.getOption(key), default)
 
   /** A standing generation as retention sees it. `touched` (last write,
-    * ms) is by-name: storage pays for it (a catalog lookup, a recursive
-    * listing) only when the age gate actually needs it.
+    * ms) is by-name: the recursive listing it costs is paid only when the
+    * age gate actually needs it.
     */
   final class Generation(val id: String, val stamp: Option[Long],
       touched: => Long) {
@@ -165,15 +175,15 @@ object IndexLifecycle {
   }
 
   /** THE generation-stamp parser: Some(0) for the unstamped generation 0
-    * (`name == gen0`), the stamp of `<prefix><digits>`, None for any
+    * (`name == base`), the stamp of `<base>.g<digits>`, None for any
     * other name. Ordering is numeric, never lexical: stamps from other
     * processes and hosts can differ in digit width.
     */
-  def parseStamp(name: String, gen0: String, prefix: String): Option[Long] =
-    if (name == gen0) Some(0L)
-    else if (!name.startsWith(prefix)) None
+  def parseStamp(name: String, base: String): Option[Long] =
+    if (name == base) Some(0L)
+    else if (!name.startsWith(s"$base.g")) None
     else {
-      val d = name.substring(prefix.length)
+      val d = name.substring(base.length + 2)
       if (d.nonEmpty && d.length <= 19 && d.forall(_.isDigit)) d.toLongOption
       else None
     }
@@ -217,27 +227,82 @@ object IndexLifecycle {
   private[operators] def lockFor(key: String): Object =
     locks.computeIfAbsent(key, _ => new Object)
 
-  /** Run `body` as a maintenance write (see "Lease scoping"). `skip` is
-    * evaluated under the JVM lock before the lease is taken; when it
-    * holds, the body is skipped lease-free and the memo still records
-    * the call.
+  /** Run `body` as a maintenance write on the lineage at `root` (see
+    * "Lease scoping"). `skip` is evaluated under the JVM lock before the
+    * lease is taken; when it holds, the body is skipped lease-free and
+    * the memo still records the call.
     */
-  def guarded(spark: SparkSession, lockKey: String, memoKey: Option[String],
-      leasePath: Path, skip: => Boolean = false)(body: => Unit): Unit = {
+  def guarded(spark: SparkSession, root: String, memoKey: Option[String],
+      skip: => Boolean = false)(body: => Unit): Unit = {
     val key = memoKey.map(k => s"${spark.sparkContext.applicationId}|$k")
-    if (!key.exists(memo.contains)) lockFor(lockKey).synchronized {
+    if (!key.exists(memo.contains)) lockFor(root).synchronized {
       if (!key.exists(memo.contains)) {
-        if (!skip) WriterLease.withLease(spark, leasePath)(body)
+        if (!skip) WriterLease.withLease(spark, WriterLease.lockPathFor(root))(body)
         key.foreach(memo.add)
       }
     }
+  }
+
+  // ---------------- the one storage shape ----------------
+
+  /** Where the tombstone files of generation `gen` live. */
+  def tombstoneDir(store: Store, gen: String): Path =
+    new Path(new Path(store.log.root, gen), "_tombstones")
+
+  /** Every generation dir under the root (named `<base>*`), committed or
+    * not. One no commit names (a crashed rewrite, a leftover of an older
+    * naming) is as old as its newest file: a large rewrite writes under a
+    * stale dir mtime.
+    */
+  def generations(spark: SparkSession, store: Store): Seq[Generation] = {
+    val fs = IndexLog.fsOf(spark, store.log.root)
+    (try fs.listStatus(new Path(store.log.root)).toSeq
+     catch { case _: java.io.FileNotFoundException => Seq.empty })
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(store.log.base))
+      .map { st =>
+        val n = st.getPath.getName
+        new Generation(n, parseStamp(n, store.log.base),
+          (st +: filesUnder(fs, st.getPath, dataOnly = false)).map(_.getModificationTime).max)
+      }
+  }
+
+  /** Drop generations `gens`: the store forgets each, then its directory
+    * goes whole, tombstones included. */
+  def drop(spark: SparkSession, store: Store, gens: Set[String]): Unit = gens.foreach { g =>
+    store.dropped(g)
+    IndexLog.fsOf(spark, store.log.root).delete(new Path(store.log.root, g), true)
   }
 
   // ---------------- tombstones and folds ----------------
 
   /** The tombstone files `c` lists, as paths under its generation. */
   def tombstoneFiles(store: Store, c: IndexLog.Commit): Seq[String] =
-    c.tombstones.map(n => new Path(store.tombstoneDir(c.gen), n).toString)
+    c.tombstones.map(n => new Path(tombstoneDir(store, c.gen), n).toString)
+
+  /** `rows` minus `tombstones` (one `idCol` column), THE tombstone
+    * anti-join: the set is bounded between compactions, so the build
+    * side is a BROADCAST of the raw rows (a left-anti join ignores
+    * duplicates; no distinct, no shuffle) and the scan keeps its layout.
+    */
+  def live(rows: DataFrame, tombstones: Option[DataFrame], idCol: String): DataFrame =
+    tombstones.fold(rows)(t => rows.join(broadcast(t), Seq(idCol), "left_anti"))
+
+  /** `scan` of the generation `first` names minus its tombstones. A
+    * generation retired under a slow reader (`scan` throws
+    * FileNotFoundException) re-resolves once from the newer commit; with
+    * none the lineage is damaged and the read fails. Nothing sleeps.
+    */
+  def liveRows(spark: SparkSession, store: Store, first: IndexLog.Commit)(
+      scan: IndexLog.Commit => DataFrame): DataFrame = {
+    def read(c: IndexLog.Commit): Option[DataFrame] =
+      try Some(live(scan(c), tombstones(spark, store, c), store.idCol))
+      catch { case _: java.io.FileNotFoundException => None }
+    read(first).orElse {
+      val next = store.log.latest(spark)
+      if (next.version > first.version) read(next) else None
+    }.getOrElse(throw new java.io.FileNotFoundException(
+      s"${store.log.root}: generation ${first.gen} is gone and no newer commit names another"))
+  }
 
   /** The tombstones `c` lists as one frame of the family's one BIGINT
     * id column, None when it lists none. Throws FileNotFoundException
@@ -247,7 +312,7 @@ object IndexLifecycle {
     if (c.tombstones.isEmpty) None
     else {
       val fs = IndexLog.fsOf(spark, store.log.root)
-      val root = fs.makeQualified(store.tombstoneDir(c.gen))
+      val root = fs.makeQualified(tombstoneDir(store, c.gen))
       Some(preListed(spark, root, c.tombstones.map(n => fs.getFileStatus(new Path(root, n))),
         StructType(Seq(StructField(store.idCol, LongType)))))
     }
@@ -267,9 +332,11 @@ object IndexLifecycle {
   /** A parquet scan of `files` under the qualified `root` with `schema`
     * (`partitionCols` from the `col=value` dirs), handed to Spark as a
     * pre-resolved file index: no listing job, no schema-inference job.
+    * Given the catalog entry of a bucketed `table`, the scan carries its
+    * bucket spec (bucket ids come from the file names) and its name.
     */
   def preListed(spark: SparkSession, root: Path, files: Seq[FileStatus], schema: StructType,
-      partitionCols: String*): DataFrame = {
+      partitionCols: Seq[String] = Nil, table: Option[CatalogTable] = None): DataFrame = {
     val listed = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Some(files.toArray)
       def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
@@ -277,8 +344,10 @@ object IndexLifecycle {
     }
     val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema), listed)
     val (parts, data) = schema.partition(f => partitionCols.contains(f.name))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, StructType(parts), StructType(data),
-      None, new ParquetFileFormat, Map.empty)(spark))
+    val relation = HadoopFsRelation(index, StructType(parts), StructType(data),
+      table.flatMap(_.bucketSpec), new ParquetFileFormat, Map.empty)(spark)
+    table.fold(spark.baseRelationToDataFrame(relation))(t =>
+      GraftColumnBridge.ofRows(spark, LogicalRelation(relation, t)))
   }
 
   /** Delete `ids` (column `idCol`) under `tag`, idempotent per tag (the
@@ -296,12 +365,11 @@ object IndexLifecycle {
       val written = scala.collection.mutable.Map.empty[String, Seq[String]]
       val c = store.log.commit(spark, "delete") { c =>
         val files = written.getOrElseUpdate(c.gen,
-          appendTombstones(spark, ids, store.tombstoneDir(c.gen)))
+          appendTombstones(spark, ids, tombstoneDir(store, c.gen)))
         c.copy(tombstones = c.tombstones ++ files, dels = c.dels + tag)
       }
       // distinct ids, not rows: overlapping deletes append duplicate
-      // tombstone rows, and the broadcast build side every read pays is
-      // deduped
+      // tombstone rows
       if (Policy.of(spark).tombstoneDebtDue(
           tombstones(spark, store, c).fold(0L)(_.select(store.idCol).distinct().count())))
         compact
@@ -385,27 +453,22 @@ object IndexLifecycle {
 
   // ---------------- storage + the compaction skeleton ----------------
 
-  /** The storage that really differs between the two families; all
-    * lineage state lives in `log`. Generation ids are the names commits
-    * carry (a cells dir name, a band-table suffix).
+  /** What really differs between the two families; all lineage state
+    * lives in `log`, and its root holds the generation directories.
     */
   trait Store {
     /** The lineage's log; its root is also the JVM lock key. */
     def log: IndexLog
     /** The BIGINT id column rows and tombstones are keyed by. */
     def idCol: String
-    def leasePath: Path
-    /** Where the tombstone files of `gen` live. */
-    def tombstoneDir(gen: String): Path
-    /** Every standing generation, committed or not; `touched` is the
-      * age of an uncommitted one (a crashed rewrite).
-      */
-    def generations(): Seq[Generation]
-    def drop(gens: Set[String]): Unit
     /** Data files per table of `gen`, as the nfiles stamp records them. */
     def fileCounts(gen: String): Seq[Long]
-    /** Live rows of `gen` minus `tombstones`, as a new UNPROMOTED generation. */
-    def rewrite(gen: String, tombstones: Option[DataFrame]): String
+    /** Live rows of `snap`'s generation minus `tombstones`, as a new
+      * UNPROMOTED generation; returns its name.
+      */
+    def rewrite(snap: IndexLog.Commit, tombstones: Option[DataFrame]): String
+    /** Forget generation `gen` before its directory is deleted. */
+    def dropped(gen: String): Unit = ()
   }
 
   /** Test seam: runs between a compaction's rewrite and its promote with
@@ -422,7 +485,7 @@ object IndexLifecycle {
     */
   def compact(spark: SparkSession, store: Store, force: Boolean,
       skip: => Boolean = false): Unit =
-    guarded(spark, store.log.root, None, store.leasePath, skip) {
+    guarded(spark, store.log.root, None, skip) {
       val snap = store.log.latest(spark)
       if (skipCompaction(force, snap.tombstones.nonEmpty, snap.nfiles,
           store.fileCounts(snap.gen))) {
@@ -430,9 +493,9 @@ object IndexLifecycle {
           "appends since the last rewrite — skipping")
         // keep the generation superseded most recently, as a promote
         // does: an in-flight scan may still read it
-        retire(spark, store, Some(snap.gen), previous(store.generations(), snap.gen).toSet)
+        retire(spark, store, Some(snap.gen), previous(generations(spark, store), snap.gen).toSet)
       } else {
-        val gen = store.rewrite(snap.gen, tombstones(spark, store, snap))
+        val gen = store.rewrite(snap, tombstones(spark, store, snap))
         val counts = store.fileCounts(gen)
         compactRaceHook.foreach(_(snap.gen))
         promote(spark, store, snap, gen, counts)
@@ -453,8 +516,8 @@ object IndexLifecycle {
       val late = c.tombstones.filterNot(snap.tombstones.toSet)
       val fs = IndexLog.fsOf(spark, store.log.root)
       late.foreach { n =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(store.tombstoneDir(snap.gen), n),
-          fs, new Path(store.tombstoneDir(gen), s"fwd_$n"), false,
+        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(tombstoneDir(store, snap.gen), n),
+          fs, new Path(tombstoneDir(store, gen), s"fwd_$n"), false,
           spark.sessionState.newHadoopConf())
       }
       if (late.nonEmpty)
@@ -473,19 +536,19 @@ object IndexLifecycle {
   /** Drop what [[Policy.toRetire]] selects, then every commit older than
     * the oldest one naming a generation still standing: no retained
     * commit names a dropped one. A generation's last touch is the time
-    * of the last commit naming it; one no commit names keeps the age
-    * its store reports.
+    * of the last commit naming it; one no commit names is aged by its
+    * newest file ([[generations]]).
     */
   def retire(spark: SparkSession, store: Store, active: Option[String],
       protect: Set[String], policy: Option[Policy] = None): Unit = {
     val commits = store.log.all(spark)
     val touched = commits.groupMapReduce(_.gen)(_.timeMs)(math.max)
-    val gens = store.generations().map(g =>
+    val gens = generations(spark, store).map(g =>
       new Generation(g.id, g.stamp, touched.getOrElse(g.id, g.touchedMs)))
     val gone = policy.getOrElse(Policy.of(spark))
       .toRetire(gens, active, protect, System.currentTimeMillis())
     if (gone.nonEmpty) {
-      store.drop(gone)
+      drop(spark, store, gone)
       val standing = gens.map(_.id).toSet -- gone
       commits.find(c => standing(c.gen)).foreach(c => store.log.truncate(spark, c.version))
     }

@@ -9,14 +9,16 @@ import org.apache.spark.sql.SparkSession
   * one file per commit, each holding the lineage's WHOLE state — the
   * active generation, its tombstone files, the fold and delete tag
   * ledgers, the fold crash-repair ledgers (intents and the purge
-  * window), the active generation's nfiles stamp, and the op and time
-  * that wrote it. The model is the Delta Lake transaction log (Armbrust
-  * et al., PVLDB 13(12), 2020) without replay: a reader reads ONE file.
+  * window), the active generation's nfiles stamp, the band family's
+  * bucket count and validity key, and the op and time that wrote it.
+  * The model is the Delta Lake transaction log (Armbrust et al., PVLDB
+  * 13(12), 2020) without replay: a reader reads ONE file.
   *
-  * Both families keep their lineage here; a family supplies only the
-  * log's directory and the generation names a commit may carry
-  * ([[IndexLog.cells]] under an IVF / IVF-PQ layout, a band lineage's
-  * log under the database location, [[Dedup.bandLog]]).
+  * Both families store a lineage one way: a root holding `_log/` and one
+  * directory per generation, `<base>` (generation 0) or `<base>.g<stamp>`
+  * ([[IndexLog.cells]], [[Dedup.bandLog]]). The log is the lineage's only
+  * metadata: any process that reads the root can resolve, retire and
+  * register it.
   *
   * A commit is written with [[WriterLease.createIfAbsent]], so it appears
   * whole or not at all and two writers can never both create version N.
@@ -25,8 +27,13 @@ import org.apache.spark.sql.SparkSession
   * compaction skip's. A lineage without a log is incomplete — every
   * build writes commit 0 last, so `ensure*` rebuilds anything else.
   */
-private[graft] final case class IndexLog(root: String, genName: String) {
+private[graft] final case class IndexLog(root: String, base: String) {
   import IndexLog._
+
+  private val genName = s"${java.util.regex.Pattern.quote(base)}(\\.g\\d+)?"
+
+  /** A new generation's name, stamped now ([[IndexLifecycle.newStamp]]). */
+  def newGen(): String = s"$base.g${IndexLifecycle.newStamp()}"
 
   private def dir = new Path(root, "_log")
 
@@ -79,12 +86,15 @@ private[graft] final case class IndexLog(root: String, genName: String) {
     load(fs, l, l)
   }
 
-  /** Start the log of a freshly built lineage: commit 0 names `gen`. A
-    * build over an old lineage replaces its log.
+  /** Start the log of a freshly built lineage: commit 0 names `gen`
+    * (with a band lineage's bucket count and validity key). A build over
+    * an old lineage replaces its log.
     */
-  def init(spark: SparkSession, gen: String): Unit = {
+  def init(spark: SparkSession, gen: String, buckets: Option[Int] = None,
+      key: Option[String] = None): Unit = {
     clear(spark)
-    require(write(spark, Commit(0L, gen)), s"$root: a concurrent build started its log")
+    require(write(spark, Commit(0L, gen, buckets = buckets, key = key)),
+      s"$root: a concurrent build started its log")
   }
 
   /** Delete the log: the lineage is incomplete until [[init]] runs. */
@@ -106,6 +116,8 @@ private[graft] final case class IndexLog(root: String, genName: String) {
       val a = o.putArray(k); xs.foreach(x => a.add(x))
     }
     c.nfiles.foreach { n => val a = o.putArray("nfiles"); n.foreach(x => a.add(x)) }
+    c.buckets.foreach(o.put("buckets", _))
+    c.key.foreach(o.put("key", _))
     WriterLease.createIfAbsent(fsOf(spark, root),
       new Path(dir, s"${c.version}.json"), mapper.writeValueAsBytes(o))
   }
@@ -122,6 +134,8 @@ private[graft] final case class IndexLog(root: String, genName: String) {
       strs("dels").toSet, strs("intents").toSet, strs("purgewin").toSet,
       if (o.has("nfiles")) Some(o.get("nfiles").elements().asScala.map(_.asLong).toSeq)
       else None,
+      if (o.has("buckets")) Some(o.get("buckets").asInt) else None,
+      if (o.has("key")) Some(o.get("key").asText) else None,
       o.path("op").asText, o.path("time").asLong)
   }
 
@@ -148,24 +162,24 @@ private[graft] final case class IndexLog(root: String, genName: String) {
 
 private[graft] object IndexLog {
 
-  /** One commit. `gen` names a generation of the lineage (a cells dir
-    * name, a band-table suffix); `tombstones` are file names under that
-    * generation's tombstone dir ([[IndexLifecycle.Store.tombstoneDir]]);
-    * `intents` are fold tags whose appends may have landed without their
-    * tag commit, and `purgewin` those of them a tombstone purge ran
-    * under; `nfiles` is None until a compaction wrote the generation
-    * (gen 0 always rewrites).
+  /** One commit. `gen` names a generation directory of the lineage;
+    * `tombstones` are file names under that generation's tombstone dir
+    * ([[IndexLifecycle.tombstoneDir]]); `intents` are fold tags whose
+    * appends may have landed without their tag commit, and `purgewin`
+    * those of them a tombstone purge ran under; `nfiles` is None until a
+    * compaction wrote the generation (gen 0 always rewrites). A band
+    * lineage's commits also carry its bucket count and validity key
+    * (`buckets`, `key`): everything its catalog entries need.
     */
   final case class Commit(version: Long, gen: String,
       tombstones: Seq[String] = Nil, folds: Set[String] = Set.empty,
       dels: Set[String] = Set.empty, intents: Set[String] = Set.empty,
       purgewin: Set[String] = Set.empty, nfiles: Option[Seq[Long]] = None,
+      buckets: Option[Int] = None, key: Option[String] = None,
       op: String = "build", timeMs: Long = System.currentTimeMillis())
 
-  /** The log of an IVF / IVF-PQ layout: `<path>/_log`, generations
-    * `cells` and `cells.g<stamp>`.
-    */
-  def cells(path: String): IndexLog = IndexLog(path, "cells(\\.g\\d+)?")
+  /** The log of an IVF / IVF-PQ layout: generations `cells`, `cells.g<stamp>`. */
+  def cells(path: String): IndexLog = IndexLog(path, "cells")
 
   private val Name = """(\d+)\.json""".r
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -708,8 +708,7 @@ object Similarity {
     val dest = new org.apache.hadoop.fs.Path(path)
     val fs   = IndexLog.fsOf(spark, path)
     def complete: Boolean = IndexLog.cells(path).latestOption(spark).isDefined
-    IndexLifecycle.guarded(spark, path, memoKey, WriterLease.lockPathFor(path),
-        skip = complete) {
+    IndexLifecycle.guarded(spark, path, memoKey, skip = complete) {
       if (!complete) {
         val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp${System.nanoTime()}")
         build(tmp.toString)
@@ -777,7 +776,7 @@ object Similarity {
       encoded: => DataFrame): Unit = {
     val spark = newVecs.sparkSession
     val store = new CellsStore(spark, path)
-    IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag"), store.leasePath) {
+    IndexLifecycle.guarded(spark, path, Some(s"$path|fold|$batchTag")) {
       retireCells(spark, path)
       val folded = IndexLifecycle.fold(spark, store, newVecs, batchTag) { cur =>
         val gen = genDir(path, cur.gen)
@@ -843,30 +842,17 @@ object Similarity {
     * reshuffles. Both sides are read from driver listings with known
     * schemas: no metadata job.
     *
-    * (cells, tombstones) resolve from ONE commit. A generation the
-    * retention collected under a slow reader re-resolves once from the
-    * newer commit that superseded it; with no newer commit the layout is
-    * damaged and the read fails. Nothing sleeps.
+    * (cells, tombstones) resolve from ONE commit
+    * ([[IndexLifecycle.liveRows]]).
     */
   def liveCells(spark: SparkSession, path: String,
       cells: Option[Seq[Long]] = None): DataFrame =
     liveCellsFrom(spark, path, IndexLog.cells(path).latest(spark), cells)
 
   private[operators] def liveCellsFrom(spark: SparkSession, path: String,
-      first: IndexLog.Commit, cells: Option[Seq[Long]] = None): DataFrame = {
-    val store = new CellsStore(spark, path)
-    def read(c: IndexLog.Commit): Option[DataFrame] =
-      try {
-        val scan = cellsScan(spark, path, c.gen, cells)
-        Some(IndexLifecycle.tombstones(spark, store, c).fold(scan)(t =>
-          scan.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti")))
-      } catch { case _: java.io.FileNotFoundException => None }
-    read(first).orElse {
-      val next = IndexLog.cells(path).latest(spark)
-      if (next.version > first.version) read(next) else None
-    }.getOrElse(throw new java.io.FileNotFoundException(
-      s"$path: generation ${first.gen} is gone and no newer commit names another"))
-  }
+      first: IndexLog.Commit, cells: Option[Seq[Long]] = None): DataFrame =
+    IndexLifecycle.liveRows(spark, new CellsStore(spark, path), first)(c =>
+      cellsScan(spark, path, c.gen, cells))
 
   /** The cells of a [[buildIvfIndex]] layout as a scan reads them: the
     * written (vec_id, q, nrm) and the `cent_id` partition column.
@@ -890,7 +876,7 @@ object Similarity {
     val files = cells.fold(IndexLifecycle.filesUnder(fs, root))(_.distinct.flatMap(id =>
       IndexLifecycle.filesUnder(fs, new org.apache.hadoop.fs.Path(root, s"cent_id=$id"))))
     val scan = IndexLifecycle.preListed(spark, root, files,
-      if (layoutTables(spark, path).pq) IvfPqCellsSchema else IvfCellsSchema, "cent_id")
+      if (layoutTables(spark, path).pq) IvfPqCellsSchema else IvfCellsSchema, Seq("cent_id"))
     cells.fold(scan)(ids => scan.filter(col("cent_id").isin(ids: _*)))
   }
 
@@ -933,7 +919,7 @@ object Similarity {
       delTag: String): Unit = {
     val spark = delIds.sparkSession
     val store = new CellsStore(spark, path)
-    IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag"), store.leasePath) {
+    IndexLifecycle.guarded(spark, path, Some(s"$path|del|$delTag")) {
       retireCells(spark, path)
       IndexLifecycle.delete(spark, store, delIds.select(col("vec_id").cast("long").as("vec_id")),
         delTag)(compactIvfCells(spark, path))
@@ -976,10 +962,8 @@ object Similarity {
       force: Boolean = false): Unit =
     IndexLifecycle.compact(spark, new CellsStore(spark, path), force)
 
-  /** Retention at every maintenance entry ([[IndexLifecycle.retire]]
-    * over every cells* dir: superseded generations and crashed,
-    * uncommitted rewrites).
-    */
+  /** Retention at every maintenance entry ([[IndexLifecycle.retire]]):
+    * superseded generations and crashed, uncommitted rewrites. */
   private[operators] def retireCells(spark: SparkSession, path: String): Unit =
     IndexLifecycle.retire(spark, new CellsStore(spark, path),
       Some(IndexLog.cells(path).latest(spark).gen), Set.empty)
@@ -994,49 +978,24 @@ object Similarity {
     (files.size.toLong, files.map(_.getPath.getParent.getName).distinct.size)
   }
 
-  /** One cells layout as [[IndexLifecycle.Store]]: generations are the
-    * `cells` / `cells.g<stamp>` dirs under the layout, each with its
-    * tombstones in `<gen>/_tombstones/`.
+  /** One cells layout as [[IndexLifecycle.Store]]: the layout dir is the
+    * lineage root, and its generations are the `cells` /
+    * `cells.g<stamp>` dirs.
     */
   private final class CellsStore(spark: SparkSession, path: String)
       extends IndexLifecycle.Store {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    private val fs = IndexLog.fsOf(spark, path)
-
     val log: IndexLog = IndexLog.cells(path)
     val idCol = "vec_id"
-    def leasePath: Path = WriterLease.lockPathFor(path)
-    def tombstoneDir(gen: String): Path = new Path(new Path(path, gen), "_tombstones")
 
-    // every cells* dir under the layout; one no commit names (a crashed
-    // rewrite) is as old as its newest file — a large rewrite keeps
-    // writing part files under a stale dir mtime
-    def generations(): Seq[IndexLifecycle.Generation] =
-      (try fs.listStatus(new Path(path)).toSeq
-       catch { case _: java.io.IOException => Seq.empty })
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cells"))
-        .map { st =>
-          val n = st.getPath.getName
-          new IndexLifecycle.Generation(n, IndexLifecycle.parseStamp(n, "cells", "cells.g"),
-            newestMtime(st))
-        }
-
-    private def newestMtime(dir: FileStatus): Long =
-      (dir +: IndexLifecycle.filesUnder(fs, dir.getPath, dataOnly = false))
-        .map(_.getModificationTime).max
-
-    def drop(gens: Set[String]): Unit = gens.foreach(g => fs.delete(new Path(path, g), true))
-
-    def fileCounts(gen: String): Seq[Long] = Seq(cellFiles(fs, new Path(path, gen))._1)
+    def fileCounts(gen: String): Seq[Long] =
+      Seq(cellFiles(IndexLog.fsOf(spark, path), new org.apache.hadoop.fs.Path(path, gen))._1)
 
     // ONE shuffle of the index, the inherent compaction cost; the ≤C-row
     // centroid table is the partition count, so each output task holds
     // ~one whole cell and writes ~one file for it
-    def rewrite(gen: String, tombstones: Option[DataFrame]): String = {
-      val out = s"cells.g${IndexLifecycle.newStamp()}"
-      val raw = cellsScan(spark, path, gen, None)
-      val cells = tombstones.fold(raw)(t =>
-        raw.join(broadcast(t.select("vec_id").distinct()), Seq("vec_id"), "left_anti"))
+    def rewrite(snap: IndexLog.Commit, tombstones: Option[DataFrame]): String = {
+      val out = log.newGen()
+      val cells = IndexLifecycle.live(cellsScan(spark, path, snap.gen, None), tombstones, idCol)
       val c = layoutTables(spark, path).c
       cells.repartition(math.max(c, 1), col("cent_id"))
         .write.partitionBy("cent_id").parquet(genDir(path, out))

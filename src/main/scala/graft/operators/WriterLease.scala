@@ -183,25 +183,15 @@ object WriterLease {
     }
   }
 
-  /** The lease file guarding a PATH-backed (IVF/IVF-PQ) layout — a
-    * SIBLING of the layout dir, not a child: ensure/rebuild promote by
-    * deleting and renaming the layout dir itself, which must not
-    * destroy the lock the promoting writer is holding.
+  /** The lease file guarding the lineage rooted at `root` (an IVF /
+    * IVF-PQ layout dir, a band lineage's dir) — a SIBLING of the root,
+    * not a child: ensure/rebuild promote by deleting and renaming the
+    * layout dir itself, which must not destroy the lock the promoting
+    * writer is holding.
     */
-  private[graft] def lockPathFor(layoutPath: String): Path = {
-    val p = new Path(layoutPath)
+  private[graft] def lockPathFor(root: String): Path = {
+    val p = new Path(root)
     new Path(p.getParent, s"${p.getName}._writer.lock")
-  }
-
-  /** The lease file guarding a TABLE-backed (band-index) lineage: the
-    * warehouse directory is the medium every process sharing the
-    * catalog also shares, so the lock lives under
-    * `<db location>/_graft_writer_locks/<prefix>.lock`.
-    */
-  private[graft] def lockPathFor(spark: SparkSession, db: String,
-      tablePrefix: String): Path = {
-    val dbLoc = spark.catalog.getDatabase(db).locationUri
-    new Path(new Path(dbLoc, "_graft_writer_locks"), s"$tablePrefix.lock")
   }
 
   /** Run `body` holding the lineage's cross-process lease (acquired
@@ -425,11 +415,8 @@ object WriterLease {
     Option(beats.get(lock.toString)).map(_.intervalMs)
 
   // test seam: forge a foreign holder's lease (optionally back-dated)
-  // so specs can exercise the refuse/break paths without a second JVM —
-  // the embedded per-process catalog makes a true two-JVM band-index
-  // fuzz impossible in this environment (the second process cannot see
-  // the first's tables at all), so the lock FILE is the cross-process
-  // medium under test.
+  // so specs can exercise the refuse/break paths, including a dead or
+  // wedged holder, without a second JVM.
   private[graft] def plantForeignLease(spark: SparkSession, lock: Path,
       holder: String, ageMs: Long = 0L): Unit = {
     val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())

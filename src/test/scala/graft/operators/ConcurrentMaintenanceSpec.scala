@@ -95,6 +95,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     // a probe planned AFTER the promote resolves the new generation and
     // answers identically (no deletes happened — pure rewrite)
     assert(pairsDf.as[(Long, Long)].collect().toSet == want)
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("probe threads hammer through auto-compacting folds without error") {
@@ -202,12 +203,14 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       "age gate must keep the scan's generation through BOTH promotes")
     while (it.hasNext) pulled += it.next()
     assert(pulled.toSet == want, "double promote lost the in-flight scan rows")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("compaction retires an aged orphan sigs generation (crashed CTAS)") {
-    // a crash between the sigs CTAS and the bands CTAS leaves a sigs
-    // table with no bands twin — invisible to bands-only resolution,
-    // and previously invisible to retirement too (leaked forever)
+    // a crash between the sigs CTAS and the bands CTAS leaves a
+    // generation dir holding a sigs table with no bands twin — invisible
+    // to bands-only resolution, and previously invisible to retirement
+    // too (leaked forever)
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text")
     val prefix = s"graft_orph${System.nanoTime()}"
@@ -216,18 +219,22 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       srcTag = s"orph-${System.nanoTime()}")
     val (_, curSigs) = Dedup.currentIndexTables(spark, prefix)
     val orphan = s"${prefix}_sigs_g1"
-    spark.sql(s"CREATE TABLE $orphan USING parquet AS SELECT * FROM $curSigs")
-    assert(spark.catalog.tableExists(orphan))
+    val orphanDir = new java.io.File(
+      new org.apache.hadoop.fs.Path(Dedup.bandLog(spark, prefix).root).toUri.getPath, "pair.g1")
+    spark.sql(s"CREATE TABLE $orphan USING parquet LOCATION '$orphanDir/sigs' " +
+      s"AS SELECT * FROM $curSigs")
+    assert(spark.catalog.tableExists(orphan) && orphanDir.exists())
     // age-gate 0 = "everything not in keep is old enough" (the spec
     // stand-in for a 24h-old leftover)
     spark.conf.set("spark.graft.index.gcStaleHours", "0")
     try Dedup.compactMinhashBandIndex(spark, prefix)
     finally spark.conf.unset("spark.graft.index.gcStaleHours")
-    assert(!spark.catalog.tableExists(orphan),
+    assert(!spark.catalog.tableExists(orphan) && !orphanDir.exists(),
       "aged orphan sigs generation must be retired by the next compaction")
     // the lineage itself still answers
     val (cb2, cs2) = Dedup.currentIndexTables(spark, prefix)
     assert(spark.table(cb2).count() > 0 && spark.table(cs2).count() > 0)
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("standing generations are COUNT-bounded under a hot promote loop (both families)") {
@@ -260,7 +267,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
       assert(Similarity.liveCells(spark, path).count() ==
         emb.filter($"vec_id" % 10 =!= 0).count())
 
-      // ---- band-index (table-backed) family ----
+      // ---- band-index family ----
       val docs = spark.read.parquet(s"${sf()}/documents.parquet")
         .select("doc_id", "text")
       val prefix = s"graft_genbound${System.nanoTime()}"
@@ -268,13 +275,15 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
         srcTag = s"genbound-${System.nanoTime()}")
       (1 to 6).foreach(_ =>
       Dedup.compactMinhashBandIndex(spark, prefix, force = true))
-      val standing = spark.sessionState.catalog
-        .listTables("default", s"${prefix}_bands*").map(_.table)
+      val standing = new java.io.File(new org.apache.hadoop.fs.Path(
+          Dedup.bandLog(spark, prefix).root).toUri.getPath).list().toSeq
+        .filter(n => n == "pair" || n.matches("pair\\.g\\d+"))
       assert(standing.size <= K + 1,
         s"6 promotes left ${standing.size} bands generations standing " +
           s"(want <= ${K + 1}): ${standing.sorted.mkString(",")}")
       val (cb, _) = Dedup.currentIndexTables(spark, prefix)
       assert(spark.table(cb).count() > 0)
+      IndexSpecKit.dropBandLineage(spark, prefix)
     } finally
       spark.conf.unset("spark.graft.index.maxStaleGenerations")
   }
@@ -422,6 +431,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     assert(!Dedup.liveIndexTable(spark, bt, bt).select("doc_id")
         .distinct().as[Long].collect().toSet.contains(2L),
       "the replayed tag must remain effective after the forward")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("two threads racing a stale ensureMinhashBandIndex rebuild do not clobber each other") {
@@ -454,5 +464,6 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     assert(spark.table(bt).select("doc_id").distinct().count() ==
         docs.count() && spark.table(st).count() == docs.count(),
       "the surviving rebuild must be complete")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 }

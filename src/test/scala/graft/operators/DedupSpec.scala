@@ -220,25 +220,18 @@ class DedupSpec extends SparkSpec {
     // the round-14 p01/p02 ShuffleProbe finding: the eager signature
     // staging used to re-spread + re-minhash the whole corpus on every
     // ensure call — one corpus re-hash per query invocation at scale.
-    // The validity probe must cost schema/catalog work only.
+    // The validity probe is the latest commit's key, read on the
+    // driver: no Spark job.
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text")
     val tag = s"zerojob-${System.nanoTime()}"
     Dedup.ensureMinhashBandIndex(docs, "graft_zerojob", srcTag = tag)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = IndexSpecKit.jobsOf(spark) {
       Dedup.ensureMinhashBandIndex(docs, "graft_zerojob", srcTag = tag)
-      Thread.sleep(1000) // listener bus is async
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get == 0,
-      s"repeated ensure must not touch the corpus, ran ${jobs.get} jobs")
+      ()
+    }
+    assert(jobs == 0,
+      s"repeated ensure must not touch the corpus, ran $jobs jobs")
   }
 
   test("foldIntoMinhashBandIndex: fold ≡ rebuild, append-only, idempotent per tag") {
@@ -417,6 +410,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.table(g4s).select("doc_id").distinct().count() ==
       docs.filter($"doc_id" % 20 =!= 0).count(),
       "live content after skip/rearm cycles must equal the remainder")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("auto-compaction policy: fold crosses files-per-bucket threshold, output identical") {
@@ -580,6 +574,7 @@ class DedupSpec extends SparkSpec {
           .filter($"doc_id" % 4 === 1 || $"doc_id" % 60 === 0).count()
       assert(gone == 0, "purge must drop the tombstoned docs physically")
     } finally spark.conf.unset(key)
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("crash-replay repair does not resurrect docs deleted+compacted in the window") {
@@ -629,7 +624,7 @@ class DedupSpec extends SparkSpec {
       "repaired sigs must equal rebuild-from-remainder")
   }
 
-  test("a band lineage keeps its state in one log: tombstones ride the bands table, no dels tables") {
+  test("a band lineage keeps its state in one log: tombstones ride the generation dir, no dels tables") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text")
     val prefix = s"graft_bandlog${System.nanoTime()}"
@@ -642,11 +637,14 @@ class DedupSpec extends SparkSpec {
     val (bt, _) = Dedup.currentIndexTables(spark, prefix)
     val loc = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(bt, Some("default"))).location.getPath
-    // the tombstones sit under the bands table's own location, in a
-    // `_`-prefixed dir the table scan skips
+    // the bands table is the generation dir's `bands/`, and the
+    // tombstones sit beside it in the same generation dir
+    val gen = new java.io.File(loc).getParentFile
+    assert(gen.getName == Dedup.bandLog(spark, prefix).latest(spark).gen &&
+      gen.getParent == new org.apache.hadoop.fs.Path(Dedup.bandLog(spark, prefix).root).toUri.getPath)
     val tomb = Dedup.standingTombstoneFiles(spark, prefix)
     assert(tomb.nonEmpty && tomb.forall(f =>
-      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(s"$loc/_tombstones/")), tomb)
+      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(s"$gen/_tombstones/")), tomb)
     spark.catalog.refreshTable(bt)
     assert(!spark.table(bt).inputFiles.exists(_.contains("_tombstones")),
       "the bands scan must never read the tombstone files")
@@ -656,16 +654,26 @@ class DedupSpec extends SparkSpec {
     val c = Dedup.bandLog(spark, prefix).latest(spark)
     assert(c.folds == Set("b1") && c.dels == Set("d1") && c.intents.isEmpty &&
       c.nfiles.exists(_.size == 2) && c.tombstones.isEmpty && c.op == "compact")
-    // the superseded generation's DROP TABLE takes its tombstones along
-    spark.sql(s"DROP TABLE $bt")
-    assert(!new java.io.File(loc).exists(), s"$loc must be gone with its table")
+    // retiring the superseded generation drops its dir, tombstones
+    // included, and unregisters its tables (gcStaleHours 0 stands in
+    // for a day-old generation)
+    spark.conf.set("spark.graft.index.gcStaleHours", "0")
+    try Dedup.compactMinhashBandIndex(spark, prefix, force = true)
+    finally spark.conf.unset("spark.graft.index.gcStaleHours")
+    assert(!gen.exists() && !spark.catalog.tableExists(bt), s"$gen must be gone with its tables")
     // a lineage without a log is incomplete: ensure rebuilds it even
-    // though the tables it names carry a current validity key
+    // though its generation dirs stand
     Dedup.bandLog(spark, prefix).clear(spark)
     val (rb, rs) = Dedup.ensureMinhashBandIndex(corpus, prefix, srcTag = tag)
     assert(rb == s"${prefix}_bands" && Dedup.bandLog(spark, prefix).latest(spark).version == 0L)
+    // the schema constants another JVM registers the pair with are the
+    // schemas the CTAS wrote
+    val root = Dedup.bandLog(spark, prefix).root
+    assert(spark.read.parquet(s"$root/pair/bands").schema == Dedup.BandsSchema &&
+      spark.read.parquet(s"$root/pair/sigs").schema == Dedup.SigsSchema)
     assert(spark.table(rs).count() ==
       corpus.filter(TextFunctions.hasShingles($"text", 3)).count(),
       "the rebuild must index the corpus alone: no fold, no tombstone")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 }

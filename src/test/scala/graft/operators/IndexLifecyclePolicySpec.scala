@@ -99,17 +99,17 @@ class IndexLifecyclePolicySpec extends AnyFunSuite {
 
   test("one stamp parser for table suffixes and directory names") {
     import IndexLifecycle.parseStamp
-    assert(parseStamp("cells", "cells", "cells.g") == Some(0L))
-    assert(parseStamp("cells.g1234", "cells", "cells.g") == Some(1234L))
-    assert(parseStamp("cells.old1234", "cells", "cells.g") == None)
-    assert(parseStamp("cells.g", "cells", "cells.g") == None)
-    assert(parseStamp("cells.g12a", "cells", "cells.g") == None)
-    assert(parseStamp("cells.g" + "9" * 20, "cells", "cells.g") == None)
-    assert(parseStamp("cells.g" + "9" * 19, "cells", "cells.g") == None) // > Long.MaxValue
-    assert(parseStamp("cells.g" + "1" * 19, "cells", "cells.g") == Some(("1" * 19).toLong))
-    assert(parseStamp("", "", "_g") == Some(0L))
-    assert(parseStamp("_g42", "", "_g") == Some(42L))
-    assert(parseStamp("_x42", "", "_g") == None)
+    assert(parseStamp("cells", "cells") == Some(0L))
+    assert(parseStamp("cells.g1234", "cells") == Some(1234L))
+    assert(parseStamp("cells.old1234", "cells") == None)
+    assert(parseStamp("cells.g", "cells") == None)
+    assert(parseStamp("cells.g12a", "cells") == None)
+    assert(parseStamp("cells.g" + "9" * 20, "cells") == None)
+    assert(parseStamp("cells.g" + "9" * 19, "cells") == None) // > Long.MaxValue
+    assert(parseStamp("cells.g" + "1" * 19, "cells") == Some(("1" * 19).toLong))
+    assert(parseStamp("pair", "pair") == Some(0L))
+    assert(parseStamp("pair.g42", "pair") == Some(42L))
+    assert(parseStamp("pair.x42", "pair") == None)
     // epoch-nanos stamps are monotonic within the process
     val a = IndexLifecycle.newStamp()
     assert(IndexLifecycle.newStamp() > a)

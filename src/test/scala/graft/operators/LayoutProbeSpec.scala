@@ -1,14 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{array_repeat, lit, transform}
 
 import graft.SparkSpec
+import IndexSpecKit.jobsOf
 
 /** Reads of a maintained IVF / IVF-PQ layout run no metadata jobs: the
   * centroids are ranked on the driver against tables collected once per
@@ -24,34 +19,6 @@ class LayoutProbeSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1).take(16)
       .map { case (id, v) => (id, v.toSeq) }
 
-  /** The Spark jobs `body` runs, counted by a listener on the call's own
-    * job group. A marker job in a second group is the synchronization
-    * point: the bus delivers events in order, so once the listener sees
-    * the marker start it has seen every job of the call.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"layout-probe-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val marker = Promise[Unit]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) jobs.incrementAndGet()
-        if (g == s"$group-marker") marker.trySuccess(())
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "probe call")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "listener-bus marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Await.result(marker.future, 60.seconds)
-    } finally sc.removeSparkListener(l)
-    jobs.get
-  }
-
   private def probeJobs(family: String, path: String): Unit = {
     def call(): Seq[(Long, Long, Long, Long)] = (family match {
       case "ivf" => Similarity.ivfProbeBatch(spark, path, queries, k = 10, nProbe = 4)
@@ -59,15 +26,16 @@ class LayoutProbeSpec extends SparkSpec {
     }).as[(Long, Long, Long, Long)].collect().toSeq
     call() // the first call collects the layout's centroid tables
     var served = Seq.empty[(Long, Long, Long, Long)]
-    val intact = jobsOf { served = call() }
+    val intact = jobsOf(spark) { served = call() }
     assert(served.map(_._1).distinct.size == queries.size)
     assert(intact <= 5, s"$family batch probe ran $intact jobs intact")
     val dead = served.head._3
     Similarity.deleteFromIvfIndex(Seq(dead).toDF("vec_id"), path, s"del-$family")
     assert(Similarity.standingTombstoneFiles(spark, path).size == 1)
-    val tombstoned = jobsOf { served = call() }
+    val tombstoned = jobsOf(spark) { served = call() }
     assert(!served.exists(_._3 == dead), s"tombstoned $dead served by the $family batch")
-    assert(tombstoned <= 5, s"$family batch probe ran $tombstoned jobs with a tombstone standing")
+    // one more than intact: the broadcast of the raw tombstone rows
+    assert(tombstoned <= 4, s"$family batch probe ran $tombstoned jobs with a tombstone standing")
     info(s"$family batch probe: $intact jobs intact, $tombstoned with a tombstone standing")
   }
 

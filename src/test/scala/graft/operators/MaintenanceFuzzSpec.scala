@@ -22,21 +22,6 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   // ---------- per-run cleanup: a passed run leaves nothing behind ----------
 
-  // a band lineage: its tables (every generation), any directory under
-  // its prefix (a crash op's unregistered rewrite), its log and its lease
-  private def dropBandLineage(prefix: String): Unit = {
-    spark.sessionState.catalog.listTables("default", s"${prefix}_*").map(_.table).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      Bucketing.forget(spark, t)
-    }
-    val db = new org.apache.hadoop.fs.Path(spark.catalog.getDatabase("default").locationUri)
-    val fs = db.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(db, s"${prefix}_*")))
-      .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
-    fs.delete(new org.apache.hadoop.fs.Path(Dedup.bandLog(spark, prefix).root), true)
-    fs.delete(WriterLease.lockPathFor(spark, "default", prefix), true)
-  }
-
   // an IVF or IVF-PQ layout: its directory (every generation and the
   // log) and its siblings (lease, unfinished builds)
   private def dropLayout(path: String): Unit = {
@@ -56,12 +41,12 @@ class MaintenanceFuzzSpec extends SparkSpec {
   private def stepFailure(seed: Int, step: Int, what: String, ops: => String): String =
     s"seed=$seed step=$step: $what; ops=$ops"
 
-  // band index: live view ≡ model, ≤ maxStale superseded generations
-  // among the pairs commits name, plus replay ≡ store: the latest
-  // commit's bands and sigs tables and every tombstone file it lists
-  // exist, and every `<prefix>_{bands,sigs}*` table is named by a
-  // retained commit or is an uncommitted rewrite younger than
-  // gcStaleHours
+  // band index: the IVF check's three invariants over the lineage root —
+  // live view ≡ model, ≤ maxStale superseded generation dirs, tombstone
+  // files only under `<active>/_tombstones/` — plus replay ≡ store: the
+  // latest commit's bands and sigs tables and every tombstone file it
+  // lists exist, and every pair* dir is named by a retained commit or
+  // is an uncommitted rewrite younger than gcStaleHours
   private def checkBandStep(seed: Int, step: Int, prefix: String,
       want: Set[Long], ops: => String): Unit = {
     // sigs hold one row per doc: no distinct, so no shuffle
@@ -72,40 +57,40 @@ class MaintenanceFuzzSpec extends SparkSpec {
       s"live sigs ${live.size} ids vs model ${want.size} " +
         s"(extra ${(live -- want).toSeq.sorted.take(5)}, " +
         s"missing ${(want -- live).toSeq.sorted.take(5)})", ops))
-    val catalog = spark.sessionState.catalog
-    val tables = Seq("bands", "sigs").flatMap { fam =>
-      val base = s"${prefix}_$fam"
-      catalog.listTables("default", s"$base*").map(_.table)
-        .collect {
-          case n if n == base => (n, "")
-          case n if n.startsWith(s"${base}_g") => (n, n.stripPrefix(base))
-        }
-    }
     val log = Dedup.bandLog(spark, prefix)
+    val fs = new org.apache.hadoop.fs.Path(log.root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val named = log.all(spark).map(_.gen).toSet
     val active = log.latest(spark).gen
-    val gens = tables.map(_._2).toSet.filter(named)
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(log.root)).toSeq
+      .filter(_.getPath.getName.startsWith("pair"))
+    val gens = dirs.map(_.getPath.getName).filter(named)
     if (maxStale > 0)
-      assert((gens - active).size <= maxStale, stepFailure(seed, step,
-        s"${(gens - active).size} superseded generations stand " +
-          s"(bound $maxStale): ${(gens - active).toSeq.sorted}", ops))
+      assert(gens.count(_ != active) <= maxStale, stepFailure(seed, step,
+        s"${gens.count(_ != active)} superseded generations stand " +
+          s"(bound $maxStale): ${gens.sorted}", ops))
     val cutoff = System.currentTimeMillis() -
       IndexLifecycle.Policy.of(spark).gcStaleHours * 3600L * 1000L
-    tables.filterNot(t => named(t._2)).foreach { case (t, _) =>
-      assert(catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default"))).createTime > cutoff,
-        stepFailure(seed, step,
-          s"$t is named by no retained commit and is older than gcStaleHours", ops))
+    dirs.filterNot(d => named(d.getPath.getName)).foreach { d =>
+      val newest = (d.getModificationTime +: graft.util.LocalFs
+        .walkFiles(new java.io.File(d.getPath.toUri.getPath)).map(_.lastModified())).max
+      assert(newest > cutoff, stepFailure(seed, step,
+        s"${d.getPath.getName} is named by no retained commit and is older " +
+          "than gcStaleHours", ops))
     }
     Seq(cb, cs).foreach(t => assert(spark.catalog.tableExists(t), stepFailure(seed, step,
       s"the latest commit names $t, which does not exist", ops)))
-    val fs = new org.apache.hadoop.fs.Path(cb).getFileSystem(spark.sessionState.newHadoopConf())
+    Seq("bands", "sigs").foreach { t =>
+      val dir = new org.apache.hadoop.fs.Path(s"${log.root}/$active/$t")
+      assert(fs.exists(dir), stepFailure(seed, step,
+        s"the latest commit names $dir, which does not exist", ops))
+    }
     Dedup.standingTombstoneFiles(spark, prefix).foreach { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       assert(fs.exists(p), stepFailure(seed, step,
         s"the latest commit lists $f, which does not exist", ops))
-      assert(p.getParent.getName == "_tombstones" && p.getParent.getParent.getName == cb,
-        stepFailure(seed, step, s"tombstones outside the active generation $cb: $f", ops))
+      assert(p.getParent.getName == "_tombstones" && p.getParent.getParent.getName == active,
+        stepFailure(seed, step, s"tombstones outside the active generation $active: $f", ops))
     }
   }
 
@@ -157,7 +142,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       s"tombstones outside the active generation $active: ${foreign.take(3)}", ""))
   }
 
-  // ---------- band index (table-backed, intent-commit repair) ----------
+  // ---------- band index (table pairs per generation dir, intent-commit repair) ----------
 
   private def bandFuzz(seed: Int): Unit = {
     val rnd  = new scala.util.Random(seed)
@@ -299,8 +284,8 @@ class MaintenanceFuzzSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().toSet
     assert(pairs(bt, st) == pairs(rbt, rst),
       s"seed=$seed: probe verdicts diverged from the rebuilt index")
-    dropBandLineage(prefix)
-    dropBandLineage(s"graft_fuzzref$run")
+    IndexSpecKit.dropBandLineage(spark, prefix)
+    IndexSpecKit.dropBandLineage(spark, s"graft_fuzzref$run")
   }
 
   test("band index: randomized fold/delete/compact/crash ≡ rebuild (seed 11)") {

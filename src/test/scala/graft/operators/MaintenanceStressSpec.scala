@@ -96,10 +96,9 @@ class MaintenanceStressSpec extends SparkSpec {
       val live = (indexed -- deleted).toSeq.sorted
       if (live.nonEmpty) {
         val ids = rnd.shuffle(live).take(1 + rnd.nextInt(3)).toSet
-        val loc = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(bt, Some("default"))).location
+        val log = Dedup.bandLog(spark, prefix)
         byIds(ids).select("doc_id")
-          .write.mode("append").parquet(s"$loc/_tombstones")
+          .write.mode("append").parquet(s"${log.root}/${log.latest(spark).gen}/_tombstones")
         Dedup.deleteFromMinhashBandIndex(
           byIds(ids).select("doc_id"), prefix, delTag = s"cd$opN")
         deleted ++= ids

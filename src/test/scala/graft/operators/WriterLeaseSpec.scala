@@ -4,17 +4,16 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The cross-process writer contract (single writer per lineage),
-  * pinned at the filesystem lock-file level. A true two-JVM fuzz is
-  * impossible in this environment — the embedded per-process catalog
-  * means a second driver cannot even SEE the first's band tables — so
-  * these tests exercise the actual cross-process MEDIUM (the lease
-  * file) by forging a foreign holder's lease: a live foreign lease must
-  * make every maintenance write REFUSE loudly (never silently
-  * double-append), a stale one (dead holder, no heartbeat for a full
-  * stale window) must be broken and the write proceed, and nested
-  * maintenance (a delete's auto-compaction) must re-enter its own
-  * lease rather than deadlock.
+/** The cross-process writer contract (single writer per lineage). The
+  * lease file is exercised by forging a foreign holder's lease: a live
+  * foreign lease must make every maintenance write REFUSE loudly (never
+  * silently double-append), a stale one (dead holder, no heartbeat for
+  * a full stale window) must be broken and the write proceed, and
+  * nested maintenance (a delete's auto-compaction) must re-enter its
+  * own lease rather than deadlock. Both index families store a lineage
+  * as a directory any driver sharing the warehouse can resolve, so
+  * forked driver JVMs (`graft.tools.FoldRacer`) also fold and compact
+  * one lineage for real beside this one.
   */
 class WriterLeaseSpec extends SparkSpec {
   import spark.implicits._
@@ -90,7 +89,7 @@ class WriterLeaseSpec extends SparkSpec {
       docs.filter($"doc_id" % 10 =!= 0), prefix,
       srcTag = s"lease-${System.nanoTime()}")
     val rowsBefore = spark.table(bt).count()
-    val lock = WriterLease.lockPathFor(spark, "default", prefix)
+    val lock = WriterLease.lockPathFor(Dedup.bandLog(spark, prefix).root)
     WriterLease.plantForeignLease(spark, lock, "1111@peer#3")
     spark.conf.set("spark.graft.index.writerLeaseWaitSeconds", "1")
     try {
@@ -116,6 +115,7 @@ class WriterLeaseSpec extends SparkSpec {
       lock.getFileSystem(spark.sessionState.newHadoopConf())
         .delete(lock, false)
     }
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 
   test("nested maintenance re-enters its own lease (delete -> auto-compaction)") {
@@ -367,8 +367,107 @@ class WriterLeaseSpec extends SparkSpec {
       docs.filter($"doc_id" % 3 === 1), prefix,
       batchTag = s"rb-${System.nanoTime()}")
     Dedup.compactMinhashBandIndex(spark, prefix)
-    val lock = WriterLease.lockPathFor(spark, "default", prefix)
+    val lock = WriterLease.lockPathFor(Dedup.bandLog(spark, prefix).root)
     val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(lock), "lease must not outlive the ops that took it")
+    IndexSpecKit.dropBandLineage(spark, prefix)
+  }
+
+  // a forked driver JVM running graft.tools.FoldRacer with `args` over
+  // this session's warehouse; its log goes to a FILE (a forked Spark JVM
+  // logs far more than a pipe buffer holds)
+  private def racer(jvmOpts: Seq[String], args: String*): (Process, java.io.File) = {
+    val out = java.io.File.createTempFile("graft-foldracer", ".log")
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmOpts ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.tools.FoldRacer") ++ args
+    (new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(out).start(), out)
+  }
+
+  private def awaitRacer(kid: (Process, java.io.File)): Unit = {
+    val (p, out) = kid
+    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS), "fold-racer JVM did not finish")
+    val log = new String(java.nio.file.Files.readAllBytes(out.toPath), "UTF-8")
+    assert(p.exitValue() == 0 && log.contains("FOLDRACER_DONE"),
+      s"fold-racer failed (exit ${p.exitValue()}):\n${log.takeRight(1500)}")
+    out.delete()
+    ()
+  }
+
+  private def warehouse: String = spark.conf.get("spark.sql.warehouse.dir")
+
+  test("TWO real driver JVMs fold one band lineage concurrently: serialized, nothing lost") {
+    // the band family's cross-process contract end to end: two forked
+    // Spark JVMs plus this one fold disjoint residue classes of the
+    // corpus into the SAME lineage, each registering the pair from the
+    // log; every batch must land exactly once in both tables
+    val prefix = s"graft_bandrace${System.nanoTime()}"
+    val docsPath = s"${sf()}/documents.parquet"
+    Dedup.ensureMinhashBandIndex(docs.filter($"doc_id" % 4 === 3), prefix,
+      srcTag = s"bandrace-${System.nanoTime()}")
+    val kids = Seq(0, 1).map(res =>
+      racer(Nil, "band", warehouse, prefix, docsPath, "4", res.toString, "3"))
+    spark.conf.set("spark.graft.index.writerLeaseWaitSeconds", "300")
+    try
+      (0 until 3).foreach { i =>
+        Dedup.foldIntoMinhashBandIndex(
+          docs.filter($"doc_id" % 4 === 2).filter(expr("doc_id div 4") % 3 === i),
+          prefix, batchTag = s"racer-2-$i")
+      }
+    finally spark.conf.unset("spark.graft.index.writerLeaseWaitSeconds")
+    kids.foreach(awaitRacer)
+    // cross-process idempotence: replaying a CHILD's tag from THIS
+    // process must no-op on the log's fold ledger
+    Dedup.foldIntoMinhashBandIndex(
+      docs.filter($"doc_id" % 4 === 0).filter(expr("doc_id div 4") % 3 === 0),
+      prefix, batchTag = "racer-0-0")
+    val sigs = Dedup.minhashSignaturesPortable(docs, 3, 64, 7L)
+    val wantBands = sigs.select($"doc_id", explode(Dedup.bandKeyArray($"sig", 16, 4)).as("bk"))
+      .as[(Long, String)].collect().toSeq
+    val wantSigs = sigs.select("doc_id").as[Long].collect().toSeq
+    val (bt, st) = Dedup.currentIndexTables(spark, prefix)
+    val gotBands = Dedup.liveIndexTable(spark, bt, bt).select("doc_id", "bk")
+      .as[(Long, String)].collect().toSeq
+    val gotSigs = Dedup.liveIndexTable(spark, st, bt).select("doc_id").as[Long].collect().toSeq
+    assert(gotSigs.sorted == wantSigs.sorted,
+      s"every batch from all three processes must land exactly once in sigs: " +
+        s"${gotSigs.size} rows, ${gotSigs.distinct.size} docs, want ${wantSigs.size}")
+    assert(gotBands.sorted == wantBands.sorted,
+      s"every batch must land exactly once in bands: ${gotBands.size} rows, want ${wantBands.size}")
+    assert(Dedup.bandLog(spark, prefix).latest(spark).folds ==
+      (for (r <- 0 to 2; i <- 0 until 3) yield s"racer-$r-$i").toSet)
+    val lock = WriterLease.lockPathFor(Dedup.bandLog(spark, prefix).root)
+    assert(!lock.getFileSystem(spark.sessionState.newHadoopConf()).exists(lock),
+      "all writers done -> lease fully released")
+    IndexSpecKit.dropBandLineage(spark, prefix)
+  }
+
+  test("a compaction in a second driver JVM retires this JVM's superseded pair") {
+    // retention lists the lineage root, so a generation this JVM wrote
+    // is retired by another process's compaction (the child runs with
+    // maxStaleGenerations = 1: one superseded pair may stand)
+    val prefix = s"graft_xcompact${System.nanoTime()}"
+    Dedup.ensureMinhashBandIndex(docs.filter($"doc_id" % 10 =!= 0), prefix,
+      srcTag = s"xcompact-${System.nanoTime()}")
+    Dedup.foldIntoMinhashBandIndex(docs.filter($"doc_id" % 10 === 0), prefix,
+      batchTag = s"xb-${System.nanoTime()}")
+    Dedup.compactMinhashBandIndex(spark, prefix)
+    val log = Dedup.bandLog(spark, prefix)
+    val root = new org.apache.hadoop.fs.Path(log.root).toUri.getPath
+    val mine = log.latest(spark).gen
+    val first = new java.io.File(root, "pair")
+    assert(mine != "pair" && first.exists(),
+      "setup: this JVM's compaction promoted and kept the superseded pair")
+    awaitRacer(racer(Seq("-Dspark.graft.index.maxStaleGenerations=1"),
+      "band-compact", warehouse, prefix))
+    val now = log.latest(spark).gen
+    assert(now != mine && now.startsWith("pair.g"), s"the child must have promoted: $now")
+    assert(!first.exists(), s"$first must be retired by the second JVM's compaction")
+    assert(new java.io.File(root, mine).exists(),
+      "the pair the child superseded stands for in-flight scans")
+    val (_, st) = Dedup.currentIndexTables(spark, prefix)
+    assert(Dedup.liveIndexTable(spark, st, st).count() ==
+      Dedup.minhashSignaturesPortable(docs, 3, 64, 7L).count(),
+      "the compacted lineage answers in full in this JVM")
+    IndexSpecKit.dropBandLineage(spark, prefix)
   }
 }
